@@ -263,21 +263,22 @@ object AnnIndex {
     * listing mid-swap). Probe results are unchanged; refresh any cached
     * file index (`spark.read.parquet`) afterwards. Run it on the
     * append-count cadence, not per append — it rescans the full index.
+    * Tombstoned rows are folded away; an index whose every row is
+    * tombstoned is refused ([[graft.store.EpochCommit.swapRewrite]]).
     */
   def compactIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
     // the swap replaces the WHOLE dir, so the config sidecar must be
     // carried into the tmp tree (read before, re-stamped inside) — compact
     // takes no Config of its own: it preserves the RECORDED constants
     val meta = readConfigMeta(spark, path)
-    graft.store.DocStore.swapDirContents(spark, path) { tmp =>
-      // reading through readIndex also FOLDS tombstones: the rewrite drops
-      // deleted rows and the swap drops the _tombstones sidecar itself
+    graft.store.EpochCommit.swapRewrite(spark, path, tombstones,
+        readIndex(spark, path)) { tmp =>
       writeIndexData(readIndex(spark, path), tmp)
       meta.foreach(cfg => writeConfigMeta(spark, tmp, cfg))
     }
   }
 
-  private def tombstonesDir(path: String) = s"$path/_tombstones"
+  private val tombstones = graft.store.Tombstones("_tombstones", "id", "vector")
 
   /** DELETE ids from the persisted index without touching its files —
     * the store's O4 verb honored by the maintained artifact: ids land in
@@ -297,12 +298,7 @@ object AnnIndex {
   def deleteFromIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                       ids: Seq[Long]): Unit = {
     require(ids.nonEmpty, "ann delete: empty id list")
-    import spark.implicits._
-    // under the swap lock — see [[IvfPackedIndex.delete]] (r20 review)
-    graft.store.DocStore.withSwapLock(spark, path) {
-      ids.distinct.toDF("id")
-        .write.mode("append").parquet(tombstonesDir(path))
-    }
+    tombstones.record(spark, path, ids)
   }
 
   /** Merge-on-read view of a persisted index: the raw partitioned read
@@ -313,16 +309,7 @@ object AnnIndex {
     */
   def readIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
     readConfigMeta(spark, path) // loud on corruption / unknown formatVersion
-    val base = spark.read.parquet(path)
-    val t = new org.apache.hadoop.fs.Path(tombstonesDir(path))
-    val fs = t.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(t)) base
-    // explicit schema: a crashed first delete's footer-less husk reads
-    // as zero tombstones instead of failing schema inference (r20 review)
-    else base.join(
-      broadcast(spark.read.schema("id LONG").parquet(tombstonesDir(path))
-        .select(col("id"))),
-      Seq("id"), "left_anti")
+    tombstones.fold(spark, path, spark.read.parquet(path))
   }
 
   /** [[readIndex]] for a caller about to PROBE with `cfg`: additionally

@@ -311,28 +311,16 @@ object IndexedBm25 {
       .agg(count(lit(1)).cast("long").as("n"), sum(col("__dl")).as("total"))
 
   private def doclensDir(path: String) = s"$path/doclens"
-  private def tombstonesDir(path: String) = s"$path/tombstones"
+  private val tombstones = graft.store.Tombstones("tombstones", "doc_id", "document")
 
   private def doclensOf(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.select(col(idCol).cast("long").as("doc_id"),
       TextAnalysis.tokenCount(col(textCol)).cast("long").as("dl"))
 
-  private def hasTombstones(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(tombstonesDir(path))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** Merge-on-read view of deletions: anti-join a frame against the
-    * tombstone set (broadcast — bounded by deletions since the last
-    * [[compact]]). No tombstone dir → the frame passes through untouched.
-    */
-  private def applyTombstones(spark: SparkSession, path: String,
-                              frame: DataFrame): DataFrame =
-    if (!hasTombstones(spark, path)) frame
-    else frame.join(
-      broadcast(spark.read.schema("doc_id LONG").parquet(tombstonesDir(path))
-        .select(col("doc_id"))),
-      Seq("doc_id"), "left_anti")
+  /** Committed doclens minus the tombstoned docs. */
+  private def liveDoclens(spark: SparkSession, path: String): DataFrame =
+    tombstones.fold(spark, path,
+      graft.store.EpochCommit.readCommitted(spark, path, doclensDir(path), "bm25 index"))
 
   /** Query-term postings: partition-pruned scan (`pt IN (...)` over dir
     * literals, computed by the same `xxhash64` the writer used, via a
@@ -361,7 +349,7 @@ object IndexedBm25 {
     // epoch ∈ committed is a second partition-pruning predicate (listing-
     // level, like pt): staged-but-uncommitted appends are invisible here.
     val es = graft.store.EpochCommit.committedOrThrow(spark, path, "bm25 index")
-    applyTombstones(spark, path,
+    tombstones.fold(spark, path,
       spark.read.parquet(postingsDir(path))
         .filter(col(graft.store.EpochCommit.Col).isin(es: _*) &&
           col("pt").isin(pts: _*) && col("term").isin(terms: _*))
@@ -386,13 +374,11 @@ object IndexedBm25 {
       .readCommitted(spark, path, metaDir(path), "bm25 index")
       .agg(sum(col("n")).cast("double").as("n"),
         sum(col("total")).cast("double").as("total"))
-    if (!hasTombstones(spark, path)) base
+    if (!tombstones.present(spark, path)) base
     else {
       val dead = graft.store.EpochCommit
         .readCommitted(spark, path, doclensDir(path), "bm25 index")
-        .join(broadcast(spark.read.schema("doc_id LONG").parquet(tombstonesDir(path))
-            .select(col("doc_id"))),
-          Seq("doc_id"), "left_semi")
+        .join(broadcast(tombstones.ids(spark, path)), Seq("doc_id"), "left_semi")
         .agg(count(lit(1)).cast("double").as("dn"),
           coalesce(sum(col("dl")), lit(0L)).cast("double").as("dtotal"))
       base.crossJoin(dead)
@@ -402,9 +388,8 @@ object IndexedBm25 {
   }
 
   def build(docs: DataFrame, idCol: String, textCol: String, path: String): Unit = {
-    graft.store.EpochCommit.wipe(docs.sparkSession, path)
-    val e = stageBatch(docs, idCol, textCol, path)
-    graft.store.EpochCommit.commit(docs.sparkSession, path, e)
+    graft.store.EpochCommit.rebuild(docs.sparkSession, path)(
+      stageBatch(docs, idCol, textCol, path))
     writeLayoutMeta(docs.sparkSession, path)
   }
 
@@ -415,16 +400,11 @@ object IndexedBm25 {
     */
   private[graft] def stageBatch(batch: DataFrame, idCol: String,
                                 textCol: String, path: String): String = {
-    val e = graft.store.EpochCommit.newEpochId()
-    postingsOf(batch, idCol, textCol)
-      .repartition(col("pt"))
-      .write.partitionBy("pt")
-      .parquet(graft.store.EpochCommit.stagePath(postingsDir(path), e))
-    statsOf(batch, textCol)
-      .write.parquet(graft.store.EpochCommit.stagePath(metaDir(path), e))
-    doclensOf(batch, idCol, textCol)
-      .write.parquet(graft.store.EpochCommit.stagePath(doclensDir(path), e))
-    e
+    val st = graft.store.EpochCommit.stage(None)
+    st.write(postingsOf(batch, idCol, textCol).repartition(col("pt")), postingsDir(path), "pt")
+    st.write(statsOf(batch, textCol), metaDir(path))
+    st.write(doclensOf(batch, idCol, textCol), doclensDir(path))
+    st.epoch
   }
 
   /** APPEND a batch: new postings files into the term-hash partitions +
@@ -443,8 +423,8 @@ object IndexedBm25 {
     // BEFORE staging: appending under a different modulus than the
     // artifact's would mix two pt derivations in one tree
     validateLayoutMeta(batch.sparkSession, path)
-    val e = stageBatch(batch, idCol, textCol, path)
-    graft.store.EpochCommit.commit(batch.sparkSession, path, e)
+    graft.store.EpochCommit.commit(batch.sparkSession, path,
+      stageBatch(batch, idCol, textCol, path))
     writeLayoutMeta(batch.sparkSession, path) // backfills pre-r20 artifacts
   }
 
@@ -471,23 +451,14 @@ object IndexedBm25 {
     */
   def delete(spark: SparkSession, path: String, ids: Seq[Long]): Unit = {
     require(ids.nonEmpty, "bm25 delete: empty id list")
-    import spark.implicits._
     // only ids the index actually holds are tombstoned (collect bounded
     // by |ids|) — so "unknown ids are no-ops" holds literally, and a
     // later append REUSING a never-ingested id is not silently filtered
-    val matched = applyTombstones(spark, path,
-        graft.store.EpochCommit
-          .readCommitted(spark, path, doclensDir(path), "bm25 index"))
+    val matched = liveDoclens(spark, path)
       .filter(col("doc_id").isin(ids: _*))
       .select(col("doc_id"))
       .collect()
-    if (matched.nonEmpty) {
-      // under the swap lock — see [[IvfPackedIndex.delete]] (r20 review)
-      graft.store.DocStore.withSwapLock(spark, path) {
-        matched.map(_.getLong(0)).toSeq.toDF("doc_id")
-          .write.mode("append").parquet(tombstonesDir(path))
-      }
-    }
+    if (matched.nonEmpty) tombstones.record(spark, path, matched.map(_.getLong(0)).toSeq)
   }
 
   /** COMPACT: physically drop tombstoned docs from postings and doclens,
@@ -497,12 +468,13 @@ object IndexedBm25 {
     * `bm25_delete_parity` oracle row pins probe-equality). Reads
     * committed epochs only and rewrites them as ONE fresh epoch, so
     * orphaned staged appends (crashes before their commit marker) are
-    * garbage-collected here.
+    * garbage-collected here. Refused once every document is deleted
+    * ([[graft.store.EpochCommit.swapRewrite]]).
     */
   def compact(spark: SparkSession, path: String): Unit =
-    graft.store.DocStore.swapDirContents(spark, path) { tmp =>
-      val e = graft.store.EpochCommit.newEpochId()
-      applyTombstones(spark, path,
+    graft.store.EpochCommit.compact(spark, path, tombstones,
+        liveDoclens(spark, path)) { (tmp, st) =>
+      val postings = tombstones.fold(spark, path,
           graft.store.EpochCommit
             .readCommitted(spark, path, postingsDir(path), "bm25 index"))
         // re-derive pt with THIS build's modulus (round-20): compact's
@@ -512,18 +484,10 @@ object IndexedBm25 {
         // IvfIndex.compactIndex / compactBandedDHashIndex precedent)
         // instead of relabeling stale dirs
         .withColumn("pt", pmod(xxhash64(col("term")), lit(Partitions.toLong)))
-        .repartition(col("pt"))
-        .write.partitionBy("pt")
-        .parquet(graft.store.EpochCommit.stagePath(postingsDir(tmp), e))
-      mergedStats(spark, path)
-        .select(col("n").cast("long").as("n"),
-          col("total").cast("long").as("total"))
-        .write.parquet(graft.store.EpochCommit.stagePath(metaDir(tmp), e))
-      applyTombstones(spark, path,
-          graft.store.EpochCommit
-            .readCommitted(spark, path, doclensDir(path), "bm25 index"))
-        .write.parquet(graft.store.EpochCommit.stagePath(doclensDir(tmp), e))
-      graft.store.EpochCommit.commit(spark, tmp, e)
+      st.write(postings.repartition(col("pt")), postingsDir(tmp), "pt")
+      st.write(mergedStats(spark, path).select(col("n").cast("long").as("n"),
+        col("total").cast("long").as("total")), metaDir(tmp))
+      st.write(liveDoclens(spark, path), doclensDir(tmp))
       writeLayoutMeta(spark, tmp) // stamp what was actually written
     }
 

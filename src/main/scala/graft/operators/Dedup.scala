@@ -248,9 +248,8 @@ object Dedup {
     */
   def buildPostingsIndex(corpus: DataFrame, idCol: String, textCol: String,
                          n: Int, path: String, maxDocFreq: Long = 1000L): Unit = {
-    graft.store.EpochCommit.wipe(corpus.sparkSession, path)
-    val e = stagePostingsBatch(corpus, idCol, textCol, n, path, maxDocFreq)
-    graft.store.EpochCommit.commit(corpus.sparkSession, path, e)
+    graft.store.EpochCommit.rebuild(corpus.sparkSession, path)(
+      stagePostingsBatch(corpus, idCol, textCol, n, path, maxDocFreq))
     writePostingsMeta(corpus.sparkSession, path, n)
   }
 
@@ -323,16 +322,11 @@ object Dedup {
                                         textCol: String, n: Int, path: String,
                                         maxDocFreq: Long,
                                         epoch: Option[String] = None): String = {
-    val e = epoch.getOrElse(graft.store.EpochCommit.newEpochId())
-    // deterministic (replayed) epochs stage in OVERWRITE mode: a retry
-    // must replace a crashed attempt's partial files, never error on them
-    val mode = if (epoch.isDefined) "overwrite" else "errorifexists"
-    shinglePostings(batch, idCol, textCol, n, maxDocFreq)
-      .repartition(col("shingle"))
-      .write.mode(mode).parquet(graft.store.EpochCommit.stagePath(postingsDir(path), e))
-    shingleFreqs(batch, idCol, textCol, n)
-      .write.mode(mode).parquet(graft.store.EpochCommit.stagePath(freqsDir(path), e))
-    e
+    val st = graft.store.EpochCommit.stage(epoch)
+    st.write(shinglePostings(batch, idCol, textCol, n, maxDocFreq).repartition(col("shingle")),
+      postingsDir(path))
+    st.write(shingleFreqs(batch, idCol, textCol, n), freqsDir(path))
+    st.epoch
   }
 
   /** APPEND a new batch's postings into an existing index — the daily-drop
@@ -345,6 +339,11 @@ object Dedup {
     * [[compactPostingsIndex]] restores exact global-cap semantics on the
     * compaction cadence. Caller owns id-uniqueness across batches, as
     * with [[AnnIndex.appendToIndex]].
+    *
+    * `idempotencyTag` (round-17): an at-least-once caller (foreachBatch
+    * maintenance) passes a (run, batchId)-scoped tag and the append
+    * becomes exactly-once under micro-batch replay
+    * ([[graft.store.EpochCommit.append]]).
     */
   def appendPostingsIndex(batch: DataFrame, idCol: String, textCol: String,
                           n: Int, path: String, maxDocFreq: Long = 1000L,
@@ -354,27 +353,10 @@ object Dedup {
     // in ONE atomic marker create — a crash between the two data writes
     // can no longer leave postings visible without the frequencies that
     // compactPostingsIndex's global re-cap needs.
-    //
-    // `idempotencyTag` (round-17): an at-least-once caller (foreachBatch
-    // maintenance) passes a (run, batchId)-scoped tag; the epoch id is
-    // then DETERMINISTIC, a replayed batch whose marker already exists
-    // is a no-op, and a replay of a crashed attempt overwrites its
-    // partial stage — the append becomes exactly-once (see
-    // [[graft.store.EpochCommit.deterministicEpochId]] for the one
-    // compact-window caveat).
     val s = batch.sparkSession
     validatePostingsMeta(s, path, n, "shingle postings append")
-    idempotencyTag match {
-      case Some(tag) =>
-        val e = graft.store.EpochCommit.deterministicEpochId(tag)
-        if (!graft.store.EpochCommit.committed(s, path).contains(e)) {
-          stagePostingsBatch(batch, idCol, textCol, n, path, maxDocFreq, Some(e))
-          graft.store.EpochCommit.commit(s, path, e)
-        }
-      case None =>
-        val e = stagePostingsBatch(batch, idCol, textCol, n, path, maxDocFreq)
-        graft.store.EpochCommit.commit(s, path, e)
-    }
+    graft.store.EpochCommit.append(s, path, idempotencyTag, Nil)(
+      stagePostingsBatch(batch, idCol, textCol, n, path, maxDocFreq, _))
     writePostingsMeta(s, path, n) // backfills pre-r20 artifacts
   }
 
@@ -460,23 +442,19 @@ object Dedup {
     // be carried into the tmp tree — compact takes no `n` of its own: the
     // cap is its parameter (re-appliable by design), the width is not
     val recordedN = readPostingsMeta(spark, path)
-    graft.store.DocStore.swapDirContents(spark, path) { tmp =>
+    graft.store.EpochCommit.compact(spark, path) { (tmp, st) =>
       recordedN.foreach(n => writePostingsMeta(spark, tmp, n))
-      val e = graft.store.EpochCommit.newEpochId()
       val freqs = graft.store.EpochCommit
         .readCommitted(spark, path, freqsDir(path), "shingle postings index")
         .groupBy("shingle").agg(sum(col("n_docs")).as("n_docs"))
       val hot = freqs.filter(col("n_docs") > maxDocFreq).select("shingle")
-      readPostingsIndex(spark, path)
+      val postings = readPostingsIndex(spark, path)
         .join(hot, Seq("shingle"), "left_anti")
         .withColumn("corpus_size",
           count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("corpus_id")))
         .select(col("corpus_id"), col("corpus_size"), col("shingle"))
-        .repartition(col("shingle"))
-        .write.parquet(graft.store.EpochCommit.stagePath(postingsDir(tmp), e))
-      freqs.write.parquet(graft.store.EpochCommit.stagePath(freqsDir(tmp), e))
-      // committed-only reads above + the swap GC any orphaned staged epoch
-      graft.store.EpochCommit.commit(spark, tmp, e)
+      st.write(postings.repartition(col("shingle")), postingsDir(tmp))
+      st.write(freqs, freqsDir(tmp))
     }
   }
 
@@ -1083,24 +1061,8 @@ object Dedup {
   def compactBandedDHashIndex(spark: org.apache.spark.sql.SparkSession,
                               path: String): Unit = {
     val meta = bandedMeta(spark, path)
-    // a compact that would fold EVERY row away (all ids tombstoned)
-    // must refuse, not write a footer-less partitioned main that fails
-    // every later read's schema inference — the build guard's twin.
-    // Gated on the `_tombstones` sidecar EXISTING (r21; VERDICT r20
-    // "wrong" #2): build and append both refuse empty inputs, so with
-    // no tombstones the flat view cannot be empty — the common
-    // no-deletions compact skips the guard's read-plan Spark job
-    // entirely (main ∪ tail union + fold, a fixed job-submission cost
-    // even though isEmpty short-circuits on the first surviving row).
-    val tomb = new org.apache.hadoop.fs.Path(dhashTombstonesDir(path))
-    val hasTombstones =
-      tomb.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(tomb)
-    if (hasTombstones && readBandedDHashFlat(spark, path).isEmpty)
-      throw new graft.core.EngineError(
-        s"banded dHash compact at $path: every signature is deleted — an empty " +
-        "index has no parquet footers to serve; wipe the directory and rebuild " +
-        "when new assets arrive instead")
-    graft.store.DocStore.swapDirContents(spark, path) { tmp =>
+    graft.store.EpochCommit.swapRewrite(spark, path, dhashTombstones,
+        readBandedDHashFlat(spark, path)) { tmp =>
       writeBandedMain(readBandedDHashFlat(spark, path), tmp, meta("maxHamming"))
       // stamp what was actually WRITTEN: the banding radius carries over
       // (writeBandedMain banded at it, above), but the dir modulus is
@@ -1123,7 +1085,7 @@ object Dedup {
       df.select(col(idCol).cast("long").as("id"),
         Multimodal.dHashCol(col(bytesCol)).as("sig")), path)
 
-  private def dhashTombstonesDir(path: String) = s"$path/_tombstones"
+  private val dhashTombstones = graft.store.Tombstones("_tombstones", "id", "signature")
 
   /** DELETE asset ids from a banded dHash signature index (round-20;
     * VERDICT r19 "missing" #1 — the last persisted index family without
@@ -1140,37 +1102,14 @@ object Dedup {
     * dir swap rewrites only surviving rows and drops the sidecar
     * itself).
     *
-    * Caveat, shared verbatim with [[Bm25.delete]]: a tombstone
-    * suppresses its id's rows WHEREVER they appear, so re-appending the
-    * same id before a compact clears the tombstones silently filters
-    * the new signature too — re-ingest deleted ids only after a
-    * compact, or under a fresh id.
+    * Re-ingest a deleted id only after a compact, or under a fresh id
+    * (the [[graft.store.Tombstones]] id-reuse caveat).
     */
   def deleteFromDHashIndex(spark: org.apache.spark.sql.SparkSession,
                            path: String, ids: Seq[Long]): Unit = {
     require(ids.nonEmpty, "banded dHash delete: empty id list")
     bandedMeta(spark, path) // loud on a non-banded/corrupt artifact
-    import spark.implicits._
-    // under the swap lock — see [[IvfPackedIndex.delete]] (r20 review)
-    graft.store.DocStore.withSwapLock(spark, path) {
-      ids.distinct.toDF("id").coalesce(1)
-        .write.mode("append").parquet(dhashTombstonesDir(path))
-    }
-  }
-
-  /** Merge-on-read tombstone fold: broadcast anti-join on `id` when the
-    * sidecar exists, pass-through otherwise. Applied ABOVE every banded
-    * read's pruned scan so the gb-partition prune and key pushdown keep
-    * reaching parquet.
-    */
-  private def foldDHashTombstones(spark: org.apache.spark.sql.SparkSession,
-                                  path: String, base: DataFrame): DataFrame = {
-    val t = new org.apache.hadoop.fs.Path(dhashTombstonesDir(path))
-    if (!t.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(t)) base
-    else base.join(
-      broadcast(spark.read.schema("id LONG").parquet(dhashTombstonesDir(path))
-        .select(col("id"))),
-      Seq("id"), "left_anti")
+    dhashTombstones.record(spark, path, ids)
   }
 
   /** Flat `(id, sig)` view of a banded index: the main's `band = 0`
@@ -1182,7 +1121,7 @@ object Dedup {
   def readBandedDHashFlat(spark: org.apache.spark.sql.SparkSession,
                           path: String): DataFrame = {
     bandedMeta(spark, path) // loud on a non-banded/corrupt artifact
-    foldDHashTombstones(spark, path,
+    dhashTombstones.fold(spark, path,
       spark.read.parquet(mainDir(path))
         .filter(col("band") === 0).select("id", "sig")
         .unionByName(readTail(spark, path)))
@@ -1252,14 +1191,14 @@ object Dedup {
         val keys = cells.map(_.getLong(1)).distinct.toSeq
         val pruned = spark.read.parquet(mainDir(path))
           .filter(col("gb").isin(gbs.map(Int.box): _*))
-        foldDHashTombstones(spark, path,
+        dhashTombstones.fold(spark, path,
           if (keys.size <= IvfIndex.MaxInPushdownIds)
             pruned.filter(col("key").isin(keys.map(Long.box): _*))
           else pruned)
           .select(col("band"), col("key"), col("sig").as("__i_sig"))
       } else
         bandSigs(
-          foldDHashTombstones(spark, path,
+          dhashTombstones.fold(spark, path,
             spark.read.parquet(mainDir(path))
               .filter(col("band") === 0).select(col("id"), col("sig"))),
           builtR)
@@ -1268,7 +1207,7 @@ object Dedup {
     // bounded by the compaction cadence, never the corpus; same
     // tombstone fold (a deleted id may live only in the tail)
     val idxTail = bandSigs(
-        foldDHashTombstones(spark, path, readTail(spark, path)), builtR)
+        dhashTombstones.fold(spark, path, readTail(spark, path)), builtR)
       .select(col("band"), col("key"), col("sig").as("__i_sig"))
     b.join(idxMain.unionByName(idxTail), Seq("band", "key"))
       .filter(bit_count(col("__b_sig") bitwiseXOR col("__i_sig"))

@@ -43,9 +43,7 @@ object HotLinesIndex {
       .groupBy("line").agg(count(lit(1)).as("n_docs"))
 
   /** Stage one batch's delta under an uncommitted epoch (crash-injection
-    * seam — `private[graft]` like the other staged lifecycles). A
-    * deterministic (replay) epoch stages in overwrite mode so a retry
-    * replaces a crashed attempt's partial files.
+    * seam — `private[graft]` like the other staged lifecycles).
     */
   private[graft] def stageBatch(batch: DataFrame, textCol: String,
                                 path: String,
@@ -62,22 +60,20 @@ object HotLinesIndex {
     */
   private def stageDelta(delta: DataFrame, path: String,
                          epoch: Option[String], negated: Boolean): String = {
-    val e = epoch.getOrElse(graft.store.EpochCommit.newEpochId())
-    (if (negated) delta.select(col("line"), negate(col("n_docs")).as("n_docs"))
-     else delta)
-      .write.mode(if (epoch.isDefined) "overwrite" else "errorifexists")
-      .parquet(graft.store.EpochCommit.stagePath(freqsDir(path), e))
-    e
+    val st = graft.store.EpochCommit.stage(epoch)
+    st.write(if (negated) delta.select(col("line"), negate(col("n_docs")).as("n_docs"))
+      else delta, freqsDir(path))
+    st.epoch
   }
 
   /** Idempotent single-commit append/delete core shared by [[append]]
-    * and [[delete]] — see
-    * [[graft.operators.Dedup.appendPostingsIndex]]'s tag contract. The
-    * caller's tag is SALTED BY OPERATION (r20 review): a maintainer
-    * micro-batch that both appends new docs and retention-deletes old
-    * ones under the documented (run, batchId)-scoped tag would otherwise
-    * collide on one epoch id and the second operation would be silently
-    * skipped as a "replay" — the retired lines staying hot forever.
+    * and [[delete]] — see [[graft.store.EpochCommit.append]]'s tag
+    * contract. The caller's tag is SALTED BY OPERATION (r20 review): a
+    * maintainer micro-batch that both appends new docs and
+    * retention-deletes old ones under the documented (run, batchId)-
+    * scoped tag would otherwise collide on one epoch id and the second
+    * operation would be silently skipped as a "replay" — the retired
+    * lines staying hot forever.
     *
     * An empty DELTA is a no-op, not an epoch (r20 review — the empty
     * check moved from the batch to the delta): a NON-empty batch whose
@@ -96,36 +92,19 @@ object HotLinesIndex {
     // a maintainer loop would otherwise accumulate one pinned delta per
     // micro-batch until a GC happens to run).
     val delta = lineFreqs(batch, textCol).localCheckpoint(eager = false)
-    try commitPinnedDelta(s, delta, path, negated, tag)
-    finally graft.operators.Dedup.releaseCheckpointBlocks(delta)
-  }
-
-  private def commitPinnedDelta(s: SparkSession, delta: DataFrame,
-                                path: String, negated: Boolean,
-                                tag: Option[String]): Unit = {
-    if (delta.isEmpty) return
-    val salted = tag.map(t => (if (negated) "hl-delete:" else "hl-append:") + t)
-    salted match {
-      case Some(t) =>
-        val e = graft.store.EpochCommit.deterministicEpochId(t)
-        // Also honor the LEGACY UNSALTED tag's epoch as committed (r20
-        // advisor, medium): a maintainer stream checkpointed under a
-        // pre-salt build committed this batch under the unsalted id — a
-        // crash-between-commit-and-offset restart on this build must
-        // recognize it, or the replay double-counts the batch's line
-        // frequencies (the exact at-least-once window the tag closes).
-        // Appends only: no pre-salt build ever committed a delete tag.
-        val legacy = tag.filter(_ => !negated)
-          .map(graft.store.EpochCommit.deterministicEpochId)
-        val committed = graft.store.EpochCommit.committed(s, path)
-        if (!committed.contains(e) && !legacy.exists(committed.contains)) {
-          stageDelta(delta, path, Some(e), negated)
-          graft.store.EpochCommit.commit(s, path, e)
-        }
-      case None =>
-        val e = stageDelta(delta, path, None, negated)
-        graft.store.EpochCommit.commit(s, path, e)
-    }
+    try if (!delta.isEmpty) {
+      val salted = tag.map(t => (if (negated) "hl-delete:" else "hl-append:") + t)
+      // Also honor the LEGACY UNSALTED tag's epoch as committed (r20
+      // advisor, medium): a maintainer stream checkpointed under a
+      // pre-salt build committed this batch under the unsalted id — a
+      // crash-between-commit-and-offset restart on this build must
+      // recognize it, or the replay double-counts the batch's line
+      // frequencies (the exact at-least-once window the tag closes).
+      // Appends only: no pre-salt build ever committed a delete tag.
+      val legacy = tag.filter(_ => !negated).toSeq
+      graft.store.EpochCommit.append(s, path, salted, legacy)(
+        stageDelta(delta, path, _, negated))
+    } finally graft.operators.Dedup.releaseCheckpointBlocks(delta)
   }
 
   def build(corpus: DataFrame, textCol: String, path: String): Unit = {
@@ -140,9 +119,8 @@ object HotLinesIndex {
           "refusing to build a hot-lines index over a corpus that yields no lines " +
           "(all texts blank/whitespace) — an empty sole epoch is unreadable; build " +
           "once real text arrives")
-      graft.store.EpochCommit.wipe(corpus.sparkSession, path)
-      val e = stageDelta(delta, path, None, negated = false)
-      graft.store.EpochCommit.commit(corpus.sparkSession, path, e)
+      graft.store.EpochCommit.rebuild(corpus.sparkSession, path)(
+        stageDelta(delta, path, None, negated = false))
     } finally graft.operators.Dedup.releaseCheckpointBlocks(delta)
   }
 
@@ -160,8 +138,8 @@ object HotLinesIndex {
     *
     * `idempotencyTag` (round-17): at-least-once callers (foreachBatch
     * maintenance) pass a (run, batchId)-scoped tag and the append
-    * becomes exactly-once under micro-batch replay — the
-    * [[graft.operators.Dedup.appendPostingsIndex]] contract.
+    * becomes exactly-once under micro-batch replay
+    * ([[graft.store.EpochCommit.append]]).
     */
   def append(batch: DataFrame, textCol: String, path: String,
              idempotencyTag: Option[String] = None): Unit =
@@ -205,8 +183,7 @@ object HotLinesIndex {
     * a from-scratch [[build]] over every ingested document.
     */
   def compact(spark: SparkSession, path: String): Unit =
-    graft.store.DocStore.swapDirContents(spark, path) { tmp =>
-      val e = graft.store.EpochCommit.newEpochId()
+    graft.store.EpochCommit.compact(spark, path) { (tmp, st) =>
       val folded = graft.store.EpochCommit
         .readCommitted(spark, path, freqsDir(path), "hot-lines index")
         .groupBy("line").agg(sum(col("n_docs")).as("n_docs"))
@@ -222,7 +199,6 @@ object HotLinesIndex {
           "sums to zero (fully cancelled by deletes) — the fold would write a " +
           "footer-less epoch no read can open; the uncompacted table already " +
           "serves the empty hot set correctly, compact again once data returns")
-      folded.write.parquet(graft.store.EpochCommit.stagePath(freqsDir(tmp), e))
-      graft.store.EpochCommit.commit(spark, tmp, e)
+      st.write(folded, freqsDir(tmp))
     }
 }

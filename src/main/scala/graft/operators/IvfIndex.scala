@@ -318,13 +318,10 @@ object IvfIndex {
     * contract).
     */
   def compactIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    graft.store.DocStore.swapDirContents(spark, path) { tmp =>
-      // reading through readIndex also folds tombstones (the IVF twin of
-      // AnnIndex.compactIndex's delete handling)
-      writeIndex(readIndex(spark, path), tmp)
-    }
+    graft.store.EpochCommit.swapRewrite(spark, path, tombstones,
+      readIndex(spark, path))(tmp => writeIndex(readIndex(spark, path), tmp))
 
-  private def tombstonesDir(path: String) = s"$path/_tombstones"
+  private val tombstones = graft.store.Tombstones("_tombstones", "id", "vector")
 
   /** DELETE ids from the persisted IVF index — identical contract (and
     * id-reuse caveat) to [[AnnIndex.deleteFromIndex]]: `_tombstones`
@@ -334,12 +331,7 @@ object IvfIndex {
   def deleteFromIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                       ids: Seq[Long]): Unit = {
     require(ids.nonEmpty, "ivf delete: empty id list")
-    import spark.implicits._
-    // under the swap lock — see [[IvfPackedIndex.delete]] (r20 review)
-    graft.store.DocStore.withSwapLock(spark, path) {
-      ids.distinct.toDF("id")
-        .write.mode("append").parquet(tombstonesDir(path))
-    }
+    tombstones.record(spark, path, ids)
   }
 
   /** Merge-on-read view of a persisted IVF index — cluster pruning still
@@ -347,16 +339,7 @@ object IvfIndex {
     */
   def readIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
     validateLayoutMeta(spark, path, "IVF index")
-    val base = spark.read.parquet(path)
-    val t = new org.apache.hadoop.fs.Path(tombstonesDir(path))
-    val fs = t.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(t)) base
-    // explicit schema: a crashed first delete's footer-less husk reads
-    // as zero tombstones instead of failing schema inference (r20 review)
-    else base.join(
-      broadcast(spark.read.schema("id LONG").parquet(tombstonesDir(path))
-        .select(col("id"))),
-      Seq("id"), "left_anti")
+    tombstones.fold(spark, path, spark.read.parquet(path))
   }
 
   /** Mean cosine between each (non-zero) vector and its assigned centroid

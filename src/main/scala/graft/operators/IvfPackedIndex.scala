@@ -1,9 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.store.EpochCommit
+import graft.store.{EpochCommit, Tombstones}
 
 /** PERSISTED quantized-serving IVF index (round-16; VERDICT r15 next #2):
   * the byte-packed int8 sidecar promoted from a per-session derivation
@@ -66,7 +65,7 @@ object IvfPackedIndex {
 
   private def floatDir(root: String) = s"$root/float"
   private def packedDir(root: String) = s"$root/packed"
-  private def tombstonesDir(root: String) = s"$root/_tombstones"
+  private val tombstones = Tombstones("_tombstones", "id", "vector")
 
   /** Pre-append guard (round-19; advisor r18 + VERDICT r18 "missing"
     * #2): refuse a bucket-modulus mismatch recorded in the root's
@@ -101,9 +100,7 @@ object IvfPackedIndex {
   private[graft] def stageBatch(newRows: DataFrame, idCol: String, embCol: String,
                                 model: IvfIndex.Model, root: String,
                                 epoch: Option[String] = None): String = {
-    val e = epoch.getOrElse(EpochCommit.newEpochId())
-    // a deterministic (replay) epoch overwrites its crashed attempt
-    val mode = if (epoch.isDefined) "overwrite" else "errorifexists"
+    val st = EpochCommit.stage(epoch)
     val assigned = IvfIndex.buildIndex(newRows, idCol, embCol, model)
       .localCheckpoint(eager = false)
     // bucketized: bucket = cluster % ClusterBuckets dirs (round-18 —
@@ -112,13 +109,10 @@ object IvfPackedIndex {
     // probe's cluster IN-list and the re-rank's `id IN (pool)` pushdown
     // (IvfIndex.rerankPool) — the in-task sort is the whole cost, paid
     // once at build/append
-    IvfIndex.bucketized(assigned)
-      .write.mode(mode).partitionBy("bucket")
-      .parquet(EpochCommit.stagePath(floatDir(root), e))
-    IvfIndex.bucketized(IvfIndex.quantizeIndexPacked(assigned))
-      .write.mode(mode).partitionBy("bucket")
-      .parquet(EpochCommit.stagePath(packedDir(root), e))
-    e
+    st.write(IvfIndex.bucketized(assigned), floatDir(root), "bucket")
+    st.write(IvfIndex.bucketized(IvfIndex.quantizeIndexPacked(assigned)),
+      packedDir(root), "bucket")
+    st.epoch
   }
 
   /** BUILD from scratch: wipe, stage the corpus as epoch 1, commit.
@@ -132,9 +126,7 @@ object IvfPackedIndex {
     require(!emb.isEmpty,
       s"packed ivf build at $root: corpus is empty — refusing to commit an " +
       "index whose data dirs contain no files (reads would fail schema inference)")
-    EpochCommit.wipe(emb.sparkSession, root)
-    val e = stageBatch(emb, idCol, embCol, model, root)
-    EpochCommit.commit(emb.sparkSession, root, e)
+    EpochCommit.rebuild(emb.sparkSession, root)(stageBatch(emb, idCol, embCol, model, root))
     IvfIndex.writeLayoutMeta(emb.sparkSession, root)
   }
 
@@ -148,8 +140,8 @@ object IvfPackedIndex {
     *
     * `idempotencyTag` (round-17): at-least-once callers (foreachBatch
     * maintenance) pass a (run, batchId)-scoped tag and the append
-    * becomes exactly-once under micro-batch replay — the
-    * [[Dedup.appendPostingsIndex]] contract.
+    * becomes exactly-once under micro-batch replay
+    * ([[graft.store.EpochCommit.append]]).
     *
     * `driftBaseline` (round-18; VERDICT r17 "missing" #3: the online
     * path appended against the frozen model forever with drift left as
@@ -173,20 +165,8 @@ object IvfPackedIndex {
     if (!newRows.isEmpty) {
       val s = newRows.sparkSession
       assertAppendable(s, root)
-      val committedNow = idempotencyTag match {
-        case Some(tag) =>
-          val e = EpochCommit.deterministicEpochId(tag)
-          val fresh = !EpochCommit.committed(s, root).contains(e)
-          if (fresh) {
-            stageBatch(newRows, idCol, embCol, model, root, Some(e))
-            EpochCommit.commit(s, root, e)
-          }
-          fresh
-        case None =>
-          val e = stageBatch(newRows, idCol, embCol, model, root)
-          EpochCommit.commit(s, root, e)
-          true
-      }
+      val committedNow = EpochCommit.append(s, root, idempotencyTag, Nil)(
+        stageBatch(newRows, idCol, embCol, model, root, _))
       IvfIndex.writeLayoutMeta(s, root) // backfills pre-r19 artifacts
       driftBaseline.foreach { b =>
         val d = IvfIndex.driftCheck(newRows, embCol, model, b, driftTolerance)
@@ -294,29 +274,7 @@ object IvfPackedIndex {
     */
   def delete(spark: SparkSession, root: String, ids: Seq[Long]): Unit = {
     require(ids.nonEmpty, "packed ivf delete: empty id list")
-    import spark.implicits._
-    // under the swap lock (round-20, per review): a bare append racing a
-    // compact that already listed _tombstones would be neither folded
-    // nor carried across the swap — a silently lost takedown delete
-    graft.store.DocStore.withSwapLock(spark, root) {
-      ids.distinct.toDF("id")
-        .write.mode("append").parquet(tombstonesDir(root))
-    }
-  }
-
-  private def foldTombstones(spark: SparkSession, root: String,
-                             base: DataFrame): DataFrame = {
-    val t = new org.apache.hadoop.fs.Path(tombstonesDir(root))
-    val fs = t.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(t)) base
-    // explicit schema (round-20, per review): a crashed FIRST delete
-    // leaves _tombstones as a _temporary-only husk with no parquet
-    // footer — schema inference would then fail EVERY read of a healthy
-    // index; with the declared schema the husk reads as zero tombstones
-    else base.join(
-      broadcast(spark.read.schema("id LONG").parquet(tombstonesDir(root))
-        .select(col("id"))),
-      Seq("id"), "left_anti")
+    tombstones.record(spark, root, ids)
   }
 
   /** Committed-only, tombstone-folded float side (id, embedding,
@@ -324,14 +282,14 @@ object IvfPackedIndex {
     */
   def readFloat(spark: SparkSession, root: String): DataFrame = {
     IvfIndex.validateLayoutMeta(spark, root, "packed IVF index")
-    foldTombstones(spark, root,
+    tombstones.fold(spark, root,
       EpochCommit.readCommitted(spark, root, floatDir(root), "packed IVF index (float side)"))
   }
 
   /** Committed-only, tombstone-folded packed side (id, codes, cluster). */
   def readPacked(spark: SparkSession, root: String): DataFrame = {
     IvfIndex.validateLayoutMeta(spark, root, "packed IVF index")
-    foldTombstones(spark, root,
+    tombstones.fold(spark, root,
       EpochCommit.readCommitted(spark, root, packedDir(root), "packed IVF index (packed side)"))
   }
 
@@ -342,28 +300,12 @@ object IvfPackedIndex {
     * is a copy, not a quantization pass.
     */
   def compact(spark: SparkSession, root: String): Unit =
-    graft.store.DocStore.swapDirContents(spark, root) { tmp =>
-      val e = EpochCommit.newEpochId()
-      // refuse an all-deleted fold (r20 review; the banded dHash
-      // compact's precedent): zero-row partitionBy writes land NO
-      // parquet footers, and promoting a footer-less sole epoch bricks
-      // every subsequent read — the state build() refuses to create
-      val folded = IvfIndex.bucketized(readFloat(spark, root))
-      if (folded.isEmpty)
-        throw new graft.core.EngineError(
-          s"refusing to compact packed IVF index at $root: every row is tombstoned — " +
-          "the fold would write a footer-less epoch no read can open; delete the " +
-          "index tree (EpochCommit.wipe) and rebuild when data returns instead")
-      folded
-        .write.partitionBy("bucket")
-        .parquet(EpochCommit.stagePath(floatDir(tmp), e))
+    EpochCommit.compact(spark, root, tombstones, readFloat(spark, root)) { (tmp, st) =>
       // bucketized reuses the read-back bucket column on the current
       // layout and DERIVES it on a pre-r18 per-cluster artifact — so
       // compacting a legacy index migrates it to the bucketed layout
-      IvfIndex.bucketized(readPacked(spark, root))
-        .write.partitionBy("bucket")
-        .parquet(EpochCommit.stagePath(packedDir(tmp), e))
-      EpochCommit.commit(spark, tmp, e)
+      st.write(IvfIndex.bucketized(readFloat(spark, root)), floatDir(tmp), "bucket")
+      st.write(IvfIndex.bucketized(readPacked(spark, root)), packedDir(tmp), "bucket")
       IvfIndex.writeLayoutMeta(spark, tmp)
       // the drift health record describes the MODEL vs recent batches —
       // still true after a compact; carried via the NEVER-FAIL wrapper

@@ -219,17 +219,10 @@ object DocStore {
   }
 
   /** Run `body` while HOLDING the index's swap lock — the mutual
-    * exclusion the lock-less sidecar writers need against a concurrent
-    * compact (round-20, per review): a tombstone `mode("append")` landing
-    * while a compact's rewrite has already listed `_tombstones` is
-    * neither folded into the rewrite nor carried across the swap — a
-    * silently lost takedown delete, the exact failure class
-    * [[graft.store.EpochCommit.commit]]'s lock checks close for
-    * epoch'd appends. Wrapping the tombstone write in the SAME lock the
-    * swap takes serializes it against the compact: the delete either
-    * completes before the compact's listing (folded in) or waits its
-    * turn / fails fast with the standard in-progress error. Deletes are
-    * tiny single-file writes, so the hold time is milliseconds.
+    * exclusion a write outside the epoch protocol needs against a
+    * concurrent compact, which would otherwise swap it away unseen (see
+    * [[Tombstones]] for the delete case). A held lock fails fast with
+    * the standard in-progress error.
     */
   def withSwapLock[A](spark: SparkSession, path: String)(body: => A): A = {
     val lock = acquireSwapLock(spark, path)

@@ -70,6 +70,30 @@ import org.apache.spark.sql.functions._
   * single-writer contract: serialize them in the orchestrator; the lock
   * protocol converts concurrent overlap into loud errors, never into
   * silent data loss.
+  *
+  * ==== The family lifecycle ====
+  * Every persisted index family drives its lifecycle through this module
+  * and keeps only its own layout, `_meta` validators and sidecars:
+  *
+  *  - STAGE ([[stage]]) — a fresh random epoch stages in
+  *    `errorifexists` mode (its dirs must not exist yet); a tag-derived
+  *    REPLAY epoch stages in `overwrite` mode, so a retry replaces a
+  *    crashed attempt's partial files instead of erroring on them.
+  *  - APPEND ([[append]]) — stage + commit, exactly once under an
+  *    idempotency tag (see [[deterministicEpochId]]): a batch whose
+  *    epoch is already committed is skipped outright.
+  *  - BUILD ([[rebuild]]) — [[wipe]], stage the corpus as the first
+  *    epoch, commit.
+  *  - COMPACT ([[compact]]; [[swapRewrite]] for trees that are not
+  *    epoch'd) — rewrite the committed, tombstone-folded state into one
+  *    fresh epoch of a temp tree and swap it in
+  *    ([[DocStore.swapDirContents]]), which garbage-collects orphaned
+  *    stages and drops the tombstone sidecar. A fold that leaves NO live
+  *    row is refused: a zero-row partitioned write lands no parquet
+  *    footer, and the promoted tree would fail schema inference at every
+  *    read. Only deletes empty a readable index, so the emptiness job
+  *    runs only while tombstones exist.
+  *  - DELETE — see [[Tombstones]].
   */
 object EpochCommit {
 
@@ -114,6 +138,92 @@ object EpochCommit {
   /** Staging path for one data dir of one epoch. */
   def stagePath(dataDir: String, epoch: String): String =
     s"$dataDir/$Col=$epoch"
+
+  /** One batch's staging handle: the epoch it lands under and the write
+    * mode every data dir of that epoch uses (see the family lifecycle in
+    * the object scaladoc).
+    */
+  final class Stage private[EpochCommit] (val epoch: String, replay: Boolean) {
+
+    /** Stage `df` as this epoch's slice of `dataDir`. */
+    def write(df: DataFrame, dataDir: String, partitionCols: String*): Unit = {
+      val w = df.write.mode(if (replay) "overwrite" else "errorifexists")
+      (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*))
+        .parquet(stagePath(dataDir, epoch))
+    }
+  }
+
+  /** Open a stage under `epoch` (a replay of a tagged batch) or under a
+    * fresh [[newEpochId]].
+    */
+  def stage(epoch: Option[String]): Stage =
+    new Stage(epoch.getOrElse(newEpochId()), epoch.isDefined)
+
+  /** APPEND one batch: `stageFn` stages it under the epoch it is given
+    * (None = mint a fresh one) and returns the epoch id, which is then
+    * committed. With a `tag` the epoch is [[deterministicEpochId]]`(tag)`
+    * and the append is exactly-once: when that epoch — or the epoch of
+    * any of `priorTags`, the tags an older build committed the same
+    * batch under — is already committed, nothing is staged. Returns
+    * whether this call committed the batch.
+    */
+  def append(spark: SparkSession, indexPath: String, tag: Option[String],
+             priorTags: Seq[String])(stageFn: Option[String] => String): Boolean =
+    tag match {
+      case Some(t) =>
+        val done = committed(spark, indexPath)
+        val fresh = !(t +: priorTags).exists(p => done.contains(deterministicEpochId(p)))
+        if (fresh) commit(spark, indexPath, stageFn(Some(deterministicEpochId(t))))
+        fresh
+      case None =>
+        commit(spark, indexPath, stageFn(None))
+        true
+    }
+
+  /** BUILD from scratch: wipe the index tree, then commit the epoch
+    * `stageFn` stages.
+    */
+  def rebuild(spark: SparkSession, indexPath: String)(stageFn: => String): Unit = {
+    wipe(spark, indexPath)
+    commit(spark, indexPath, stageFn)
+  }
+
+  /** Rewrite an index with deletes into a temp tree and swap it in,
+    * first refusing (under the lock, so no delete lands in between) when
+    * `live`, the family's tombstone-folded read, is empty.
+    */
+  def swapRewrite(spark: SparkSession, indexPath: String, tombstones: Tombstones,
+                  live: => DataFrame)(writeTo: String => Unit): Unit =
+    DocStore.swapDirContents(spark, indexPath) { tmp =>
+      if (tombstones.present(spark, indexPath) && live.isEmpty)
+        throw new graft.core.EngineError(
+          s"refusing to compact the index at $indexPath: every ${tombstones.item} is " +
+          "deleted (tombstoned) — the fold would write a tree with no parquet footers, " +
+          "which no read can open; the uncompacted index keeps serving the empty set, " +
+          "so delete the index tree (EpochCommit.wipe) and rebuild when data returns")
+      writeTo(tmp)
+    }
+
+  /** COMPACT an epoch'd index with deletes: [[swapRewrite]] whose
+    * `rewrite` stages the folded state under ONE fresh epoch of the temp
+    * tree (plus any sidecars it carries), committed before the swap
+    * promotes it.
+    */
+  def compact(spark: SparkSession, indexPath: String, tombstones: Tombstones,
+              live: => DataFrame)(rewrite: (String, Stage) => Unit): Unit =
+    swapRewrite(spark, indexPath, tombstones, live)(commitRewrite(spark, _, rewrite))
+
+  /** [[compact]] for a family without deletes. */
+  def compact(spark: SparkSession, indexPath: String)
+             (rewrite: (String, Stage) => Unit): Unit =
+    DocStore.swapDirContents(spark, indexPath)(commitRewrite(spark, _, rewrite))
+
+  private def commitRewrite(spark: SparkSession, tmp: String,
+                            rewrite: (String, Stage) => Unit): Unit = {
+    val st = stage(None)
+    rewrite(tmp, st)
+    commit(spark, tmp, st.epoch)
+  }
 
   /** THE commit: one atomic marker-file create. Everything staged under
     * this epoch becomes visible to readers in this single operation.
@@ -197,13 +307,15 @@ object EpochCommit {
   /** The committed epoch set (FS listing; empty if the index was never
     * committed).
     */
-  def committed(spark: SparkSession, indexPath: String): Seq[String] = {
+  def committed(spark: SparkSession, indexPath: String): Seq[String] =
+    markers(spark, indexPath).filter(_.matches(EpochIdPattern))
+
+  /** Every name under `epochs/`, sorted. */
+  private def markers(spark: SparkSession, indexPath: String): Seq[String] = {
     val dir = epochsDir(indexPath)
     val f = fs(spark, dir)
     if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(_.matches(EpochIdPattern)) // stray files are not epochs
-      .sorted
+    else f.listStatus(dir).toSeq.map(_.getPath.getName).sorted
   }
 
   /** Committed-epoch count — the operational health number an operator
@@ -225,14 +337,8 @@ object EpochCommit {
     * means a foreign writer or corruption — inspect by hand. Reported
     * next to [[committedCount]] in the store's `stats` surface.
     */
-  def strayMarkers(spark: SparkSession, indexPath: String): Seq[String] = {
-    val dir = epochsDir(indexPath)
-    val f = fs(spark, dir)
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filterNot(_.matches(EpochIdPattern))
-      .sorted
-  }
+  def strayMarkers(spark: SparkSession, indexPath: String): Seq[String] =
+    markers(spark, indexPath).filterNot(_.matches(EpochIdPattern))
 
   /** Opt-in compaction TRIGGER (round-17; VERDICT r16 next #8 — the
     * `committedCount` scaladoc prescribes compacting at ~O(100) epochs,
@@ -314,4 +420,55 @@ object EpochCommit {
     val f = fs(spark, p)
     if (f.exists(p)) f.delete(p, true)
   }
+}
+
+/** A family's DELETE sidecar: `<indexPath>/<subdir>/`, one `key LONG`
+  * column of deleted ids, and `item` naming what a key identifies (for
+  * the compact refusal's message). Each family declares its one instance.
+  *
+  *  - [[record]] appends under the index's swap lock
+  *    ([[DocStore.withSwapLock]]): a bare append racing a compact that
+  *    already listed the sidecar would be neither folded into the rewrite
+  *    nor carried across the swap — a silently lost takedown delete. With
+  *    the lock the delete lands before the compact's listing (folded in)
+  *    or fails fast with the standard "in progress" error.
+  *  - [[ids]] reads with a DECLARED schema: a crashed first delete leaves
+  *    the sidecar as a `_temporary`-only husk with no parquet footer, and
+  *    schema inference would then fail every read of a healthy index;
+  *    declared, the husk reads as zero deletions.
+  *  - [[fold]] is the merge-on-read: a broadcast anti-join (bounded by
+  *    deletions since the last compact) applied above the family's pruned
+  *    scan, so partition pruning still reaches parquet below it.
+  *
+  * A tombstone hides its id wherever it appears, including rows appended
+  * after the delete, until a compact drops the sidecar — ids must not be
+  * reused within a compact cycle.
+  */
+final case class Tombstones(subdir: String, key: String, item: String) {
+
+  private def dir(indexPath: String) = s"$indexPath/$subdir"
+
+  /** Whether any delete was recorded since the last compact. */
+  def present(spark: SparkSession, indexPath: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dir(indexPath))
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
+  /** Record deleted ids: one single-file append under the swap lock. */
+  def record(spark: SparkSession, indexPath: String, deleted: Seq[Long]): Unit = {
+    import spark.implicits._
+    DocStore.withSwapLock(spark, indexPath) {
+      deleted.distinct.toDF(key).coalesce(1)
+        .write.mode("append").parquet(dir(indexPath))
+    }
+  }
+
+  /** The recorded ids (`key` column); call only when [[present]]. */
+  def ids(spark: SparkSession, indexPath: String): DataFrame =
+    spark.read.schema(s"$key LONG").parquet(dir(indexPath))
+
+  /** `frame` minus the tombstoned keys; untouched without a sidecar. */
+  def fold(spark: SparkSession, indexPath: String, frame: DataFrame): DataFrame =
+    if (!present(spark, indexPath)) frame
+    else frame.join(broadcast(ids(spark, indexPath)), Seq(key), "left_anti")
 }

@@ -163,10 +163,7 @@ object MetaSidecar {
     val f = fs(spark, p)
     if (!f.exists(p)) None
     else {
-      val in = f.open(p)
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
+      val text = readRaw(f, p)
       try Some(text.linesIterator.filter(_.contains("="))
         .map { l => val kv = l.split("=", 2); (kv(0).trim, kv(1).trim.toInt) }.toMap)
       catch { case e: Exception =>

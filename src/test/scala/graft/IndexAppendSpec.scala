@@ -432,33 +432,102 @@ class IndexAppendSpec extends SparkSpec {
 
   // ==== round-20 review: the tombstone lifecycle's crash/concurrency guards ====
 
-  test("deletes refuse while a compact holds the swap lock; a footer-less tombstone husk reads as zero deletions") {
-    val path = java.nio.file.Files.createTempDirectory("graft-lsh-dellock").toString
-    AnnIndex.writeIndex(AnnIndex.buildIndex(embs, "vec_id", "embedding", cfg), path, cfg)
-    // a lock-less tombstone append racing a compact that already listed
-    // _tombstones would be neither folded nor carried across the swap —
-    // the delete now takes the compact's own lock and fails fast instead
-    val lock = new org.apache.hadoop.fs.Path(path + ".lock")
-    val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.create(lock, false).close()
-    try {
-      val err = intercept[graft.core.EngineError](
-        AnnIndex.deleteFromIndex(spark, path, Seq(1L)))
-      assert(err.getMessage.contains("in progress"), err.getMessage)
-    } finally fs.delete(lock, false)
-    // lock released → the delete lands (and the index serves without id 1)
-    AnnIndex.deleteFromIndex(spark, path, Seq(1L))
-    assert(AnnIndex.readIndex(spark, path, cfg)
-      .filter(org.apache.spark.sql.functions.col("id") === 1L).isEmpty)
+  /** One tombstone family under test: how to build it over its fixture
+    * at a path, delete ids from it, compact it, and read its live ids
+    * (as `id`), plus its tombstone subdir and its full live-id count.
+    */
+  private final case class DeleteFamily(name: String, tombstones: String, rows: Long,
+                                         build: String => Unit,
+                                         delete: (String, Seq[Long]) => Unit,
+                                         compact: String => Unit,
+                                         liveIds: String => DataFrame)
 
-    // a crashed FIRST delete leaves _tombstones as a footer-less husk:
-    // reads must see zero deletions, not fail schema inference forever
-    val path2 = java.nio.file.Files.createTempDirectory("graft-lsh-husk").toString
-    AnnIndex.writeIndex(AnnIndex.buildIndex(embs, "vec_id", "embedding", cfg), path2, cfg)
-    val husk = new org.apache.hadoop.fs.Path(s"$path2/_tombstones/_temporary")
-    husk.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(husk)
-    assert(AnnIndex.readIndex(spark, path2, cfg).count() == embs.count() * cfg.nTables,
-      "footer-less tombstone husk broke the read")
+  private lazy val bm25Docs = {
+    import spark.implicits._
+    Seq((1L, "common apple banana"), (2L, "common banana cherry"), (3L, "common dog"))
+      .toDF("doc_id", "text")
+  }
+
+  private lazy val dhashSigs = {
+    import spark.implicits._
+    Seq.tabulate(30)(i => (i.toLong, i.toLong * 0x9E3779B97F4A7C15L)).toDF("id", "sig")
+  }
+
+  private lazy val ivfModel = IvfIndex.fit(embs, "embedding", k = 8)
+
+  private def lshFamily = DeleteFamily("LSH", "_tombstones", embs.count() * cfg.nTables,
+    p => AnnIndex.writeIndex(AnnIndex.buildIndex(embs, "vec_id", "embedding", cfg), p, cfg),
+    (p, ids) => AnnIndex.deleteFromIndex(spark, p, ids),
+    p => AnnIndex.compactIndex(spark, p),
+    p => AnnIndex.readIndex(spark, p, cfg).select("id"))
+
+  private def ivfFamily = DeleteFamily("IVF", "_tombstones", embs.count(),
+    p => IvfIndex.writeIndex(IvfIndex.buildIndex(embs, "vec_id", "embedding", ivfModel), p),
+    (p, ids) => IvfIndex.deleteFromIndex(spark, p, ids),
+    p => IvfIndex.compactIndex(spark, p),
+    p => IvfIndex.readIndex(spark, p).select("id"))
+
+  private def packedIvfFamily = DeleteFamily("packed IVF", "_tombstones", embs.count(),
+    p => graft.operators.IvfPackedIndex.build(embs, "vec_id", "embedding", ivfModel, p),
+    (p, ids) => graft.operators.IvfPackedIndex.delete(spark, p, ids),
+    p => graft.operators.IvfPackedIndex.compact(spark, p),
+    p => graft.operators.IvfPackedIndex.readFloat(spark, p).select("id"))
+
+  private def bm25Family = DeleteFamily("BM25", "tombstones", bm25Docs.count(),
+    p => graft.operators.IndexedBm25.build(bm25Docs, "doc_id", "text", p),
+    (p, ids) => graft.operators.IndexedBm25.delete(spark, p, ids),
+    p => graft.operators.IndexedBm25.compact(spark, p),
+    p => graft.operators.IndexedBm25.topK(spark, p, Seq("common", "apple", "dog"), 100)
+      .select(col("doc_id").as("id")))
+
+  private def dhashFamily = DeleteFamily("banded dHash", "_tombstones", dhashSigs.count(),
+    p => graft.operators.Dedup.buildBandedDHashIndexFromSigs(dhashSigs, p),
+    (p, ids) => graft.operators.Dedup.deleteFromDHashIndex(spark, p, ids),
+    p => graft.operators.Dedup.compactBandedDHashIndex(spark, p),
+    p => graft.operators.Dedup.readBandedDHashFlat(spark, p).select("id"))
+
+  test("deletes refuse while a compact holds the swap lock; a footer-less tombstone husk reads as zero deletions") {
+    Seq(lshFamily, ivfFamily, packedIvfFamily, bm25Family, dhashFamily).foreach { f =>
+      val path = java.nio.file.Files.createTempDirectory("graft-dellock").toString
+      f.build(path)
+      // a lock-less tombstone append racing a compact that already listed
+      // the sidecar would be neither folded nor carried across the swap —
+      // the delete now takes the compact's own lock and fails fast instead
+      val lock = new org.apache.hadoop.fs.Path(path + ".lock")
+      val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.create(lock, false).close()
+      try {
+        val err = intercept[graft.core.EngineError](f.delete(path, Seq(1L)))
+        assert(err.getMessage.contains("in progress"), s"${f.name}: ${err.getMessage}")
+      } finally fs.delete(lock, false)
+      // lock released → the delete lands (and the index serves without id 1)
+      f.delete(path, Seq(1L))
+      assert(f.liveIds(path).filter(col("id") === 1L).isEmpty, f.name)
+
+      // a crashed FIRST delete leaves the sidecar as a footer-less husk:
+      // reads must see zero deletions, not fail schema inference forever
+      val path2 = java.nio.file.Files.createTempDirectory("graft-husk").toString
+      f.build(path2)
+      val husk = new org.apache.hadoop.fs.Path(s"$path2/${f.tombstones}/_temporary")
+      husk.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(husk)
+      assert(f.liveIds(path2).count() == f.rows,
+        s"${f.name}: footer-less tombstone husk broke the read")
+    }
+  }
+
+  test("compact refuses to fold away every row; BM25, LSH and IVF keep serving the empty index") {
+    // a zero-row partitioned rewrite lands no parquet footers: the
+    // promoted tree would fail schema inference at every later read
+    Seq(bm25Family, lshFamily, ivfFamily).foreach { f =>
+      val path = java.nio.file.Files.createTempDirectory("graft-alldel").toString
+      f.build(path)
+      f.delete(path, f.liveIds(path).distinct().collect().map(_.getLong(0)).toSeq)
+      assert(f.liveIds(path).isEmpty, s"${f.name}: merge-on-read left rows")
+      val err = intercept[graft.core.EngineError](f.compact(path))
+      assert(err.getMessage.contains("tombstoned"), s"${f.name}: ${err.getMessage}")
+      // the refusal changed nothing: the index still reads, as empty
+      assert(f.liveIds(path).isEmpty, s"${f.name}: unreadable after the refusal")
+    }
   }
 
   test("packed IVF: all-tombstoned compact refuses; replayed drift checks never double-count (r20 review)") {
