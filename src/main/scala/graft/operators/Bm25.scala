@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Validate
@@ -17,10 +17,10 @@ import graft.core.Validate
   * with `idf(t) = ln(1 + (N − df + 0.5)/(df + 0.5))`.
   *
   * Two serving forms, one scorer:
-  *  - [[topK]] — direct scan. In-row `tf` per query term (a `filter` HOF
-  *    over the token array — NO token-level explode/shuffle); the only
-  *    exchange carries docs matching ≥1 term, and the final ranking is a
-  *    k-bounded TakeOrderedAndProject.
+  *  - [[topK]] — direct scan in two in-row passes: one aggregate for the
+  *    corpus stats, broadcast as one row, then in-row `tf` per query term
+  *    (a `filter` HOF over the token array — NO token-level explode, no
+  *    shuffle of the corpus) ranked by a k-bounded TakeOrderedAndProject.
   *  - [[IndexedBm25]] — a persisted INVERTED INDEX partitioned by term
   *    hash, with the same build/APPEND lifecycle as the engine's other
   *    maintained artifacts (LSH/IVF, shingle postings, count table): a
@@ -31,36 +31,6 @@ object Bm25 {
 
   val DefaultK1 = 1.2
   val DefaultB = 0.75
-
-  /** `(doc_id, dl, term, tf)` for ONLY the query terms, computed IN ROW:
-    * per term, `tf = |filter(tokens, _ == term)|` — |q| codegen passes
-    * over each token array instead of a corpus-token explode. Nothing
-    * leaves the row until the tf>0 postings themselves.
-    */
-  private def matchedPostings(docs: DataFrame, idCol: String, textCol: String,
-                              terms: Seq[String]): DataFrame = {
-    val perTerm = array(terms.map(t =>
-      struct(lit(t).as("term"),
-        size(filter(col("__t"), x => x === lit(t))).cast("long").as("tf"))): _*)
-    docs.select(col(idCol).cast("long").as("doc_id"),
-        TextAnalysis.tokens(col(textCol)).as("__t"))
-      .select(col("doc_id"), size(col("__t")).cast("long").as("dl"),
-        explode(filter(perTerm, s => s.getField("tf") > 0)).as("p"))
-      .select(col("doc_id"), col("dl"),
-        col("p.term").as("term"), col("p.tf").as("tf"))
-  }
-
-  /** Score postings `(doc_id, dl, term, tf)` against 1-row `stats(n,
-    * total)` and rank. `df` comes from the postings themselves (for the
-    * probed terms they ARE the full posting lists, so the count is the
-    * exact corpus df) and broadcasts at |q| rows; stats broadcast at one
-    * row. Ranking cuts on the ROUNDED score with a doc_id tiebreak so the
-    * emitted order is reproducible bit-for-bit by any engine computing
-    * the same rational-plus-ln arithmetic.
-    */
-  private def scoreAndTopK(postings: DataFrame, stats: DataFrame, k: Int,
-                           k1: Double, b: Double): DataFrame =
-    Bm25Scorer.score(postings, stats, k, k1, b)
 
   /** ONE duplicate-term contract for every serving form (round-14,
     * ADVICE r13): duplicated query terms are silently deduplicated —
@@ -75,32 +45,76 @@ object Bm25 {
     terms.distinct
   }
 
-  /** Direct-scan BM25 top-k. Corpus stats (N, Σ|d|) are an inline
-    * aggregate here — the self-contained form; a deployment probing daily
-    * serves them from [[IndexedBm25]]'s maintained meta instead of the
-    * second scan.
+  /** Direct-scan BM25 top-k `(doc_id, score)`, ranked by `(score desc,
+    * doc_id)`; only documents holding at least one query term are
+    * emitted. Corpus stats are an inline aggregate here — the
+    * self-contained form; a deployment probing daily serves them from
+    * [[IndexedBm25]]'s maintained meta instead of the second scan.
     */
   def topK(docs: DataFrame, idCol: String, textCol: String,
            terms: Seq[String], k: Int,
-           k1: Double = DefaultK1, b: Double = DefaultB): DataFrame = {
+           k1: Double = DefaultK1, b: Double = DefaultB): DataFrame =
+    topKCarrying(docs, idCol, textCol, terms, k, Seq.empty, k1, b)
+
+  /** [[topK]] whose rows also carry the `carry` columns of `docs`, cut
+    * together with their scores — a caller that needs a payload (the
+    * store's text and metadata) takes it from the rows already scored
+    * instead of joining the ranking back against a second scan.
+    *
+    * Two in-row passes over the tokenized input, no token-level explode:
+    *  1. one aggregate gives `(n, Σ|d|, df per query term)`; it reaches
+    *     pass 2 as a one-row broadcast, so the frame stays lazy;
+    *  2. per row, each term's `tf = |filter(tokens, _ == term)|` scored
+    *     by [[Bm25Scorer.contrib]] and summed in term order — the same
+    *     sum, bit for bit, as adding up the doc's postings (a term with
+    *     tf = 0 adds exactly 0.0).
+    * The cut is a k-bounded TakeOrderedAndProject on `(matched desc,
+    * round(score, 6) desc, doc_id)` and the unmatched rows are dropped
+    * AFTER it: placed before the cut, Catalyst pushes the matched filter
+    * through the tokenize projection and re-runs the split once per term.
+    * Leading with `matched` keeps the post-cut filter exact even when a
+    * matched score rounds to 0.0, and keeps NaN rows (a corpus with no
+    * tokens: `0·n/0`) out, which a `score > 0` test would let through —
+    * Spark orders NaN above every number.
+    */
+  private[graft] def topKCarrying(docs: DataFrame, idCol: String, textCol: String,
+                                  terms: Seq[String], k: Int, carry: Seq[String],
+                                  k1: Double = DefaultK1,
+                                  b: Double = DefaultB): DataFrame = {
     Validate.positiveTopK(k)
     val q = checkedTerms(terms)
-    val base = docs.select(col(idCol).cast("long").as("doc_id"),
-      col(textCol).as("__text"))
-    val stats = base
-      .select(TextAnalysis.tokenCount(col("__text")).cast("long").as("__dl"))
-      .agg(count(lit(1)).cast("double").as("n"),
-        sum(col("__dl")).cast("double").as("total"))
-    scoreAndTopK(matchedPostings(base, "doc_id", "__text", q), stats, k, k1, b)
+    val toks = docs.select(Seq(col(idCol).cast("long").as("doc_id"),
+      TextAnalysis.tokens(col(textCol)).as("__t")) ++ carry.map(col): _*)
+    val stats = toks.agg(count(lit(1)).cast("double").as("__n"),
+      sum(size(col("__t")).cast("long")).cast("double").as("__total") +:
+        q.indices.map(i =>
+          count_if(array_contains(col("__t"), q(i))).cast("double").as(s"__df$i")): _*)
+    val tf = q.indices.map(i => col(s"__tf$i"))
+    val score = q.indices.map(i => Bm25Scorer.contrib(tf(i), col(s"__df$i"),
+      col("__dl"), col("__n"), col("__total"), k1, b)).reduce(_ + _)
+    toks.select(Seq(col("doc_id"), size(col("__t")).as("__dl")) ++
+        q.zipWithIndex.map { case (t, i) =>
+          size(filter(col("__t"), x => x === lit(t))).cast("long").as(s"__tf$i") } ++
+        carry.map(col): _*)
+      .crossJoin(broadcast(stats))
+      .select(Seq(col("doc_id"), score.as("__score"),
+        tf.map(_ > 0).reduce(_ || _).as("__hit")) ++ carry.map(col): _*)
+      .orderBy(col("__hit").desc, round(col("__score"), 6).desc, col("doc_id"))
+      .limit(k)
+      .filter(col("__hit"))
+      .select(Seq(col("doc_id"), round(col("__score"), 6).as("score")) ++
+        carry.map(col): _*)
   }
 
   /** BM25 of one text column against a STANDING query with FROZEN corpus
     * statistics — `(term, df)` pairs plus `(n, total)` baked in as
     * literals (collected once from [[IndexedBm25.frozenStats]] or any
-    * maintained stats source). Pure `functions._` Column — fully codegen,
-    * no UDF, no join, no aggregation — so it works as a STREAMING
-    * projection (ingest-time routing/alerting: score each arriving
-    * document against the standing profile) and costs a scan in batch.
+    * maintained stats source). Pure `functions._` Column — no UDF, no
+    * join, no aggregation (the per-term `filter` lambda is
+    * CodegenFallback: it runs interpreted inside the generated stage) —
+    * so it works as a STREAMING projection (ingest-time routing/alerting:
+    * score each arriving document against the standing profile) and
+    * costs a scan in batch.
     * The idf literals constant-fold at plan time.
     */
   def scoreColumn(text: org.apache.spark.sql.Column,
@@ -181,19 +195,31 @@ object Bm25 {
     * the fusion costs nothing at any corpus size.
     */
   def rrfFuse(lexical: DataFrame, semantic: DataFrame, k: Int,
-              kRrf: Int = 60): DataFrame = {
+              kRrf: Int = 60): DataFrame =
+    rrfFuseCarrying(lexical, semantic, k, Seq.empty, kRrf)
+
+  /** [[rrfFuse]] whose rows also carry the `carry` columns of the two
+    * lists — taken from whichever list holds the doc, so both lists must
+    * come from one snapshot (then a doc in both carries the same values).
+    */
+  private[graft] def rrfFuseCarrying(lexical: DataFrame, semantic: DataFrame,
+                                     k: Int, carry: Seq[String],
+                                     kRrf: Int = 60): DataFrame = {
     Validate.positiveTopK(k)
     require(kRrf >= 1, s"rrf constant must be >= 1, got $kRrf")
-    lexical.select(col("doc_id"), col("rank").cast("double").as("__rl"))
-      .join(semantic.select(col("doc_id"), col("rank").cast("double").as("__rs")),
-        Seq("doc_id"), "full_outer")
-      .select(col("doc_id"),
+    def ranked(list: DataFrame, r: String) =
+      list.select(Seq(col("doc_id"), col("rank").cast("double").as(r)) ++
+        carry.map(c => col(c).as(r + c)): _*)
+    ranked(lexical, "__rl")
+      .join(ranked(semantic, "__rs"), Seq("doc_id"), "full_outer")
+      .select(Seq(col("doc_id"),
         (coalesce(lit(1.0) / (lit(kRrf.toDouble) + col("__rl")), lit(0.0)) +
           coalesce(lit(1.0) / (lit(kRrf.toDouble) + col("__rs")), lit(0.0)))
-          .as("rrf"))
+          .as("rrf")) ++
+        carry.map(c => coalesce(col("__rl" + c), col("__rs" + c)).as(c)): _*)
       .orderBy(round(col("rrf"), 9).desc, col("doc_id"))
       .limit(k)
-      .select(col("doc_id"), round(col("rrf"), 9).as("rrf"))
+      .select(Seq(col("doc_id"), round(col("rrf"), 9).as("rrf")) ++ carry.map(col): _*)
   }
 }
 
@@ -546,7 +572,8 @@ object IndexedBm25 {
       .join(broadcast(qt), Seq("term"))
       .join(broadcast(df), Seq("term"))
       .crossJoin(broadcast(stats))
-      .withColumn("__contrib", Bm25Scorer.contrib(k1, b))
+      .withColumn("__contrib", Bm25Scorer.contrib(
+        col("tf"), col("df"), col("dl"), col("n"), col("total"), k1, b))
       .groupBy(col("q_id"), col("doc_id")).agg(sum(col("__contrib")).as("score"))
       .select(col("q_id"), col("doc_id").as("c_id"),
         round(col("score"), 6).as("score"))
@@ -829,18 +856,27 @@ private[graft] object Bm25Positional {
 /** Internal seam so [[IndexedBm25]] shares [[Bm25]]'s private scorer. */
 private[operators] object Bm25Scorer {
 
-  /** The per-posting BM25 contribution over columns `tf, df, dl, n,
-    * total` — ONE definition of the arithmetic (and its evaluation
-    * order: `((idf·tf)·(k1+1))/denom`, `dl·n/total` length norm) shared
-    * by every serving form, so the oracle twins replay a single shape.
+  /** The per-term BM25 contribution over columns `tf, df, dl, n, total`
+    * (`n`, `total`, `df` doubles) — ONE definition of the arithmetic (and
+    * its evaluation order: `((idf·tf)·(k1+1))/denom`, `dl·n/total` length
+    * norm) shared by every serving form, so the oracle twins replay a
+    * single shape.
     */
-  def contrib(k1: Double, b: Double): org.apache.spark.sql.Column =
-    log(lit(1.0) + (col("n") - col("df") + lit(0.5)) / (col("df") + lit(0.5))) *
-      col("tf").cast("double") * lit(k1 + 1.0) /
-      (col("tf").cast("double") +
-        lit(k1) * (lit(1.0 - b) +
-          lit(b) * col("dl").cast("double") * col("n") / col("total")))
+  def contrib(tf: Column, df: Column, dl: Column, n: Column, total: Column,
+              k1: Double, b: Double): Column =
+    log(lit(1.0) + (n - df + lit(0.5)) / (df + lit(0.5))) *
+      tf.cast("double") * lit(k1 + 1.0) /
+      (tf.cast("double") +
+        lit(k1) * (lit(1.0 - b) + lit(b) * dl.cast("double") * n / total))
 
+  /** Score postings `(doc_id, dl, term, tf)` against 1-row `stats(n,
+    * total)` and rank. `df` comes from the postings themselves (for the
+    * probed terms they ARE the full posting lists, so the count is the
+    * exact corpus df) and broadcasts at |q| rows; stats broadcast at one
+    * row. Ranking cuts on the ROUNDED score with a doc_id tiebreak so the
+    * emitted order is reproducible bit-for-bit by any engine computing
+    * the same rational-plus-ln arithmetic.
+    */
   def score(postings: DataFrame, stats: DataFrame, k: Int,
             k1: Double, b: Double): DataFrame = {
     val df = postings.groupBy(col("term"))
@@ -848,7 +884,8 @@ private[operators] object Bm25Scorer {
     postings
       .join(broadcast(df), Seq("term"))
       .crossJoin(broadcast(stats))
-      .withColumn("__contrib", contrib(k1, b))
+      .withColumn("__contrib",
+        contrib(col("tf"), col("df"), col("dl"), col("n"), col("total"), k1, b))
       .groupBy(col("doc_id")).agg(sum(col("__contrib")).as("score"))
       .orderBy(round(col("score"), 6).desc, col("doc_id"))
       .limit(k)

@@ -6,8 +6,11 @@ import org.apache.spark.sql.functions._
 /** Text-analysis operators for training-data pipelines (SURVEY §2.3 E5 +
   * the builder brief): token counting, quality scoring, language ID, and
   * document fingerprinting. All pure Column expressions built from
-  * `org.apache.spark.sql.functions` — fully codegen'd, no UDFs on the hot
-  * path, so they run at scan speed over 100 TB. (One deliberate
+  * `org.apache.spark.sql.functions` — no UDFs on the hot path, so they
+  * run in-row inside the scan's generated stage. The higher-order
+  * functions among them (`filter`, `exists`, `aggregate`, `transform`)
+  * are CodegenFallback in Spark 4.1: their lambdas run interpreted within
+  * that stage, with nothing leaving the row. (One deliberate
   * exception: [[tokenizeToIds]] uses a broadcast-hash-map UDF — an O(1)
   * per-token lookup that replaces a corpus-sized token shuffle; the
   * codegen break costs far less than the Exchange it removes.)
@@ -130,7 +133,7 @@ object TextAnalysis {
   private def bind(value: Column, body: Column => Column): Column =
     element_at(transform(array(value), body), 1)
 
-  /** Word n-grams of the token stream as a Column (pure codegen: tokens
+  /** Word n-grams of the token stream as a Column (in-row HOFs: tokens
     * bound once, then one `transform` over index positions + `slice`).
     * Fewer than `n` tokens → empty array.
     */
@@ -177,7 +180,7 @@ object TextAnalysis {
     * drop rates are the first thing anyone asks of a corpus build, and
     * rerunning the pipeline to find out why a doc vanished is a
     * full-corpus scan. `concat_ws` skips the NULL (passing) branches, so
-    * this stays one codegen'd projection.
+    * this stays one projection.
     */
   def filterReasons(text: Column, minChars: Int = 50, minTokens: Int = 10,
                     maxDupTokenFrac: Double = 0.5,
@@ -522,7 +525,7 @@ object TextAnalysis {
     * §2.2): per document, keep only lines with ≥ `minWords` words, not
     * matching the `boilerplateRe` marker pattern, and (optionally) ending
     * in terminal punctuation; optionally drop within-doc repeated lines
-    * (first occurrence wins). Pure codegen HOFs over a staged line array
+    * (first occurrence wins). In-row HOFs over a staged line array
     * — one split per row, nothing leaves the row — so the cleaning pass
     * rides any scan at 100 TB exactly like the PII scrub. Output: input
     * columns + `n_lines`, `n_kept`, `cleaned` (kept lines re-joined with
@@ -641,7 +644,7 @@ object TextAnalysis {
   /** Match POSITIONS (1-based token index) of an exact token-sequence
     * phrase in `text` — in-row positional search (the EXACT-PHRASE verb
     * BM25's bag-of-words scoring can't express): position i matches iff
-    * `tokens[i..i+m-1] == phrase`. Pure codegen HOFs — an index sequence,
+    * `tokens[i..i+m-1] == phrase`. In-row HOFs — an index sequence,
     * a slice comparison per candidate position — O(|tokens|·m) per row
     * with nothing leaving the row, so phrase search rides any scan.
     */

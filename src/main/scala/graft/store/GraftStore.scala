@@ -20,6 +20,12 @@ import graft.operators.{Bm25, Chunker, Embedder, Ingest, Similarity}
   *    getDocument → `:268-298`; chunkText → `:369-409`;
   *    ingestFile → `:483-535`; stats → `:538-555`.
   *
+  * Every verb reads the store once: [[table]] is one snapshot (one file
+  * listing, the declared schema, no inference job), and every part of a
+  * verb's answer — scores, ranks, text, metadata — is planned over that
+  * one frame, so a write landing mid-verb can neither drop a hit nor
+  * attach another row's text to it.
+  *
   * Mutation is copy-on-write: a new file set is written, then swapped in —
   * the idiomatic immutable-storage shape (SURVEY §7.4). Single-row verbs
   * exist for parity; bulk pipelines should use [[Ingest.ingestFiles]] /
@@ -36,19 +42,19 @@ final class GraftStore(spark: SparkSession, path: String, embedder: Embedder) {
 
   def exists: Boolean = fs.exists(new Path(path))
 
-  /** Current table state (empty frame with the canonical schema if the
+  /** One snapshot of the table: the files listed now, read with the
+    * declared [[Tables.documentStoreSchema]] — no footer-reading
+    * schema-inference job (an empty frame with the same schema if the
     * store has no files yet).
     */
   def table(): DataFrame =
-    if (exists) spark.read.parquet(path)
+    if (exists) spark.read.schema(Tables.documentStoreSchema).parquet(path)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[Row], Tables.documentStoreSchema)
 
-  private def maxId(): Long = {
-    val t = table()
-    if (t.isEmpty) 0L
-    else t.agg(max(col("id"))).head.getLong(0)
-  }
+  /** Largest stored id, 0 for an empty store — one aggregate job. */
+  private def maxId(): Long =
+    table().agg(coalesce(max(col("id")), lit(0L))).head.getLong(0)
 
   /** Copy-on-write swap — the shared checked protocol lives in
     * [[DocStore.replaceContents]].
@@ -82,9 +88,19 @@ final class GraftStore(spark: SparkSession, path: String, embedder: Embedder) {
   def query(text: String, topK: Int = 3): DataFrame = {
     Validate.nonEmptyText(text, "Query text")
     Validate.positiveTopK(topK)
-    Similarity.topK(table(), "embedding", "id", embedder.embedOne(text), topK)
-      .select(col("id"), col("score"), col("text"), col("metadata"))
+    vectorTopK(table(), text, topK)
   }
+
+  private def vectorTopK(snapshot: DataFrame, text: String, k: Int): DataFrame =
+    Similarity.topK(snapshot, "embedding", "id", embedder.embedOne(text), k)
+      .select(col("id"), col("score"), col("text"), col("metadata"))
+
+  /** Whitespace-tokenized query terms, duplicates collapsed. */
+  private def queryTerms(text: String): Seq[String] =
+    text.trim.split("\\s+").filter(_.nonEmpty).distinct.toSeq
+
+  /** The columns the ranked verbs return beside id and score. */
+  private val Payload = Seq("text", "metadata")
 
   /** BM25 keyword top-k over the stored documents — the LEXICAL query
     * verb. The reference serves only vector similarity
@@ -96,35 +112,29 @@ final class GraftStore(spark: SparkSession, path: String, embedder: Embedder) {
   def searchKeyword(queryText: String, topK: Int = 3): DataFrame = {
     Validate.nonEmptyText(queryText, "Query text")
     Validate.positiveTopK(topK)
-    val terms = queryText.trim.split("\\s+").filter(_.nonEmpty).distinct.toSeq
-    Bm25.topK(table(), "id", "text", terms, topK)
-      .select(col("doc_id").as("id"), col("score"))
-      .join(table().select(col("id"), col("text"), col("metadata")), Seq("id"))
-      .orderBy(desc("score"), col("id"))
-      .select(col("id"), col("score"), col("text"), col("metadata"))
+    Bm25.topKCarrying(table(), "id", "text", queryTerms(queryText), topK, Payload)
+      .select(col("doc_id").as("id"), col("score"), col("text"), col("metadata"))
   }
 
   /** HYBRID retrieval: reciprocal-rank fusion of the vector and keyword
     * top-20 lists for the same query text ([[Bm25.rrfFuse]]); rows
-    * `(id, rrf, text, metadata)`.
+    * `(id, rrf, text, metadata)`. Both lists rank one snapshot and carry
+    * their payload through the cuts, so the fused rows need no join back.
     */
   def queryHybrid(text: String, topK: Int = 3): DataFrame = {
     Validate.nonEmptyText(text, "Query text")
     Validate.positiveTopK(topK)
     val m = math.max(20, topK)
+    val snapshot = table()
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("score").desc, col("doc_id"))
-    val sem = query(text, m)
-      .select(col("id").as("doc_id"), col("score"))
+    val sem = vectorTopK(snapshot, text, m)
+      .withColumnRenamed("id", "doc_id")
       .withColumn("rank", row_number().over(w))
-    val terms = text.trim.split("\\s+").filter(_.nonEmpty).distinct.toSeq
-    val lex = Bm25.topK(table(), "id", "text", terms, m)
+    val lex = Bm25.topKCarrying(snapshot, "id", "text", queryTerms(text), m, Payload)
       .withColumn("rank", row_number().over(w))
-    Bm25.rrfFuse(lex, sem, topK)
-      .select(col("doc_id").as("id"), col("rrf"))
-      .join(table().select(col("id"), col("text"), col("metadata")), Seq("id"))
-      .orderBy(desc("rrf"), col("id"))
-      .select(col("id"), col("rrf"), col("text"), col("metadata"))
+    Bm25.rrfFuseCarrying(lex, sem, topK, Payload)
+      .select(col("doc_id").as("id"), col("rrf"), col("text"), col("metadata"))
   }
 
   /** EXACT-PHRASE search over the stored documents (round-14) — the
@@ -155,15 +165,17 @@ final class GraftStore(spark: SparkSession, path: String, embedder: Embedder) {
   def countDocuments(): Long = table().count()
 
   /** Delete by id; true iff a row existed (`rowcount > 0`,
-    * `vectolite.py:197`). Copy-on-write rewrite of the table.
+    * `vectolite.py:197`). Copy-on-write rewrite of the table. The probe
+    * and the rewrite share one snapshot's file listing; the probe is a
+    * pruned count, and the rewrite may read the live files lazily
+    * because [[DocStore.replaceContents]] writes into a temp dir before
+    * it swaps anything.
     */
   def deleteDocument(id: Long): Boolean = {
-    val t = table().cache()
-    try {
-      val hit = t.filter(col("id") === id).count() > 0
-      if (hit) rewrite(DocStore.deleteByIds(t, "id", Seq(id)))
-      hit
-    } finally t.unpersist()
+    val t = table()
+    val hit = t.filter(col("id") === id).count() > 0
+    if (hit) rewrite(DocStore.deleteByIds(t, "id", Seq(id)))
+    hit
   }
 
   def getDocument(id: Long): Option[Row] =

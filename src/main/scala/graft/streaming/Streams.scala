@@ -910,11 +910,11 @@ object Streams {
     * face of [[phraseMatchStream]], mirroring the batch side's
     * `phraseSearchBatch`: each arriving document is checked in-row
     * against EVERY standing phrase (one staged array of per-phrase
-    * position structs — codegen HOFs, nothing leaves the row) and emits
+    * position structs — in-row HOFs, nothing leaves the row) and emits
     * one `(q_id, n_hits, first_pos)` row per matching phrase. Stateless
     * — no state store, no watermark — so a batch backfill over the same
     * frame is value-identical and the full-scan SQL derivation oracles
-    * the stream. Cost per doc is Σ |phrase_i| codegen passes over the
+    * the stream. Cost per doc is Σ |phrase_i| HOF passes over the
     * token array; the phrase set is a STANDING config (bounded), exactly
     * like the frozen-stats BM25 routing profile.
     */

@@ -458,5 +458,20 @@ class Bm25Spec extends SparkSpec {
     val idxDup = IndexedBm25.topK(spark, path, Seq("apple", "banana", "apple"), 10)
       .as[(Long, Double)].collect().toSeq
     assert(idxDup == clean, s"indexed dup-dedup: $idxDup vs $clean")
+
+    // edge inputs: nothing for an empty input, for terms absent from the
+    // corpus, or for a corpus with no tokens at all (its length norm is
+    // 0·n/0 = NaN, and no NaN row may escape); k beyond the matches
+    // returns just the matches, ranked
+    def scan(docs: org.apache.spark.sql.DataFrame, terms: Seq[String], k: Int) =
+      Bm25.topK(docs, "doc_id", "text", terms, k).as[(Long, Double)].collect().toSeq
+    assert(scan(corpusDF.filter(lit(false)), Seq("apple"), 10).isEmpty)
+    assert(scan(corpusDF, Seq("zebra", "yak"), 10).isEmpty)
+    assert(scan(Seq((1L, ""), (2L, "   ")).toDF("doc_id", "text"),
+      Seq("apple"), 10).isEmpty)
+    val exp = brute(Seq("banana", "zebra"))
+    val few = scan(corpusDF, Seq("banana", "zebra"), 10)
+    assert(few.map(_._1) == Seq(2L, 1L), s"got $few")
+    few.foreach { case (id, s) => assert(math.abs(s - exp(id)) < 1e-6, s"doc $id") }
   }
 }

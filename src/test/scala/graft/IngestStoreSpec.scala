@@ -138,6 +138,97 @@ class IngestStoreSpec extends SparkSpec {
     intercept[EngineError](store.searchPhrase("ok", 0))
   }
 
+  test("GraftStore: one snapshot per verb — 1 job per query, no join-back, indexed-probe answers") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, TakeOrderedAndProjectExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper, QueryStageExec}
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec}
+    import org.apache.spark.sql.expressions.Window
+    val store = new GraftStore(spark,
+      tmpDir().resolve("docs.parquet").toString, HashingEmbedder(16))
+    // repeated texts: BM25 and cosine scores tie, so ids break the ties
+    Seq("apple pie" -> Map("k" -> "a"), "apple pie" -> Map.empty[String, String],
+      "apple tart" -> Map("k" -> "c"), "banana split" -> Map.empty[String, String],
+      "apple pie" -> Map("k" -> "e"), "pie crust" -> Map.empty[String, String])
+      .foreach { case (t, m) => store.insert(t, m) }
+    val q = "apple pie"
+
+    // query: one Spark job, the top-k itself (no schema-inference job).
+    // Jobs are counted by a tag local to this thread, so a late event
+    // from an earlier action cannot land in the count.
+    @volatile var jobs = 0
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties.getProperty("graft.test.verb") == "query") jobs += 1
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setLocalProperty("graft.test.verb", "query")
+      store.query(q, 2).collect()
+      spark.sparkContext.setLocalProperty("graft.test.verb", null)
+      // listener events are async — wait for them to drain, bounded
+      val deadline = System.nanoTime() + 5000000000L
+      while (jobs < 1 && System.nanoTime() < deadline) Thread.sleep(50)
+      Thread.sleep(300) // catch any straggler job this would make > 1
+      assert(jobs == 1, s"query ran $jobs jobs")
+    } finally {
+      spark.sparkContext.setLocalProperty("graft.test.verb", null)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+
+    // scans and joins of the executed (final adaptive) plans
+    val helper = new AdaptiveSparkPlanHelper {}
+    def scans(p: SparkPlan): Int =
+      helper.collect(p) { case f: FileSourceScanExec => f }.size
+    def scansBelowNoCut(p: SparkPlan): Int = p match {
+      case _: TakeOrderedAndProjectExec => 0
+      case _: FileSourceScanExec => 1
+      case a: AdaptiveSparkPlanExec => scansBelowNoCut(a.executedPlan)
+      case s: QueryStageExec => scansBelowNoCut(s.plan)
+      case o => o.children.map(scansBelowNoCut).sum
+    }
+    // a join-back joins a ranked list against the store's rows; the one
+    // join allowed to touch an uncut scan is the keyless cross join of
+    // the one-row BM25 stats
+    def joinsBack(p: SparkPlan): Seq[SparkPlan] = helper.collect(p) {
+      case j: BaseJoinExec if !(j.isInstanceOf[BroadcastNestedLoopJoinExec] &&
+          j.leftKeys.isEmpty && j.condition.isEmpty) &&
+          j.children.exists(scansBelowNoCut(_) > 0) => j
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getDouble(1), r.getString(2),
+        Option(r.getString(3)))).toSeq
+
+    val search = store.searchKeyword(q, 2)
+    val searchRows = rows(search)
+    val searchPlan = search.queryExecution.executedPlan
+    assert(scans(searchPlan) == 2, s"search scans:\n$searchPlan")
+    assert(joinsBack(searchPlan).isEmpty, s"search joins back:\n$searchPlan")
+    val hybrid = store.queryHybrid(q, 3)
+    val hybridRows = rows(hybrid)
+    val hybridPlan = hybrid.queryExecution.executedPlan
+    assert(scans(hybridPlan) == 3, s"hybrid scans:\n$hybridPlan")
+    assert(joinsBack(hybridPlan).isEmpty, s"hybrid joins back:\n$hybridPlan")
+
+    // the same answers from the persisted index over the same table,
+    // with text and metadata joined here
+    val idx = tmpDir().resolve("bm25").toString
+    graft.operators.IndexedBm25.build(store.table(), "id", "text", idx)
+    val payload = store.table().select(col("id").as("doc_id"), col("text"), col("metadata"))
+    val w = Window.orderBy(col("score").desc, col("doc_id"))
+    def withPayload(list: org.apache.spark.sql.DataFrame, score: String) =
+      list.join(payload, Seq("doc_id")).orderBy(col(score).desc, col("doc_id"))
+        .select(col("doc_id"), col(score), col("text"), col("metadata"))
+    def lexical(k: Int) =
+      graft.operators.IndexedBm25.topK(spark, idx, q.split(" ").toSeq, k)
+    assert(searchRows == rows(withPayload(lexical(2), "score")))
+    assert(searchRows.map(_._1) == Seq(1L, 2L), searchRows) // a 3-way tie, cut by id
+    val semantic = store.query(q, 20).select(col("id").as("doc_id"), col("score"))
+    val fused = graft.operators.Bm25.rrfFuse(
+      lexical(20).withColumn("rank", row_number().over(w)),
+      semantic.withColumn("rank", row_number().over(w)), 3)
+    assert(hybridRows == rows(withPayload(fused, "rrf")))
+  }
+
   test("compact: collapses append files, preserves data, keeps sort column pruneable") {
     val dir = tmpDir().resolve("store.parquet").toString
     val store = new GraftStore(spark, dir, HashingEmbedder(8))

@@ -123,23 +123,28 @@ class PlanShapeSpec extends SparkSpec {
     val plan = physical(operators.Bm25.topK(
       docs, "doc_id", "text", Seq("vector", "stream"), 10))
     // ranking must be the k-bounded operator, not a global sort
-    assert(plan.toString.contains("TakeOrderedAndProject"),
-      s"no k-bounded ranking in:\n$plan")
-    // df (|q| rows) and stats (1 row) reach the postings via broadcast
     assert(plan.collect {
-      case b: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => b
-    }.nonEmpty, s"df join not broadcast:\n$plan")
-    // tf is computed in-row: no Exchange may sit BELOW the postings
-    // explode (that would be a token-mass shuffle); the per-doc score
-    // sum above it carries only matching docs
-    val gens = plan.collect {
+      case t: org.apache.spark.sql.execution.TakeOrderedAndProjectExec => t
+    }.nonEmpty, s"no k-bounded ranking in:\n$plan")
+    // df and the corpus stats reach the scorer as one broadcast row: the
+    // plan's only broadcast carries a keyless (one-row) aggregate
+    val stats = plan.collect {
+      case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => b
+    }
+    assert(stats.size == 1 && stats.head.collect {
+      case a: org.apache.spark.sql.execution.aggregate.HashAggregateExec
+        if a.groupingExpressions.isEmpty => a
+    }.nonEmpty, s"stats not broadcast as one row:\n$plan")
+    // tf is computed in-row: no explode at all, and the only exchange is
+    // the single-partition one under the one-row stats aggregate
+    assert(plan.collect {
       case g: org.apache.spark.sql.execution.GenerateExec => g
-    }
-    assert(gens.nonEmpty, s"expected the postings explode in:\n$plan")
-    gens.foreach { g =>
-      assert(g.collect { case s: ShuffleExchangeExec => s }.isEmpty,
-        s"shuffle beneath the postings explode:\n$g")
-    }
+    }.isEmpty, s"token-level explode in:\n$plan")
+    val shuffles = plan.collect { case s: ShuffleExchangeExec => s }
+    assert(shuffles.size == 1 && shuffles.head.outputPartitioning ==
+      org.apache.spark.sql.catalyst.plans.physical.SinglePartition &&
+      stats.head.find(_ eq shuffles.head).nonEmpty,
+      s"shuffle beyond the stats aggregate's:\n$plan")
   }
 
   test("incremental dedup: survivor via min_by aggregation (no window) + anti join on the hash set") {
