@@ -737,13 +737,9 @@ object ScaleProbe {
         IndexedBm25.topK(spark, idxPath, terms, 10).collect()
       }
       val (ts, nn, tot) = IndexedBm25.frozenStats(spark, idxPath, terms)
-      timed(s"bm25 standing-query backfill, staged withScore ($nDocs docs)") {
+      timed(s"bm25 standing-query backfill, withScore ($nDocs docs)") {
         Bm25.withScore(docs, "text", ts, nn, tot)
           .filter(col("score") >= 1.1).count()
-      }
-      timed(s"bm25 standing-query backfill, naive one-Column ($nDocs docs)") {
-        docs.select(Bm25.scoreColumn(col("text"), ts, nn, tot).as("s"))
-          .filter(col("s") >= 1.1).count()
       }
     }
 

@@ -13,11 +13,11 @@ import graft.functions.VectorExpressions._
   *   spark-submit --conf spark.sql.extensions=graft.functions.GraftExtensions ...
   * }}}
   *
-  * makes `cosine_sim` / `dot_product` / `l2_norm` available to every
-  * session (including pure-SQL users) without any driver-side
-  * [[VectorFunctions.register]] call. The Column API keeps its lazy
-  * per-session registration as a fallback for sessions built without the
-  * extension.
+  * makes `cosine_sim` / `dot_product` / `l2_norm` and the BM25 kernel
+  * `term_freqs` available to every session (including pure-SQL users)
+  * without any driver-side [[VectorFunctions.register]] call. The Column
+  * API keeps its lazy per-session registration as a fallback for
+  * sessions built without the extension.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -34,5 +34,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction((FunctionIdentifier("l2_norm"),
       info("l2_norm", "l2_norm(a) - Euclidean norm of a float vector"),
       es => L2Norm(es.head)))
+    ext.injectFunction((FunctionIdentifier("term_freqs"),
+      info("term_freqs", "term_freqs(text, terms) - [token count, count of each constant term] of whitespace-tokenized text"),
+      es => TermFreqs(es(0), es(1))))
   }
 }

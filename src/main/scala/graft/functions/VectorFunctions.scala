@@ -12,9 +12,11 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for vector math over `ArrayType(FloatType)`
-  * columns, plus a plain Scala-UDF fallback.
+  * columns and for BM25 term counting over text ([[TermFreqs]]), plus a
+  * plain Scala-UDF fallback.
   *
   * Why an Expression: the scoring loop is the hot path of the flagship
   * top-k query (↔ `/root/reference/vectolite.py:151-169`); an Expression
@@ -66,6 +68,54 @@ object VectorExpressions {
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
       copy(left = newLeft, right = newRight)
+  }
+
+  /** `term_freqs(text, terms)` → `array<int>` `[dl, tf_0 … tf_{m-1}]`:
+    * the whitespace-token count of `text` and each term's count among
+    * those tokens, from one byte pass ([[TextOps]]) that never builds a
+    * token array — the kernel behind every direct BM25 form. `terms` must
+    * be a constant, null-free `array<string>`; it is encoded to UTF-8
+    * once per expression and reaches the generated code as a reference
+    * object. Null text → null.
+    */
+  case class TermFreqs(text: Expression, terms: Expression)
+      extends BinaryExpression {
+
+    override def left: Expression = text
+    override def right: Expression = terms
+
+    override def checkInputDataTypes(): TypeCheckResult =
+      (text.dataType, terms.dataType) match {
+        case (StringType, ArrayType(StringType, _)) =>
+          if (!terms.foldable) TypeCheckResult.TypeCheckFailure(
+            s"$prettyName: second argument must be a constant array<string>")
+          else if (terms.eval() == null || termBytes.contains(null))
+            TypeCheckResult.TypeCheckFailure(s"$prettyName: terms must not be or hold null")
+          else TypeCheckResult.TypeCheckSuccess
+        case (s, t) => TypeCheckResult.TypeCheckFailure(
+          s"$prettyName: expects (string, array<string>), got (${s.catalogString}, ${t.catalogString})")
+      }
+
+    @transient private lazy val termBytes: Array[Array[Byte]] = {
+      val a = terms.eval().asInstanceOf[ArrayData]
+      Array.tabulate(a.numElements())(i =>
+        if (a.isNullAt(i)) null else a.getUTF8String(i).getBytes)
+    }
+
+    override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+    override def prettyName: String = "term_freqs"
+
+    override protected def nullSafeEval(t: Any, ignored: Any): Any =
+      TextOps.termFreqs(t.asInstanceOf[UTF8String], termBytes)
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val bytes = ctx.addReferenceObj("termBytes", termBytes, "byte[][]")
+      defineCodeGen(ctx, ev, (t, _) => s"graft.functions.TextOps.termFreqs($t, $bytes)")
+    }
+
+    override protected def withNewChildrenInternal(
+        newLeft: Expression, newRight: Expression): Expression =
+      copy(text = newLeft, terms = newRight)
   }
 
   /** dot(a, b) over two float arrays (codegen'd). */
@@ -160,10 +210,10 @@ object VectorFunctions {
   private val registeredSessions =
     Collections.synchronizedMap(new WeakHashMap[SparkSession, java.lang.Boolean]())
 
-  /** Register `cosine_sim` / `dot_product` / `l2_norm` as session SQL
-    * functions backed by the codegen expressions. Idempotent per session;
-    * returns false (UDF fallback stays in force) if the session doesn't
-    * expose a function registry.
+  /** Register `cosine_sim` / `dot_product` / `l2_norm` / `cosine_sim_i8` /
+    * `term_freqs` as session SQL functions backed by the codegen
+    * expressions. Idempotent per session; returns false (UDF fallback
+    * stays in force) if the session doesn't expose a function registry.
     */
   def register(spark: SparkSession): Boolean =
     if (registeredSessions.containsKey(spark)) true
@@ -175,6 +225,7 @@ object VectorFunctions {
         reg.createOrReplaceTempFunction("dot_product", es => DotProduct(es(0), es(1)), "scala_udf")
         reg.createOrReplaceTempFunction("l2_norm", es => L2Norm(es.head), "scala_udf")
         reg.createOrReplaceTempFunction("cosine_sim_i8", es => CosineSimI8(es(0), es(1)), "scala_udf")
+        reg.createOrReplaceTempFunction("term_freqs", es => TermFreqs(es(0), es(1)), "scala_udf")
         registeredSessions.put(spark, java.lang.Boolean.TRUE)
         true
       } catch {
@@ -200,6 +251,13 @@ object VectorFunctions {
     if (ensureRegistered()) call_function("cosine_sim_i8", codes, q)
     else cosineI8ScalaUdf(codes, q)
 
+  /** Codegen'd `[dl, tf_0 … tf_{m-1}]` of `text` against the constant
+    * `terms` ([[TermFreqs]]).
+    */
+  def term_freqs(text: Column, terms: Seq[String]): Column =
+    if (ensureRegistered()) call_function("term_freqs", text, typedLit(terms))
+    else term_freqs_udf(text, terms)
+
   // ---- plain Scala UDF fallback path (no registration required) ----
   // Boxed Float signatures so a null array *element* behaves like the
   // ArrayData path (null slot reads as 0.0) instead of NPE-ing.
@@ -223,6 +281,12 @@ object VectorFunctions {
     udf((codes: Array[Byte], q: Seq[java.lang.Float]) =>
       if (codes == null || q == null) null.asInstanceOf[java.lang.Double]
       else java.lang.Double.valueOf(VectorOps.cosineI8Boxed(codes, q)))
+
+  def term_freqs_udf(text: Column, terms: Seq[String]): Column = {
+    val bytes = terms.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray
+    val f = udf((t: String) => if (t == null) null else TextOps.termFreqs(t, bytes))
+    f(text)
+  }
 
   def cosine_udf(a: Column, b: Column): Column = cosineScalaUdf(a, b)
   def dot_udf(a: Column, b: Column): Column = dotScalaUdf(a, b)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Validate
+import graft.functions.VectorFunctions.term_freqs
 
 /** BM25 keyword retrieval + reciprocal-rank fusion — the LEXICAL half of
   * hybrid search. The reference engine serves only vector similarity
@@ -18,9 +19,11 @@ import graft.core.Validate
   *
   * Two serving forms, one scorer:
   *  - [[topK]] — direct scan in two in-row passes: one aggregate for the
-  *    corpus stats, broadcast as one row, then in-row `tf` per query term
-  *    (a `filter` HOF over the token array — NO token-level explode, no
-  *    shuffle of the corpus) ranked by a k-bounded TakeOrderedAndProject.
+  *    corpus stats, broadcast as one row, then in-row scoring — both
+  *    passes read each doc's length and per-term `tf` from ONE native
+  *    byte pass per row (`term_freqs`, [[graft.functions.TextOps]]; no
+  *    token array, no lambda, NO token-level explode, no shuffle of the
+  *    corpus), ranked by a k-bounded TakeOrderedAndProject.
   *  - [[IndexedBm25]] — a persisted INVERTED INDEX partitioned by term
   *    hash, with the same build/APPEND lifecycle as the engine's other
   *    maintained artifacts (LSH/IVF, shingle postings, count table): a
@@ -61,17 +64,19 @@ object Bm25 {
     * store's text and metadata) takes it from the rows already scored
     * instead of joining the ranking back against a second scan.
     *
-    * Two in-row passes over the tokenized input, no token-level explode:
-    *  1. one aggregate gives `(n, Σ|d|, df per query term)`; it reaches
-    *     pass 2 as a one-row broadcast, so the frame stays lazy;
-    *  2. per row, each term's `tf = |filter(tokens, _ == term)|` scored
-    *     by [[Bm25Scorer.contrib]] and summed in term order — the same
-    *     sum, bit for bit, as adding up the doc's postings (a term with
-    *     tf = 0 adds exactly 0.0).
+    * Two in-row passes, each evaluating `term_freqs(text, q)` =
+    * `[|d|, tf_0 … tf_{m-1}]` once per row — one codegen'd byte pass, no
+    * token array, no token-level explode:
+    *  1. one aggregate gives `(n, Σ|d|, df_i = count_if(tf_i > 0))`; it
+    *     reaches pass 2 as a one-row broadcast, so the frame stays lazy;
+    *  2. per row, each term's `tf_i` scored by [[Bm25Scorer.contrib]] and
+    *     summed in term order — the same sum, bit for bit, as adding up
+    *     the doc's postings (a term with tf = 0 adds exactly 0.0).
     * The cut is a k-bounded TakeOrderedAndProject on `(matched desc,
     * round(score, 6) desc, doc_id)` and the unmatched rows are dropped
     * AFTER it: placed before the cut, Catalyst pushes the matched filter
-    * through the tokenize projection and re-runs the split once per term.
+    * below the kernel projection, and the filter evaluates the kernel
+    * again for every row.
     * Leading with `matched` keeps the post-cut filter exact even when a
     * matched score rounds to 0.0, and keeps NaN rows (a corpus with no
     * tokens: `0·n/0`) out, which a `score > 0` test would let through —
@@ -83,22 +88,21 @@ object Bm25 {
                                   b: Double = DefaultB): DataFrame = {
     Validate.positiveTopK(k)
     val q = checkedTerms(terms)
-    val toks = docs.select(Seq(col(idCol).cast("long").as("doc_id"),
-      TextAnalysis.tokens(col(textCol)).as("__t")) ++ carry.map(col): _*)
-    val stats = toks.agg(count(lit(1)).cast("double").as("__n"),
-      sum(size(col("__t")).cast("long")).cast("double").as("__total") +:
-        q.indices.map(i =>
-          count_if(array_contains(col("__t"), q(i))).cast("double").as(s"__df$i")): _*)
-    val tf = q.indices.map(i => col(s"__tf$i"))
-    val score = q.indices.map(i => Bm25Scorer.contrib(tf(i), col(s"__df$i"),
+    val freqs = docs.select(Seq(col(idCol).cast("long").as("doc_id"),
+      term_freqs(col(textCol), q).as("__f")) ++ carry.map(col): _*)
+    val dl = col("__f")(0)
+    val tf = q.indices.map(i => col("__f")(i + 1).cast("long"))
+    val stats = freqs.agg(count(lit(1)).cast("double").as("__n"),
+      sum(dl.cast("long")).cast("double").as("__total") +:
+        q.indices.map(i => count_if(tf(i) > 0).cast("double").as(s"__df$i")): _*)
+    val score = q.indices.map(i => Bm25Scorer.contrib(col(s"__tf$i"), col(s"__df$i"),
       col("__dl"), col("__n"), col("__total"), k1, b)).reduce(_ + _)
-    toks.select(Seq(col("doc_id"), size(col("__t")).as("__dl")) ++
-        q.zipWithIndex.map { case (t, i) =>
-          size(filter(col("__t"), x => x === lit(t))).cast("long").as(s"__tf$i") } ++
-        carry.map(col): _*)
+    freqs.select(Seq(col("doc_id"), dl.as("__dl")) ++
+        q.indices.map(i => tf(i).as(s"__tf$i")) ++ carry.map(col): _*)
       .crossJoin(broadcast(stats))
       .select(Seq(col("doc_id"), score.as("__score"),
-        tf.map(_ > 0).reduce(_ || _).as("__hit")) ++ carry.map(col): _*)
+        q.indices.map(i => col(s"__tf$i") > 0).reduce(_ || _).as("__hit")) ++
+        carry.map(col): _*)
       .orderBy(col("__hit").desc, round(col("__score"), 6).desc, col("doc_id"))
       .limit(k)
       .filter(col("__hit"))
@@ -109,81 +113,53 @@ object Bm25 {
   /** BM25 of one text column against a STANDING query with FROZEN corpus
     * statistics — `(term, df)` pairs plus `(n, total)` baked in as
     * literals (collected once from [[IndexedBm25.frozenStats]] or any
-    * maintained stats source). Pure `functions._` Column — no UDF, no
-    * join, no aggregation (the per-term `filter` lambda is
-    * CodegenFallback: it runs interpreted inside the generated stage) —
+    * maintained stats source). Pure `functions._` Column over the
+    * `term_freqs` kernel — no UDF, no lambda, no join, no aggregation —
     * so it works as a STREAMING projection (ingest-time routing/alerting:
     * score each arriving document against the standing profile) and
-    * costs a scan in batch.
-    * The idf literals constant-fold at plan time.
+    * costs a scan in batch. The idf literals constant-fold at plan time.
+    * The kernel appears 1 + |terms| times in the tree; codegen
+    * subexpression elimination shares it, and [[withScore]] evaluates it
+    * once per row structurally.
     */
-  def scoreColumn(text: org.apache.spark.sql.Column,
-                  termStats: Seq[(String, Long)], n: Long, total: Long,
-                  k1: Double = DefaultK1, b: Double = DefaultB)
-      : org.apache.spark.sql.Column =
-    scoreTokens(TextAnalysis.tokens(text), termStats, n, total, k1, b)
+  def scoreColumn(text: Column, termStats: Seq[(String, Long)], n: Long, total: Long,
+                  k1: Double = DefaultK1, b: Double = DefaultB): Column =
+    standingScore(standingFreqs(text, termStats), termStats, n, total, k1, b)
 
-  /** [[scoreColumn]] over an ALREADY-TOKENIZED array column.
-    *
-    * Round-13 performance note: the first draft wrapped each term in
-    * `when(tf > 0, …)`. CaseWhen BRANCHES are excluded from codegen
-    * subexpression elimination (their evaluation must stay conditional),
-    * so every one of the 3 references to each term's tf filter re-ran the
-    * HOF — measured 2.6× the whole-pass cost at 2.5M docs. The guard is
-    * algebraically redundant (tf=0 ⇒ the term is exactly 0.0), and with
-    * it gone CSE collapses the duplicated filters: this form now measures
-    * scan-speed, within noise of the explicitly-staged [[withScore]]
-    * (94.1 vs 95.2 s at 2.5M docs, SCALE.md). Keep guards out of hot
-    * expression trees.
-    */
-  def scoreTokens(toks: org.apache.spark.sql.Column,
-                  termStats: Seq[(String, Long)], n: Long, total: Long,
-                  k1: Double = DefaultK1, b: Double = DefaultB)
-      : org.apache.spark.sql.Column = {
-    require(termStats.nonEmpty, "bm25: standing query terms must be non-empty")
-    val dlNorm = size(toks).cast("double") * lit(n.toDouble) / lit(total.toDouble)
-    termStats.map { case (term, df) =>
-      val idf = log(lit(1.0) +
-        (lit(n.toDouble) - lit(df.toDouble) + lit(0.5)) / (lit(df.toDouble) + lit(0.5)))
-      val tf = size(filter(toks, x => x === lit(term))).cast("double")
-      // no tf>0 guard needed: tf=0 makes the term exactly 0.0 (0/(0+C))
-      idf * tf * lit(k1 + 1.0) /
-        (tf + lit(k1) * (lit(1.0 - b) + lit(b) * dlNorm))
-    }.reduce(_ + _)
-  }
-
-  /** Standing-query scoring of a whole FRAME: three chained projections
-    * materialize the token array once, then the per-term tf vector once,
-    * then combine them in closed form (every tf an O(1) `element_at`,
-    * every further token reference an O(1) `size`). Semantically equal to
-    * `withColumn(score, scoreColumn(...))` and currently equal in speed
-    * too (95.2 vs 94.1 s at 2.5M docs — codegen CSE already collapses the
-    * guard-free single Column); this form makes the one-evaluation-per-
-    * row property STRUCTURAL instead of CSE-dependent, so it can't regress
-    * if a future caller re-introduces a conditional around a term (the
-    * round-13 2.6× trap — see [[scoreTokens]]). CollapseProject keeps the
-    * stages separate because the duplicated expressions are non-cheap.
+  /** Standing-query scoring of a whole FRAME in two projections: the
+    * `term_freqs` kernel column once per row, then the closed form over
+    * it (every `tf` and `|d|` an O(1) array read) — the same arithmetic
+    * as [[scoreColumn]]. CollapseProject keeps the two apart because the
+    * kernel column is referenced more than once and is not cheap.
     */
   def withScore(df: DataFrame, textCol: String,
                 termStats: Seq[(String, Long)], n: Long, total: Long,
                 scoreName: String = "score",
-                k1: Double = DefaultK1, b: Double = DefaultB): DataFrame = {
+                k1: Double = DefaultK1, b: Double = DefaultB): DataFrame =
+    df.withColumn("__f", standingFreqs(col(textCol), termStats))
+      .withColumn(scoreName, standingScore(col("__f"), termStats, n, total, k1, b))
+      .drop("__f")
+
+  private def standingFreqs(text: Column, termStats: Seq[(String, Long)]): Column = {
     require(termStats.nonEmpty, "bm25: standing query terms must be non-empty")
-    val tfArr = array(termStats.map { case (term, _) =>
-      size(filter(col("__toks"), x => x === lit(term))).cast("double") }: _*)
-    val dlNorm = size(col("__toks")).cast("double") *
-      lit(n.toDouble) / lit(total.toDouble)
-    val score = termStats.zipWithIndex.map { case ((_, dfT), i) =>
+    term_freqs(text, termStats.map(_._1))
+  }
+
+  /** The standing-query closed form over a `term_freqs` column `freqs`:
+    * `Σ_t idf·tf·(k1+1) / (tf + k1·(1−b+b·(|d|·n/total)))`. No `tf > 0`
+    * guard: tf = 0 makes the term exactly 0.0, and a CaseWhen branch
+    * would keep [[scoreColumn]]'s kernel out of codegen CSE.
+    */
+  private def standingScore(freqs: Column, termStats: Seq[(String, Long)],
+                            n: Long, total: Long, k1: Double, b: Double): Column = {
+    val dlNorm = freqs(0).cast("double") * lit(n.toDouble) / lit(total.toDouble)
+    termStats.zipWithIndex.map { case ((_, dfT), i) =>
       val idf = log(lit(1.0) +
         (lit(n.toDouble) - lit(dfT.toDouble) + lit(0.5)) / (lit(dfT.toDouble) + lit(0.5)))
-      val tf = element_at(col("__tf"), i + 1)
+      val tf = freqs(i + 1).cast("double")
       idf * tf * lit(k1 + 1.0) /
         (tf + lit(k1) * (lit(1.0 - b) + lit(b) * dlNorm))
     }.reduce(_ + _)
-    df.withColumn("__toks", TextAnalysis.tokens(col(textCol)))
-      .withColumn("__tf", tfArr)
-      .withColumn(scoreName, score)
-      .drop("__toks", "__tf")
   }
 
   /** Reciprocal-rank fusion (Cormack et al., SIGIR'09) of two ranked

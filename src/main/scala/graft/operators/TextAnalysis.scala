@@ -656,8 +656,8 @@ object TextAnalysis {
     * compose-it-yourself form (`phrasePositions` staged, then
     * `size`/`array_min`/a filter referencing it) re-evaluates the whole
     * tokenize+slice check per reference — CaseWhen branches are excluded
-    * from codegen subexpression elimination (the round-13 scoreTokens
-    * lesson), and the check IS a CaseWhen. Behind the let-binding the
+    * from codegen subexpression elimination (the round-13 BM25
+    * standing-query lesson), and the check IS a CaseWhen. Behind the let-binding the
     * shared subtree sits ABOVE the CaseWhen, so CSE collapses every
     * downstream reference to one evaluation per row. Measured at sf0.1:
     * the full-scan phrase row 2.9 s → 0.30 s and the phrase stream
@@ -708,7 +708,7 @@ object TextAnalysis {
     require(width >= 0, s"width must be >= 0, got $width")
     // nullif, not when(locate>0, locate): the CaseWhen branch form would
     // re-run the O(|text|) locate scan per reference (branches are
-    // outside codegen CSE — the Bm25.scoreTokens round-13 lesson)
+    // outside codegen CSE — the round-13 BM25 standing-query lesson)
     val positions = terms.map(t => nullif(locate(t, text), lit(0)))
     val first =
       if (positions.size == 1) positions.head

@@ -27,13 +27,24 @@ import graft.operators.{Bm25, Chunker, Embedder, Ingest, Similarity}
   * attach another row's text to it.
   *
   * Mutation is copy-on-write: a new file set is written, then swapped in —
-  * the idiomatic immutable-storage shape (SURVEY §7.4). Single-row verbs
-  * exist for parity; bulk pipelines should use [[Ingest.ingestFiles]] /
-  * [[DocStore]] batch forms directly.
+  * the idiomatic immutable-storage shape (SURVEY §7.4). Within one JVM
+  * the writing verbs ([[insert]], [[ingestFile]], [[deleteDocument]],
+  * [[compact]]) hold one monitor per store path, so two threads never
+  * draw the same id and a swap never moves aside an append it did not
+  * read. Across JVMs the store stays single-writer
+  * ([[DocStore.replaceContents]]). Single-row verbs exist for parity;
+  * bulk pipelines should use [[Ingest.ingestFiles]] / [[DocStore]] batch
+  * forms directly.
   */
 final class GraftStore(spark: SparkSession, path: String, embedder: Embedder) {
 
   private def fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private lazy val writerLock =
+    GraftStore.writerLock(fs.makeQualified(new Path(path)).toString)
+
+  /** Run a writing verb under this store's JVM-wide writer monitor. */
+  private def writing[A](body: => A): A = writerLock.synchronized(body)
 
   /** The session this store operates in — for callers that compose
     * further work over it (e.g. [[graft.Report.write]]).
@@ -65,7 +76,7 @@ final class GraftStore(spark: SparkSession, path: String, embedder: Embedder) {
   /** Insert one document, returning its assigned id (`lastrowid` parity,
     * `vectolite.py:111`).
     */
-  def insert(text: String, metadata: Map[String, String] = Map.empty): Long = {
+  def insert(text: String, metadata: Map[String, String] = Map.empty): Long = writing {
     Validate.nonEmptyText(text)
     import spark.implicits._
     val start = maxId()
@@ -171,15 +182,19 @@ final class GraftStore(spark: SparkSession, path: String, embedder: Embedder) {
     * because [[DocStore.replaceContents]] writes into a temp dir before
     * it swaps anything.
     */
-  def deleteDocument(id: Long): Boolean = {
+  def deleteDocument(id: Long): Boolean = writing {
     val t = table()
     val hit = t.filter(col("id") === id).count() > 0
     if (hit) rewrite(DocStore.deleteByIds(t, "id", Seq(id)))
     hit
   }
 
+  /** Point lookup in one job: ids are unique, so the pushed-down filter
+    * is collected whole — a `limit(1)` would scan partition by partition
+    * and pay a second job whenever the first partition misses.
+    */
   def getDocument(id: Long): Option[Row] =
-    DocStore.getDocument(table(), "id", id).collect().headOption
+    table().filter(col("id") === id).collect().headOption
 
   def listDocuments(limit: Int = 50, offset: Int = 0,
                     includeText: Boolean = true, maxTextLength: Int = 100): DataFrame =
@@ -193,7 +208,7 @@ final class GraftStore(spark: SparkSession, path: String, embedder: Embedder) {
     * (`vectolite.py:527-528`'s summary analogue).
     */
   def ingestFile(filePath: String, metadata: Map[String, String] = Map.empty,
-                 chunk: Boolean = true, maxChars: Int = 2000, overlap: Int = 200): Seq[Long] = {
+                 chunk: Boolean = true, maxChars: Int = 2000, overlap: Int = 200): Seq[Long] = writing {
     Ingest.validatePath(filePath)
     val batch = Ingest.ingestFiles(spark, filePath, embedder, maxId(), metadata,
       chunk, maxChars, overlap).cache() // one execution serves both the append and the id readback
@@ -205,7 +220,7 @@ final class GraftStore(spark: SparkSession, path: String, embedder: Embedder) {
 
   /** Collapse accumulated append files (see [[DocStore.compact]]). */
   def compact(targetFiles: Int = 1): Unit =
-    DocStore.compact(spark, path, targetFiles)
+    writing(DocStore.compact(spark, path, targetFiles))
 
   /** (document count, storage bytes) — `vectolite.py:538-555`. */
   def stats(): (Long, Long) = {
@@ -261,4 +276,15 @@ final class GraftStore(spark: SparkSession, path: String, embedder: Embedder) {
         .readDriftStatus(spark, p.toString).map(d => (p.getName, d)))
       .sortBy(_._1)
   }
+}
+
+object GraftStore {
+
+  /** One writer monitor per qualified store path, shared by every
+    * [[GraftStore]] on that path in this JVM.
+    */
+  private val writerLocks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
+  private def writerLock(qualifiedPath: String): AnyRef =
+    writerLocks.computeIfAbsent(qualifiedPath, _ => new Object)
 }

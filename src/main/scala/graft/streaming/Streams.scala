@@ -963,10 +963,8 @@ object Streams {
   def bm25RouteStream(stream: DataFrame, textCol: String,
                       termStats: Seq[(String, Long)], n: Long, total: Long,
                       threshold: Double): DataFrame =
-    // withScore's staged projections (tokens once, tf vector once, then
-    // the closed form) — still stateless, still pure projection per
-    // micro-batch; the staging pins the evaluation count structurally
-    // (see Bm25.withScore / the round-13 CaseWhen-CSE note)
+    // withScore's two projections (the term_freqs kernel once per row,
+    // then the closed form) — stateless, pure projection per micro-batch
     graft.operators.Bm25
       .withScore(stream, textCol, termStats, n, total)
       .filter(round(col("score"), 6) >= threshold)

@@ -474,4 +474,28 @@ class Bm25Spec extends SparkSpec {
     assert(few.map(_._1) == Seq(2L, 1L), s"got $few")
     few.foreach { case (id, s) => assert(math.abs(s - exp(id)) < 1e-6, s"doc $id") }
   }
+
+  test("direct scan == indexed probe on the sf0.01 documents for 30 seeded queries") {
+    val sf001 = new java.io.File(Sf0001).getParent + "/sf0.01"
+    val docs = spark.read.parquet(s"$sf001/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    val path = java.nio.file.Files.createTempDirectory("graft-bm25-sf001").toString
+    IndexedBm25.build(docs, "doc_id", "text", path)
+    // query terms: corpus tokens of every frequency, plus absent ones
+    val vocab = docs.select(explode(graft.operators.TextAnalysis.tokens(col("text"))))
+      .distinct().orderBy(col("col")).as[String].collect()
+    val rnd = new scala.util.Random(5L)
+    val answered = (1 to 30).count { i =>
+      val terms = Seq.fill(1 + rnd.nextInt(4))(
+        if (rnd.nextInt(6) == 0) s"absent$i" else vocab(rnd.nextInt(vocab.length)))
+      val k = Seq(1, 5, 10, 50)(rnd.nextInt(4))
+      val direct = Bm25.topK(docs, "doc_id", "text", terms, k)
+        .as[(Long, Double)].collect().toSeq
+      val probed = IndexedBm25.topK(spark, path, terms, k)
+        .as[(Long, Double)].collect().toSeq
+      assert(direct == probed, s"query $i ${terms.mkString("[", ",", "]")} k=$k")
+      direct.nonEmpty
+    }
+    assert(answered >= 25, s"only $answered of 30 queries matched anything")
+  }
 }

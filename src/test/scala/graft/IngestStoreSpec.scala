@@ -152,27 +152,38 @@ class IngestStoreSpec extends SparkSpec {
       .foreach { case (t, m) => store.insert(t, m) }
     val q = "apple pie"
 
-    // query: one Spark job, the top-k itself (no schema-inference job).
-    // Jobs are counted by a tag local to this thread, so a late event
-    // from an earlier action cannot land in the count.
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (js.properties.getProperty("graft.test.verb") == "query") jobs += 1
+    // query: one Spark job, the top-k itself (no schema-inference job);
+    // getDocument: one job for a hit and for a miss (no partition-by-
+    // partition limit scan). Jobs are counted by a tag local to this
+    // thread, so a late event from an earlier action cannot land in the
+    // count.
+    def jobsOf(verb: String)(body: => Unit): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (js.properties.getProperty("graft.test.verb") == verb) jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        spark.sparkContext.setLocalProperty("graft.test.verb", verb)
+        body
+        spark.sparkContext.setLocalProperty("graft.test.verb", null)
+        // listener events are async — wait for them to drain, bounded
+        val deadline = System.nanoTime() + 5000000000L
+        while (jobs.get < 1 && System.nanoTime() < deadline) Thread.sleep(50)
+        Thread.sleep(300) // catch any straggler job this would make > 1
+        jobs.get
+      } finally {
+        spark.sparkContext.setLocalProperty("graft.test.verb", null)
+        spark.sparkContext.removeSparkListener(listener)
+      }
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setLocalProperty("graft.test.verb", "query")
-      store.query(q, 2).collect()
-      spark.sparkContext.setLocalProperty("graft.test.verb", null)
-      // listener events are async — wait for them to drain, bounded
-      val deadline = System.nanoTime() + 5000000000L
-      while (jobs < 1 && System.nanoTime() < deadline) Thread.sleep(50)
-      Thread.sleep(300) // catch any straggler job this would make > 1
-      assert(jobs == 1, s"query ran $jobs jobs")
-    } finally {
-      spark.sparkContext.setLocalProperty("graft.test.verb", null)
-      spark.sparkContext.removeSparkListener(listener)
+    val queryJobs = jobsOf("query")(store.query(q, 2).collect())
+    assert(queryJobs == 1, s"query ran $queryJobs jobs")
+    for (id <- Seq(1L, 6L, 99L)) {
+      val getJobs = jobsOf(s"get $id")(
+        assert(store.getDocument(id).map(_.getLong(0)) == Some(id).filter(_ <= 6L)))
+      assert(getJobs == 1, s"getDocument($id) ran $getJobs jobs")
     }
 
     // scans and joins of the executed (final adaptive) plans
@@ -227,6 +238,35 @@ class IngestStoreSpec extends SparkSpec {
       lexical(20).withColumn("rank", row_number().over(w)),
       semantic.withColumn("rank", row_number().over(w)), 3)
     assert(hybridRows == rows(withPayload(fused, "rrf")))
+  }
+
+  test("GraftStore: one JVM's writers are serialized per store — distinct ids, no insert lost to a delete") {
+    val path = tmpDir().resolve("docs.parquet").toString
+    // two instances on one path: the writer monitor is keyed by the path
+    val stores = Seq.fill(2)(new GraftStore(spark, path, HashingEmbedder(8)))
+    def inParallel(bodies: (() => Unit)*): Unit = {
+      val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val threads = bodies.map(f => new Thread(() =>
+        try f() catch { case t: Throwable => errors.add(t) }))
+      threads.foreach(_.start())
+      threads.foreach(_.join())
+      Option(errors.peek()).foreach(e => throw e)
+    }
+    val ids = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    inParallel(stores.map(s => () =>
+      (1 to 20).foreach(i => ids.add(s.insert(s"writer document $i")))): _*)
+    assert(ids.size == 40 && ids.toArray.toSet.size == 40, ids)
+    assert(stores.head.countDocuments() == 40L)
+
+    // inserts racing a delete loop: every insert survives the rewrites
+    val added = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    inParallel(
+      () => (1 to 10).foreach(i => added.add(stores(0).insert(s"late document $i"))),
+      () => (1L to 20L).foreach(id => assert(stores(1).deleteDocument(id), s"delete $id")))
+    val left = stores.head.table().select("id").as[Long].collect().toSet
+    assert(added.size == 10 && added.toArray.toSet.size == 10, added)
+    assert(left == (21L to 40L).toSet ++ added.toArray.map(_.asInstanceOf[Long]),
+      s"inserted ${added} but the store holds ${left.toSeq.sorted}")
   }
 
   test("compact: collapses append files, preserves data, keeps sort column pruneable") {

@@ -145,6 +145,19 @@ class PlanShapeSpec extends SparkSpec {
       org.apache.spark.sql.catalyst.plans.physical.SinglePartition &&
       stats.head.find(_ eq shuffles.head).nonEmpty,
       s"shuffle beyond the stats aggregate's:\n$plan")
+    // both passes read the native term_freqs kernel: no lambda, no regex
+    // split, and the kernel evaluated once per row in each pass — once in
+    // the stats subtree, once in the scoring pass outside it
+    import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, Expression, LambdaFunction, StringSplit}
+    def exprs(p: SparkPlan): Seq[Expression] =
+      p.collect { case n => n.expressions.flatMap(_.collect { case e => e }) }.flatten
+    val interpreted = exprs(plan).filter(e => e.isInstanceOf[LambdaFunction] ||
+      e.isInstanceOf[ArrayFilter] || e.isInstanceOf[StringSplit])
+    assert(interpreted.isEmpty, s"interpreted tokenizing in:\n$plan")
+    def kernels(p: SparkPlan): Int =
+      exprs(p).count(_.isInstanceOf[graft.functions.VectorExpressions.TermFreqs])
+    assert(kernels(stats.head) == 1 && kernels(plan) == 2,
+      s"term_freqs not once per row in each pass:\n$plan")
   }
 
   test("incremental dedup: survivor via min_by aggregation (no window) + anti join on the hash set") {
