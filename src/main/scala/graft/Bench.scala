@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
+import graft.core.LocalSession
 
 /** Benchmark main: one JSON line with per-query seconds.
   *
@@ -169,7 +170,7 @@ object Bench {
   // leave ScaleProbe adjudicating against stale literals)
   private[graft] val CanaryRefSec = 0.65
   private[graft] val CanaryParRefSec = 0.70
-  private val CanaryParRefThreads = 32
+  private[graft] val CanaryParRefThreads = 32
 
   /** Run `f`, returning (result, wall seconds, summed task input
     * `bytesRead`). The listener bus drains ASYNC: a fixed settle sleep
@@ -238,11 +239,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = LocalSession.builder(LocalSession.harnessCpus)
       // AQE partition coalescing DELIBERATELY stays at Spark's default
       // parallelismFirst=true (r21, measured): the production-guide flip
       // to size-based coalescing (parallelismFirst=false, advisory 64 MB)
@@ -258,9 +255,6 @@ object Bench {
       // deployment that wants 64-256 MB reducer partitions sets the
       // advisory + flip per job, where its operators' byte/CPU ratio is
       // known (OPTIMIZATION_r21.md records the measurement).
-      // exact id-set parquet pushdown for the rerank pools (IvfIndex.MaxInPushdownIds)
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1024")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

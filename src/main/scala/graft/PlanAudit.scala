@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.LocalSession
 
 /** Physical-plan audit harness: prints the formatted plan of each declared
   * query so scan pruning (ReadSchema/PushedFilters), exchange counts,
@@ -17,15 +17,7 @@ object PlanAudit {
     // SPARK_GRAFT_CPUS (default 4): the Bench/Verify convention, so a
     // captured plan can reflect the bench session's parallelism (r22 —
     // streaming state-partition evidence is invisible at local[4])
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // exact id-set parquet pushdown for the rerank pools (IvfIndex.MaxInPushdownIds)
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1024")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder(LocalSession.harnessCpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // Streaming rows: the returned frame is just the memory-sink table, so
     // the interesting execution evidence (micro-batch count, per-batch

@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.core.LocalSession
 import graft.operators._
 
 /** Scale rehearsal: amplifies the fixtures ~Nx (deterministic copies with
@@ -11,9 +12,30 @@ import graft.operators._
   * the local stand-in for "would this survive 100x the data" — the plan
   * SHAPES are already pinned in PLANS.md; this checks the constants.
   *
-  * Usage: runMain graft.ScaleProbe [sfDir] [amplification]
+  * Usage: runMain graft.ScaleProbe [sfDir] [amplification] [section ...]
+  *
+  * With no section names every section runs, in [[Sections]] order.
   */
 object ScaleProbe {
+
+  /** The probe's sections in run order, each named for the round SCALE.md
+    * files its rows under. `ops` is the round-7 operator sweep; `simhash`
+    * is its one output-volume-bound row (on a duplicated corpus), split
+    * out so very large amplifications can leave it out.
+    */
+  val Sections: Seq[String] = Seq("ops", "simhash", "r8", "r9", "r11", "r12",
+    "r13", "r13b", "r14c", "r14", "r14b", "r13d", "r13c", "r15", "r15c",
+    "r17", "r17b", "r18", "r19", "r19b")
+
+  /** The sections `names` selects: every section when `names` is empty.
+    * An unknown name is refused with the list of valid ones.
+    */
+  def selectSections(names: Seq[String]): Set[String] = {
+    val unknown = names.filterNot(Sections.contains)
+    require(unknown.isEmpty, s"unknown ScaleProbe section(s): ${unknown.mkString(", ")}; " +
+      s"valid sections: ${Sections.mkString(" ")}")
+    if (names.isEmpty) Sections.toSet else names.toSet
+  }
 
   /** Seq/par canary pair around long-run rehearsals (round-19; VERDICT
     * r18 "wrong" #2: ScaleProbe long-runs carried no canary, so an
@@ -26,7 +48,8 @@ object ScaleProbe {
     // re-measure there can never leave these lines printing stale ones
     println(f"[scale] canary $tag: seq ${Bench.canarySeconds()}%.3f s " +
       f"(ref ${Bench.CanaryRefSec})  " +
-      f"par32 ${Bench.canaryParSeconds(32)}%.3f s (ref ${Bench.CanaryParRefSec})")
+      f"par${Bench.CanaryParRefThreads} ${Bench.canaryParSeconds(Bench.CanaryParRefThreads)}%.3f s " +
+      f"(ref ${Bench.CanaryParRefSec})")
 
   private def timed[T](name: String)(f: => T): T = {
     val t0 = System.nanoTime()
@@ -35,18 +58,39 @@ object ScaleProbe {
     r
   }
 
+  /** [[timed]] plus the summed task input bytes, through Bench's
+    * settle-until-stable listener (ADVICE r19: a fixed settle sleep
+    * silently undercounted on a loaded box).
+    */
+  private def measured[T](spark: SparkSession, name: String)(f: => T): T = {
+    val (r, s, b) = Bench.measuredWithBytes(spark)(f)
+    println(f"[scale] $name%-58s $s%8.2f s  bytesRead $b%,d")
+    r
+  }
+
+  /** On-disk bytes of the data files under `path`: every file and
+    * directory except the ones Spark's file listing hides (names starting
+    * with `_` or `.`: checksums, commit markers, `_meta` sidecars).
+    */
+  private def dirBytes(path: String): Long = {
+    def walk(f: java.io.File): Long =
+      if (f.getName.startsWith("_") || f.getName.startsWith(".")) 0L
+      else if (f.isFile) f.length()
+      else Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
+    Option(new java.io.File(path.stripPrefix("file:")).listFiles())
+      .map(_.map(walk).sum).getOrElse(0L)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val amp = if (args.length > 1) args(1).toInt else 50
     require(amp >= 1, s"amplification must be >= 1, got $amp")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // exact id-set parquet pushdown for the rerank pools (IvfIndex.MaxInPushdownIds)
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1024")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val selected = selectSections(args.drop(2).toSeq)
+    def section(name: String)(body: => Unit): Unit = {
+      require(Sections.contains(name), s"section $name is not in ScaleProbe.Sections")
+      if (selected(name)) body
+    }
+    val spark = LocalSession.builder(LocalSession.harnessCpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     // ---- amplified corpora (deterministic) ---------------------------
@@ -75,67 +119,8 @@ object ScaleProbe {
 
     val q = baseEmb.filter(col("vec_id") === 0).select("embedding").head.getSeq[Float](0).toArray
 
-    // SPARK_GRAFT_ONLY_R8=1 probes only the round-8 operators — the heavy
-    // unchanged mid-section (sim-joins, ANN builds/writes, streams) has
-    // round-7 numbers on record in SCALE.md, and re-measuring ~15 min of
-    // known-linear paths to validate a new operator wastes the window.
-    // SPARK_GRAFT_ONLY_R9=1 probes only the round-9 index-maintenance
-    // rows — at high amplification the rest of the sweep has recorded
-    // numbers and would add ~15 min for nothing.
-    // SPARK_GRAFT_ONLY_R11=1 probes only the round-11 additions (IVF batch
-    // probe at query volume + postings-index lifecycle).
-    // SPARK_GRAFT_ONLY_R12=1 probes only the round-12 addition (the
-    // complete nightly daily-drop chain vs persisted artifacts).
-    // SPARK_GRAFT_ONLY_R13=1 probes only the round-13 addition (online
-    // watermarked ANN serving against the amplified persisted index).
-    // SPARK_GRAFT_ONLY_R13B=1 probes only the round-13 text-curation
-    // additions (vocabulary / distinct sketch / bigram novelty / PII
-    // scrub / stratified sample) over the amplified documents.
-    // SPARK_GRAFT_ONLY_R13C=1 probes only the tokenizer-apply forms
-    // (broadcast-map default vs the distributed join fallback).
-    // SPARK_GRAFT_ONLY_R14=1 probes only the round-14 keyword-family
-    // completion (positional index lifecycle, batch probe, hybrid
-    // fusion, index-served phrase vs full scan, tombstone-only delete).
-    // SPARK_GRAFT_ONLY_R13D=1 probes only the BM25 keyword-retrieval
-    // forms (direct scan vs persisted inverted-index lifecycle).
-    // R14C = only the round-14 heavy-hitters sketch rows; R14B = only
-    // the round-14 line-curation rows (the keyword-family R14 rows have
-    // recorded numbers).
-    // SPARK_GRAFT_ONLY_R15=1 probes only the round-15 additions (batch
-    // phrase/proximity probe vs N single probes, persisted hot-lines
-    // serving vs recompute, quantized IVF probe + float re-rank, and the
-    // committed-epoch read overhead across many appends + compact).
-    // SPARK_GRAFT_ONLY_R17=1 probes only the round-17 additions (the
-    // PERSISTED packed-IVF lifecycle + probe at index scale, plus the
-    // gate-then-append maintainer); SPARK_GRAFT_ONLY_R17B=1 probes only
-    // the gate-then-append part.
-    // SPARK_GRAFT_ONLY_R18=1 probes only the round-18 addition (the
-    // epoch governor at wave volume: 16-wave closed loop with vs
-    // without compactEvery).
-    // SPARK_GRAFT_ONLY_R19=1 probes only the round-19 additions (the
-    // banded dHash gate's bytes profile flat-vs-banded, and the packed-
-    // IVF intra-bucket row-group prune at multi-row-group file
-    // geometry); SPARK_GRAFT_ONLY_R19B=1 narrows to the IVF part alone.
-    val onlyR19b = sys.env.contains("SPARK_GRAFT_ONLY_R19B")
-    val onlyR19 = onlyR19b || sys.env.contains("SPARK_GRAFT_ONLY_R19")
-    val onlyR18 = onlyR19 || sys.env.contains("SPARK_GRAFT_ONLY_R18")
-    val onlyR17b = onlyR18 || sys.env.contains("SPARK_GRAFT_ONLY_R17B")
-    val onlyR17 = onlyR17b || sys.env.contains("SPARK_GRAFT_ONLY_R17")
-    val onlyR15 = onlyR17 || sys.env.contains("SPARK_GRAFT_ONLY_R15")
-    val onlyR14c = onlyR15 || sys.env.contains("SPARK_GRAFT_ONLY_R14C")
-    val onlyR14b = onlyR14c || sys.env.contains("SPARK_GRAFT_ONLY_R14B")
-    val onlyR14 = onlyR14b || sys.env.contains("SPARK_GRAFT_ONLY_R14")
-    val onlyR13d = onlyR14 || sys.env.contains("SPARK_GRAFT_ONLY_R13D")
-    val onlyR13c = onlyR13d || sys.env.contains("SPARK_GRAFT_ONLY_R13C")
-    val onlyR13b = onlyR13c || sys.env.contains("SPARK_GRAFT_ONLY_R13B")
-    val onlyR13 = onlyR13b || sys.env.contains("SPARK_GRAFT_ONLY_R13")
-    val onlyR12 = onlyR13 || sys.env.contains("SPARK_GRAFT_ONLY_R12")
-    val onlyR11 = onlyR12 || sys.env.contains("SPARK_GRAFT_ONLY_R11")
-    val onlyR9 = onlyR11 || sys.env.contains("SPARK_GRAFT_ONLY_R9")
-    val onlyR8 = onlyR9 || sys.env.contains("SPARK_GRAFT_ONLY_R8")
-
     // ---- the operators whose constants matter at scale ---------------
-    if (!onlyR8) {
+    section("ops") {
     timed("topk exact (full scan)") {
       Similarity.topK(emb, "embedding", "vec_id", q, 10).collect()
     }
@@ -184,7 +169,7 @@ object ScaleProbe {
     val hotDocs = docs.withColumn("text",
       concat(lit("zz hotzz commonzz "), col("text")))
 
-    if (!onlyR8) {
+    section("ops") {
     // Stateful sessionizer through a REAL AvailableNow stream: amp×20k
     // synthetic events over 10k users (5-min waves, an hour jump every 12
     // waves → sessions genuinely close), written to parquet and replayed
@@ -212,12 +197,15 @@ object ScaleProbe {
     timed("exact dedup (sha groupBy)") {
       Dedup.dedupExact(docs, "doc_id", "text").count()
     }
-    // output-volume-bound on a duplicated corpus (see SCALE.md) — skip via
-    // SPARK_GRAFT_SKIP_SIMHASH=1 when probing very large amplifications
-    if (!sys.env.contains("SPARK_GRAFT_SKIP_SIMHASH"))
+    }
+    // output-volume-bound on a duplicated corpus (see SCALE.md) — leave
+    // the section out when probing very large amplifications
+    section("simhash") {
       timed("simhash pairs r<=3") {
         Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3).count()
       }
+    }
+    section("ops") {
     // ---- jaccard hot-shingle probe: uncapped, the two universal
     // shingles' posting lists alone form ~|docs|² pairs; with the default
     // maxDocFreq cap they are dropped before the pair join and the volume
@@ -264,7 +252,7 @@ object ScaleProbe {
     // components are real and amp-sized) through the iterative min-label
     // propagation. Probes both the per-round shuffle cost and the
     // convergence round count at a non-toy component structure.
-    if (!onlyR9) {
+    section("r8") {
     timed("near_dup_groups DISTRIBUTED (20k-doc pair set)") {
       val pairs = Dedup.jaccardPairs(hotDocs.filter(col("doc_id") < 20000),
         "doc_id", "text", n = 2, threshold = 0.9)
@@ -356,7 +344,7 @@ object ScaleProbe {
     // append a 1% daily batch into the persisted LSH index vs rebuilding
     // from scratch — the number that justifies appendToIndex at 100 TB
     // (before round 9, ANY new data meant a full rebuild).
-    if (!onlyR11) locally {
+    section("r9") {
       val cfg = AnnIndex.Config(dim = 64, nBits = 6, nTables = 8)
       val cut = nEmb * 99 / 100
       val path = java.nio.file.Files.createTempDirectory("graft-scale-append").toString
@@ -399,7 +387,7 @@ object ScaleProbe {
       }
     }
     // ---- round-11: IVF batch probe at query volume + postings lifecycle
-    if (!onlyR12) locally {
+    section("r11") {
       // IVF serving twin of the LSH "BATCH probe 500 q" row: fit + build
       // are the offline step; the timed row is the 500-query batch probe
       // through the persisted index — the number the ivf_batch_topk
@@ -418,7 +406,7 @@ object ScaleProbe {
           emb.filter(col("vec_id") < 500), "vec_id", "embedding", 5, nProbe).count()
       }
     }
-    if (!onlyR12) locally {
+    section("r11") {
       // Shingle-postings lifecycle (round-11): the jaccard index's
       // append-vs-rebuild split — build on 99%, append the 1% daily drop
       // (linear in the batch), compact (global re-cap + rewrite), vs the
@@ -461,7 +449,7 @@ object ScaleProbe {
     // id-aligned (fixture generations ship different doc/embedding
     // counts), so this section amplifies its OWN aligned pair from the
     // joined base — every amplified doc has exactly one embedding.
-    if (!onlyR13) locally {
+    section("r12") {
       val base = baseDocs.join(baseEmb, col("doc_id") === col("vec_id"))
         .select(col("doc_id"), col("text"), col("embedding"))
       val nBaseA = base.count()
@@ -514,7 +502,7 @@ object ScaleProbe {
     // delay — so cross-batch state EXPIRES as the stream runs and the
     // bounded-state claim is MEASURED per micro-batch (state row
     // high-water mark from StreamingQueryProgress), not asserted.
-    if (!onlyR13b) locally {
+    section("r13") {
       val cfg = AnnIndex.Config(dim = 64, nBits = 6, nTables = 16)
       val idxPath = graft.core.SessionCache.newTempDir("graft-scale-stream-lsh")
       timed(s"stream-serve OFFLINE: LSH index build+write ($nEmb vec)") {
@@ -559,7 +547,7 @@ object ScaleProbe {
     // scales with token mass — measured here; the scrub and the
     // stratified sample are single codegen passes and should track the
     // plain scan time.
-    if (!onlyR13c) locally {
+    section("r13b") {
       timed(s"vocabulary top-100 ($nDocs docs)") {
         TextAnalysis.vocabulary(docs, "doc_id", "text", 100).collect()
       }
@@ -605,8 +593,8 @@ object ScaleProbe {
 
     // Round-14 heavy-hitters sketch: one MG pass over the full exploded
     // token stream vs the exact count table — the bounded-state
-    // monitoring trade measured. (R14C selects only this block.)
-    if (!onlyR15) locally {
+    // monitoring trade measured.
+    section("r14c") {
       timed(s"heavy-hitters MG sketch k=20 ($nDocs docs)") {
         Sketches.heavyHitterTokens(docs.select(col("text")), "text", 20).collect()
       }
@@ -623,7 +611,7 @@ object ScaleProbe {
     // hybrid RRF fusion, tombstone-only delete + merge-on-read probe,
     // and the headline: index-served PHRASE search vs the full-scan form
     // (the r13 "scan-serve at 100 TB" gap).
-    if (!onlyR14b) locally {
+    section("r14") {
       val terms = Seq("vector", "stream", "hash")
       val idxPath = graft.core.SessionCache.newTempDir("graft-scale-bm25-r14")
       timed(s"bm25 POSITIONAL BUILD (99% of $nDocs docs)") {
@@ -690,7 +678,7 @@ object ScaleProbe {
     // line-vocabulary-sized aggregate; removeHotLines is a broadcast-set
     // in-row filter (corpus never shuffles). Aggregates over the computed
     // columns force real evaluation (the round-8 pruned-probe lesson).
-    if (!onlyR14c) locally {
+    section("r14b") {
       val aug = docs.select(col("doc_id"),
         concat_ws("\n",
           lit("Subscribe to our newsletter"),
@@ -719,7 +707,7 @@ object ScaleProbe {
     // direct scan that pays the corpus pass; APPEND must be linear in the
     // batch. Also times the streaming-face scorer as a batch backfill
     // (pure codegen projection — should track plain scan speed).
-    if (!onlyR14) locally {
+    section("r13d") {
       val terms = Seq("vector", "stream", "hash")
       timed(s"bm25 DIRECT scan top-10 ($nDocs docs)") {
         Bm25.topK(docs, "doc_id", "text", terms, 10).collect()
@@ -749,7 +737,7 @@ object ScaleProbe {
     // this measures the gap that makes broadcast the default. Both
     // aggregate total ids (a bare count() would let the optimizer skip
     // the work).
-    if (!onlyR13d) locally {
+    section("r13c") {
       val vocab = timed(s"vocab count+rank ($nDocs docs)") {
         val v = TextAnalysis.vocabIds(CountTable.counts(docs, "text", n = 1)).cache()
         println(s"[scale]   -> vocab entries: ${v.count()}")
@@ -774,12 +762,9 @@ object ScaleProbe {
     // (d) Committed-epoch protocol overhead: probe latency at 1 epoch vs
     //     after 10 appends (11 epochs), then after compact — the cost of
     //     crash-safe appends must be a listing constant, not a scan term.
-    if (!onlyR17) locally {
+    //     Section r15 runs (a), (b) and (d); section r15c runs (c).
+    section("r15") {
       import spark.implicits._
-      // SPARK_GRAFT_ONLY_R15C=1 re-measures only the quantized-IVF part
-      // (the phrase/hot-lines/epoch parts have recorded numbers).
-      val onlyR15c = sys.env.contains("SPARK_GRAFT_ONLY_R15C")
-      if (!onlyR15c) locally {
       val phrases = Seq(
         0L -> Seq("vector", "stream"), 1L -> Seq("table", "hash"),
         2L -> Seq("slow", "hash", "batch"), 3L -> Seq("big", "table"),
@@ -849,8 +834,8 @@ object ScaleProbe {
       timed("bm25 probe, post-compact (1 epoch)") {
         IndexedBm25.topK(spark, idxPath, terms, 10).collect()
       }
-      } // !onlyR15c
-
+    }
+    section("r15c") {
       // (c) quantized IVF serving
       val model = IvfIndex.fit(emb, "embedding")
       val ivfDir = graft.core.SessionCache.newTempDir("graft-scale-ivf-r15")
@@ -858,21 +843,15 @@ object ScaleProbe {
         IvfIndex.writeIndex(IvfIndex.buildIndex(emb, "vec_id", "embedding", model), ivfDir)
       }
       val fIdx = IvfIndex.readIndex(spark, ivfDir)
-      val qIdx = {
-        // newTempDir CREATES the dir — write to a child path
-        val p = graft.core.SessionCache.newTempDir("graft-scale-ivfq") + "/q"
-        IvfIndex.quantizeIndex(fIdx).write.partitionBy("cluster").parquet(p)
-        spark.read.parquet(p)
-      }
-      val pIdx = {
-        val p = graft.core.SessionCache.newTempDir("graft-scale-ivfp") + "/p"
-        IvfIndex.quantizeIndexPacked(fIdx).write.partitionBy("cluster").parquet(p)
-        spark.read.parquet(p)
-      }
-      def dirBytes(df: DataFrame): Long =
-        df.inputFiles.map(f => new java.io.File(new java.net.URI(f)).length()).sum
-      println(f"[scale] index bytes: float ${dirBytes(fIdx)}%,d  " +
-        f"array<int> ${dirBytes(qIdx)}%,d  packed-binary ${dirBytes(pIdx)}%,d")
+      // newTempDir CREATES the dir — write to a child path
+      val qDir = graft.core.SessionCache.newTempDir("graft-scale-ivfq") + "/q"
+      IvfIndex.quantizeIndex(fIdx).write.partitionBy("cluster").parquet(qDir)
+      val qIdx = spark.read.parquet(qDir)
+      val pDir = graft.core.SessionCache.newTempDir("graft-scale-ivfp") + "/p"
+      IvfIndex.quantizeIndexPacked(fIdx).write.partitionBy("cluster").parquet(pDir)
+      val pIdx = spark.read.parquet(pDir)
+      println(f"[scale] index bytes: float ${dirBytes(ivfDir)}%,d  " +
+        f"array<int> ${dirBytes(qDir)}%,d  packed-binary ${dirBytes(pDir)}%,d")
       val nProbe = IvfIndex.defaultNProbe(model.centroids.length)
       timed("ivf probe FLOAT top-10") {
         IvfIndex.queryTopK(fIdx, model, q, 10, nProbe).collect()
@@ -883,7 +862,6 @@ object ScaleProbe {
       timed("ivf probe PACKED-i8 + float re-rank top-10") {
         IvfIndex.queryTopKPackedRerank(pIdx, fIdx, model, q, 10, nProbe).collect()
       }
-
     }
 
     // ---- Round-17 additions -------------------------------------------
@@ -893,15 +871,7 @@ object ScaleProbe {
     // the engine now maintains — build, probe time AND actual bytes read
     // (the 4× candidate-IO claim, on disk), single-commit append,
     // tombstone fold, governor compact.
-    if (!onlyR17b) locally {
-      // wall-clock + tracked input bytes; the settle-until-stable drain
-      // is Bench's shared helper (ADVICE r19: the fixed sleep this
-      // replaces silently undercounted on a loaded box)
-      def measured[T](name: String)(f: => T): T = {
-        val (r, s, b) = Bench.measuredWithBytes(spark)(f)
-        println(f"[scale] $name%-52s $s%8.2f s  bytesRead $b%,d")
-        r
-      }
+    section("r17") {
       val model = IvfIndex.fit(emb, "embedding")
       val root = graft.core.SessionCache.newTempDir("graft-scale-ivfpacked") + "/idx"
       timed(s"packed-ivf BUILD ($nEmb vectors, both forms, one commit)") {
@@ -913,14 +883,14 @@ object ScaleProbe {
       // warm the FS listing caches once so the float-vs-packed comparison
       // below is scan cost, not first-listing cost
       persistedProbe()
-      measured("ivf probe FLOAT (persisted float side)") {
+      measured(spark, "ivf probe FLOAT (persisted float side)") {
         IvfIndex.queryTopK(IvfPackedIndex.readFloat(spark, root), model, q, 10, nProbe)
           .collect()
       }
-      measured("ivf probe PERSISTED PACKED + pruned float re-rank") {
+      measured(spark, "ivf probe PERSISTED PACKED + pruned float re-rank") {
         persistedProbe()
       }
-      measured("packed candidate pass ALONE (int8 scan, probed clusters)") {
+      measured(spark, "packed candidate pass ALONE (int8 scan, probed clusters)") {
         val probes = model.nearestClusters(q, nProbe)
         Similarity.cutTopK(
           IvfIndex.pruneProbes(IvfPackedIndex.readPacked(spark, root), probes)
@@ -973,7 +943,7 @@ object ScaleProbe {
     // this corpus shape — the numbers measure the pipeline's fixed
     // machinery (explode, cap, postings join, append, epoch commit), a
     // floor for the real-corpus cost where the cap is mostly idle.
-    if (!onlyR18) locally {
+    section("r17b") {
       val cut = nDocs * 99L / 100L
       val idxPath = graft.core.SessionCache.newTempDir("graft-scale-jgatem") + "/idx"
       timed(s"shingle postings BUILD ($cut docs)") {
@@ -1021,10 +991,7 @@ object ScaleProbe {
     // fan-in to govern — amplified near-copy waves drop entirely at the
     // gate and leave the epoch count at 1 forever (the r17b rehearsal
     // covers that dropping path; this block isolates the append path).
-    // runs in a FULL probe too (the ONLY_* convention: flags subset,
-    // never gate) — onlyR8 is the OR of the whole flag chain, so
-    // !onlyR8 means no subset flag is set
-    if ((onlyR18 && !onlyR19) || !onlyR8) locally {
+    section("r18") {
       val cut = nDocs * 3L / 5L
       val waves = 16
       val waveN = math.max(nDocs / 50L, 500L)
@@ -1076,13 +1043,7 @@ object ScaleProbe {
     // bands × 512 keys = 4096 cells) exercises the pruned-main path for
     // the small batch; the large batch and the radius-10 run exercise
     // the cost-based flat-slice fallback.
-    if ((onlyR19 && !onlyR19b) || !onlyR8) locally {
-      // shared settle-until-stable byte tracking (ADVICE r19)
-      def measured[T](name: String)(f: => T): T = {
-        val (r, s, b) = Bench.measuredWithBytes(spark)(f)
-        println(f"[scale] $name%-58s $s%8.2f s  bytesRead $b%,d")
-        r
-      }
+    section("r19") {
       import graft.operators.{Dedup, Multimodal}
       val assets = Multimodal.fakeAssets(docs, "text")
       val sigsAll = assets.select(col("doc_id").cast("long").as("id"),
@@ -1097,23 +1058,16 @@ object ScaleProbe {
         timed(s"dHash BANDED index build (radius $radius)") {
           Dedup.buildBandedDHashIndexFromSigs(sigsAll, bandedP, radius)
         }
-        def dirBytes(p: String): Long = {
-          val root = new java.io.File(p.stripPrefix("file:"))
-          def walk(f: java.io.File): Long =
-            if (f.isFile) f.length()
-            else Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-          walk(root)
-        }
         println(f"[scale] dHash index bytes: flat ${dirBytes(flatP)}%,d  " +
           f"banded(r$radius) ${dirBytes(bandedP)}%,d")
         for (nBatch <- Seq(1, 100, 10000)) {
           val batchSigs = sigsAll.limit(nBatch)
             .select((col("id") + 10000000L).as("id"), col("sig")).localCheckpoint()
-          measured(s"gate FLAT form   radius=$radius batch=$nBatch") {
+          measured(spark, s"gate FLAT form   radius=$radius batch=$nBatch") {
             Dedup.sigDupIdsVsIndex(batchSigs,
               spark.read.parquet(flatP), radius).count()
           }
-          measured(s"gate BANDED form radius=$radius batch=$nBatch") {
+          measured(spark, s"gate BANDED form radius=$radius batch=$nBatch") {
             Dedup.sigDupIdsVsBandedIndex(batchSigs, bandedP, radius).count()
           }
         }
@@ -1129,13 +1083,7 @@ object ScaleProbe {
     // multi-row-group geometry at rehearsal scale with a small
     // parquet.block.size at write, then sweep nProbe and record
     // candidate bytes at BOTH geometries.
-    if (onlyR19 || !onlyR8) locally {
-      // shared settle-until-stable byte tracking (ADVICE r19)
-      def measured[T](name: String)(f: => T): T = {
-        val (r, s, b) = Bench.measuredWithBytes(spark)(f)
-        println(f"[scale] $name%-58s $s%8.2f s  bytesRead $b%,d")
-        r
-      }
+    section("r19b") {
       /** STATS-ADMITTED candidate bytes: for every packed-side file in a
         * TOUCHED bucket dir, the compressed bytes of the row groups
         * whose cluster [min, max] stats admit ≥ 1 probed cluster — the
@@ -1197,7 +1145,7 @@ object ScaleProbe {
         val kAll = model.centroids.length
         for (nProbe <- Seq(16, 62, 125, 250)) {
           val probes = model.nearestClusters(q, nProbe)
-          measured(s"packed candidate pass [$geom] nProbe=$nProbe/$kAll") {
+          measured(spark, s"packed candidate pass [$geom] nProbe=$nProbe/$kAll") {
             Similarity.cutTopK(
               IvfIndex.pruneProbes(IvfPackedIndex.readPacked(spark, root), probes)
                 .select(col("id"),

@@ -488,8 +488,9 @@ object AnnIndex {
     // band join and the vector join-back — plus the survivor anti-join;
     // `within` by the index probe and the final anti-join): in a composed
     // hygiene chain the unpinned form re-runs the entire upstream
-    // pipeline once per consumer (2.6× end-to-end at sf0.1,
-    // DailyDropProfile). LAZY + batch-sized, never corpus-sized; same
+    // pipeline once per consumer (2.6× end-to-end at sf0.1, dev profile,
+    // since removed; Bench's pipeline_daily_drop row times the pinned
+    // chain). LAZY + batch-sized, never corpus-sized; same
     // non-replayable tradeoff as [[probeBatch]]'s pin below.
     val nb = newBatch.localCheckpoint(eager = false)
     val withinPairs = nearDupPairsLSH(nb, idCol, embCol, threshold, cfg)

@@ -154,8 +154,9 @@ object Dedup {
       // max() == the value, while 2 grouping keys instead of 4 shrink
       // the hash-agg key bytes and compares over the candidate fan-out
       // (the dominant cost of the pair pass: 13.7M candidate rows at
-      // sf0.1's daily drop; CrossJoinProfile measured the 4-key form
-      // ~1.7× the 2-key form). Identical output by construction.
+      // sf0.1's daily drop; a dev profile, since removed, measured the
+      // 4-key form ~1.7× the 2-key form; `PlanAudit <sf> jaccard_pairs`
+      // shows the 2-key hash-agg). Identical output by construction.
       .groupBy("a_id", "b_id")
       .agg(count(lit(1)).as("common"),
         max(col("a_size")).as("a_size"), max(col("b_size")).as("b_size"))
@@ -491,7 +492,8 @@ object Dedup {
     // cross-index postings probe + the final anti-join): in a composed
     // chain (see SparkEntry's daily-drop rehearsal) the unpinned form
     // re-runs the whole upstream hygiene chain once per consumer — 2.6×
-    // the end-to-end cost at sf0.1 (DailyDropProfile). LAZY checkpoints:
+    // the end-to-end cost at sf0.1 (dev profile, since removed; Bench's
+    // pipeline_daily_drop row times the pinned chain). LAZY checkpoints:
     // no extra job; blocks are batch-sized (the daily drop), NEVER
     // corpus-sized, and the ContextCleaner releases them on GC. Same
     // non-replayable tradeoff as AnnIndex.probeBatch, documented there.
@@ -531,7 +533,9 @@ object Dedup {
     bpost.join(corpusPostings, Seq("shingle"))
       // sizes as max() aggregates, not grouping keys — the jaccardPairs
       // rationale (r22): constant per id, and the candidate fan-out's
-      // hash-agg is this operator's dominant cost (CrossJoinProfile)
+      // hash-agg is this operator's dominant cost (measured at sf0.1 by a
+      // dev profile, since removed; perfbench stream_drip's
+      // `gate.add_batch_ms` span times it inside the novelty gate)
       .groupBy(col("__b_id"), col("corpus_id"))
       .agg(count(lit(1)).as("common"),
         max(col("__b_size")).as("__b_size"), max(col("corpus_size")).as("corpus_size"))

@@ -463,7 +463,7 @@ object IvfIndex {
     * via a broadcast semi-join instead (one In node is cheap — Catalyst
     * folds it to an InSet — but a multi-thousand-literal task closure
     * and parquet or-chain stop paying for themselves around here).
-    * NOTE the engine's session builders raise
+    * NOTE [[graft.core.LocalSession]] and `Cli` raise
     * `spark.sql.parquet.pushdown.inFilterThreshold` to this value: at
     * Spark's default (10) an In above the threshold reaches parquet as
     * a [min, max] RANGE, and a pseudo-random pool's range spans the

@@ -38,7 +38,7 @@ object TextAnalysis {
     * frames are batch-bounded; adding an exchange per trigger buys
     * nothing). Callers only use it above commutative aggregations or
     * per-row maps, so the split cannot change any result. Measured
-    * (TokFloorProfile, sf0.1, 32 cpus, warm): unigram counts
+    * (sf0.1, 32 cpus, warm; dev profile, since removed): unigram counts
     * 0.64 → 0.43 s, tokenizeToIds 1.10 → 0.82 s.
     */
   private[operators] def scanFloor(df: DataFrame): DataFrame =

@@ -826,17 +826,19 @@ object Streams {
     * query runs to evict state. The count is frozen at query start from
     * `spark.sql.shuffle.partitions` and AQE never coalesces a stream, so
     * a value sized for batch scan parallelism multiplies pure fixed cost
-    * by cores. Size it to expected STATE VOLUME instead:
-    * `spark.graft.stream.statePartitions` is the deployment knob (a
-    * 100 TB ingest with billions of live keys raises it to spread state
-    * across executors and bound per-store memory); the default
-    * min(defaultParallelism, 8) keeps small/bounded-state queries — the
-    * shape of every declared row: ≤ |corpus| dedup keys, ≤ |users|
-    * sessions — from paying ~cores× the commit overhead their state
-    * needs. Measured (StreamWmProfile, sf0.1, 32 cpus): the watermarked
-    * ANN probe's summed state commitTimeMs fell 30.8→3.0 s and the
-    * no-data batch 1.9→1.6 s wall at 32→8 partitions; identical emitted
-    * rows (key-hash routing changes placement, never membership).
+    * by cores. `spark.graft.stream.statePartitions` is the deployment
+    * knob for sizing it to state volume (a 100 TB ingest with billions of
+    * live keys raises it to spread state across executors and bound
+    * per-store memory). Without it the default is the fixed cap
+    * min(defaultParallelism, 8): it is NOT derived from state volume. The
+    * cap keeps small/bounded-state queries — the shape of every declared
+    * row: ≤ |corpus| dedup keys, ≤ |users| sessions — from paying ~cores×
+    * the commit overhead their state needs. Measured (sf0.1, 32 cpus):
+    * the watermarked ANN probe's summed state commitTimeMs fell
+    * 30.8→3.0 s and the no-data batch 1.9→1.6 s wall at 32→8 partitions;
+    * identical emitted rows (key-hash routing changes placement, never
+    * membership). `SPARK_GRAFT_CPUS=32 PlanAudit <sf> stream_ann_probe_wm`
+    * prints each batch's state partitions and commit ms.
     */
   def stateShufflePartitions(spark: SparkSession): Int =
     spark.conf.getOption("spark.graft.stream.statePartitions")
