@@ -2,6 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import graft.core.LocalSession
+import graft.registry.{Artifacts, PipelineRows}
 
 /** Benchmark main: one JSON line with per-query seconds.
   *
@@ -283,7 +284,7 @@ object Bench {
     // Build-vs-serve separation: index fit/build/write is an offline step
     // in a deployment (the declared queries probe a persisted index), so
     // pre-build the per-sfDir artifacts — the timed rows measure PROBING.
-    SparkEntry.warmArtifacts(spark, sfDir)
+    Artifacts.warmArtifacts(spark, sfDir)
     // Offline build for the bench-only IVF batch-probe row (the declared
     // ivf_batch_topk is a cached parity constant — see "cached" below).
     val ivfBenchModel = operators.IvfIndex.fit(
@@ -459,9 +460,9 @@ object Bench {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
     val ddS1 = if (benchOnly.isDefined) 0.0
-      else onceSec { SparkEntry.dailyDropStage1(spark, sfDir).count(); () }
+      else onceSec { PipelineRows.dailyDropStage1(spark, sfDir).count(); () }
     val ddS12 = if (benchOnly.isDefined) 0.0
-      else onceSec { SparkEntry.dailyDropStage12(spark, sfDir).count(); () }
+      else onceSec { PipelineRows.dailyDropStage12(spark, sfDir).count(); () }
 
     val bytesE20 = core.Tables.embeddings(spark, sfDir).filter(col("vec_id") < 20)
     val packedBatchBytes = if (benchOnly.isDefined) 0L else bytesOf {
@@ -531,10 +532,8 @@ object Bench {
     // BENCH_r11/r12 ("parsed": null two rounds running). Persist the full
     // artifact to a repo file first so cross-round per-query comparison
     // never depends on tail luck; the println stays the driver contract.
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")),
-      line + "\n")
+    val artifactPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(artifactPath), line + "\n")
     catch { case e: Throwable =>
       System.err.println(s"[bench] artifact write failed: ${e.getMessage}")
     }
@@ -546,7 +545,7 @@ object Bench {
     // BENCH_r19–r21), and the full line above is ~4 KB — the tail window
     // lands mid-JSON every round. Emit a COMPACT summary as the LAST
     // stdout line, sized to always fit the tail window whole, with the
-    // full map in BENCH_LOCAL.json (path in "detail"). Printed after
+    // full map in the artifact file (path in "detail"). Printed after
     // spark.stop() so no shutdown logging can follow it.
     //
     // Round-22 (PERF_r21 fallout): the r14 form carried only the slowest
@@ -558,17 +557,12 @@ object Bench {
     // contends for the top-8 stays present across rounds; the omitted
     // tail is all sub-0.3 s rows whose cross-round deltas are noise).
     // Entries are only ever ADDED relative to the r14 form.
-    val fixedPart =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":,""" +
+    def compactLine(queries: String): String =
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$queries,""" +
       s""""n_queries":${ok.size},"n_err":${errs.size},"iters":$Iters,""" +
-      s""""load_inflated":$loadInflated,"detail":"BENCH_LOCAL.json",""" +
+      s""""load_inflated":$loadInflated,"detail":"${jsonEscape(artifactPath)}",""" +
       s""""sf":"${jsonEscape(sfDir)}"}"""
-    val slowMap = compactQueriesJson(ok, CompactLineBudget - fixedPart.length)
-    println(
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$slowMap,""" +
-      s""""n_queries":${ok.size},"n_err":${errs.size},"iters":$Iters,""" +
-      s""""load_inflated":$loadInflated,"detail":"BENCH_LOCAL.json",""" +
-      s""""sf":"${jsonEscape(sfDir)}"}""")
+    println(compactLine(compactQueriesJson(ok, CompactLineBudget - compactLine("").length)))
     System.out.flush()
     // A bench with errored queries is a FAILED bench run (round-11: seven
     // analysis-errored event queries shipped under rc=0 and the round was

@@ -41,15 +41,20 @@ object ScaleProbe {
     * r18 "wrong" #2: ScaleProbe long-runs carried no canary, so an
     * out-of-band wave time — r18's 49 s wave 2 — could not be
     * adjudicated against the drift rule). Same fixed-work loops and ref
-    * constants as Bench's artifact fields.
+    * constants as Bench's artifact fields. Like Bench, the par canary
+    * runs one thread per available core: more threads than cores would
+    * time oversubscription, not box load. Its ref holds only when the
+    * thread count matches the ref's, so the label names both.
     */
-  private def canaryPair(tag: String): Unit =
-    // refs interpolate Bench's constants (ADVICE r19): a dev-box
-    // re-measure there can never leave these lines printing stale ones
+  private def canaryPair(tag: String): Unit = {
+    val threads = Runtime.getRuntime.availableProcessors()
+    // refs interpolate Bench's constants: a re-measure there can
+    // never leave these lines printing stale ones
     println(f"[scale] canary $tag: seq ${Bench.canarySeconds()}%.3f s " +
       f"(ref ${Bench.CanaryRefSec})  " +
-      f"par${Bench.CanaryParRefThreads} ${Bench.canaryParSeconds(Bench.CanaryParRefThreads)}%.3f s " +
-      f"(ref ${Bench.CanaryParRefSec})")
+      f"par$threads ${Bench.canaryParSeconds(threads)}%.3f s " +
+      f"(ref ${Bench.CanaryParRefSec} at par${Bench.CanaryParRefThreads})")
+  }
 
   private def timed[T](name: String)(f: => T): T = {
     val t0 = System.nanoTime()

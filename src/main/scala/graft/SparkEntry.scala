@@ -1,16 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{SessionCache, Tables}
-import graft.functions.VectorFunctions.{cosine_sim, dot_product, l2_norm}
-import graft.operators._
-import graft.store.DocStore
-import graft.streaming.Streams
+import graft.core.Tables
+import graft.operators.Similarity
+import graft.registry._
 
-/** Driver contract — see SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Every entry in [[queries]] is one operator from SURVEY §2 (O1-O17) or a
   * north-star extension (E1-E6 / the training-data-pipeline brief), and
@@ -29,5856 +26,32 @@ import graft.streaming.Streams
   */
 object SparkEntry {
 
-  private def docs(s: SparkSession, dir: String) = Tables.documents(s, dir)
-  private def embs(s: SparkSession, dir: String) = Tables.embeddings(s, dir)
-  private def events(s: SparkSession, dir: String) = Tables.events(s, dir)
+  /** Every declared row, family by family; each name is declared once. */
+  val rows: Seq[Declared] =
+    StoreRows.rows ++ SimilarityRows.rows ++ AnnRows.rows ++ Bm25Rows.rows ++
+      DedupRows.rows ++ TextRows.rows ++ StreamRows.rows ++
+      RelationalRows.rows ++ PipelineRows.rows
 
-  /** The query vector of the flagship search: embeddings row vec_id=0
-    * (`/root/reference/vectolite.py:118-174`'s embedded query analogue).
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    rows.map(r => r.name -> r.run).toMap
+
+  def oracleSql: Map[String, String] = rows.map(r => r.name -> r.oracle).toMap
+
+  /** Rows whose timing is a cache lookup after [[Artifacts.warmArtifacts]]
+    * (see [[Declared]]`.cached`).
     */
-  private def queryVec(s: SparkSession, dir: String): Array[Float] =
-    embs(s, dir).filter(col("vec_id") === 0)
-      .select("embedding").head.getSeq[Float](0).toArray
+  val cachedQueryNames: Set[String] = rows.filter(_.cached).map(_.name).toSet
 
-  // ------------------------------------------- persisted index artifacts
-  // BUILD vs SERVE separation: a deployment fits/writes ANN indexes
-  // offline and only probes them at query time. SessionCache is that
-  // separation within one driver JVM — the first request builds and
-  // writes the partitioned index (temp dir, deleted on exit), every later
-  // request (and every bench measurement after warmArtifacts) only probes.
-
-  private val annCfg = AnnIndex.Config(dim = 64, nBits = 6, nTables = 16)
-
-  // The cached value is the LISTED DataFrame, not just the path: partition
-  // discovery over nTables×2^nBits dirs is a catalog operation a serving
-  // deployment performs once (and keeps fresh), never per query — relisting
-  // cost 3.8 s of the 3.9 s sf0.1 probe. The frame still reads from disk
-  // with partition pruning; only the file index is retained.
-
-  private def lshIndex(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrCreate(s"lsh_index:$dir") {
-      val p = SessionCache.newTempDir("graft-lsh-idx")
-      AnnIndex.writeIndex(
-        AnnIndex.buildIndex(embs(s, dir), "vec_id", "embedding", annCfg), p, annCfg)
-      s.read.parquet(p)
-    }
-
-  // k is auto-picked (~sqrt(|corpus|), IvfIndex.autoK) so the cluster count
-  // tracks the scale factor instead of hardcoding the sf0.001 toy value;
-  // nProbe scales with it (defaultNProbe: ~k/4) to hold the scanned
-  // fraction — and therefore recall — constant across SFs.
-  private def ivfIndex(s: SparkSession, dir: String): (IvfIndex.Model, DataFrame) =
-    SessionCache.getOrCreate(s"ivf_index:$dir") {
-      val model = IvfIndex.fit(embs(s, dir), "embedding")
-      val p = SessionCache.newTempDir("graft-ivf-idx")
-      IvfIndex.writeIndex(
-        IvfIndex.buildIndex(embs(s, dir), "vec_id", "embedding", model), p)
-      (model, s.read.parquet(p))
-    }
-
-  /** PERSISTED packed-IVF serving artifact (round-16; VERDICT r15 next
-    * #2): the byte-packed int8 sidecar lives ON DISK with the float
-    * re-rank side under one epoch-committed root — built over the first
-    * 3/4 of the corpus and APPENDed the last 1/4 against the shared
-    * frozen model, so every probe through it also exercises the
-    * maintained-artifact path (append == rebuild), never a per-session
-    * re-quantization of the corpus.
-    */
-  private def ivfPackedIdx(s: SparkSession, dir: String): String =
-    SessionCache.getOrCreate(s"ivf_packed_index:$dir") {
-      val (model, _) = ivfIndex(s, dir)
-      val cut = embs(s, dir).count() * 3 / 4
-      val root = SessionCache.newTempDir("graft-ivf-packed-idx")
-      IvfPackedIndex.build(embs(s, dir).filter(col("vec_id") < cut),
-        "vec_id", "embedding", model, root)
-      IvfPackedIndex.append(embs(s, dir).filter(col("vec_id") >= cut),
-        "vec_id", "embedding", model, root)
-      root
-    }
-
-  // Corpus-slice index for the incremental near-dedup row: the first 3/4
-  // of the embeddings stand in for the historical corpus, indexed with
-  // the LOW-threshold LSH geometry (few bits, many tables — at cosine
-  // 0.3 per-table collision ≈ 0.6^nBits, so 4 bits × 12 tables ≈ 0.81
-  // pair recall where the 6-bit probe config would manage ~0.5; see
-  // AnnIndex.nearDupPairsLSH's parameter rule).
-  private val dedupCfg = AnnIndex.Config(dim = 64, nBits = 4, nTables = 12)
-
-  private def lshDedupIndex(s: SparkSession, dir: String): (Long, DataFrame) =
-    SessionCache.getOrCreate(s"lsh_dedup_index:$dir") {
-      val cut = embs(s, dir).count() * 3 / 4
-      val p = SessionCache.newTempDir("graft-lsh-dedup-idx")
-      AnnIndex.writeIndex(
-        AnnIndex.buildIndex(embs(s, dir).filter(col("vec_id") < cut),
-          "vec_id", "embedding", dedupCfg), p, dedupCfg)
-      (cut, s.read.parquet(p))
-    }
-
-  /** Pre-build the per-sfDir session artifacts (index fit/build/write) so
-    * a subsequent timed run measures SERVING cost only — the bench calls
-    * this in its warmup section, mirroring offline index builds.
-    */
-  /** The planted-PII augmentation shared by the batch and streaming scrub
-    * rows (one email + one NANP phone derived from doc_id) — ONE Column so
-    * the two rows can't drift from each other; both must stay in sync
-    * with the SQL twin in `piiScrubOracle`.
-    */
-  private val piiAugmented: Column =
-    concat(col("text"), lit(" contact user"), col("doc_id").cast("string"),
-      lit("@mail.example.com or 555-"),
-      (lit(1000L) + col("doc_id") % 9000L).cast("string"), lit(" now"))
-
-  /** The planted multi-LINE augmentation of the line-curation rows
-    * (round-14): fixture texts carry no newlines, so the line rules are
-    * exercised on a deterministic 4-line layout — a short boilerplate
-    * header (fails minWords AND matches the marker regex), the real text
-    * with terminal punctuation (content), a footer shared by EVERY doc
-    * (interdoc-hot), and a doc-unique 2-word tail (fails minWords). ONE
-    * Column shared by both line rows; in sync with the SQL `aug` CTEs.
-    */
-  private val lineAugmented: Column =
-    concat_ws("\n",
-      lit("Subscribe to our newsletter"),
-      concat(col("text"), lit(".")),
-      lit("copyright footer all pages share"),
-      concat(lit("unique "), col("doc_id").cast("string")))
-
-  /** Sketch capacity of the heavy-hitter rows. */
-  private val HhK = 20
-
-  /** The MG-theorem invariant row shared by `heavy_hitters` (batch) and
-    * `stream_heavy_hitters` (maintained over micro-batches): both
-    * guarantees checked mechanically against the EXACT counts —
-    * guaranteed set (tf > N/(k+1)) ⊆ sketch, and every estimate within
-    * [f − N/(k+1), f]. The oracle recomputes n_guaranteed exactly and
-    * pins the flags at 1, so any implementation bug (update rule, merge
-    * tree, encoder, stream fold) breaks the hash.
-    */
-  private def hhInvariantRow(s: SparkSession, dir: String,
-                             sketch: Map[String, Long]): DataFrame = {
-    import s.implicits._
-    // (the r21 caller-side scan floor moved INTO CountTable.counts in
-    // r22 — TextAnalysis.scanFloor — so every counts consumer gets it)
-    val floored = docs(s, dir).select(col("doc_id"), col("text"))
-    // ONE evaluation of the exact-count aggregation (r22, guide §1.2):
-    // the invariant check reads `counts` three times (total mass,
-    // guaranteed set, exact counts of the sketched terms) and an
-    // unpinned frame re-ran the full tokenize+count pass per read. Lazy
-    // checkpoint, vocab-sized blocks, released before returning (the
-    // emitted row is driver-side scalars).
-    val counts = CountTable.counts(floored, "text", n = 1)
-      .localCheckpoint(eager = false)
-    try {
-      val totalN = counts.agg(sum(col("tf"))).head.getLong(0)
-      val bound = Sketches.mgErrorBound(totalN, HhK)
-      val guaranteed = counts.filter(col("tf") > bound)
-        .select(col("ngram")).as[String].collect().toSet
-      val exact = counts
-        .filter(col("ngram").isin(sketch.keys.toSeq: _*))
-        .select(col("ngram"), col("tf")).as[(String, Long)].collect().toMap
-      val allFound = guaranteed.subsetOf(sketch.keySet)
-      val boundsOk = sketch.forall { case (t, est) =>
-        val f = exact.getOrElse(t, 0L)
-        est <= f && est >= f - bound
-      }
-      Seq((HhK.toLong, guaranteed.size.toLong,
-          if (allFound) 1L else 0L, if (boundsOk) 1L else 0L))
-        .toDF("k", "n_guaranteed", "all_found", "bounds_ok")
-    } finally Dedup.releaseCheckpointBlocks(counts)
-  }
-
-  /** The BM25 query of the keyword rows — three mid-frequency fixture
-    * terms, so tf, df, and length normalization all vary across the hits.
-    */
-  private val bm25Terms = Seq("vector", "stream", "hash")
-
-  /** The batch-probe workload: five queries over the fixture vocabulary
-    * with overlapping terms (so postings are shared across queries in the
-    * one-plan serve).
-    */
-  private val bm25BatchQueries: Seq[(Long, Seq[String])] = Seq(
-    0L -> Seq("vector", "stream"),
-    1L -> Seq("hash", "join"),
-    2L -> Seq("sort", "merge", "scan"),
-    3L -> Seq("filter", "row"),
-    4L -> Seq("query", "vector"))
-
-  /** Standing phrase workload for the batch positional probe (round-15).
-    * q_id 2 is a trigram with ZERO matches at sf0.001 — the batch plan
-    * must emit nothing for it, not a partial-term candidate.
-    */
-  private val phraseBatchQueries: Seq[(Long, Seq[String])] = Seq(
-    0L -> Seq("vector", "stream"),
-    1L -> Seq("table", "hash"),
-    2L -> Seq("slow", "hash", "batch"),
-    3L -> Seq("big", "table"),
-    4L -> Seq("merge", "group"))
-
-  /** Standing proximity workload (round-15); q_id 4 is a 3-term query —
-    * the k-way smallest-range path, whose oracle replays the span as a
-    * min over all occurrence triples.
-    */
-  private val proximityBatchQueries: Seq[(Long, Seq[String])] = Seq(
-    0L -> Seq("vector", "stream"),
-    1L -> Seq("table", "hash"),
-    2L -> Seq("merge", "group"),
-    3L -> Seq("slow", "batch"),
-    4L -> Seq("vector", "table", "hash"))
-
-  /** Persisted inverted index for the `bm25_index_topk` row, exercising
-    * the FULL lifecycle: build on the first ~60% of the corpus, APPEND the
-    * rest — so the probed result matching the direct-scan oracle proves
-    * append == rebuild for the keyword index too.
-    */
-  private def bm25Index(s: SparkSession, dir: String): String =
-    SessionCache.getOrCreate(s"bm25_index:$dir") {
-      val d = docs(s, dir)
-      val cut = d.agg(max(col("doc_id"))).head.getLong(0) * 3 / 5
-      val p = SessionCache.newTempDir("graft-bm25-idx")
-      IndexedBm25.build(d.filter(col("doc_id") <= cut), "doc_id", "text", p)
-      IndexedBm25.append(d.filter(col("doc_id") > cut), "doc_id", "text", p)
-      p
-    }
-
-  /** Persisted HOT-LINES table (round-15): build on the first ~60% of the
-    * corpus, APPEND the rest — per-batch line-frequency deltas sum to the
-    * exact global document frequency, so the served table matching the
-    * whole-corpus recompute oracle proves append == rebuild for the
-    * boilerplate table too. Serves `pipeline_line_curation` and
-    * `hotlines_append_parity` (which additionally compacts).
-    */
-  private def hotLinesIdx(s: SparkSession, dir: String): String =
-    SessionCache.getOrCreate(s"hotlines_index:$dir") {
-      val aug = docs(s, dir).select(col("doc_id"), lineAugmented.as("text"))
-      val cut = docs(s, dir).agg(max(col("doc_id"))).head.getLong(0) * 3 / 5
-      val p = SessionCache.newTempDir("graft-hotlines-idx")
-      HotLinesIndex.build(aug.filter(col("doc_id") <= cut), "text", p)
-      HotLinesIndex.append(aug.filter(col("doc_id") > cut), "text", p)
-      p
-    }
-
-  /** Index for the `bm25_delete_parity` row — the FULL lifecycle on its
-    * own artifact (a delete on the shared [[bm25Index]] would corrupt the
-    * other keyword rows): build 60%, append 40%, then DELETE doc_id<50
-    * via tombstones. The probe matching the direct-scan oracle over the
-    * SURVIVING docs proves delete == rebuild-without for the keyword
-    * index.
-    */
-  private def bm25DeleteIndex(s: SparkSession, dir: String): String =
-    SessionCache.getOrCreate(s"bm25_delete_index:$dir") {
-      val d = docs(s, dir)
-      val cut = d.agg(max(col("doc_id"))).head.getLong(0) * 3 / 5
-      val p = SessionCache.newTempDir("graft-bm25-del-idx")
-      IndexedBm25.build(d.filter(col("doc_id") <= cut), "doc_id", "text", p)
-      IndexedBm25.append(d.filter(col("doc_id") > cut), "doc_id", "text", p)
-      IndexedBm25.delete(s, p, 0L until 50L)
-      p
-    }
-
-  /** Tombstoned LSH index for the `ann_delete_parity` row: the flagship
-    * serving config built over the full corpus, then vec_id<50 DELETED
-    * via the `_tombstones` sidecar; probes go through
-    * [[AnnIndex.readIndex]]'s merge-on-read anti-join.
-    */
-  private def annDeleteIndex(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrCreate(s"ann_delete_index:$dir") {
-      val p = SessionCache.newTempDir("graft-lsh-del-idx")
-      AnnIndex.writeIndex(
-        AnnIndex.buildIndex(embs(s, dir), "vec_id", "embedding", annCfg), p, annCfg)
-      AnnIndex.deleteFromIndex(s, p, 0L until 50L)
-      AnnIndex.readIndex(s, p, annCfg) // the cfg-validating probe face (r20)
-    }
-
-  def warmArtifacts(s: SparkSession, dir: String): Unit = {
-    lshIndex(s, dir)
-    ivfIndex(s, dir)
-    bm25Index(s, dir)
-    hotLinesIdx(s, dir)
-    bm25DeleteIndex(s, dir)
-    annDeleteIndex(s, dir)
-    annAppendParity(s, dir)
-    lshDedupIndex(s, dir)
-    annBatchParity(s, dir)
-    ivfBatchParity(s, dir)
-    ivfTopkParity(s, dir)
-    ivfQuantParity(s, dir)
-    ivfPackedLifecycle(s, dir)
-    streamIvfParity(s, dir)
-    streamIvfQuantParity(s, dir)
-    streamIvfPackedMaintain(s, dir)
-    ivfBatchQuantParity(s, dir)
-    incrementalNearDedupFlags(s, dir)
-    jaccardIndexAppendParity(s, dir)
-    dailyDropRehearsal(s, dir)
-  }
-
-  /** Declared rows whose result frame is a MATERIALIZED constant after
-    * [[warmArtifacts]] — verification artifacts (parity sweeps) whose
-    * cached frame is a local one-row Seq, so a re-count is a lookup, not
-    * operator cost. BENCH tags these in its output (`"cached"`) so their
-    * min-of-N timings are excluded from cross-round operator comparisons
-    * (round-11, per the r10 advisor; the bench-only volume rows time the
-    * underlying probes for real). `pipeline_daily_drop` is deliberately
-    * NOT here: only its index BUILDS are session-cached — the chain
-    * frame is reconstructed per call, fresh round-12 evaluation pins
-    * included, so its timing is the real end-to-end nightly-loop
-    * serving cost (a cached frame would re-scan the first iteration's
-    * checkpoint blocks and time a cache lookup instead).
-    */
-  val cachedQueryNames: Set[String] = Set(
-    "ann_append_parity", "ann_batch_topk", "ivf_batch_topk",
-    "ivf_topk", "ivf_topk_quantized", "ivf_packed_lifecycle",
-    "stream_ivf_probe", "stream_ivf_probe_quantized",
-    "stream_ivf_packed_maintain", "ivf_batch_topk_quantized",
-    "incremental_near_dedup", "jaccard_index_append_parity")
-
-  /** Append-path parity for BOTH persisted indexes (round-9): build each
-    * index over the first 3/4 of the corpus, APPEND the last 1/4 as the
-    * daily batch ([[AnnIndex.appendToIndex]] /
-    * [[IvfIndex.appendToIndex]] against the frozen model), and compare
-    * the flagship top-k probe — ids AND rounded scores — against a
-    * same-config build over the full corpus. Also runs the frozen-model
-    * [[IvfIndex.driftCheck]] on the batch: a same-distribution quarter
-    * must NOT recommend a re-fit. The computed row is invariant
-    * (parity=1, refit=0) so it hash-checks against a constant oracle —
-    * the embed_hash pattern. Cached: the builds are offline artifacts,
-    * not per-query serving work.
-    */
-  private def annAppendParity(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrCreate(s"ann_append_parity:$dir") {
-      val all = embs(s, dir)
-      val q = queryVec(s, dir)
-      val cut = all.count() * 3 / 4
-      val old = all.filter(col("vec_id") < cut)
-      val batch = all.filter(col("vec_id") >= cut)
-      def probed(df: DataFrame): Seq[(Long, Double)] =
-        df.select(col("id"), round(col("score"), 6).as("score"))
-          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      // LSH: deterministic hyperplanes → append must equal rebuild
-      val lshPath = SessionCache.newTempDir("graft-lsh-append")
-      AnnIndex.writeIndex(AnnIndex.buildIndex(old, "vec_id", "embedding", annCfg), lshPath, annCfg)
-      AnnIndex.appendToIndex(batch, lshPath, "vec_id", "embedding", annCfg)
-      val rebuildProbe =
-        probed(AnnIndex.queryTopK(AnnIndex.buildIndex(all, "vec_id", "embedding", annCfg), q, RecallK, annCfg))
-      val lshParity = probed(AnnIndex.queryTopK(s.read.parquet(lshPath), q, RecallK, annCfg)) ==
-        rebuildProbe
-      // ... and COMPACTION (appends accumulate per-batch files) must not
-      // change a probe either: rewrite one file per dir, swap, re-probe.
-      AnnIndex.compactIndex(s, lshPath)
-      val compactParity =
-        probed(AnnIndex.queryTopK(s.read.parquet(lshPath), q, RecallK, annCfg)) == rebuildProbe
-      // IVF: frozen model fit on the first HALF; the drift baseline comes
-      // from the held-out second quarter (out-of-sample — in-sample
-      // quality is ~0.15 optimistic at this geometry and would flag every
-      // healthy batch; see IvfIndex.driftCheck). The index itself covers
-      // all of `old` under the frozen model, as a deployment's would.
-      val model = IvfIndex.fit(all.filter(col("vec_id") < cut / 2), "embedding")
-      val baseline = IvfIndex.meanAssignedCosine(
-        all.filter(col("vec_id") >= cut / 2 && col("vec_id") < cut), "embedding", model)
-      val nProbe = IvfIndex.defaultNProbe(model.centroids.length)
-      val ivfPath = SessionCache.newTempDir("graft-ivf-append")
-      IvfIndex.writeIndex(IvfIndex.buildIndex(old, "vec_id", "embedding", model), ivfPath)
-      IvfIndex.appendToIndex(batch, ivfPath, "vec_id", "embedding", model)
-      val ivfParity = probed(IvfIndex.queryTopK(s.read.parquet(ivfPath), model, q, RecallK, nProbe)) ==
-        probed(IvfIndex.queryTopK(IvfIndex.buildIndex(all, "vec_id", "embedding", model), model, q, RecallK, nProbe))
-      val drift = IvfIndex.driftCheck(batch, "embedding", model, baseline)
-      import s.implicits._
-      Seq((RecallK.toLong,
-        if (lshParity) 1L else 0L,
-        if (compactParity) 1L else 0L,
-        if (ivfParity) 1L else 0L,
-        if (drift.refitRecommended) 1L else 0L))
-        .toDF("k", "parity_lsh", "parity_compact", "parity_ivf", "refit_recommended")
-    }
-
-  /** Batch==single-probe parity for the LSH batch probe, declared as the
-    * hash-checked `ann_batch_topk` row (round-10): the 20-query batch
-    * probe through the persisted index must return, per query, EXACTLY
-    * what 20 single-vector [[AnnIndex.queryTopK]] probes return — ids AND
-    * rounded scores, in rank order. The listing itself is seed-dependent
-    * (rows-only in r9); the PARITY is an invariant, so the row becomes a
-    * constant the driver hash-checks against a constant oracle — the
-    * ann_append_parity pattern. AnnBatchSpec pins the same equality at
-    * spec level on sf0.001; this row re-proves it on the driver fixtures
-    * every round. Cached: 21 probes are a verification artifact, not
-    * per-query serving work.
-    */
-  private def annBatchParity(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrCreate(s"ann_batch_parity:$dir") {
-      val queries = embs(s, dir).filter(col("vec_id") < 20)
-      val idx = lshIndex(s, dir)
-      val batch = AnnIndex.queryTopKBatch(idx, queries, "vec_id", "embedding",
-          RecallK, annCfg)
-        .select(col("q_id"), col("rank"), col("c_id"), round(col("score"), 6).as("score"))
-        .collect()
-        .groupBy(_.getLong(0))
-        .map { case (q, rows) =>
-          q -> rows.sortBy(_.getLong(1)).map(r => (r.getLong(2), r.getDouble(3))).toSeq
-        }
-      val singles = queries.select(col("vec_id"), col("embedding")).collect()
-        .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-        .map { case (q, v) =>
-          q -> AnnIndex.queryTopK(idx, v, RecallK, annCfg)
-            .select(col("id"), round(col("score"), 6).as("score"))
-            .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        }
-      val parity = batch.keySet.subsetOf(singles.keySet) &&
-        singles.keys.forall(q => batch.getOrElse(q, Seq.empty) == singles(q))
-      import s.implicits._
-      Seq((20L, RecallK.toLong, if (parity) 1L else 0L))
-        .toDF("n_queries", "k", "parity")
-    }
-
-  /** IVF twin of [[annBatchParity]], declared as `ivf_batch_topk`: the
-    * batch probe against the persisted IVF index vs 20 single
-    * [[IvfIndex.queryTopK]] probes at the same nProbe.
-    */
-  private def ivfBatchParity(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrCreate(s"ivf_batch_parity:$dir") {
-      val (model, idx) = ivfIndex(s, dir)
-      val nProbe = IvfIndex.defaultNProbe(model.centroids.length)
-      val queries = embs(s, dir).filter(col("vec_id") < 20)
-      val batch = IvfIndex.queryTopKBatch(idx, model, queries, "vec_id", "embedding",
-          RecallK, nProbe)
-        .select(col("q_id"), col("rank"), col("c_id"), round(col("score"), 6).as("score"))
-        .collect()
-        .groupBy(_.getLong(0))
-        .map { case (q, rows) =>
-          q -> rows.sortBy(_.getLong(1)).map(r => (r.getLong(2), r.getDouble(3))).toSeq
-        }
-      val singles = queries.select(col("vec_id"), col("embedding")).collect()
-        .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-        .map { case (q, v) =>
-          q -> IvfIndex.queryTopK(idx, model, v, RecallK, nProbe)
-            .select(col("id").cast("long"), round(col("score"), 6).as("score"))
-            .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        }
-      val parity = batch.keySet.subsetOf(singles.keySet) &&
-        singles.keys.forall(q => batch.getOrElse(q, Seq.empty) == singles(q))
-      import s.implicits._
-      Seq((20L, RecallK.toLong, if (parity) 1L else 0L))
-        .toDF("n_queries", "k", "parity")
-    }
-
-  /** Invariant flags of the BATCH QUANTIZED probe (round-17 — completes
-    * the quantized serving family: single [[IvfPackedIndex.queryTopK]],
-    * streaming `ivfProbeStreamQuantized`, batch here): N standing
-    * queries served from the PERSISTED packed artifact in ONE plan
-    * (union-cluster pruned int8 candidate pass, per-query k-bounded
-    * pool, union-pool `id IN` pushdown re-rank, exact float scores)
-    * must equal, id-for-id and rounded-score-for-score, the per-query
-    * persisted probe over the same artifact — the ivf_batch_topk
-    * pattern applied to the quantized path. Constant row → constant
-    * oracle. Cached: the builds are offline artifacts.
-    */
-  private def ivfBatchQuantParity(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrCreate(s"ivf_batch_quant_parity:$dir") {
-      val (model, _) = ivfIndex(s, dir)
-      val root = ivfPackedIdx(s, dir)
-      val nProbe = IvfIndex.defaultNProbe(model.centroids.length)
-      val queries = embs(s, dir).filter(col("vec_id") < 20)
-      val batch = IvfPackedIndex.queryTopKBatch(s, root, model, queries,
-          "vec_id", "embedding", RecallK, nProbe)
-        .select(col("q_id"), col("rank"), col("c_id"), round(col("score"), 6).as("score"))
-        .collect()
-        .groupBy(_.getLong(0))
-        .map { case (q, rows) =>
-          q -> rows.sortBy(_.getLong(1)).map(r => (r.getLong(2), r.getDouble(3))).toSeq
-        }
-      val singles = queries.select(col("vec_id"), col("embedding")).collect()
-        .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-        .map { case (q, v) =>
-          q -> IvfPackedIndex.queryTopK(s, root, model, v, RecallK, nProbe)
-            .select(col("id").cast("long"), round(col("score"), 6).as("score"))
-            .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        }
-      val parity = batch.keySet.subsetOf(singles.keySet) &&
-        singles.keys.forall(q => batch.getOrElse(q, Seq.empty) == singles(q))
-      import s.implicits._
-      Seq((20L, RecallK.toLong, if (parity) 1L else 0L))
-        .toDF("n_queries", "k", "parity")
-    }
-
-  /** Invariant flags of the flagship single-query IVF probe, declared as
-    * the hash-checked `ivf_topk` row (round-13; the raw listing is
-    * seeded-k-means territory — rows-only through r12 — and stays spec
-    * territory: AnnBatchSpec/IndexAppendSpec re-derive it). Two designed
-    * invariants:
-    *
-    *  - `parity`: [[IvfIndex.queryTopK]] through the PERSISTED index must
-    *    return, id-for-id and rounded-score-for-score, the exact rerank
-    *    over a FRESH in-memory assignment of the raw corpus restricted to
-    *    the same probed clusters — proves the persisted partition
-    *    contents, the pruned scan, and the rank stage lose nothing
-    *    relative to a from-scratch evaluation of the same probe set;
-    *  - `recall_floor_met`: recall@10 of the served probe vs the exact
-    *    brute-force top-10 over the FULL corpus clears [[RecallFloor]]
-    *    (the ivf_recall argument, re-proven on the serving row itself).
-    *
-    * Both flags are invariants, so the row is a constant the driver
-    * hash-checks against a constant oracle — the ann_batch_topk pattern
-    * that closed r10's rows-only gap. Cached: the full-corpus fresh
-    * re-assignment is a verification artifact, not serving work (the
-    * bench-only `bench_ivf_topk_single` row times the live probe).
-    */
-  private def ivfTopkParity(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrCreate(s"ivf_topk_parity:$dir") {
-      val q = queryVec(s, dir)
-      val (model, idx) = ivfIndex(s, dir)
-      val nProbe = IvfIndex.defaultNProbe(model.centroids.length)
-      def probed(df: DataFrame): Seq[(Long, Double)] =
-        df.select(col("id").cast("long"), round(col("score"), 6).as("score"))
-          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      val served = probed(IvfIndex.queryTopK(idx, model, q, RecallK, nProbe))
-      // independent rerank: assign the raw corpus fresh (never touching
-      // the persisted files), restrict to the same probed clusters, rank
-      val probes = model.nearestClusters(q, nProbe)
-      val fresh = IvfIndex.buildIndex(embs(s, dir), "vec_id", "embedding", model)
-        .filter(col("cluster").isin(probes.map(Int.box): _*))
-      val parity = served == probed(Similarity.topK(fresh, "embedding", "id", q, RecallK))
-      val exact = probed(Similarity.topK(
-          embs(s, dir).select(col("vec_id").as("id"), col("embedding")),
-          "embedding", "id", q, RecallK))
-        .map(_._1).toSet
-      val recall = served.map(_._1).count(exact.contains).toDouble / RecallK
-      import s.implicits._
-      Seq((RecallK.toLong, if (parity) 1L else 0L,
-        if (recall >= RecallFloor) 1L else 0L))
-        .toDF("k", "parity", "recall_floor_met")
-    }
-
-  /** Invariant flags of the QUANTIZED IVF serving composition (round-15;
-    * VERDICT r14 next #7; re-declared round-16 over the PERSISTED packed
-    * artifact per VERDICT r15 next #2): the served probe now runs
-    * [[IvfPackedIndex.queryTopK]] against the on-disk, epoch-committed,
-    * build-3/4-append-1/4 packed+float index — the deployment path —
-    * instead of re-quantizing the float index in-session. Checks:
-    * `rerank_float_exact` — every served (id, score) must equal the
-    * direct float cosine of that id (the re-rank really escaped the
-    * reconstruction); `recall_floor_met` — served ids recover ≥ 90% of
-    * the FLOAT index probe's top-k (quantization may only cost pool
-    * membership, and barely); `packed_parity` — the persisted serve
-    * equals BOTH in-session derivations (array-form int8 rerank and
-    * byte-packed rerank), so persisted == derived == rebuild (the
-    * append-parity proof rides the 3/4+1/4 construction). Constant
-    * oracle, the ivf_topk pattern.
-    */
-  private def ivfQuantParity(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrCreate(s"ivf_quant_parity:$dir") {
-      val q = queryVec(s, dir)
-      val (model, idx) = ivfIndex(s, dir)
-      val nProbe = IvfIndex.defaultNProbe(model.centroids.length)
-      def probed(df: DataFrame): Seq[(Long, Double)] =
-        df.select(col("id").cast("long"), round(col("score"), 6).as("score"))
-          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      val served = probed(IvfPackedIndex.queryTopK(
-        s, ivfPackedIdx(s, dir), model, q, RecallK, nProbe))
-      // both in-session derivations must rank identically to the
-      // persisted serve: the array-form int8 rerank AND the byte-packed
-      // rerank over a fresh quantization of the full-corpus float index
-      val packedParity =
-        served == probed(IvfIndex.queryTopKQuantizedRerank(
-          IvfIndex.quantizeIndex(idx), idx, model, q, RecallK, nProbe)) &&
-        served == probed(IvfIndex.queryTopKPackedRerank(
-          IvfIndex.quantizeIndexPacked(idx), idx, model, q, RecallK, nProbe))
-      val floatTop = probed(IvfIndex.queryTopK(idx, model, q, RecallK, nProbe))
-      val recall = served.map(_._1).count(floatTop.map(_._1).toSet).toDouble / RecallK
-      // served scores must be the float cosines, not reconstructions
-      val floatScores = embs(s, dir)
-        .filter(col("vec_id").isin(served.map(p => Long.box(p._1)): _*))
-        .select(col("vec_id").cast("long"),
-          round(cosine_sim(col("embedding"), typedlit(q.toSeq)), 6).as("score"))
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
-      val exactScores = served.forall { case (id, sc) =>
-        floatScores.get(id).contains(sc) }
-      import s.implicits._
-      Seq((RecallK.toLong, if (exactScores) 1L else 0L,
-        if (recall >= 0.9) 1L else 0L, if (packedParity) 1L else 0L))
-        .toDF("k", "rerank_float_exact", "recall_floor_met", "packed_parity")
-    }
-
-  /** FULL LIFECYCLE of the persisted packed-IVF index on a dedicated
-    * root (round-16; VERDICT r15 next #2 "append/delete parity row"):
-    * build 3/4 → append 1/4 → DELETE ids < 50 (one shared-tombstone
-    * write hiding them from BOTH precision forms) → COMPACT (fold
-    * physically, epoch fan-in back to 1). At each step the persisted
-    * probe must equal the byte-packed rerank over a fresh in-memory
-    * frozen-model (re)build of the surviving corpus — proving the
-    * epoch-committed two-form layout, the shared tombstone sidecar, and
-    * the swap-compact each lose nothing. `compact_parity` additionally
-    * pins the committed-epoch count collapsing to exactly 1. Constant
-    * flags → constant oracle (the ann_append_parity pattern). Cached:
-    * lifecycle churn is a verification artifact; `ivf_topk_quantized`
-    * serves the live probe and the bench volume rows time it.
-    */
-  private def ivfPackedLifecycle(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrCreate(s"ivf_packed_lifecycle:$dir") {
-      val q = queryVec(s, dir)
-      val (model, _) = ivfIndex(s, dir)
-      val nProbe = IvfIndex.defaultNProbe(model.centroids.length)
-      def probed(df: DataFrame): Seq[(Long, Double)] =
-        df.select(col("id").cast("long"), round(col("score"), 6).as("score"))
-          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      def fresh(rows: DataFrame): Seq[(Long, Double)] = {
-        val assigned = IvfIndex.buildIndex(rows, "vec_id", "embedding", model)
-          .localCheckpoint(eager = false)
-        probed(IvfIndex.queryTopKPackedRerank(
-          IvfIndex.quantizeIndexPacked(assigned), assigned, model, q, RecallK, nProbe))
-      }
-      val root = SessionCache.newTempDir("graft-ivf-packed-lc")
-      val cut = embs(s, dir).count() * 3 / 4
-      IvfPackedIndex.build(embs(s, dir).filter(col("vec_id") < cut),
-        "vec_id", "embedding", model, root)
-      IvfPackedIndex.append(embs(s, dir).filter(col("vec_id") >= cut),
-        "vec_id", "embedding", model, root)
-      def served: Seq[(Long, Double)] =
-        probed(IvfPackedIndex.queryTopK(s, root, model, q, RecallK, nProbe))
-      val appendParity = served == fresh(embs(s, dir))
-      IvfPackedIndex.delete(s, root, 0L until 50L)
-      val afterDelete = served
-      val deleteParity =
-        afterDelete == fresh(embs(s, dir).filter(col("vec_id") >= 50))
-      IvfPackedIndex.compact(s, root)
-      val compactParity = served == afterDelete &&
-        graft.store.EpochCommit.committedCount(s, root) == 1
-      import s.implicits._
-      Seq((RecallK.toLong, if (appendParity) 1L else 0L,
-        if (deleteParity) 1L else 0L, if (compactParity) 1L else 0L))
-        .toDF("k", "append_parity", "delete_parity", "compact_parity")
-    }
-
-  /** Invariant flags of the streaming IVF probe, declared as the
-    * hash-checked `stream_ivf_probe` row (round-13; rows-only through
-    * r12 — the pair listing is seeded-k-means territory and stays pinned
-    * by StreamsSpec). The probe is mode-agnostic DataFrame code, so the
-    * designed invariants are:
-    *
-    *  - `parity`: the streaming execution (file source → AvailableNow →
-    *    memory sink) emits EXACTLY the (q_id, c_id, rounded score) set
-    *    the same [[Streams.ivfProbeStream]] plan produces on the batch
-    *    frame — the StreamsSpec equality, re-proven on the driver
-    *    fixtures every round;
-    *  - `stateless`: the executed streaming plan ran ZERO state
-    *    operators (each indexed id lives in exactly one cluster, so no
-    *    dedup store exists) — checked on the actual
-    *    StreamingQueryProgress, not the code.
-    *
-    * Constant row → constant oracle (the ann_batch_topk pattern).
-    * Cached: the bench-only `bench_stream_ivf_probe_20q` row times the
-    * live streaming probe per iteration.
-    */
-  private def streamIvfParity(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrCreate(s"stream_ivf_parity:$dir") {
-      val (model, idx) = ivfIndex(s, dir)
-      val nProbe = IvfIndex.defaultNProbe(model.centroids.length)
-      val sinkName = "graft_stream_ivf_probe"
-      val sq = Streams.ivfProbeStream(
-          Tables.embeddingsStream(s, dir).filter(col("vec_id") < 20),
-          "vec_id", "embedding", idx, model, threshold = 0.5, nProbe)
-        .select(col("q_id"), col("c_id"), round(col("score"), 6).as("score"))
-        .writeStream.format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      graft.streaming.Streams.awaitOrAbort(sq, "stream_ivf_probe")
-      val stateless = sq.lastProgress != null && sq.lastProgress.stateOperators.isEmpty
-      def rows(df: DataFrame): Set[(Long, Long, Double)] =
-        df.select(col("q_id"), col("c_id"), col("score"))
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val got = rows(s.table(sinkName))
-      val expected = rows(Streams.ivfProbeStream(
-          embs(s, dir).filter(col("vec_id") < 20),
-          "vec_id", "embedding", idx, model, threshold = 0.5, nProbe)
-        .select(col("q_id"), col("c_id"), round(col("score"), 6).as("score")))
-      import s.implicits._
-      Seq((20L, if (got == expected) 1L else 0L, if (stateless) 1L else 0L))
-        .toDF("n_queries", "parity", "stateless")
-    }
-
-  /** Invariant flags of the QUANTIZED streaming IVF probe (round-16;
-    * VERDICT r15 next #3) — [[Streams.ivfProbeStreamQuantized]] over the
-    * PERSISTED packed index: int8 candidate pass on the BINARY codes,
-    * float-side join only for near-threshold survivors, exact float
-    * threshold. Three designed invariants, the stream_ivf_probe pattern:
-    *
-    *  - `parity`: streaming emission == the same plan on the batch frame
-    *    (mode-agnostic by construction);
-    *  - `float_parity`: the emitted set == the FLOAT [[Streams.ivfProbeStream]]
-    *    emission over the same queries/corpus — the int8 prescreen's
-    *    margin provably swallowed the quantization error, so the cheap
-    *    serving form answers EXACTLY like the expensive one;
-    *  - `stateless`: the executed streaming plan ran zero state
-    *    operators (joins and filters only), checked on the actual
-    *    StreamingQueryProgress.
-    *
-    * Constant row → constant oracle.
-    */
-  private def streamIvfQuantParity(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrCreate(s"stream_ivf_quant_parity:$dir") {
-      val (model, idx) = ivfIndex(s, dir)
-      val root = ivfPackedIdx(s, dir)
-      val packed = IvfPackedIndex.readPacked(s, root)
-      val floatSide = IvfPackedIndex.readFloat(s, root)
-      val nProbe = IvfIndex.defaultNProbe(model.centroids.length)
-      val sinkName = "graft_stream_ivf_probe_quant"
-      val sq = Streams.ivfProbeStreamQuantized(
-          Tables.embeddingsStream(s, dir).filter(col("vec_id") < 20),
-          "vec_id", "embedding", packed, floatSide, model,
-          threshold = 0.5, nProbe)
-        .select(col("q_id"), col("c_id"), round(col("score"), 6).as("score"))
-        .writeStream.format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      graft.streaming.Streams.awaitOrAbort(sq, "stream_ivf_probe_quantized")
-      val stateless = sq.lastProgress != null && sq.lastProgress.stateOperators.isEmpty
-      def rows(df: DataFrame): Set[(Long, Long, Double)] =
-        df.select(col("q_id"), col("c_id"), col("score"))
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val got = rows(s.table(sinkName))
-      val expected = rows(Streams.ivfProbeStreamQuantized(
-          embs(s, dir).filter(col("vec_id") < 20),
-          "vec_id", "embedding", packed, floatSide, model,
-          threshold = 0.5, nProbe)
-        .select(col("q_id"), col("c_id"), round(col("score"), 6).as("score")))
-      val floatExpected = rows(Streams.ivfProbeStream(
-          embs(s, dir).filter(col("vec_id") < 20),
-          "vec_id", "embedding", idx, model, threshold = 0.5, nProbe)
-        .select(col("q_id"), col("c_id"), round(col("score"), 6).as("score")))
-      import s.implicits._
-      Seq((20L, if (got == expected) 1L else 0L,
-        if (got == floatExpected) 1L else 0L, if (stateless) 1L else 0L))
-        .toDF("n_queries", "parity", "float_parity", "stateless")
-    }
-
-  /** Invariant flags of the STREAMING packed-IVF maintenance (round-17;
-    * VERDICT r16 next #7 + #8): the persisted two-form index built
-    * ENTIRELY by a stream — two controlled waves (sequential
-    * AvailableNow drains over one checkpoint, the daily-drop resume
-    * shape) foreachBatch-append via
-    * [[graft.operators.IvfPackedIndex.append]] (single-commit per
-    * micro-batch, frozen-model assignment, empty batches no-ops), with
-    * the opt-in epoch governor `compactEvery = 2` folding the fan-in as
-    * it grows:
-    *
-    *  - `parity`: the drained index serves EXACTLY what the byte-packed
-    *    rerank over a fresh frozen-model batch build of the same corpus
-    *    serves — stream-append == batch build (deterministic assignment
-    *    makes it split-invariant; StreamsSpec proves the loop on
-    *    designed vectors, this row re-proves it on the driver fixtures);
-    *  - `auto_compacted`: [[graft.store.EpochCommit.compactIfNeeded]]
-    *    fired inside the maintainer and collapsed the committed-epoch
-    *    count to 1 — a forever-appending maintainer can no longer grow
-    *    the listing and the merge-on-read fan-in unboundedly.
-    *
-    * Constant row → constant oracle. Cached: lifecycle churn is a
-    * verification artifact (the ivf_packed_lifecycle precedent).
-    */
-  private def streamIvfPackedMaintain(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrCreate(s"stream_ivf_packed_maintain:$dir") {
-      val q = queryVec(s, dir)
-      val (model, _) = ivfIndex(s, dir)
-      val nProbe = IvfIndex.defaultNProbe(model.centroids.length)
-      def probed(df: DataFrame): Seq[(Long, Double)] =
-        df.select(col("id").cast("long"), round(col("score"), 6).as("score"))
-          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      val e = embs(s, dir)
-      val cut = e.count() / 2
-      val root = SessionCache.newTempDir("graft-ivfp-maintain")
-      val arrival = SessionCache.newTempDir("graft-ivfp-maintain-src")
-      val ckpt = SessionCache.newTempDir("graft-ivfp-maintain-ckpt")
-      for (w <- Seq(e.filter(col("vec_id") < cut), e.filter(col("vec_id") >= cut))) {
-        w.coalesce(1).write.mode("append").parquet(arrival)
-        Streams.ivfPackedMaintainAvailableNow(
-          s.readStream.schema(e.schema).parquet(arrival),
-          "vec_id", "embedding", model, root,
-          compactEvery = 2, checkpoint = Some(ckpt))
-      }
-      val served = probed(IvfPackedIndex.queryTopK(s, root, model, q, RecallK, nProbe))
-      val assigned = IvfIndex.buildIndex(e, "vec_id", "embedding", model)
-        .localCheckpoint(eager = false)
-      val fresh = probed(IvfIndex.queryTopKPackedRerank(
-        IvfIndex.quantizeIndexPacked(assigned), assigned, model, q, RecallK, nProbe))
-      val compacted = graft.store.EpochCommit.committedCount(s, root) == 1
-      import s.implicits._
-      Seq((2L, if (served == fresh) 1L else 0L, if (compacted) 1L else 0L))
-        .toDF("n_waves", "parity", "auto_compacted")
-    }
-
-  /** Invariant flags of the incremental embedding near-dedup, declared as
-    * the hash-checked `incremental_near_dedup` row (round-10; the
-    * survivor id list is seed-dependent and stays spec territory). Three
-    * computed invariants over the daily-drop loop on the corpus-slice
-    * index:
-    *
-    *  - `subset_ok`: survivors ⊆ batch (the operator only ever drops);
-    *  - `precision_ok`: every id dropped at the CROSS-INDEX stage has a
-    *    real corpus partner above the threshold, re-verified WITHOUT the
-    *    index by a brute-force cosine join of the dropped rows (small)
-    *    against the corpus slice — catches a probe-pruning bug that the
-    *    by-construction exact-verify filter could itself hide;
-    *  - `roundtrip_ok`: appending the survivors into a copy of the index
-    *    and re-probing them drops ALL of them (each self-hits at cosine
-    *    1) — proves append lands in probe-visible buckets, closing the
-    *    probe→drop→append loop.
-    *
-    * `n_batch` is DuckDB-derivable (count − 3/4-cut), so the whole row
-    * hash-checks. Cached: index copy + brute-force verify are
-    * verification artifacts.
-    */
-  private def incrementalNearDedupFlags(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrCreate(s"inc_near_dedup_flags:$dir") {
-      import s.implicits._
-      val (cut, idx) = lshDedupIndex(s, dir)
-      val corpus = embs(s, dir).filter(col("vec_id") < cut)
-      val batch = embs(s, dir).filter(col("vec_id") >= cut)
-      val batchIds = batch.select(col("vec_id").cast("long")).as[Long].collect().toSet
-      val survivors = AnnIndex.dedupIncrementalLSH(batch, "vec_id", "embedding",
-        idx, threshold = 0.3, dedupCfg)
-      val survivorIds = survivors.select(col("vec_id").cast("long")).as[Long].collect().toSet
-      val subsetOk = survivorIds.subsetOf(batchIds)
-      // isolate the cross-index drops by replaying the within-batch stage
-      val withinIds = Dedup.dedupNear(batch, "vec_id",
-          AnnIndex.nearDupPairsLSH(batch, "vec_id", "embedding", 0.3, dedupCfg))
-        .select(col("vec_id").cast("long")).as[Long].collect().toSet
-      val crossDropped = (withinIds -- survivorIds).toSeq.sorted
-      val precisionOk = crossDropped.isEmpty || {
-        val droppedRows = batch
-          .filter(col("vec_id").isin(crossDropped.map(Long.box): _*))
-          .select(col("vec_id").cast("long").as("b_id"), col("embedding").as("b_emb"))
-        // brute force: |drops| × |corpus| distributed cosine join — the
-        // honest no-index verification; never touches the LSH machinery
-        val verified = droppedRows
-          .crossJoin(corpus.select(col("embedding").as("c_emb")))
-          .filter(cosine_sim(col("b_emb"), col("c_emb")) > 0.3)
-          .select("b_id").distinct().count()
-        verified == crossDropped.size
-      }
-      val rtPath = SessionCache.newTempDir("graft-inc-roundtrip")
-      AnnIndex.writeIndex(
-        AnnIndex.buildIndex(corpus, "vec_id", "embedding", dedupCfg), rtPath, dedupCfg)
-      AnnIndex.appendToIndex(survivors, rtPath, "vec_id", "embedding", dedupCfg)
-      // survivors are now IN the appended index: re-probing them self-hits
-      // at cosine 1 per id, so the cross stage must drop every one. A
-      // zero-norm vector is the one exception — cosine_sim guards 0-norm
-      // to 0, so it can't self-hit and would flip the flag spuriously;
-      // exclude it from the re-probe (append still lands every survivor).
-      val probeBatch = survivors.filter(
-        cosine_sim(col("embedding"), col("embedding")) > 0.5)
-      val after = AnnIndex.dedupIncrementalLSH(probeBatch, "vec_id", "embedding",
-        s.read.parquet(rtPath), threshold = 0.3, dedupCfg).count()
-      val roundtripOk = after == 0L
-      Seq((batchIds.size.toLong,
-        if (subsetOk) 1L else 0L,
-        if (precisionOk) 1L else 0L,
-        if (roundtripOk) 1L else 0L))
-        .toDF("n_batch", "subset_ok", "precision_ok", "roundtrip_ok")
-    }
-
-  /** Append==rebuild parity for the persisted shingle-postings index
-    * (round-11, completing the index-maintenance story for the text-dedup
-    * path): build the index on the first 3/4 of `documents`, APPEND the
-    * last quarter, COMPACT (global re-cap from the frequency sidecar +
-    * file rewrite + atomic swap), and compare the resulting postings —
-    * ids, shingles AND post-drop set sizes — against a from-scratch
-    * [[Dedup.shinglePostings]] rebuild over everything. The cap (20) is
-    * chosen to BIND at fixture scale (bigram doc-freq tops out ~47/500),
-    * so the parity exercises the global-re-cap path, not just file
-    * plumbing. Both directions checked via distributed `except` — no
-    * driver materialization. Cached: an offline index lifecycle, not
-    * per-query work.
-    */
-  /** Count-table lifecycle parity (round-13): build the word count table
-    * on the first 3/4 of the corpus, APPEND the last quarter as delta
-    * files, COMPACT, and prove the maintained table equals a
-    * from-scratch recount over everything — the append-don't-recount
-    * contract of maintained corpus statistics
-    * ([[operators.CountTable]]). The row emits the table's invariant
-    * totals (n distinct words, Σtf, Σdf — all recomputable in SQL) plus
-    * the parity flag, so any drift in the delta/merge/compact arithmetic
-    * hash-fails.
-    */
-  private def vocabIndexAppendParity(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrCreate(s"vocab_index_append_parity:$dir") {
-      val d = docs(s, dir)
-      val cut = d.count() * 3 / 4
-      val path = SessionCache.newTempDir("graft-count-table")
-      CountTable.build(d.filter(col("doc_id") < cut), "text", n = 1, path)
-      CountTable.append(d.filter(col("doc_id") >= cut), "text", n = 1, path)
-      CountTable.compact(s, path)
-      val maintained = CountTable.read(s, path)
-      val rebuilt = CountTable.counts(d, "text", n = 1)
-      val parity = maintained.except(rebuilt).isEmpty &&
-        rebuilt.except(maintained).isEmpty
-      val t = maintained.agg(count(lit(1)).as("n"), sum(col("tf")).as("tf"),
-        sum(col("df")).as("df")).head()
-      import s.implicits._
-      Seq((t.getLong(0), t.getLong(1), t.getLong(2), if (parity) 1L else 0L))
-        .toDF("n_ngrams", "total_tf", "total_df", "parity")
-    }
-
-  /** Count-table DELETE as a hash row (round-13): build on the full
-    * corpus, then [[CountTable.delete]] the last quarter (negated deltas)
-    * and compact. The maintained view must equal a from-scratch recount
-    * over the SURVIVORS — parity computed engine-side, and the emitted
-    * invariant totals recomputed independently by the oracle over the
-    * surviving docs, so the row is real-valued, not a constant.
-    */
-  private def vocabDeleteParity(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrCreate(s"vocab_delete_parity:$dir") {
-      val d = docs(s, dir)
-      val cut = d.count() * 3 / 4
-      val path = SessionCache.newTempDir("graft-count-table-del")
-      CountTable.build(d, "text", n = 1, path)
-      CountTable.delete(d.filter(col("doc_id") >= cut), "text", n = 1, path)
-      CountTable.compact(s, path)
-      val maintained = CountTable.read(s, path)
-      val survivors = CountTable.counts(d.filter(col("doc_id") < cut), "text", n = 1)
-      val parity = maintained.except(survivors).isEmpty &&
-        survivors.except(maintained).isEmpty
-      val t = maintained.agg(count(lit(1)).as("n"), sum(col("tf")).as("tf"),
-        sum(col("df")).as("df")).head()
-      import s.implicits._
-      Seq((t.getLong(0), t.getLong(1), t.getLong(2), if (parity) 1L else 0L))
-        .toDF("n_ngrams", "total_tf", "total_df", "parity")
-    }
-
-  private def jaccardIndexAppendParity(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrCreate(s"jaccard_index_append_parity:$dir") {
-      val d = docs(s, dir)
-      val cut = d.count() * 3 / 4
-      val cap = 20L
-      val corpus = d.filter(col("doc_id") < cut)
-      val batch = d.filter(col("doc_id") >= cut)
-      val path = SessionCache.newTempDir("graft-postings-idx")
-      Dedup.buildPostingsIndex(corpus, "doc_id", "text", n = 2, path, cap)
-      Dedup.appendPostingsIndex(batch, "doc_id", "text", n = 2, path, cap)
-      Dedup.compactPostingsIndex(s, path, cap)
-      val appended = Dedup.readPostingsIndex(s, path, 2) // n-validating face (r20)
-      val rebuilt = Dedup.shinglePostings(d, "doc_id", "text", n = 2, cap)
-      val parity = appended.except(rebuilt).isEmpty && rebuilt.except(appended).isEmpty
-      import s.implicits._
-      Seq((batch.count(), if (parity) 1L else 0L)).toDF("n_batch", "parity")
-    }
-
-  /** The END-TO-END daily-drop rehearsal (round-11 stretch): one incoming
-    * batch (the last quarter of `documents` + its embeddings) runs the
-    * whole incremental hygiene chain against a corpus represented ONLY by
-    * its three persisted artifacts — content-hash set, shingle-postings
-    * index, LSH index — exactly the 100 TB nightly loop:
-    *
-    *  1. exact sha dedup within the batch + against the corpus hashes
-    *     ([[Dedup.dedupIncremental]]);
-    *  2. n-gram jaccard near-dedup against the postings INDEX built+
-    *     appended by the lifecycle above ([[Dedup.jaccardIncremental]]);
-    *  3. embedding near-dedup against the persisted LSH index
-    *     ([[AnnIndex.dedupIncrementalLSH]] — probe + exact-cosine verify).
-    *
-    * `documents` and `embeddings` are row-aligned (doc_id == vec_id), so
-    * the same 3/4 cut drives all three stages. The md5-derived LSH
-    * planes ([[lshSigsCte]]) make even the banding stage re-derivable in
-    * SQL, so the survivor id set is fully oracle-checked (round-12);
-    * PipelineSpec additionally pins the composition invariants (monotone
-    * shrinking, survivors ⊆ batch, re-delivered text never survives).
-    *
-    * Contract note: the row emits the LSH stage's output, so only batch
-    * docs that HAVE an embedding row can survive — on a fixture
-    * generation where the tables are misaligned (sf0.1 ships 5000 docs
-    * but 2000 embeddings, so no batch doc has one) the row is empty, and
-    * the oracle's stage-3 CTE joins `embeddings` to reproduce exactly
-    * that (round-12 cross-sf audit).
-    */
-  /** ONE cap-precondition check per (session, fixture dir): the jaccard
-    * oracles (`incremental_jaccard_dedup`, `pipeline_daily_drop`) model
-    * UNCAPPED bigram sets while the engine path caps at maxDocFreq=1000
-    * — they agree only while no bigram's df exceeds the cap. Asserted
-    * over the FULL documents table (any slice's df ≤ the full table's),
-    * so a fixture generation where the cap binds fails loudly in the
-    * engine (round-14, VERDICT r13 #8 — the engine-side guard the r12
-    * option-(b) documentation promised).
-    */
-  private def jaccardCapGuard(s: SparkSession, dir: String): Unit =
-    SessionCache.getOrCreate[java.lang.Boolean](s"jaccard_cap_guard:$dir") {
-      Dedup.assertCapUnbound(docs(s, dir), "text", n = 2, maxDocFreq = 1000L,
-        context = s"jaccard oracle precondition ($dir)")
-      java.lang.Boolean.TRUE
-    }
-
-  private def dailyDropPostings(s: SparkSession, dir: String): (Long, String) =
-    SessionCache.getOrCreate(s"daily_drop_postings:$dir") {
-      val d = docs(s, dir)
-      jaccardCapGuard(s, dir)
-      val cut = d.count() * 3 / 4
-      val postingsPath = SessionCache.newTempDir("graft-daily-postings")
-      Dedup.buildPostingsIndex(d.filter(col("doc_id") < cut),
-        "doc_id", "text", n = 2, postingsPath)
-      // Serving registration (round-13): a plain parquet read of the
-      // postings carries no partitioning, so stage 2 of every nightly
-      // drop would reshuffle the ENTIRE corpus-postings side on shingle
-      // — the bucketed catalog table moves that shuffle to build time,
-      // once (zero-Exchange corpus side, PlanShapeSpec-pinned).
-      val tbl = "graft_daily_postings_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      Dedup.registerPostingsBucketed(s, postingsPath, tbl, nBuckets = 32)
-      (cut, tbl)
-    }
-
-  // Only the one-time index BUILDS are session-cached (dailyDropPostings +
-  // lshDedupIndex); the chain frame itself is reconstructed per call, so
-  // each bench iteration re-runs the whole nightly loop — including
-  // re-materializing the round-12 batch-frame pins — instead of re-scanning
-  // the previous iteration's checkpoint blocks (which would time a cache
-  // lookup, the r10 bench-hygiene trap).
-  /** Stage-1 prefix of the nightly chain (exact-sha gate) — exposed so
-    * BENCH can time the chain's prefixes per round (round-19; VERDICT
-    * r18 "wrong" #4: the row's cost rose three rounds running and the
-    * only decomposition lived in an on-demand profiler — with per-round
-    * prefix timings in the artifact, a future rise names its stage:
-    * s2 = s12 − s1, s3 = declared row − s12).
-    */
-  private[graft] def dailyDropStage1(s: SparkSession, dir: String): DataFrame = {
-    val (cut, _) = dailyDropPostings(s, dir)
-    val d = docs(s, dir)
-    Dedup.dedupIncremental(d.filter(col("doc_id") >= cut), "doc_id", "text",
-      Dedup.contentHashes(d.filter(col("doc_id") < cut), "text"))
-  }
-
-  /** Stage-1+2 prefix (sha gate → jaccard-vs-bucketed-postings). */
-  private[graft] def dailyDropStage12(s: SparkSession, dir: String): DataFrame = {
-    val (_, postingsTable) = dailyDropPostings(s, dir)
-    Dedup.jaccardIncremental(dailyDropStage1(s, dir), "doc_id", "text",
-      n = 2, threshold = 0.2, s.table(postingsTable))
-  }
-
-  private def dailyDropRehearsal(s: SparkSession, dir: String): DataFrame = {
-      val s2 = dailyDropStage12(s, dir)
-      val (embCut, lshIdx) = lshDedupIndex(s, dir)
-      val s3 = AnnIndex.dedupIncrementalLSH(
-        s2.join(embs(s, dir).filter(col("vec_id") >= embCut),
-            col("doc_id") === col("vec_id"))
-          .select(col("doc_id"), col("embedding")),
-        "doc_id", "embedding", lshIdx, threshold = 0.3, dedupCfg)
-      s3.select(col("doc_id")).orderBy("doc_id")
-  }
-
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0:
+  /** Flagship query on the sf0.001 fixture; the driver smoke-checks rows>0:
     * embed-side scan → codegen cosine score → TakeOrderedAndProject top-5 →
     * broadcast join to document text (SURVEY §7.3).
     */
   def entry(spark: SparkSession): DataFrame = {
     val dir = "/root/testdata/sf0.001"
-    val q = queryVec(spark, dir)
-    Similarity.topK(embs(spark, dir), "embedding", "vec_id", q, 5)
+    val q = Artifacts.queryVec(spark, dir)
+    Similarity.topK(Tables.embeddings(spark, dir), "embedding", "vec_id", q, 5)
       .select(col("vec_id").as("doc_id"), round(col("score"), 6).as("score"))
-      .join(docs(spark, dir).select("doc_id", "text"), Seq("doc_id"))
+      .join(Tables.documents(spark, dir).select("doc_id", "text"), Seq("doc_id"))
       .orderBy(desc("score"), col("doc_id"))
   }
-
-  // =========================================================== the queries
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ---- O5: global count --------------------------------------------
-    "count_documents" -> ((s, dir) =>
-      DocStore.countDocuments(docs(s, dir))),
-
-    // ---- O3: point lookup (predicate pushed to parquet) --------------
-    "point_lookup" -> ((s, dir) =>
-      DocStore.getDocument(docs(s, dir), "doc_id", 42L)
-        .select("doc_id", "text", "lang", "source", "n_chars")),
-
-    // ---- O6/O7: pagination without text ------------------------------
-    "list_page" -> ((s, dir) =>
-      DocStore.listDocuments(docs(s, dir), "doc_id", "doc_id",
-        limit = 10, offset = 5, includeText = false)
-        .select("doc_id", "lang", "source", "n_chars")),
-
-    // ---- O6+O8: pagination with truncated display text ---------------
-    "list_page_text" -> ((s, dir) =>
-      DocStore.listDocuments(docs(s, dir), "doc_id", "doc_id",
-        limit = 10, offset = 5, includeText = true, maxTextLength = 100)
-        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
-          col("display_text"), col("full_text_length").cast("long").as("full_text_length"))),
-
-    // ---- O4: delete as anti-join rewrite -----------------------------
-    "delete_docs" -> ((s, dir) =>
-      DocStore.deleteByIds(docs(s, dir), "doc_id", Seq(1L, 2L, 3L, 5L, 8L, 13L, 21L, 34L))
-        .select("doc_id", "text", "lang", "source", "n_chars")
-        .orderBy("doc_id")),
-
-    // ---- O2: insert with dense id assignment after current max -------
-    // assignIdsOrdered: parallel range-partitioned sort + zipWithIndex —
-    // ids are still dense and text-ordered (the oracle's ROW_NUMBER OVER
-    // (ORDER BY text)) but no single-partition global window is planned
-    // (round-3 scale flag on the assignIds window form).
-    "insert_append" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val maxId = d.agg(max(col("doc_id"))).head.getLong(0)
-      DocStore.assignIdsOrdered(d.filter(col("source") === "src1").select("text"),
-          Seq(col("text")), maxId, "id")
-        .select(col("id"), col("text"))
-        .orderBy("id")
-    }),
-
-    // ---- O16: stats (relational twin) --------------------------------
-    "stats_table" -> ((s, dir) =>
-      DocStore.textStats(docs(s, dir), "text")),
-
-    // ---- O15: JSON metadata round-trip -------------------------------
-    "json_metadata" -> ((s, dir) =>
-      docs(s, dir)
-        .select(col("doc_id"),
-          DocStore.packMetadata(col("lang").as("lang"), col("source").as("source")).as("metadata"))
-        .withColumn("lang_rt", DocStore.metadataField(col("metadata"), "lang"))
-        .orderBy("doc_id")),
-
-    // ---- O9: cosine scores of every row vs the query vector ----------
-    "cosine_scores" -> ((s, dir) => {
-      val q = queryVec(s, dir)
-      embs(s, dir)
-        .select(col("vec_id"),
-          round(cosine_sim(col("embedding"), typedlit(q.toSeq)), 6).as("score"))
-        .orderBy("vec_id")
-    }),
-
-    // ---- O9 variants: dot product + L2 norm --------------------------
-    "dot_norm" -> ((s, dir) => {
-      val q = queryVec(s, dir)
-      embs(s, dir)
-        .select(col("vec_id"),
-          round(dot_product(col("embedding"), typedlit(q.toSeq)), 6).as("dot"),
-          round(l2_norm(col("embedding")), 6).as("norm"))
-        .orderBy("vec_id")
-    }),
-
-    // ---- O10/O11: flagship brute-force top-k (+ doc join) ------------
-    "topk_cosine" -> ((s, dir) => {
-      val q = queryVec(s, dir)
-      Similarity.topK(embs(s, dir), "embedding", "vec_id", q, 10)
-        .select(col("vec_id").as("doc_id"), round(col("score"), 6).as("score"))
-        .join(docs(s, dir).select("doc_id", "text"), Seq("doc_id"))
-        .orderBy(desc("score"), col("doc_id"))
-    }),
-
-    // ---- E3: batch top-k per query (k-bounded partial agg) -----------
-    "sim_join_topk" -> ((s, dir) => {
-      val e = embs(s, dir)
-      SimJoin.topKPerQuery(
-          e.filter(col("vec_id") < 10)
-            .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")),
-          e.select(col("vec_id").as("c_id"), col("embedding").as("c_emb")),
-          k = 3)
-        .select(col("q_id"), col("c_id"), round(col("score"), 6).as("score"), col("rank"))
-        .orderBy("q_id", "rank")
-    }),
-
-    // ---- E4a: exact embedding near-dup pairs (guarded subset) --------
-    "near_dup_pairs" -> ((s, dir) =>
-      Dedup.nearDupPairsExact(embs(s, dir).filter(col("vec_id") < 200),
-          "vec_id", "embedding", threshold = 0.3)
-        .select(col("a_id"), col("b_id"), round(col("score"), 6).as("score"))
-        .orderBy("a_id", "b_id")),
-
-    // ---- E4b: exact duplicate groups by content hash -----------------
-    "exact_dup_sha" -> ((s, dir) => {
-      val d = docs(s, dir)
-      Dedup.exactDupGroups(d.unionAll(d.filter(col("doc_id") < 50)), "doc_id", "text")
-        .orderBy("keep_id")
-    }),
-
-    // ---- E4c: n-gram Jaccard pairs via inverted index ----------------
-    "jaccard_pairs" -> ((s, dir) =>
-      Dedup.jaccardPairs(docs(s, dir).filter(col("doc_id") < 60),
-          "doc_id", "text", n = 2, threshold = 0.05)
-        .orderBy("a_id", "b_id")),
-
-    // ---- E4d: pairs → duplicate GROUPS with min-id survivor ----------
-    // The stage every pair operator feeds: connected components over the
-    // deterministic jaccard_pairs set, labeled by component-min id
-    // (id == group_id marks the survivor). DuckDB replays it as a
-    // recursive-CTE transitive closure — ANSI-expressible because the
-    // pair set is fixed and hash-green. Threshold 0.09 over docs<200 keeps
-    // the structure non-trivial at sf0.01 (22 components, sizes 2..12 —
-    // threshold 0.05 collapses everything into ONE giant component).
-    "near_dup_groups" -> ((s, dir) => {
-      val pairs = Dedup.jaccardPairs(docs(s, dir).filter(col("doc_id") < 200),
-        "doc_id", "text", n = 2, threshold = 0.09)
-      Dedup.nearDupGroups(pairs)
-        .withColumn("group_size",
-          count(lit(1)).over(Window.partitionBy("group_id")).cast("long"))
-        .select(col("id"), col("group_id"), col("group_size"))
-        .orderBy("id")
-    }),
-
-    // ---- E4d: the "actually drop the duplicates" act -----------------
-    // dedupNear composes pairs → groups → anti-join: the docs<200 slice
-    // minus every row that lost its component's min-id pick. Rows in no
-    // pair survive untouched.
-    "near_dedup_apply" -> ((s, dir) => {
-      val slice = docs(s, dir).filter(col("doc_id") < 200)
-      val pairs = Dedup.jaccardPairs(slice, "doc_id", "text", n = 2, threshold = 0.09)
-      Dedup.dedupNear(slice, "doc_id", pairs)
-        .select(col("doc_id"), col("lang"), col("source"))
-        .orderBy("doc_id")
-    }),
-
-    // E4 (round-14): the QUALITY-survivor variant — each near-dup group
-    // keeps its argmax-quality member (ties to the smaller id) instead
-    // of the min id: the curation pick a corpus build actually wants
-    // (cleanest copy, not oldest). Argmax compares the ROUNDED quality
-    // both engines already agree on bit-for-bit (the quality_score hash
-    // row), so survivor choice is deterministic cross-engine.
-    "near_dedup_apply_best" -> ((s, dir) => {
-      val slice = docs(s, dir).filter(col("doc_id") < 200)
-      val pairs = Dedup.jaccardPairs(slice, "doc_id", "text", n = 2, threshold = 0.09)
-      Dedup.dedupNearBest(slice, "doc_id",
-          round(TextAnalysis.qualityScore(col("text")), 6), pairs)
-        .select(col("doc_id"), col("lang"), col("source"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- THE full training-set hygiene pipeline, composed ------------
-    // chunk → embed → exact-dedup → decontaminate → split in ONE declared
-    // query — the 100 TB story is the pipeline, not the operators in
-    // isolation; this row catches interface mismatches (column collisions,
-    // id-type drift) no per-operator row can. Synthetic duplicates
-    // (docs<50 re-ingested under shifted ids) make the dedup stage real;
-    // docs<10 stand in for the eval set, removed from the corpus and used
-    // as decontamination probes. Single-paragraph fixture → one chunk per
-    // doc (the chunk_single invariant), so the whole chain stays
-    // oracle-expressible as one DuckDB CTE cascade.
-    "pipeline_hygiene" -> ((s, dir) => {
-      val d = docs(s, dir)
-      // 1. ingest with synthetic duplicates under fresh ids
-      val raw = d.select(col("doc_id"), col("text"))
-        .unionAll(d.filter(col("doc_id") < 50)
-          .select((col("doc_id") + 10000L).as("doc_id"), col("text")))
-      // 2. chunk (1:1 on this fixture; 1:N in general)
-      val chunked = Chunker.explodeChunks(raw, "text")
-        .select(col("doc_id"), col("chunk"))
-      // 3. exact dedup — the min-id original survives each duplicate pair
-      val deduped = Dedup.dedupExact(chunked, "doc_id", "chunk")
-      // 4. decontaminate vs the eval probes (docs<10), which are
-      // themselves excluded from the training corpus
-      val corpus = deduped.filter(col("doc_id") >= 10)
-      val contaminated = Dedup.contaminationPairs(
-          corpus, d.filter(col("doc_id") < 10),
-          "doc_id", "chunk", "doc_id", "text", n = 2, minOverlap = 3)
-        .select(col("doc_id")).distinct()
-      val clean = corpus.join(contaminated, Seq("doc_id"), "left_anti")
-      // 5. embed + deterministic split; surface the oracle-checkable
-      // invariants of each stage (token count, embedding shape/norm, split)
-      val embedded = HashingEmbedder(64).embed(clean, "chunk", "embedding")
-      Splits.assignSplit(embedded, "doc_id",
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .select(col("doc_id"),
-          TextAnalysis.tokenCount(col("chunk")).cast("long").as("n_tokens"),
-          size(col("embedding")).cast("long").as("dim"),
-          when(abs(l2_norm(col("embedding")) - 1.0d) < 0.001d, 1L)
-            .otherwise(0L).as("unit_norm"),
-          col("split"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- O12: chunker on single-paragraph text (degenerate, exact) ---
-    "chunk_single" -> ((s, dir) =>
-      Chunker.explodeChunks(docs(s, dir), "text")
-        .select(col("doc_id"),
-          col("chunk_index").cast("long").as("chunk_index"),
-          col("total_chunks").cast("long").as("total_chunks"),
-          col("chunk"))
-        .orderBy("doc_id", "chunk_index")),
-
-    // ---- O12: greedy packing on synthesized paragraphs (rows-only) ---
-    "chunk_greedy" -> ((s, dir) =>
-      Chunker.explodeChunks(
-          docs(s, dir).withColumn("paras", regexp_replace(col("text"), " ", "\n\n")),
-          "paras", maxChars = 80, overlap = 10)
-        .select(col("doc_id"),
-          col("chunk_index").cast("long").as("chunk_index"),
-          col("total_chunks").cast("long").as("total_chunks"),
-          col("chunk"))
-        .orderBy("doc_id", "chunk_index")),
-
-    // ---- E5/pipeline: token counting ---------------------------------
-    "token_count" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-          TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"),
-          TextAnalysis.approxSubwordCount(col("text")).cast("long").as("approx_subwords"))
-        .orderBy("doc_id")),
-
-    // ---- pipeline: quality scoring -----------------------------------
-    "quality_score" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-          TextAnalysis.qualityScore(col("text")).as("quality"))
-        .orderBy("doc_id")),
-
-    // ---- pipeline: language-ID heuristic -----------------------------
-    "lang_id" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-          TextAnalysis.langId(col("text")).as("lang_guess"))
-        .orderBy("doc_id")),
-
-    // ---- pipeline: content fingerprint (md5, cross-engine) -----------
-    "doc_fingerprint" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-          TextAnalysis.fingerprint(col("text"), 8).as("fp"))
-        .orderBy("doc_id")),
-
-    // ---- E5: per-(lang, source) corpus rollups -----------------------
-    "text_stats" -> ((s, dir) =>
-      docs(s, dir).groupBy("lang", "source")
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum(length(col("text"))).as("total_chars"),
-          round(avg(length(col("text"))), 6).as("avg_chars"),
-          sum(TextAnalysis.tokenCount(col("text"))).as("total_tokens"))
-        .orderBy("lang", "source")),
-
-    // ---- E6 (batch twin): tumbling-window event rollup ---------------
-    "events_window" -> ((s, dir) =>
-      Streams.eventsWindowAgg(events(s, dir))
-        .orderBy("window_start", "event_type")),
-
-    // ---- E6: the SAME rollup through actual Structured Streaming -----
-    // (file stream + watermark + AvailableNow into a memory sink; shares
-    // the batch twin's oracle — stream and batch must agree exactly).
-    // Streams the fixture parquet DIRECTLY (nanos cast inside the
-    // streaming read, Tables.eventsStream) — round 3 rewrote a normalized
-    // temp copy of the whole table per run: 11 s of pure gate overhead
-    // and a temp-disk leak.
-    "events_window_stream" -> ((s, dir) => {
-      val sinkName = "graft_events_window_stream"
-      // stateful start (r22): window-agg state stores sized by
-      // Streams.stateShufflePartitions, not scan parallelism
-      Streams.startStatefulAwait(s, Streams.toMemorySink(
-          Streams.eventsWindowAggStream(Tables.eventsStream(s, dir)), sinkName)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
-        "events_window_stream")
-      s.table(sinkName).orderBy("window_start", "event_type")
-    }),
-
-    // ---- E6: streaming similarity filter (stateless map) -------------
-    // The streaming face of the flagship scan: score each arriving vector
-    // against the query vector, keep matches above the threshold. Append
-    // mode, no state, no watermark — and because it filters a precomputed
-    // embedding column, its batch twin IS the DuckDB cosine CTE: a real
-    // oracle row for streaming beyond windowed aggregation.
-    "stream_sim_filter" -> ((s, dir) => {
-      val q = queryVec(s, dir)
-      // glob + basePath: see Tables.eventsStream — a bare file path trips
-      // FileStreamSource's basePath override
-      val stream = s.readStream.schema(embs(s, dir).schema)
-        .option("basePath", dir).parquet(s"$dir/{embeddings.parquet}")
-      val sinkName = "graft_stream_sim_filter"
-      val sq = Streams.scoreFilter(stream, "embedding", q, threshold = 0.2)
-        .select(col("vec_id"), round(col("score"), 6).as("score"))
-        .writeStream.format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      graft.streaming.Streams.awaitOrAbort(sq, "stream_sim_filter")
-      s.table(sinkName).orderBy("vec_id")
-    }),
-
-    // E2/E6 (round-9): ONLINE ANN serving — query vectors arrive as a
-    // stream and probe the STATIC persisted index via a stream-static
-    // equi-join on (table, bucket); exact-cosine threshold + cross-table
-    // dedup make the match set deterministic under ANY micro-batching
-    // (StreamsSpec pins stream == batch equality). Queries are corpus
-    // members, so each finds at least its self-match. Hash-checked
-    // (round-11): the md5 planes let the DuckDB oracle re-derive the
-    // exact emitted pair set from scratch.
-    "stream_ann_probe" -> ((s, dir) => {
-      val sinkName = "graft_stream_ann_probe"
-      Streams.startStatefulAwait(s, Streams.annProbeStream(
-          Tables.embeddingsStream(s, dir).filter(col("vec_id") < 20),
-          "vec_id", "embedding", lshIndex(s, dir), threshold = 0.5, annCfg)
-        .select(col("q_id"), col("c_id"), round(col("score"), 6).as("score"))
-        .writeStream.format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
-        "stream_ann_probe")
-      s.table(sinkName).orderBy("q_id", "c_id")
-    }),
-
-    // E2/E6 (round-11): the BOUNDED-STATE serving form — same probe join,
-    // but the cross-table dedup state expires past the event-time
-    // watermark (dropDuplicatesWithinWatermark), so a continuous
-    // deployment's state is O(horizon), not O(pairs ever). Synthetic
-    // arrival time (epoch + vec_id seconds) + a 365-day delay cover the
-    // whole query span, so this bounded replay emits exactly the
-    // unwatermarked row's pair set (StreamsSpec pins the equality).
-    // Hash-checked (round-11) against the same from-scratch DuckDB
-    // derivation as stream_ann_probe.
-    "stream_ann_probe_wm" -> ((s, dir) => {
-      val sinkName = "graft_stream_ann_probe_wm"
-      val queries = Tables.embeddingsStream(s, dir).filter(col("vec_id") < 20)
-        .withColumn("arrival_ts", timestamp_seconds(lit(1704067200L) + col("vec_id")))
-      Streams.startStatefulAwait(s, Streams.annProbeStreamWithinWatermark(queries,
-          "vec_id", "embedding", lshIndex(s, dir), threshold = 0.5, annCfg,
-          tsCol = "arrival_ts", delay = "365 days")
-        .select(col("q_id"), col("c_id"), round(col("score"), 6).as("score"))
-        .writeStream.format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
-        "stream_ann_probe_wm")
-      s.table(sinkName).orderBy("q_id", "c_id")
-    }),
-
-    // E2/E6 (round-9): the IVF twin of stream_ann_probe — and fully
-    // STATELESS: each indexed id lives in exactly one cluster, so no
-    // (q_id, c_id) dedup store exists in the plan at all. Declared
-    // (round-13) as the stream==batch parity + zero-state-operators
-    // invariant row, hash-checked against a constant oracle — the
-    // listing itself is seeded-k-means territory (StreamsSpec pins it).
-    "stream_ivf_probe" -> ((s, dir) => streamIvfParity(s, dir)),
-
-    // E2/E6 (round-16): the QUANTIZED twin — the int8 candidate pass +
-    // float re-rank served as a query-vector stream over the PERSISTED
-    // packed index. Declared as stream==batch parity + emitted-set ==
-    // float-probe parity (the prescreen margin swallows quantization
-    // error) + zero-state-operators, hash-checked against a constant
-    // oracle (see streamIvfQuantParity).
-    "stream_ivf_probe_quantized" -> ((s, dir) => streamIvfQuantParity(s, dir)),
-    "stream_ivf_packed_maintain" -> ((s, dir) => streamIvfPackedMaintain(s, dir)),
-
-    // ---- E6: SLIDING windows (1h window, 30m slide) ------------------
-    "events_sliding" -> ((s, dir) =>
-      events(s, dir)
-        .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("value").cast("decimal(18,6)")).cast("double").as("sum_value"))
-        .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
-          col("event_type"), col("n_events"), col("sum_value"))
-        .orderBy("window_start", "event_type")),
-
-    // ---- E6: gap sessionization --------------------------------------
-    "sessionize" -> ((s, dir) =>
-      Streams.sessionStats(events(s, dir), gapMinutes = 30, tieCols = Seq("event_id"))
-        .orderBy("user_id")),
-
-    // ---- E6: CUSTOM STATE — flatMapGroupsWithState sessionizer through
-    // an actual stream (file source → groupByKey → per-user GroupState →
-    // append memory sink). Emits a session row when its gap closes; each
-    // user's final in-flight session stays in state, so the oracle is the
-    // window sessionization MINUS every user's max session_seq. The gap
-    // arithmetic is integer epoch-micros on both paths.
-    "sessionize_stateful" -> ((s, dir) => {
-      import s.implicits._
-      val evs = Tables.eventsStream(s, dir)
-        .select(col("user_id"), col("ts")).as[Streams.Ev]
-      val sinkName = "graft_sessionize_stateful"
-      Streams.startStatefulAwait(s, Streams.sessionizeStateful(evs, gapMinutes = 30).toDF()
-        .writeStream.format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
-        "sessionize_stateful")
-      s.table(sinkName).orderBy("user_id", "session_seq")
-    }),
-
-    // E6 (round-11): the DEPLOYABLE sessionizer — EventTimeTimeout flushes
-    // an idle user's final session once the watermark passes its gap
-    // boundary and FREES the key's state (the NoTimeout form above keeps
-    // every user forever and swallows finals). With delay 0 the final
-    // watermark is the global max event time, so the bounded replay emits
-    // the closed sessions PLUS every final whose last event sits > gap
-    // before the stream's end — all oracle-derivable (the fixtures have
-    // no user within 1 ms of the boundary at any sf, so engine
-    // strict-vs-nonstrict comparisons cannot flip a row). The timeout
-    // fires in the engine's trailing no-data micro-batch.
-    "sessionize_stateful_exp" -> ((s, dir) => {
-      import s.implicits._
-      val evs = Tables.eventsStream(s, dir)
-        .select(col("user_id"), col("ts")).as[Streams.Ev]
-        .withWatermark("ts", "0 seconds")
-      val sinkName = "graft_sessionize_stateful_exp"
-      Streams.startStatefulAwait(s, Streams.sessionizeStatefulExpiring(evs, gapMinutes = 30).toDF()
-        .writeStream.format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
-        "sessionize_stateful_exp")
-      s.table(sinkName).orderBy("user_id", "session_seq")
-    }),
-
-    // E5×E6: streaming ingest-time quality filter over the documents
-    // arrival stream — one fused metrics pass per arriving doc, keep the
-    // clean rows. Stateless (append mode, no watermark), so the batch
-    // twin replays it exactly: the streaming face of quality_filter.
-    "stream_quality_filter" -> ((s, dir) => {
-      val sinkName = "graft_stream_quality_filter"
-      val sq = Streams.qualityFilterStream(Tables.documentsStream(s, dir), "text")
-        .select(col("doc_id"), col("n_tokens"), col("quality"))
-        .writeStream.format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      graft.streaming.Streams.awaitOrAbort(sq, "stream_quality_filter")
-      s.table(sinkName).orderBy("doc_id")
-    }),
-
-    // E4×E6: streaming exact dedup over the documents ARRIVAL stream —
-    // the ingest-time dedup of a training pipeline, run as a REAL
-    // AvailableNow stream through dropDuplicates state. WHICH duplicate
-    // survives is arrival-order dependent, so the declared row emits the
-    // distinct sha set itself (order-free, deterministic); DuckDB's
-    // sha256() replays Spark's sha2(text, 256) hex exactly.
-    "stream_dedup" -> ((s, dir) => {
-      val sinkName = "graft_stream_dedup"
-      Streams.startStatefulAwait(s,
-        Streams.dedupExactStream(Tables.documentsStream(s, dir), "text")
-        .select("text_sha")
-        .writeStream.format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
-        "stream_dedup")
-      s.table(sinkName).orderBy("text_sha")
-    }),
-
-    // E4×E6 bounded-state variant: dedup WITHIN THE WATERMARK HORIZON
-    // (dropDuplicatesWithinWatermark) — the only deployable form on an
-    // actually-unbounded 100 TB stream, since state expires `delay` past
-    // the event-time watermark instead of growing with |distinct corpus|.
-    // The arrival dir holds the fixture file TWICE and maxFilesPerTrigger=1
-    // forces the duplicate copy into a LATER micro-batch, so the dedup
-    // state genuinely crosses batches. Event time is synthetic
-    // (epoch + doc_id seconds) and the delay (365 days) covers the whole
-    // id span at any tested sf, so no state expires mid-run and the output
-    // is exactly the distinct sha set — order-free and deterministic.
-    "stream_dedup_wm" -> ((s, dir) => {
-      val arrivalDir = SessionCache.getOrCreate[String](s"docs_x2:$dir") {
-        val p = SessionCache.newTempDir("graft-docs-x2")
-        val src = java.nio.file.Paths.get(dir, "documents.parquet")
-        java.nio.file.Files.copy(src, java.nio.file.Paths.get(p, "arrival-0.parquet"))
-        java.nio.file.Files.copy(src, java.nio.file.Paths.get(p, "arrival-1.parquet"))
-        p
-      }
-      val arrivals = Tables.documentsArrivalStream(s, arrivalDir, maxFilesPerTrigger = 1)
-        .withColumn("arrival_ts", timestamp_seconds(lit(1704067200L) + col("doc_id")))
-      val sinkName = "graft_stream_dedup_wm"
-      Streams.startStatefulAwait(s,
-        Streams.dedupExactStreamWithinWatermark(arrivals, "text", "arrival_ts", "365 days")
-        .select("text_sha")
-        .writeStream.format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
-        "stream_dedup_wm")
-      s.table(sinkName).orderBy("text_sha")
-    }),
-
-    // E5×E4×E6 composition (round-9): the STREAMING face of the hygiene
-    // pipeline — quality-filter each arriving doc, then exact-dedup the
-    // survivors within the watermark horizon, chained as ONE AvailableNow
-    // stream (both stages individually green; the composition row catches
-    // interface drift between them, the pipeline_hygiene argument). The
-    // doubled arrival dir + maxFilesPerTrigger=1 forces the dedup state to
-    // genuinely cross micro-batches. Output: the kept distinct sha set
-    // plus the fused metrics the filter attached — deterministic functions
-    // of the text, so WHICH copy survives cannot change the row.
-    "stream_hygiene" -> ((s, dir) => {
-      val arrivalDir = SessionCache.getOrCreate[String](s"docs_x2:$dir") {
-        val p = SessionCache.newTempDir("graft-docs-x2")
-        val src = java.nio.file.Paths.get(dir, "documents.parquet")
-        java.nio.file.Files.copy(src, java.nio.file.Paths.get(p, "arrival-0.parquet"))
-        java.nio.file.Files.copy(src, java.nio.file.Paths.get(p, "arrival-1.parquet"))
-        p
-      }
-      val arrivals = Tables.documentsArrivalStream(s, arrivalDir, maxFilesPerTrigger = 1)
-        .withColumn("arrival_ts", timestamp_seconds(lit(1704067200L) + col("doc_id")))
-      val sinkName = "graft_stream_hygiene"
-      Streams.startStatefulAwait(s, Streams.dedupExactStreamWithinWatermark(
-          Streams.qualityFilterStream(arrivals, "text"), "text", "arrival_ts", "365 days")
-        .select(col("text_sha"), col("n_tokens"), col("quality"))
-        .writeStream.format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
-        "stream_hygiene")
-      s.table(sinkName).orderBy("text_sha")
-    }),
-
-    // ---- set ops: purchasers who hit no errors (day-1 slice) ---------
-    "events_setops" -> ((s, dir) => {
-      val e = events(s, dir).filter(col("ts") < to_timestamp(lit("2024-01-02 00:00:00")))
-      e.filter(col("event_type") === "purchase").select("user_id").distinct()
-        .except(e.filter(col("event_type") === "error").select("user_id").distinct())
-        .orderBy("user_id")
-    }),
-
-    // ---- O15 over events: JSON prop extraction -----------------------
-    "json_props" -> ((s, dir) =>
-      events(s, dir).select(col("event_id"),
-          get_json_object(col("props"), "$.k").cast("long").as("k"))
-        .orderBy("event_id")),
-
-    // ---- relational: grouped aggregation (TPC-H Q1 shape) ------------
-    "q1_agg" -> ((s, dir) =>
-      Tables.lineitem(s, dir).groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          // exact decimal sums; quantities are integral (fixture invariant,
-          // checked at every sf) → BIGINT; price surfaces as DOUBLE
-          sum(col("l_quantity").cast("decimal(18,2)")).cast("bigint").as("sum_qty"),
-          sum(col("l_extendedprice").cast("decimal(18,2)")).cast("double").as("sum_price"),
-          // avg from the EXACT decimal sum + floor-based rounding: both the
-          // summation order and the engines' ROUND builtins would otherwise
-          // diverge at half boundaries
-          (floor(sum(col("l_discount").cast("decimal(18,6)")).cast("double") / count(lit(1))
-            * 1e6 + 0.5) / 1e6).as("avg_disc"),
-          count(lit(1)).as("n"))
-        .orderBy("l_returnflag", "l_linestatus")),
-
-    // ---- relational: broadcast join + agg ----------------------------
-    "join_agg" -> ((s, dir) =>
-      Tables.orders(s, dir)
-        .join(broadcast(Tables.customer(s, dir)),
-          col("o_custkey") === col("c_custkey"))
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n_orders"),
-          sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("revenue"))
-        .orderBy("c_mktsegment")),
-
-    // ---- relational: cube grouping sets ------------------------------
-    "cube_agg" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .cube("l_returnflag", "l_linestatus")
-        .agg(count(lit(1)).as("n"),
-          sum(col("l_quantity").cast("decimal(18,2)")).cast("bigint").as("sum_qty"))
-        .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus"))),
-
-    // ---- relational: exact interpolated median -----------------------
-    "median_agg" -> ((s, dir) =>
-      Tables.lineitem(s, dir).groupBy("l_returnflag")
-        .agg(round(expr("percentile(l_extendedprice, 0.5)"), 6).as("median_price"),
-          round(expr("percentile(l_quantity, 0.5)"), 6).as("median_qty"))
-        .orderBy("l_returnflag")),
-
-    // ---- relational (round-13): quantile sketch parity ---------------
-    // The order-statistics twin of approx_distinct: exact interpolated
-    // percentiles (hash-checked) + a flag that the approx_percentile
-    // sketch landed within 1% of each. At 100 TB the sketch (bounded
-    // memory, one pass, mergeable buffers) is the per-build monitor and
-    // the exact form is the rare audit — this row is the parity evidence.
-    "approx_quantiles" -> ((s, dir) =>
-      Tables.lineitem(s, dir).agg(
-          expr("percentile(l_extendedprice, 0.5)").as("__e50"),
-          expr("percentile(l_extendedprice, 0.9)").as("__e90"),
-          expr("approx_percentile(l_extendedprice, 0.5, 10000)").as("__a50"),
-          expr("approx_percentile(l_extendedprice, 0.9, 10000)").as("__a90"))
-        .select(
-          round(col("__e50"), 6).as("p50_exact"),
-          round(col("__e90"), 6).as("p90_exact"),
-          (abs(col("__a50") - col("__e50")) <= col("__e50") * 0.01).as("p50_ok"),
-          (abs(col("__a90") - col("__e90")) <= col("__e90") * 0.01).as("p90_ok"))),
-
-    // ---- relational: value binning / histogram -----------------------
-    "price_histogram" -> ((s, dir) =>
-      Tables.orders(s, dir)
-        .groupBy(floor(col("o_totalprice") / 50000).cast("long").as("bucket"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("bucket_total"))
-        .orderBy("bucket")),
-
-    // ---- scalar string function library ------------------------------
-    "string_funcs" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-          upper(col("lang")).as("lang_up"),
-          lpad(col("source"), 8, "_").as("src_pad"),
-          reverse(col("lang")).as("lang_rev"),
-          regexp_replace(col("source"), "src", "s").as("src_short"),
-          // concat (null-propagating) matches SQL || — concat_ws would
-          // silently skip NULLs and diverge from the oracle
-          concat(col("lang"), lit("|"), col("source")).as("combo"))
-        .orderBy("doc_id")),
-
-    // ---- relational: per-group top-n window --------------------------
-    "window_topn" -> ((s, dir) => {
-      val w = Window.partitionBy("o_custkey")
-        .orderBy(desc("o_totalprice"), col("o_orderkey"))
-      Tables.orders(s, dir).filter(col("o_custkey") < 50)
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .filter(col("rn") <= 3)
-        .select("o_custkey", "o_orderkey", "o_totalprice", "rn")
-        .orderBy("o_custkey", "rn")
-    }),
-
-    // ---- as-of join (backward, per user): click ← latest purchase ----
-    "asof_join" -> ((s, dir) => {
-      val e = events(s, dir)
-      val clicks = e.filter(col("event_type") === "click")
-        .select("event_id", "user_id", "ts")
-      // One row per (user, ts): were duplicate same-instant purchases ever
-      // present, both this engine and DuckDB's ASOF would make an arbitrary
-      // pick — pre-aggregating to MAX(value) pins the semantics on BOTH
-      // sides (mirrored GROUP BY in the oracle).
-      val purchases = e.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts").as("p_ts"))
-        .agg(max(col("value")).as("purchase_value"))
-      TemporalJoins.asofJoin(clicks, purchases,
-          keyCol = "user_id", leftTs = "ts", rightTs = "p_ts",
-          rightPayload = Seq("purchase_value"))
-        .select("event_id", "user_id", "purchase_value")
-        .orderBy("event_id")
-    }),
-
-    // ---- range join (bucketized equi): clicks within 1h of purchase --
-    "range_join" -> ((s, dir) => {
-      val e = events(s, dir)
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id"), unix_micros(col("ts")).as("c_us"))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("start_us"),
-          (unix_micros(col("ts")) + 3600000000L).as("end_us"))
-      TemporalJoins.rangeJoin(clicks, purchases, "c_us", "start_us", "end_us",
-          bucketWidth = 3600000000L, extraKeys = Seq("user_id"))
-        .groupBy("event_id").agg(count(lit(1)).as("n_clicks"))
-        .orderBy("event_id")
-    }),
-
-    // ---- relational: rollup (grouping sets) --------------------------
-    "rollup_agg" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(count(lit(1)).as("n"),
-          sum(col("l_quantity").cast("decimal(18,2)")).cast("bigint").as("sum_qty"))
-        .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus"))),
-
-    // ---- relational: distinct aggregation ----------------------------
-    "distinct_agg" -> ((s, dir) =>
-      Tables.lineitem(s, dir).groupBy("l_returnflag")
-        .agg(countDistinct(col("l_partkey")).as("n_parts"),
-          countDistinct(col("l_suppkey")).as("n_supps"))
-        .orderBy("l_returnflag")),
-
-    // ---- multimodal: binary payload metadata -------------------------
-    "multimodal_bytes" -> ((s, dir) =>
-      Multimodal.fakeAssets(docs(s, dir), "text")
-        .select(col("doc_id"),
-          col("asset_meta.n_bytes").cast("long").as("n_bytes"),
-          col("asset_meta.mime").as("mime"))
-        .orderBy("doc_id")),
-
-    // Multimodal RESIZE (round-9): stride-sample each payload to the
-    // target shape's byte budget (one fake pixel = one byte) and rewrite
-    // the typed metadata. Post-resize byte count and dimensions are
-    // DuckDB-derivable from the text alone, so the resize CONTRACT is a
-    // real oracle row; the sampled bytes themselves are pinned by
-    // MultimodalSpec (subsequence + determinism + within-budget
-    // passthrough).
-    "multimodal_resize" -> ((s, dir) =>
-      Multimodal.resizeAsset(Multimodal.fakeAssets(docs(s, dir), "text"),
-          "asset_bytes", "asset_meta", targetW = 12, targetH = 16)
-        .select(col("doc_id"),
-          col("asset_meta.n_bytes").cast("long").as("n_bytes"),
-          col("asset_meta.width").cast("long").as("width"),
-          col("asset_meta.height").cast("long").as("height"))
-        .orderBy("doc_id")),
-
-    // ---- O13: ingest pipeline composition (chunk→meta→ids, no clock) --
-    "ingest_pipeline" -> ((s, dir) => {
-      val chunked = Chunker.explodeChunks(
-        docs(s, dir).select(col("doc_id"), col("text"), col("source")), "text")
-      val withMeta = chunked.withColumn("metadata",
-        DocStore.packMetadata(col("source").as("source"),
-          col("chunk_index").as("chunk_index"), col("total_chunks").as("total_chunks")))
-      DocStore.assignIdsOrdered(withMeta, Seq(col("doc_id"), col("chunk_index")), 10000L)
-        .select(col("id"), col("doc_id"),
-          col("chunk_index").cast("long").as("chunk_index"),
-          col("total_chunks").cast("long").as("total_chunks"),
-          col("metadata"), col("chunk"))
-        .orderBy("id")
-    }),
-
-    // E1: batch embedding with the deterministic hashing embedder. A raw
-    // array<float> output crashed the driver's grader (r03: pandas sort on
-    // unhashable ndarray), so the declared row surfaces scalar invariants
-    // instead: dimension and a unit-norm flag. Both are DuckDB-derivable
-    // from the text alone — the embedder L2-normalizes, and its vector is
-    // zero iff the text has no [a-z0-9] character — which upgrades E1 from
-    // rows-only to a REAL oracle row. The 1e-3 norm tolerance is orders of
-    // magnitude above float32 normalization error (~5e-7), so the flag can
-    // never sit on a rounding boundary.
-    "embed_hash" -> ((s, dir) =>
-      HashingEmbedder(64).embed(docs(s, dir), "text", "embedding")
-        .select(col("doc_id"),
-          size(col("embedding")).cast("long").as("dim"),
-          when(abs(l2_norm(col("embedding")) - 1.0d) < 0.001d, 1L)
-            .otherwise(0L).as("unit_norm"))
-        .orderBy("doc_id")),
-
-    // E1/E2 (round-13): symmetric int8 embedding quantization — the
-    // 4×-storage form of the embedding corpus. Per vector: the scale
-    // (max|x|/127), the EXACT integer checksum of the quantized vector
-    // (Σ q_i — any change to rounding, scale, or one element moves it),
-    // and the max reconstruction error (≤ scale/2 by construction; the
-    // spec pins the bound and the cosine fidelity). All double math over
-    // the float32 inputs with floor(v+0.5) rounding, so DuckDB re-derives
-    // every value bit-identically via list_transform/list_sum/list_max.
-    "embed_quantize" -> ((s, dir) => {
-      val e = embs(s, dir).select(col("vec_id"), col("embedding"))
-        .withColumn("__scale", Quantize.scaleOf(col("embedding")))
-      e.select(
-          col("vec_id"),
-          round(col("__scale"), 6).as("scale"),
-          Quantize.quantSum(col("embedding"), col("__scale")).as("q_sum"),
-          round(Quantize.maxReconstructionError(col("embedding"), col("__scale")), 6)
-            .as("max_err"))
-        .orderBy("vec_id")
-    }),
-
-    // E7 (round-13): deterministic global shuffle — the reproducible
-    // order-randomization pass before sharding a training corpus. The
-    // emitted (doc_id, shuffle_key) pairs ARE the permutation; ordering
-    // by the md5 key is the one full sort the operation is.
-    "shuffle_order" -> ((s, dir) =>
-      Splits.globalShuffle(
-          docs(s, dir).select(col("doc_id")), "doc_id", salt = "shuffle")
-        .select(col("doc_id"), col("shuffle_key"))),
-
-    // E2 (round-13): the flagship top-k over the QUANTIZED corpus — the
-    // serving face of embed_quantize: corpus stored int8+scale, queries
-    // full precision, scoring against the dequantized reconstruction.
-    // The full LISTING hash-checks (ids AND rounded scores) because the
-    // whole quantize→dequantize→cosine chain is reproducible double
-    // arithmetic — so the "4× smaller corpus, same answers" claim is
-    // oracle-verified, not asserted (QuantizeSpec separately pins the
-    // ≥0.99 roundtrip cosine bound behind it).
-    "topk_cosine_quantized" -> ((s, dir) => {
-      val q = queryVec(s, dir)
-      val deq = embs(s, dir)
-        .withColumn("__scale", Quantize.scaleOf(col("embedding")))
-        .select(col("vec_id"),
-          Quantize.dequantize(
-            Quantize.quantize(col("embedding"), col("__scale")), col("__scale"))
-            .as("embedding"))
-      Similarity.topK(deq, "embedding", "vec_id", q, 10)
-        .select(col("vec_id").as("doc_id"), round(col("score"), 6).as("score"))
-        .orderBy(desc("score"), col("doc_id"))
-    }),
-
-    // E5 (round-13): corpus VOCABULARY — top-30 words by term frequency
-    // with doc frequency: the word-count table BPE/WordPiece training
-    // starts from. Two-level agg (word,doc pre-agg → word rollup) so the
-    // shuffle carries distinct pairs, then a k-bounded top-N.
-    "vocab_topn" -> ((s, dir) =>
-      TextAnalysis.vocabulary(docs(s, dir), "doc_id", "text", topN = 30)
-        .select(col("word"), col("tf").cast("long").as("tf"),
-          col("df").cast("long").as("df"))),
-
-    // E5 (round-13): exact distinct-word count + HLL++ sketch parity —
-    // the row that justifies trusting approx_count_distinct as the
-    // per-build monitor at 100 TB (the sketch needs no distinct shuffle;
-    // the exact count is the rare audit). approx_ok is the ≤5% bound.
-    "approx_distinct" -> ((s, dir) =>
-      TextAnalysis.distinctWordStats(docs(s, dir), "text")
-        .select(col("n_words").cast("long").as("n_words"), col("approx_ok"))),
-
-    // E5 (round-13): PII SCRUB — redact emails/phones with typed
-    // sentinels, counting redactions. The fixture text is synthetic word
-    // salad with no PII, so the row plants deterministic PII (one email,
-    // one NANP phone derived from doc_id) identically on both sides —
-    // the scrubbed STRING hash-checks the full replacement behavior.
-    // Patterns restricted to Java-regex/RE2-identical syntax.
-    "pii_scrub" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"), piiAugmented.as("__aug"))
-        .select(col("doc_id"),
-          TextAnalysis.scrubPii(col("__aug")).as("scrubbed"),
-          TextAnalysis.piiCount(col("__aug")).as("n_pii"))
-        .orderBy("doc_id")),
-
-    // E5 (round-14): C4-STYLE LINE CLEANING — per-document line rules
-    // (min words, boilerplate-marker regex) over the planted 4-line
-    // layout (see lineAugmented): the short subscribe header and the
-    // 2-word unique tail drop, content and the footer survive. Pure
-    // codegen HOFs, one split per row, nothing leaves the row — the
-    // line-level face of the quality filter. The cleaned STRING
-    // hash-checks the whole rule set.
-    "line_clean" -> ((s, dir) =>
-      TextAnalysis.lineClean(
-          docs(s, dir).select(col("doc_id"), lineAugmented.as("text")),
-          "text", minWords = 5, boilerplateRe = "(?i)subscribe|cookie")
-        .select(col("doc_id"), col("n_lines"), col("n_kept"), col("cleaned"))
-        .orderBy("doc_id")),
-
-    // E5 composition (round-14): the LINE-CURATION CHAIN end-to-end —
-    // interdoc chrome removal feeds the rule cleaner feeds a doc-level
-    // token floor, each stage consuming the previous stage's `cleaned`
-    // output (the composition catches column collisions / text-identity
-    // drift no per-operator row can). On the planted layout the chain
-    // collapses to a closed form the oracle states directly: only the
-    // content line survives, so a doc emits iff its ORIGINAL text has
-    // >= 5 tokens, with n_tokens equal to that count — any stage keeping
-    // chrome, dropping content, or re-joining wrongly breaks the hash.
-    "pipeline_line_curation" -> ((s, dir) => {
-      val aug = docs(s, dir).select(col("doc_id"), lineAugmented.as("text"))
-      // round-15: the chain now serves the hot set from the PERSISTED
-      // table (built 60% + appended 40%) instead of recomputing it from
-      // the corpus — the nightly form; the unchanged closed-form oracle
-      // re-proves served == recomputed.
-      val hot = HotLinesIndex.hotLines(s, hotLinesIdx(s, dir), maxDocFreq = 100L)
-      val noChrome = TextAnalysis.removeHotLines(aug, "text", hot)
-        .select(col("doc_id"), col("cleaned").as("text"))
-      val ruled = TextAnalysis.lineClean(noChrome, "text",
-          minWords = 5, boilerplateRe = "(?i)subscribe|cookie")
-        .select(col("doc_id"), col("cleaned"))
-      ruled.select(col("doc_id"),
-          TextAnalysis.tokenCount(col("cleaned")).cast("long").as("n_tokens"))
-        .filter(col("n_tokens") >= 5)
-        .orderBy("doc_id")
-    }),
-
-    // E5×E6 (round-14): STREAMING line cleaning — the ingest-time face
-    // of line_clean as a REAL AvailableNow stream: stateless codegen
-    // projection (no state store, no watermark), so the batch oracle
-    // replays it exactly — the stream_pii_scrub pattern.
-    "stream_line_clean" -> ((s, dir) => {
-      val sinkName = "graft_stream_line_clean"
-      val aug = Tables.documentsStream(s, dir)
-        .select(col("doc_id"), lineAugmented.as("text"))
-      val sq = Streams.lineCleanStream(aug, "text",
-          minWords = 5, boilerplateRe = "(?i)subscribe|cookie")
-        .select(col("doc_id"), col("n_lines"), col("n_kept"), col("cleaned"))
-        .writeStream.format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      graft.streaming.Streams.awaitOrAbort(sq, "stream_line_clean")
-      s.table(sinkName).orderBy("doc_id")
-    }),
-
-    // E4/E5 (round-14): INTERDOC BOILERPLATE-LINE REMOVAL — lines shared
-    // by more than maxDocFreq documents (the planted header + footer:
-    // df = |corpus| at every sf) are chrome, not content; they drop from
-    // every doc while content lines (df ≤ 2 in the fixtures) survive.
-    // The hot-line table aggregates per-doc-distinct lines (the vocab df
-    // discipline — one line-vocabulary-sized exchange), then broadcasts
-    // as a set for an in-row filter: the corpus never shuffles.
-    "line_boilerplate" -> ((s, dir) => {
-      val aug = docs(s, dir).select(col("doc_id"), lineAugmented.as("text"))
-      val hot = TextAnalysis.hotLines(aug, "text", maxDocFreq = 100L)
-      TextAnalysis.removeHotLines(aug, "text", hot)
-        .select(col("doc_id"), col("n_removed"),
-          md5(col("cleaned")).as("clean_sha"))
-        .orderBy("doc_id")
-    }),
-
-    // E4/E5 lifecycle (round-15; VERDICT r14 "missing" #2): the SAME
-    // boilerplate removal served from the PERSISTED hot-lines table
-    // after its full lifecycle — build 60% + append 40% (per-batch
-    // frequency deltas, single-commit epochs) + COMPACT (collapse the
-    // deltas under the atomic swap). Sharing line_boilerplate's
-    // recompute-from-corpus oracle proves append+compact == rebuild for
-    // the line-curation artifact, completing the maintained-table story
-    // (postings/vocab/ANN/IVF/count-table all had it; hot lines didn't).
-    "hotlines_append_parity" -> ((s, dir) => {
-      val path = hotLinesIdx(s, dir)
-      HotLinesIndex.compact(s, path)
-      val aug = docs(s, dir).select(col("doc_id"), lineAugmented.as("text"))
-      TextAnalysis.removeHotLines(aug, "text",
-          HotLinesIndex.hotLines(s, path, maxDocFreq = 100L))
-        .select(col("doc_id"), col("n_removed"),
-          md5(col("cleaned")).as("clean_sha"))
-        .orderBy("doc_id")
-    }),
-
-    // E4/E5 lifecycle (round-15): hot-lines DELETE — retire a batch via
-    // NEGATED single-commit deltas (doc frequencies form a group:
-    // deletion is subtraction-by-summation, the count-table delete
-    // discipline) + COMPACT folding the cancellation. Serving the
-    // survivors must equal a recompute over the survivors alone — the
-    // restricted-corpus twin of the append-parity oracle; a retired
-    // doc's unique tail line must vanish from the table entirely.
-    "hotlines_delete_parity" -> ((s, dir) => {
-      val aug = docs(s, dir).select(col("doc_id"), lineAugmented.as("text"))
-      val path = SessionCache.getOrCreate(s"hotlines_delete_index:$dir") {
-        val p = SessionCache.newTempDir("graft-hotlines-del")
-        HotLinesIndex.build(aug, "text", p)
-        HotLinesIndex.delete(aug.filter(col("doc_id") >= 300), "text", p)
-        HotLinesIndex.compact(s, p)
-        p
-      }
-      val survivors = aug.filter(col("doc_id") < 300)
-      TextAnalysis.removeHotLines(survivors, "text",
-          HotLinesIndex.hotLines(s, path, maxDocFreq = 100L))
-        .select(col("doc_id"), col("n_removed"),
-          md5(col("cleaned")).as("clean_sha"))
-        .orderBy("doc_id")
-    }),
-
-    // Lifecycle observability (round-16; VERDICT r15 next #8): the
-    // committed-EPOCH COUNT is the operational health number of every
-    // epoch'd index — the per-probe listing and the merge-on-read fan-in
-    // both grow with appends-since-compact, so it must be SURFACED
-    // (EpochCommit.committedCount), not inferred from an FS walk. This
-    // row drives a dedicated index through build → append → compact →
-    // append and pins the count at each step (1, 2, 1, 2): compact is
-    // proven to actually collapse the epoch fan-in, and the surfaced
-    // number is proven to track the lifecycle exactly. Constant row →
-    // constant oracle. Cadence guidance lives in SCALE.md.
-    "epoch_count_lifecycle" -> ((s, dir) => {
-      val aug = docs(s, dir).select(col("doc_id"), lineAugmented.as("text"))
-      val p = SessionCache.newTempDir("graft-epochcount")
-      def n = graft.store.EpochCommit.committedCount(s, p).toLong
-      HotLinesIndex.build(aug.filter(col("doc_id") < 200), "text", p)
-      val afterBuild = n
-      HotLinesIndex.append(
-        aug.filter(col("doc_id") >= 200 && col("doc_id") < 300), "text", p)
-      val afterAppend = n
-      HotLinesIndex.compact(s, p)
-      val afterCompact = n
-      HotLinesIndex.append(aug.filter(col("doc_id") >= 300), "text", p)
-      val afterSecond = n
-      import s.implicits._
-      Seq((afterBuild, afterAppend, afterCompact, afterSecond))
-        .toDF("after_build", "after_append", "after_compact", "after_second_append")
-    }),
-
-    // E7 (round-13): CURRICULUM sampling — quality-tiered deterministic
-    // down-sampling (keep all high-quality mass, thin mid, heavily thin
-    // low — the quality-mixing step of a corpus recipe). Tier cuts
-    // compare the ROUND(quality,6) value both engines agree on (pinned
-    // by the quality_score hash row), so boundary docs tier identically;
-    // membership is the salted-md5 arithmetic of the other samplers.
-    "curriculum_sample" -> ((s, dir) => {
-      val tiered = docs(s, dir).select(col("doc_id"),
-          round(TextAnalysis.qualityScore(col("text")), 6).as("quality"))
-        .withColumn("tier",
-          when(col("quality") >= 0.8, "high")
-            .when(col("quality") >= 0.65, "mid").otherwise("low"))
-      Splits.stratifiedSample(tiered, "doc_id", col("tier"),
-          Seq("low" -> 0.2, "mid" -> 0.5, "high" -> 1.0), salt = "curr")
-        .select(col("doc_id"), col("tier"), col("quality"))
-        .orderBy("doc_id")
-    }),
-
-    // E5 (round-13): N-GRAM COUNT TABLE — trigram counts with a
-    // min-count prune and deterministic top-50: the n>1 generalization
-    // of vocab_topn (LM count tables, shingle-frequency forensics).
-    "ngram_counts" -> ((s, dir) =>
-      TextAnalysis.ngramCounts(docs(s, dir), "text", n = 3,
-          minCount = 2L, topN = 50)
-        .select(col("ngram"), col("cnt").cast("long").as("cnt"))),
-
-    // E5×E6 (round-13): streaming PII scrub — the ingest-time redaction
-    // pass as a REAL AvailableNow stream: stateless projection, so the
-    // batch pii_scrub oracle replays it exactly (same planted PII).
-    "stream_pii_scrub" -> ((s, dir) => {
-      val sinkName = "graft_stream_pii_scrub"
-      val aug = Tables.documentsStream(s, dir)
-        .select(col("doc_id"), piiAugmented.as("__aug"))
-      val sq = Streams.piiScrubStream(aug, "__aug")
-        .select(col("doc_id"), col("scrubbed"), col("n_pii"))
-        .writeStream.format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      graft.streaming.Streams.awaitOrAbort(sq, "stream_pii_scrub")
-      s.table(sinkName).orderBy("doc_id")
-    }),
-
-    // E5/E7 (round-13): TOKENIZE — apply the corpus-derived vocabulary
-    // (dense ids by tf desc/word asc, 0 = OOV) to every document,
-    // emitting the id sequences training consumes. Vocab ids ranked via
-    // per-partition prefix sums (no unpartitioned window); order
-    // restored by per-row array sort. Completes the chain: count table →
-    // vocabulary → token ids → pack_sequences.
-    //
-    // Round-14: DECLARED output is the posexploded scalar form
-    // (doc_id, pos, token_id) — the r13 array<long> column crashed the
-    // driver's pandas-based checker (`unhashable type: numpy.ndarray`
-    // while sorting), so the declared projection carries scalars only.
-    // Empty docs contribute no rows on either side (posexplode of []
-    // here == no unnest rows in the oracle). The broadcast-map plan
-    // underneath is unchanged (plan-shape-pinned in PlanShapeSpec).
-    "token_ids" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val vocab = TextAnalysis.vocabIds(CountTable.counts(d, "text", n = 1))
-      TextAnalysis.tokenizeToIds(
-          d.select(col("doc_id"), col("text")), "doc_id", "text", vocab)
-        .select(col("doc_id"),
-          posexplode(col("token_ids")).as(Seq("pos", "token_id")))
-        .select(col("doc_id"), col("pos").cast("long").as("pos"),
-          col("token_id").cast("long").as("token_id"))
-        .orderBy("doc_id", "pos")
-    }),
-
-    // E5×E7 composition (round-13): tokenize → PACK as one chain — the
-    // assembly tail of a corpus build operating on the id sequences
-    // themselves: per-doc token counts come from size(token_ids) (no
-    // re-tokenize — the filter→pack argument again), packed into
-    // 512-token training sequences in id order.
-    "pipeline_tokenize_pack" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val vocab = TextAnalysis.vocabIds(CountTable.counts(d, "text", n = 1))
-      val ids = TextAnalysis.tokenizeToIds(
-        d.select(col("doc_id"), col("text")), "doc_id", "text", vocab)
-      Splits.packSequences(ids, "doc_id", size(col("token_ids")).cast("long"),
-          budgetTokens = 512L)
-        .select(col("doc_id"),
-          size(col("token_ids")).cast("long").as("n_tokens"), col("seq_id"))
-        .orderBy("doc_id")
-    }),
-
-    // E3/E5 (round-13): BM25 keyword top-k — the lexical half of hybrid
-    // search, direct-scan form. In-row tf per query term (no token
-    // shuffle); only matching docs reach the per-doc sum; k-bounded tail.
-    "bm25_topk" -> ((s, dir) =>
-      Bm25.topK(docs(s, dir), "doc_id", "text", bm25Terms, k = 10)),
-
-    // Same query served from the PERSISTED inverted index (built on 60%
-    // + appended 40% — see bm25Index): sharing bm25_topk's oracle proves
-    // probe == direct scan AND append == rebuild in one hash row.
-    "bm25_index_topk" -> ((s, dir) =>
-      IndexedBm25.topK(s, bm25Index(s, dir), bm25Terms, k = 10)),
-
-    // DELETE honored by the maintained index: tombstones + one negative
-    // meta delta, probes anti-join merge-on-read (df recomputed from the
-    // surviving postings). The oracle scores only the surviving docs, so
-    // the hash match proves delete == rebuild-without.
-    "bm25_delete_parity" -> ((s, dir) =>
-      IndexedBm25.topK(s, bm25DeleteIndex(s, dir), bm25Terms, k = 10)),
-
-    // E3 (round-13): HYBRID retrieval — reciprocal-rank fusion of the
-    // BM25 top-20 and the cosine top-20 for the flagship query. Ranks are
-    // integers, so the fused scores are exact rational arithmetic; both
-    // inputs are k-bounded frames (the 20-row rank windows cost nothing).
-    "hybrid_rrf" -> ((s, dir) => {
-      val lex = Bm25.topK(docs(s, dir), "doc_id", "text", bm25Terms, k = 20)
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id"))))
-      val sem = Similarity.topK(embs(s, dir), "embedding", "vec_id",
-          queryVec(s, dir), 20)
-        .select(col("vec_id").as("doc_id"), col("score"))
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id"))))
-      Bm25.rrfFuse(lex, sem, k = 10)
-    }),
-
-    // E3 (round-13): BM25 BATCH probe at query volume — five keyword
-    // queries served from the persisted inverted index in ONE plan
-    // (collected touched-term set → pruned postings scan → broadcast
-    // query table → per-(query,doc) sum → SimJoin.rankTopK k-bounded
-    // rank — no window; PlanShapeSpec pins zero WindowExec).
-    "bm25_batch_topk" -> ((s, dir) => {
-      import s.implicits._
-      val queries = bm25BatchQueries.toDF("q_id", "terms")
-      IndexedBm25.topKBatch(s, bm25Index(s, dir), queries, k = 5)
-        .orderBy("q_id", "rank")
-    }),
-
-    // E5 (round-13): token-length HISTOGRAM — the distribution every
-    // corpus build charts (truncation pressure, short-doc mass, packing
-    // efficiency). Partial agg collapses each partition to |buckets|
-    // rows before the exchange.
-    "length_histogram" -> ((s, dir) =>
-      TextAnalysis.lengthHistogram(docs(s, dir), "text", bucketWidth = 20L)),
-
-    // E3/E5 (round-13): exact PHRASE search — the positional verb
-    // bag-of-words scoring can't express: in-row token-sequence match
-    // (codegen slice-compare per candidate position, nothing leaves the
-    // row), emitting occurrence count + first position per matching doc.
-    "phrase_search" -> ((s, dir) =>
-      // let-bound check (TextAnalysis.phraseHits): one tokenize + one
-      // position filter per row regardless of how many downstream
-      // expressions consume the result — see phraseHits' scaladoc
-      docs(s, dir)
-        .select(col("doc_id"),
-          TextAnalysis.phraseHits(col("text"), Seq("vector", "stream")).as("__h"))
-        .select(col("doc_id"), col("__h.n_hits").as("n_hits"),
-          col("__h.first_pos").as("first_pos"))
-        .filter(col("n_hits") > 0)
-        .orderBy("doc_id")),
-
-    // E3 (round-14): the SAME phrase query served from the POSITIONAL
-    // inverted index — pruned scan of only the phrase terms' hash
-    // partitions, positional-intersection adjacency check, no corpus
-    // scan (VERDICT r13 "missing" #1: scan-serve at 100 TB was the
-    // keyword family's one scale gap). Shares phrase_search's oracle:
-    // the hash match proves probe == scan over the build+append index.
-    "phrase_index_topk" -> ((s, dir) =>
-      IndexedBm25.phraseSearch(s, bm25Index(s, dir), Seq("vector", "stream"))
-        .orderBy("doc_id")),
-
-    // E5 (round-14): HEAVY-HITTER tokens via a Misra–Gries typed
-    // Aggregator — O(k) state per task vs the vocabulary-sized count
-    // table, with the textbook guarantees (no false negatives above
-    // N/(k+1); estimates underestimate by at most N/(k+1)). INVARIANT
-    // row (the ivf_topk pattern): both guarantees are checked
-    // mechanically against the exact counts; the oracle recomputes
-    // n_guaranteed exactly and pins the flags at 1 — any MG
-    // implementation bug (update, merge-tree, encoder) breaks the hash.
-    "heavy_hitters" -> ((s, dir) =>
-      hhInvariantRow(s, dir,
-        Sketches.heavyHitterTokens(
-            docs(s, dir).select(col("text")), "text", HhK)
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)),
-
-    // E5×E6 (round-14): the SAME sketch MAINTAINED over a stream — each
-    // micro-batch sketched, folded into the running summary with the
-    // mergeable-summaries combine. The MG theorems hold under any merge
-    // order, so the drained sketch passes the identical invariant check
-    // against the full corpus's exact counts — one oracle pins batch ==
-    // stream for the sketch family.
-    "stream_heavy_hitters" -> ((s, dir) =>
-      hhInvariantRow(s, dir,
-        Streams.heavyHittersAvailableNow(
-          Tables.documentsStream(s, dir), "text", HhK))),
-
-    // E3×E6 (round-14): STREAMING phrase routing — each arriving doc
-    // checked in-row for the exact phrase (there is no corpus to index
-    // at ingest; the positional index serves the standing-corpus side).
-    // Stateless AvailableNow stream; shares the full-scan phrase oracle,
-    // so one hash pins scan == index probe == stream.
-    "stream_phrase_match" -> ((s, dir) => {
-      val sinkName = "graft_stream_phrase_match"
-      val sq = Streams.phraseMatchStream(
-          Tables.documentsStream(s, dir), "text", Seq("vector", "stream"))
-        .select(col("doc_id"), col("n_hits"), col("first_pos"))
-        .writeStream.format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      graft.streaming.Streams.awaitOrAbort(sq, "stream_phrase_match")
-      s.table(sinkName).orderBy("doc_id")
-    }),
-
-    // E3×E6 (round-15): MULTI-PHRASE streaming ROUTER — the ingest twin
-    // of phrase_batch_topk: every arriving doc checked in-row against
-    // the 5 standing phrases in ONE stateless projection, emitting a
-    // row per matching (phrase, doc). N standing alerts cost one pass
-    // per doc at ingest, exactly as they cost one pruned scan in batch.
-    "stream_phrase_route" -> ((s, dir) => {
-      val sinkName = "graft_stream_phrase_route"
-      val sq = Streams.phraseRouteStream(
-          Tables.documentsStream(s, dir), "text", phraseBatchQueries)
-        .select(col("q_id"), col("doc_id"), col("n_hits"), col("first_pos"))
-        .writeStream.format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      graft.streaming.Streams.awaitOrAbort(sq, "stream_phrase_route")
-      s.table(sinkName).orderBy("q_id", "doc_id")
-    }),
-
-    // E3 (round-14): PROXIMITY search from the positional index — both
-    // terms within a 10-token window (either order), min_span = tightest
-    // covering span. Sits between bag-of-words BM25 and exact phrase;
-    // same pruned-partition serving as the phrase probe, smallest-range
-    // two-pointer over the stored sorted positions.
-    "proximity_search" -> ((s, dir) =>
-      IndexedBm25.proximitySearch(s, bm25Index(s, dir),
-          Seq("vector", "stream"), window = 10)
-        .orderBy("doc_id")),
-
-    // E3 (round-15): BATCH phrase probe — five standing phrases served
-    // from the positional index in ONE plan (VERDICT r14 "missing" #1:
-    // N phrase alerts used to cost N pruned scans). Union touched-term
-    // set → one pruned positional scan → per-(q_id, doc) adjacency →
-    // SimJoin.rankTopK (PlanShapeSpec pins zero WindowExec). The oracle
-    // replays each phrase with the full-scan derivation, so the hash
-    // also proves batch == scan per phrase.
-    "phrase_batch_topk" -> ((s, dir) => {
-      import s.implicits._
-      val queries = phraseBatchQueries.toDF("q_id", "phrase")
-      IndexedBm25.phraseSearchBatch(s, bm25Index(s, dir), queries, k = 5)
-        .orderBy("q_id", "rank")
-    }),
-
-    // E3 (round-15): BATCH proximity probe — same one-plan serving for
-    // standing near-queries, tightest-span-first ranking on the exact
-    // integer span (no float ordering anywhere), incl. a 3-term k-way
-    // smallest-range query.
-    "proximity_batch_topk" -> ((s, dir) => {
-      import s.implicits._
-      val queries = proximityBatchQueries.toDF("q_id", "terms")
-      IndexedBm25.proximitySearchBatch(s, bm25Index(s, dir), queries,
-          window = 10, k = 5)
-        .orderBy("q_id", "rank")
-    }),
-
-    // E3 composition (round-13): the RESULT PAGE — BM25 top-10 joined
-    // back to text with a ±15-char snippet around the leftmost query-term
-    // hit. One k-bounded join + one codegen projection on top of the
-    // ranked list.
-    "search_snippet" -> ((s, dir) => {
-      val top = Bm25.topK(docs(s, dir), "doc_id", "text", bm25Terms, k = 10)
-      top.join(docs(s, dir).select(col("doc_id"), col("text")), Seq("doc_id"))
-        .select(col("doc_id"), col("score"),
-          TextAnalysis.snippet(col("text"), bm25Terms, width = 15).as("snippet"))
-        .orderBy(desc("score"), col("doc_id"))
-    }),
-
-    // E3×E6 (round-13): STREAMING BM25 ROUTING — each arriving document
-    // scored against the standing keyword profile with statistics FROZEN
-    // from the maintained inverted index (the alerting face of keyword
-    // search). Stateless codegen projection: no state store, no
-    // watermark, identical to the batch backfill (the oracle replays it
-    // batch-wise). Threshold filter on the ROUNDED score (both sides),
-    // so membership can't flip on float-summation order.
-    "stream_bm25_route" -> ((s, dir) => {
-      val sinkName = "graft_stream_bm25_route"
-      val (ts, n, total) = IndexedBm25.frozenStats(s, bm25Index(s, dir), bm25Terms)
-      val sq = Streams.bm25RouteStream(
-          Tables.documentsStream(s, dir), "text", ts, n, total, threshold = 1.1)
-        .select(col("doc_id"), col("score"))
-        .writeStream.format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      graft.streaming.Streams.awaitOrAbort(sq, "stream_bm25_route")
-      s.table(sinkName)
-        .select(col("doc_id"), round(col("score"), 6).as("score"))
-        .orderBy("doc_id")
-    }),
-
-    // E5 (round-13): BIGRAM NOVELTY — per-doc integer-exact n-gram-LM
-    // signals vs corpus bigram counts (familiarity = Σ corpus-frequency
-    // of the doc's bigrams, rarest_cf = its most corpus-unique phrase).
-    // Integer arithmetic so the row hash-checks (a float log-prob sum
-    // would be summation-order-dependent); <2-token docs surface with
-    // zeros, never silently dropped.
-    "bigram_novelty" -> ((s, dir) =>
-      TextAnalysis.bigramNovelty(
-          docs(s, dir).select(col("doc_id"), col("text")), "doc_id", "text")
-        .orderBy("doc_id")),
-
-    // ================= rows-only queries (no ANSI-SQL oracle) =========
-
-    // E4: MinHash-LSH near-dup candidates. Hash-checked (round-11): the
-    // row runs the PORTABLE md5-hash-family variant, so the DuckDB oracle
-    // re-derives every signature, bucket collision and exact-Jaccard
-    // verify in SQL — byte-equal pair sets or the row fails. The MLlib
-    // variant stays the library's alternate path (its recall is pinned by
-    // minhash_recall).
-    "minhash_pairs" -> ((s, dir) =>
-      MinHashDedup.nearDupPairsPortable(docs(s, dir).filter(col("doc_id") < 100),
-          "doc_id", "text", n = 1, threshold = 0.5)
-        .orderBy("a_id", "b_id")),
-
-    // E4: SimHash banding near-dup candidates. Hash-checked (round-11):
-    // simhash64 switched to the portable md5 token hash, so the DuckDB
-    // oracle recomputes every signature in SQL and brute-forces the
-    // hamming filter — verifying hash portability AND banding
-    // completeness against an independent implementation.
-    "simhash_pairs" -> ((s, dir) =>
-      Dedup.simhashPairs(docs(s, dir).filter(col("doc_id") < 200),
-          "doc_id", "text", maxHamming = 12)
-        .orderBy("a_id", "b_id")),
-
-    // E4: perceptual-hash IMAGE near-dup (round-18; VERDICT r17
-    // "missing" #2) — dHash over the multimodal binary column + the
-    // shared Hamming banding. The fixtures carry no real media, so the
-    // assets are the text-byte fakes PLUS planted near-copies (every
-    // 7th doc re-appears under id+100000 with its first character
-    // flipped — the byte-level analogue of a re-encoded image: sha
-    // misses it, the gradient hash moves ≤ a few bits). The non-image
-    // payload takes dHash64's deterministic stride-sampler fallback —
-    // pure integer arithmetic the DuckDB oracle re-derives from the
-    // text bytes, so signatures, banding completeness, and the popcount
-    // verify are all hash-checked; the REAL pixel path is pinned vs
-    // exact pixel distance in MultimodalImageSpec.
-    "multimodal_near_dup" -> ((s, dir) => {
-      val base = docs(s, dir).filter(col("doc_id") < 300)
-        .select(col("doc_id"), col("text"))
-      val twins = base.filter(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 100000L).as("doc_id"),
-          concat(lit("Z"), expr("substring(text, 2)")).as("text"))
-      Dedup.imageNearDupPairs(
-          Multimodal.fakeAssets(base.unionByName(twins), "text"),
-          "doc_id", "asset_bytes", maxHamming = 10)
-        .orderBy("a_id", "b_id")
-    }),
-
-    // E4: incremental IMAGE dedup (round-18) — the multimodal member of
-    // the incremental family (sha / jaccard / LSH / dHash): the daily
-    // image drop dedups within itself (banding pairs → groups → min-id
-    // survivor), then drops every survivor within Hamming 10 of ANY
-    // signature in the persisted BANDED dHash index (round-19: the gate
-    // reads only the batch's colliding (band, kb) buckets — the corpus
-    // is never re-banded, re-shuffled, or re-decoded per batch). The batch
-    // is novel docs ∪ planted re-deliveries (every 9th indexed doc with
-    // its first character flipped — a "re-encoded" copy sha would miss;
-    // all must drop via the index). DuckDB replays everything from raw
-    // bytes: signatures both sides, within-batch transitive closure,
-    // survivor pick, cross-index Hamming gate.
-    "multimodal_dedup_incremental" -> ((s, dir) => {
-      val base = docs(s, dir).filter(col("doc_id") < 250)
-        .select(col("doc_id"), col("text"))
-      val idxPath = SessionCache.getOrCreate(s"mmdedup_idx:$dir") {
-        val p = SessionCache.newTempDir("graft-mmdedup-idx") + "/idx"
-        // BANDED form (round-19): the gate prunes to colliding
-        // (band, kb) buckets instead of re-banding the whole table
-        Dedup.buildBandedDHashIndex(Multimodal.fakeAssets(base, "text"),
-          "doc_id", "asset_bytes", p, maxHamming = 10)
-        p
-      }
-      val novel = docs(s, dir).filter(col("doc_id") >= 250 && col("doc_id") < 325)
-        .select(col("doc_id"), col("text"))
-      val redelivered = base.filter(col("doc_id") % 9 === 0)
-        .select((col("doc_id") + 200000L).as("doc_id"),
-          concat(lit("Z"), expr("substring(text, 2)")).as("text"))
-      // within-batch near-copies of NOVEL docs: the closure/survivor
-      // half must fire too (min-id keeps the novel doc, drops its twin)
-      val withinTwins = novel.filter(col("doc_id") % 11 === 0)
-        .select((col("doc_id") + 300000L).as("doc_id"),
-          concat(lit("Z"), expr("substring(text, 2)")).as("text"))
-      Dedup.imageNearDupIncrementalBanded(
-          Multimodal.fakeAssets(
-            novel.unionByName(redelivered).unionByName(withinTwins), "text"),
-          "doc_id", "asset_bytes", idxPath, maxHamming = 10)
-        .select(col("doc_id")).orderBy("doc_id")
-    }),
-
-    // E4×E6 (round-18): the CLOSED MULTIMODAL ingest loop — the dHash
-    // twin of stream_jaccard_gate_append. Two controlled waves arrive
-    // as sequential AvailableNow drains over one checkpoint; each
-    // micro-batch dedups within itself, gates against the signature
-    // index SO FAR, and appends its survivors' signatures — wave 2's
-    // planted twins of wave-1 NOVEL docs (+400000) drop ONLY because
-    // wave 1's survivors were appended, the closed-loop proof. Wave 1
-    // also carries re-deliveries of INDEXED docs (+200000, first char
-    // flipped) that the index gate must drop. DuckDB replays the
-    // two-wave chain from raw bytes: per-wave signatures, per-wave
-    // transitive closure + min-id survivor, then the Hamming gate vs
-    // corpus (wave 1) and corpus ∪ wave-1 survivors (wave 2).
-    "stream_image_gate_append" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val baseIdx = SessionCache.getOrCreate(s"imgate_base_idx:$dir") {
-        val p = SessionCache.newTempDir("graft-imgate-base") + "/idx"
-        Dedup.buildBandedDHashIndex(
-          Multimodal.fakeAssets(
-            d.filter(col("doc_id") < 250).select(col("doc_id"), col("text")), "text"),
-          "doc_id", "asset_bytes", p, maxHamming = 10)
-        p
-      }
-      val waveFiles = SessionCache.getOrCreate(s"imgate_waves:$dir") {
-        def flip(df: DataFrame, off: Long) = df.select(
-          (col("doc_id") + off).as("doc_id"),
-          concat(lit("Z"), expr("substring(text, 2)")).as("text"))
-        val base = d.select(col("doc_id"), col("text"))
-        val w1 = base.filter(col("doc_id") >= 250 && col("doc_id") < 287)
-          .unionByName(flip(
-            base.filter(col("doc_id") < 250 && col("doc_id") % 9 === 0), 200000L))
-        val w2 = base.filter(col("doc_id") >= 287 && col("doc_id") < 325)
-          .unionByName(flip(
-            base.filter(col("doc_id") >= 250 && col("doc_id") < 287 &&
-              col("doc_id") % 5 === 0), 400000L))
-        Seq(w1, w2).zipWithIndex.map { case (w, i) =>
-          val p = SessionCache.newTempDir(s"graft-imgate-w$i")
-          Multimodal.fakeAssets(w, "text")
-            .select(col("doc_id"), col("asset_bytes"))
-            .coalesce(1).write.mode("overwrite").parquet(p + "/w")
-          java.nio.file.Files.list(java.nio.file.Paths.get(p, "w"))
-            .filter(_.getFileName.toString.endsWith(".parquet"))
-            .findFirst.get.toString
-        }
-      }
-      // the stream MUTATES its index: fresh hardlink view per call
-      val idx = SessionCache.newTempDir("graft-imgate-idx") + "/idx"
-      SessionCache.linkTree(baseIdx, idx)
-      val arrival = SessionCache.newTempDir("graft-imgate-src")
-      val ckpt = SessionCache.newTempDir("graft-imgate-ckpt")
-      val out = SessionCache.newTempDir("graft-imgate-out") + "/surv"
-      val waveSchema = s.read.parquet(waveFiles.head).schema
-      for ((f, i) <- waveFiles.zipWithIndex) {
-        java.nio.file.Files.copy(java.nio.file.Paths.get(f),
-          java.nio.file.Paths.get(arrival, s"arrival-$i.parquet"))
-        Streams.imageGateMaintainAvailableNow(
-          s.readStream.schema(waveSchema).parquet(arrival),
-          "doc_id", "asset_bytes", idx, out,
-          maxHamming = 10, checkpoint = Some(ckpt))
-      }
-      Streams.readGateOutput(s, out).select(col("doc_id")).orderBy("doc_id")
-    }),
-
-    // E4×E2 lifecycle (round-19): the banded dHash index's FULL serving
-    // lifecycle in the correctness gate — flat-tail append → compact
-    // (fold into the banded main) → gates down BOTH cost-based read
-    // paths (the 2-asset probe's banding cells sit under the
-    // pruned-main threshold; the wide probe falls back to the flat
-    // slice). Emitted verdicts must equal DuckDB's raw-bytes Hamming
-    // replay: neither the path choice nor the compaction may change a
-    // verdict.
-    "multimodal_gate_compacted" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val baseIdx = SessionCache.getOrCreate(s"mmgatec_base:$dir") {
-        val p = SessionCache.newTempDir("graft-mmgatec-base") + "/idx"
-        Dedup.buildBandedDHashIndex(
-          Multimodal.fakeAssets(
-            d.filter(col("doc_id") < 250).select(col("doc_id"), col("text")), "text"),
-          "doc_id", "asset_bytes", p, maxHamming = 10)
-        p
-      }
-      // append + compact MUTATE the index: fresh hardlink view per call
-      val idx = SessionCache.newTempDir("graft-mmgatec") + "/idx"
-      SessionCache.linkTree(baseIdx, idx)
-      def sigsOf(df: DataFrame) = Multimodal.fakeAssets(df, "text")
-        .select(col("doc_id").cast("long").as("id"),
-          Multimodal.dHashCol(col("asset_bytes")).as("sig"))
-      Dedup.appendBandedDHashSigs(
-        sigsOf(d.filter(col("doc_id") >= 250 && col("doc_id") < 287)
-          .select(col("doc_id"), col("text"))), idx)
-      Dedup.compactBandedDHashIndex(s, idx)
-      def flip(df: DataFrame, off: Long) = df.select(
-        (col("doc_id") + off).as("doc_id"),
-        concat(lit("Z"), expr("substring(text, 2)")).as("text"))
-      val big = flip(d.filter(col("doc_id") >= 250 && col("doc_id") < 287 &&
-          col("doc_id") % 5 === 0), 400000L)
-        .unionByName(d.filter(col("doc_id") >= 287 && col("doc_id") < 300)
-          .select(col("doc_id"), col("text")))
-      val small = flip(d.filter(col("doc_id") === 252), 500000L)
-        .unionByName(d.filter(col("doc_id") === 320)
-          .select(col("doc_id"), col("text")))
-      def gate(df: DataFrame, tag: String) =
-        Dedup.sigDupIdsVsBandedIndex(sigsOf(df), idx, maxHamming = 10)
-          .select(lit(tag).as("probe"), col("__b_id").as("doc_id"))
-      gate(big, "big").unionByName(gate(small, "small"))
-        .orderBy("probe", "doc_id")
-    }),
-
-    // E4×E2 DELETE lifecycle (round-20; VERDICT r19 "missing" #1 — the
-    // takedown semantics): gate verdicts over a banded dHash index WITH
-    // DELETIONS must equal DuckDB's raw-bytes Hamming replay over ONLY
-    // the surviving ids — once merge-on-read (tombstone sidecar, phase
-    // "tomb": deletions reach main-resident AND tail-resident
-    // signatures, down both cost-based read paths) and once after the
-    // physical fold (phase "compacted" — verdicts may not change). A
-    // deleted asset's ghost signature suppressing a probe would surface
-    // as an extra doc_id here; a lost surviving signature as a missing
-    // one.
-    "multimodal_delete_parity" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val baseIdx = SessionCache.getOrCreate(s"mmgatec_base:$dir") {
-        val p = SessionCache.newTempDir("graft-mmgatec-base") + "/idx"
-        Dedup.buildBandedDHashIndex(
-          Multimodal.fakeAssets(
-            d.filter(col("doc_id") < 250).select(col("doc_id"), col("text")), "text"),
-          "doc_id", "asset_bytes", p, maxHamming = 10)
-        p
-      }
-      // delete + compact MUTATE the index: fresh hardlink view per call
-      val idx = SessionCache.newTempDir("graft-mmdel") + "/idx"
-      SessionCache.linkTree(baseIdx, idx)
-      def sigsOf(df: DataFrame) = Multimodal.fakeAssets(df, "text")
-        .select(col("doc_id").cast("long").as("id"),
-          Multimodal.dHashCol(col("asset_bytes")).as("sig"))
-      // tail-resident signatures too: deletion must reach rows no
-      // compact has banded yet
-      Dedup.appendBandedDHashSigs(
-        sigsOf(d.filter(col("doc_id") >= 250 && col("doc_id") < 287)
-          .select(col("doc_id"), col("text"))), idx)
-      Dedup.deleteFromDHashIndex(s, idx,
-        (0L until 250L by 10L) ++ (250L until 287L).filter(_ % 3 == 0))
-      def flip(df: DataFrame, off: Long) = df.select(
-        (col("doc_id") + off).as("doc_id"),
-        concat(lit("Z"), expr("substring(text, 2)")).as("text"))
-      val big = flip(d.filter(col("doc_id") >= 240 && col("doc_id") < 287), 600000L)
-        .unionByName(d.filter(col("doc_id") >= 287 && col("doc_id") < 300)
-          .select(col("doc_id"), col("text")))
-      val small = flip(d.filter(col("doc_id").isin(240L, 241L)), 700000L)
-      // probe signatures pinned ONCE (r21; VERDICT r20 "wrong" #3): the
-      // sigs are pure functions of the probe text — independent of the
-      // index state — so the tomb and compacted phases legitimately
-      // share one decode+hash evaluation instead of re-deriving
-      // fakeAssets + dHash per phase (guide §1.2: don't recompute what
-      // you already have). Lazy checkpoint: batch-sized blocks, first
-      // gate materializes them.
-      val bigSigs = sigsOf(big).localCheckpoint(eager = false)
-      val smallSigs = sigsOf(small).localCheckpoint(eager = false)
-      def gate(sigs: DataFrame, tag: String) =
-        Dedup.sigDupIdsVsBandedIndex(sigs, idx, maxHamming = 10)
-          .select(lit(tag).as("probe"), col("__b_id").as("doc_id"))
-      // eager: the "tomb" phase must evaluate BEFORE compact mutates
-      // the index, or it would silently re-test the folded artifact
-      val tomb = gate(bigSigs, "big").unionByName(gate(smallSigs, "small"))
-        .withColumn("phase", lit("tomb")).localCheckpoint()
-      Dedup.compactBandedDHashIndex(s, idx)
-      val compacted = gate(bigSigs, "big").unionByName(gate(smallSigs, "small"))
-        .withColumn("phase", lit("compacted"))
-      tomb.unionByName(compacted)
-        .select(col("phase"), col("probe"), col("doc_id"))
-        .orderBy("phase", "probe", "doc_id")
-    }),
-
-    // E4/E2: LSH-bucketed embedding near-dup (corpus×corpus scale path)
-    "near_dup_lsh" -> ((s, dir) =>
-      AnnIndex.nearDupPairsLSH(embs(s, dir), "vec_id", "embedding",
-          threshold = 0.3, AnnIndex.Config(dim = 64, nBits = 4, nTables = 12))
-        .select(col("a_id"), col("b_id"), round(col("score"), 6).as("score"))
-        .orderBy("a_id", "b_id")),
-
-    // E4/E2 composition (round-9): embedding-space near-dedup END-TO-END
-    // on the full embeddings table — LSH bucket pairs (the scale path the
-    // exact O(n²) form refuses) → connected components → survivor drop.
-    // Hash-checked (round-11): the DuckDB twin re-derives the md5-plane
-    // buckets, candidate pairs, cosine verify, connected components
-    // (recursive walk) and survivor drop — the whole composition — from
-    // scratch in one SQL statement.
-    "near_dedup_apply_lsh" -> ((s, dir) => {
-      val e = embs(s, dir)
-      val pairs = AnnIndex.nearDupPairsLSH(e, "vec_id", "embedding",
-        threshold = 0.3, AnnIndex.Config(dim = 64, nBits = 4, nTables = 12))
-      Dedup.dedupNear(e, "vec_id", pairs)
-        .select(col("vec_id")).orderBy("vec_id")
-    }),
-
-    // E4/E2/E7 composition (round-9): the DAILY-BATCH shape of embedding
-    // near-dedup — the last quarter of the corpus arrives as the drop,
-    // dedups within itself (LSH pairs → groups → survivor), then drops
-    // anything whose exact cosine against the PERSISTED corpus-slice
-    // index exceeds the threshold. The corpus is represented only by its
-    // index; the batch's touched buckets prune the scan; survivors are
-    // append-ready (the probe→drop→append loop, no rebuild). The survivor
-    // id list is seeded-LSH territory (AnnBatchSpec); the DECLARED row is
-    // the invariant-flag form (round-10): subset / re-verified drop
-    // precision / append-roundtrip, hash-checked against a
-    // DuckDB-derivable n_batch + constant flags.
-    "incremental_near_dedup" -> ((s, dir) => incrementalNearDedupFlags(s, dir)),
-
-    // E2: LSH probe against the PERSISTED index — built+written once per
-    // (sfDir, JVM) via SessionCache, probed through read.parquet so the
-    // (table, bucket) literals prune partitions at the scan, exactly the
-    // 100 TB serving shape (round 3 rebuilt the index in memory per run).
-    // 6 bits × 16 tables ≈ 500/2^6×16 ≈ 125 candidates over this corpus
-    // size; at real scale raise nBits with |corpus| (buckets ∝ 2^bits).
-    "ann_topk" -> ((s, dir) => {
-      val q = queryVec(s, dir)
-      AnnIndex.queryTopK(lshIndex(s, dir), q, 10, annCfg)
-        .select(col("id"), round(col("score"), 6).as("score"))
-        .orderBy(desc("score"), col("id"))
-    }),
-
-    // E2 (round-13): DELETE honored by the persisted ANN index — probe of
-    // the tombstoned index (merge-on-read anti-join, pruning preserved)
-    // must equal the LSH pipeline re-derived over ONLY the survivors;
-    // the oracle excludes vec_id<50 from the candidate set.
-    "ann_delete_parity" -> ((s, dir) => {
-      val q = queryVec(s, dir)
-      AnnIndex.queryTopK(annDeleteIndex(s, dir), q, 10, annCfg)
-        .select(col("id"), round(col("score"), 6).as("score"))
-        .orderBy(desc("score"), col("id"))
-    }),
-
-    // E2/E3: BATCH probe against the same persisted index (round-9) — the
-    // serving path at query volume: 20 queries bucketed in one pass, the
-    // touched (table,bucket) set pushed as PartitionFilters, candidates
-    // deduped by max-score partial agg, ranked through the k-bounded
-    // SimJoin reduction. The listing is seeded-LSH territory; the
-    // DECLARED row (round-10) is batch==single-probe PARITY over all 20
-    // queries (ids + rounded scores in rank order) — a computed invariant
-    // hash-checked against a constant oracle, the ann_append_parity
-    // pattern. AnnBatchSpec pins the same equality at spec level.
-    "ann_batch_topk" -> ((s, dir) => annBatchParity(s, dir)),
-
-    // E2 quality floor for the batch probe: MEAN recall@10 across the 20
-    // queries vs the exact sim-join. floor_met is the hashed value
-    // (round-10); the seed-dependent scalar itself stays spec territory
-    // (AnnBatchSpec re-computes it).
-    "ann_batch_recall" -> ((s, dir) => {
-      val queries = embs(s, dir).filter(col("vec_id") < 20)
-      val approx = AnnIndex.queryTopKBatch(lshIndex(s, dir), queries,
-        "vec_id", "embedding", RecallK, annCfg).select("q_id", "c_id")
-      val exact = SimJoin.topKPerQuery(
-          queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb")),
-          embs(s, dir).select(col("vec_id").as("c_id"), col("embedding").as("c_emb")),
-          RecallK)
-        .select("q_id", "c_id")
-      exact.join(approx.withColumn("hit", lit(1)), Seq("q_id", "c_id"), "left")
-        .agg(count(lit(1)).cast("double").as("n"),
-          sum(coalesce(col("hit"), lit(0))).cast("double").as("hits"))
-        .select(lit(20L).as("n_queries"),
-          when(col("hits") / col("n") >= RecallFloor, 1L).otherwise(0L).as("floor_met"))
-    }),
-
-    // E2: IVF probe against the PERSISTED index — quantizer fit + index
-    // write happen once per (sfDir, JVM); the probe ranks centroids
-    // driver-side and scans the nProbe pruned cluster partitions.
-    // Declared (round-13) as the probe==fresh-rerank parity +
-    // recall-floor invariant row, hash-checked against a constant
-    // oracle — the raw listing is seeded-k-means territory
-    // (AnnBatchSpec pins it; bench_ivf_topk_single times the live
-    // probe).
-    "ivf_topk" -> ((s, dir) => ivfTopkParity(s, dir)),
-
-    // E2 composition (round-15): QUANTIZED IVF serving — int8 index
-    // probe + float re-rank of the candidate pool (4× less candidate
-    // scan IO at 100 TB), declared as the float-exactness + recall-floor
-    // invariant row against the float probe (the topk_cosine_quantized
-    // claim, index-served).
-    "ivf_topk_quantized" -> ((s, dir) => ivfQuantParity(s, dir)),
-
-    // E2 lifecycle (round-16): the persisted packed-IVF artifact through
-    // build → append → shared-tombstone DELETE → swap COMPACT, each step
-    // parity-checked against a fresh frozen-model rebuild of the
-    // survivors (see ivfPackedLifecycle). The quantized serving index is
-    // now maintained on disk like every other serving artifact, not
-    // re-derived per session.
-    "ivf_packed_lifecycle" -> ((s, dir) => ivfPackedLifecycle(s, dir)),
-
-    // E2/E3: IVF batch probe against the persisted index (round-9) — each
-    // query ranks the broadcast centroids and probes its own nProbe
-    // clusters; touched clusters prune the scan; ids live in one cluster
-    // each so no dedup stage. Declared (round-10) as batch==single-probe
-    // PARITY over the 20 queries — the ann_batch_topk argument, IVF twin.
-    "ivf_batch_topk" -> ((s, dir) => ivfBatchParity(s, dir)),
-
-    // E2/E3 (round-17): the BATCH face of the QUANTIZED serving path —
-    // N standing queries against the PERSISTED packed artifact in one
-    // plan (union-cluster pruned int8 candidate pass, per-query
-    // k-bounded pool, union-pool id-pushdown float re-rank, exact float
-    // scores); declared as batch == per-query persisted-probe parity.
-    "ivf_batch_topk_quantized" -> ((s, dir) => ivfBatchQuantParity(s, dir)),
-
-    // E2 monitoring (round-17): per-cluster size + cohesion over the
-    // flagship IVF model — the read that sizes diversity caps and flags
-    // drift regions. n_vectors is DuckDB-derived (every vector assigned
-    // to exactly one cluster); the flags pin cluster-count sanity,
-    // cohesion in range with a positive weighted mean (cosine-trained
-    // k-means must resemble its members), and bounded skew (more than
-    // one non-empty cluster).
-    "ivf_cluster_stats" -> ((s, dir) => {
-      val (model, _) = ivfIndex(s, dir)
-      val stats = IvfIndex.clusterStats(embs(s, dir), "vec_id", "embedding", model)
-        .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
-      val total = stats.map(_._2).sum
-      val clustersOk = stats.nonEmpty &&
-        stats.length <= model.centroids.length && stats.forall(_._2 > 0)
-      val cohesionOk =
-        stats.forall { case (_, _, c) => c >= -1.0001 && c <= 1.0001 } &&
-        stats.map { case (_, n, c) => c * n }.sum / total > 0
-      val skewBounded = stats.map(_._2).max < total
-      import s.implicits._
-      Seq((total, if (clustersOk) 1L else 0L, if (cohesionOk) 1L else 0L,
-        if (skewBounded) 1L else 0L))
-        .toDF("n_vectors", "clusters_ok", "cohesion_ok", "skew_bounded")
-    }),
-
-    // Training-pipeline decontamination: corpus docs sharing ≥3 distinct
-    // bigram shingles with any "benchmark" doc (docs 0-9 stand in for an
-    // eval set). Probe postings broadcast; the corpus never shuffles for
-    // the join.
-    "decontaminate" -> ((s, dir) => {
-      val d = docs(s, dir)
-      Dedup.contaminationPairs(
-          d.filter(col("doc_id") >= 10 && col("doc_id") < 300),
-          d.filter(col("doc_id") < 10),
-          "doc_id", "text", "doc_id", "text", n = 2, minOverlap = 3)
-        .orderBy("doc_id", "probe_id")
-    }),
-
-    // Training-pipeline split: deterministic md5-bucket train/val/test
-    // assignment (80/10/10) — reproducible across runs/engines/corpus
-    // revisions, unlike sample()/randomSplit(). Fully oracle-checked:
-    // DuckDB replays md5 → hex → bucket → cumulative cuts in SQL.
-    "split_assign" -> ((s, dir) =>
-      Splits.assignSplit(docs(s, dir), "doc_id",
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .select(col("doc_id"), col("split"))
-        .orderBy("doc_id")),
-
-    // E7/E2 (round-17): DIVERSITY-capped sampling — at most `cap` docs
-    // per semantic cluster of the embedding space, the curation pass
-    // that stops the densest regions (template clones, over-crawled
-    // topics) from dominating a training mix while sparse clusters keep
-    // everything. Designed invariants (cluster assignment is seeded-
-    // k-means territory, so the membership stays spec-pinned):
-    // exact_counts — every cluster contributes exactly min(size, cap);
-    // subset_ok — sampled ids ⊆ corpus, caps never exceeded;
-    // deterministic — two runs emit the identical set (salted-md5
-    // priority, never an RNG). Constant row → constant oracle.
-    "diversity_sample" -> ((s, dir) => {
-      val (model, idx) = ivfIndex(s, dir)
-      val cap = 20
-      val e = embs(s, dir)
-      def run(): Set[(Int, Long)] =
-        Splits.diversitySample(e, "vec_id", "embedding", model, cap)
-          .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
-      val sample = run()
-      val byCluster = sample.groupBy(_._1).view.mapValues(_.size).toMap
-      val clusterSizes = idx.groupBy("cluster").count()
-        .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
-      val exactCounts = clusterSizes.forall { case (c, n) =>
-        byCluster.getOrElse(c, 0) == math.min(n, cap.toLong) } &&
-        byCluster.keySet.subsetOf(clusterSizes.keySet)
-      val corpusIds = e.select(col("vec_id")).collect().map(_.getLong(0)).toSet
-      val subsetOk = byCluster.values.forall(_ <= cap) &&
-        sample.forall { case (_, id) => corpusIds(id) }
-      val deterministic = sample == run()
-      import s.implicits._
-      Seq((cap.toLong, if (exactCounts) 1L else 0L,
-        if (subsetOk) 1L else 0L, if (deterministic) 1L else 0L))
-        .toDF("cap", "exact_counts", "subset_ok", "deterministic")
-    }),
-
-    // E4/E7: incremental ingest dedup — the daily-batch shape. The
-    // "historical corpus" is docs<300 represented ONLY by its content-hash
-    // index; the incoming batch (docs>=250) first dedups within itself
-    // (min-id survivor), then anti-joins the hash set, so the 50-doc
-    // overlap and any batch text already known to the corpus are dropped
-    // without ever rescanning corpus text.
-    "incremental_dedup" -> ((s, dir) => {
-      val d = docs(s, dir)
-      Dedup.dedupIncremental(
-          d.filter(col("doc_id") >= 250), "doc_id", "text",
-          Dedup.contentHashes(d.filter(col("doc_id") < 300), "text"))
-        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-        .orderBy("doc_id")
-    }),
-
-    // E4/E7 (round-9): incremental n-gram JACCARD dedup — the near-dup
-    // face of the daily-batch scenario above, completing the incremental
-    // trilogy (exact sha, embedding LSH, n-gram text). The corpus
-    // (docs<300) participates only through its shingle-posting index; the
-    // 75-doc drop dedups within itself, then drops anything whose bigram
-    // jaccard vs an indexed doc reaches 0.2 — including the 50
-    // re-delivered docs (identical text → jaccard 1). Fully
-    // oracle-checked: DuckDB replays shingles → within-batch transitive
-    // closure → cross-index jaccard.
-    "incremental_jaccard_dedup" -> ((s, dir) => {
-      val d = docs(s, dir)
-      jaccardCapGuard(s, dir)
-      Dedup.jaccardIncremental(
-          d.filter(col("doc_id") >= 250 && col("doc_id") < 325), "doc_id", "text",
-          n = 2, threshold = 0.2,
-          Dedup.shinglePostings(d.filter(col("doc_id") < 300), "doc_id", "text", 2))
-        .select(col("doc_id"), col("lang"), col("source"))
-        .orderBy("doc_id")
-    }),
-
-    // E4×E6 (round-15; VERDICT r14 next #5): STREAMING jaccard ingest
-    // gate — each arriving doc probes the PERSISTED shingle-postings
-    // index (built 60% + appended, the lifecycle exercised stream-side)
-    // and drops when near-duplicate of ANY indexed doc; re-delivered
-    // text scores jaccard 1 and always drops. foreachBatch per-doc
-    // gate == the batch gate under any micro-batch split (the decision
-    // is per-doc + index-only), so a plain SQL derivation oracles the
-    // stream exactly — the text twin of stream_ann_probe.
-    "stream_jaccard_gate" -> ((s, dir) => {
-      jaccardCapGuard(s, dir)
-      val d = docs(s, dir)
-      val postingsPath = SessionCache.getOrCreate(s"jaccard_gate_index:$dir") {
-        val p = SessionCache.newTempDir("graft-jgate-idx")
-        Dedup.buildPostingsIndex(d.filter(col("doc_id") < 250),
-          "doc_id", "text", n = 2, p)
-        Dedup.appendPostingsIndex(
-          d.filter(col("doc_id") >= 250 && col("doc_id") < 300),
-          "doc_id", "text", n = 2, p)
-        p
-      }
-      val out = SessionCache.newTempDir("graft-jgate-out")
-      Streams.jaccardGateAvailableNow(
-        Tables.documentsStream(s, dir)
-          .filter(col("doc_id") >= 250 && col("doc_id") < 325),
-        "doc_id", "text", n = 2, threshold = 0.2,
-        Dedup.readPostingsIndex(s, postingsPath, 2), out)
-      s.read.parquet(out)
-        .select(col("doc_id"), col("lang"), col("source"))
-        .orderBy("doc_id")
-    }),
-
-    // E4×E6 (round-17; VERDICT r16 "missing" #1 — the CLOSED ingest
-    // loop): gate-then-APPEND. Two controlled waves (250-290, 290-325)
-    // arrive as sequential AvailableNow drains over one checkpoint; each
-    // micro-batch runs the full jaccardIncremental discipline against
-    // the index-SO-FAR (built over doc_id < 250), then appends its
-    // survivors' postings single-commit — so wave 2 gates against wave
-    // 1's survivors immediately instead of waiting for a nightly
-    // rebuild (at sf0.01 exactly that path fires: one wave-2 doc drops
-    // PURELY because a wave-1 survivor was appended). Fully
-    // oracle-checked: DuckDB replays the two-step chain — within-wave
-    // transitive closure, cross-index jaccard vs the initial corpus,
-    // then wave 2 vs corpus ∪ wave-1 survivors.
-    "stream_jaccard_gate_append" -> ((s, dir) => {
-      jaccardCapGuard(s, dir)
-      val d = docs(s, dir)
-      // the INITIAL index and the two wave ARRIVAL FILES are setup, not
-      // serving — built once per session (the pipeline_daily_drop /
-      // stream_dedup_wm precedents: cached artifacts are inputs, never
-      // results). Per call the stream still starts from the identical
-      // committed state: the index arrives as a HARDLINK tree (the
-      // stream MUTATES it by appending NEW epoch dirs — linked file
-      // bytes stay immutable, see SessionCache.linkTree; round-18,
-      // VERDICT r17 "wrong" #4: the byte-copy + per-wave Spark write
-      // jobs were most of this row's bench cost) and each wave file is
-      // one java.nio copy into a fresh arrival dir.
-      val baseIdx = SessionCache.getOrCreate(s"jgatea_base_idx:$dir") {
-        val p = SessionCache.newTempDir("graft-jgatea-base")
-        Dedup.buildPostingsIndex(d.filter(col("doc_id") < 250),
-          "doc_id", "text", n = 2, p)
-        p
-      }
-      val waveFiles = SessionCache.getOrCreate(s"jgatea_waves:$dir") {
-        Seq((250, 290), (290, 325)).map { case (lo, hi) =>
-          val p = SessionCache.newTempDir(s"graft-jgatea-w$lo")
-          d.filter(col("doc_id") >= lo && col("doc_id") < hi)
-            .coalesce(1).write.mode("overwrite").parquet(p + "/w")
-          java.nio.file.Files.list(java.nio.file.Paths.get(p, "w"))
-            .filter(_.getFileName.toString.endsWith(".parquet"))
-            .findFirst.get.toString
-        }
-      }
-      val idx = SessionCache.newTempDir("graft-jgatea-idx") + "/idx"
-      SessionCache.linkTree(baseIdx, idx)
-      val arrival = SessionCache.newTempDir("graft-jgatea-src")
-      val ckpt = SessionCache.newTempDir("graft-jgatea-ckpt")
-      val out = SessionCache.newTempDir("graft-jgatea-out") + "/surv"
-      for ((f, i) <- waveFiles.zipWithIndex) {
-        java.nio.file.Files.copy(java.nio.file.Paths.get(f),
-          java.nio.file.Paths.get(arrival, s"arrival-$i.parquet"))
-        Streams.jaccardGateMaintainAvailableNow(
-          s.readStream.schema(d.schema).parquet(arrival),
-          "doc_id", "text", n = 2, threshold = 0.2, idx, out,
-          checkpoint = Some(ckpt))
-      }
-      s.read.parquet(out)
-        .select(col("doc_id"), col("lang"), col("source"))
-        .orderBy("doc_id")
-    }),
-
-    // E5×E6 (round-15): STREAMING hot-lines maintenance — the persisted
-    // boilerplate table built ENTIRELY by a stream (foreachBatch appends
-    // one single-commit delta per arriving micro-batch; per-batch line
-    // dfs sum exactly under any split), then served into the same
-    // removal pass. Shares line_boilerplate's recompute oracle: one hash
-    // pins recomputed == batch-maintained == stream-maintained.
-    "stream_hotlines_maintain" -> ((s, dir) => {
-      val path = SessionCache.newTempDir("graft-hotlines-stream")
-      Streams.hotLinesMaintainAvailableNow(
-        Tables.documentsStream(s, dir)
-          .select(col("doc_id"), lineAugmented.as("text")),
-        "text", path)
-      val aug = docs(s, dir).select(col("doc_id"), lineAugmented.as("text"))
-      TextAnalysis.removeHotLines(aug, "text",
-          HotLinesIndex.hotLines(s, path, maxDocFreq = 100L))
-        .select(col("doc_id"), col("n_removed"),
-          md5(col("cleaned")).as("clean_sha"))
-        .orderBy("doc_id")
-    }),
-
-    // E4 index MAINTENANCE (round-11): build + append + compact ==
-    // rebuild for the persisted shingle-postings index, with the
-    // hot-shingle cap BINDING — the jaccard twin of ann_append_parity.
-    // n_batch is DuckDB-derivable; the parity is the only acceptable
-    // outcome, so the row hash-checks against a constant oracle.
-    "jaccard_index_append_parity" -> ((s, dir) => jaccardIndexAppendParity(s, dir)),
-
-    // E5/E7 (round-13): the word count table as MAINTAINED state —
-    // build/append/compact lifecycle with append+compact == rebuild
-    // proven by the parity flag and hash-checked invariant totals
-    // (CountTable: the vocabulary/statistics twin of the postings and
-    // ANN index lifecycles).
-    "vocab_index_append_parity" -> ((s, dir) => vocabIndexAppendParity(s, dir)),
-
-    // E5/E7 (round-13): count-table DELETE — negated deltas invert the
-    // append exactly; parity vs a survivor recount + invariant totals the
-    // oracle recomputes independently.
-    "vocab_delete_parity" -> ((s, dir) => vocabDeleteParity(s, dir)),
-
-    // E4/E7 (round-11 stretch): the WHOLE nightly loop as one declared
-    // row — exact-sha → jaccard-vs-postings-index → LSH-vs-embedding-
-    // index, the corpus present only through its persisted artifacts.
-    // Fully ORACLE-CHECKED since round 12 (the md5-derived LSH planes
-    // make the banding engine-portable): DuckDB re-runs all three stages
-    // independently and the survivor id set hash-matches. PipelineSpec
-    // additionally pins the composition invariants.
-    "pipeline_daily_drop" -> ((s, dir) => dailyDropRehearsal(s, dir)),
-
-    // E5: within-document repetition signals (Gopher-style quality
-    // filters) — duplicate-token and duplicate-bigram fractions; catches
-    // degenerate looping/boilerplate docs cross-document dedup never sees.
-    "repetition_stats" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-          round(TextAnalysis.dupTokenFrac(col("text")), 6).as("dup_token_frac"),
-          round(TextAnalysis.dupNgramFrac(col("text"), 2), 6).as("dup_2gram_frac"))
-        .orderBy("doc_id")),
-
-    // E5: the FUSED single-pass metrics struct through the oracle gate —
-    // same semantics as the composed Column rows (token_count,
-    // repetition_stats, quality_filter) but computed by one UDF pass
-    // (tokenize once, plain loops): the bulk-scan path, 9.6× the
-    // composed forms at 2.5M docs (SCALE.md round-8 correction). The
-    // DuckDB twin replays the same formulas, so this row proves the
-    // fused arithmetic engine-exact, not just spec-equal.
-    "text_metrics_fused" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"), TextAnalysis.metrics(col("text")).as("m"))
-        .select(col("doc_id"),
-          col("m.n_tokens").as("n_tokens"),
-          round(col("m.dup_token_frac"), 6).as("dup_token_frac"),
-          round(col("m.dup_2gram_frac"), 6).as("dup_2gram_frac"),
-          col("m.quality").as("quality"),
-          col("m.reasons").as("reasons"))
-        .orderBy("doc_id")),
-
-    // E5: quality filter WITH audit trail — every doc gets the list of
-    // rules it fails ("" = keep), so per-rule drop rates are one groupBy
-    // away instead of a pipeline rerun.
-    "quality_filter" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-          TextAnalysis.filterReasons(col("text")).as("reasons"))
-        .select(col("doc_id"),
-          when(col("reasons") === "", 1L).otherwise(0L).as("kept"),
-          col("reasons"))
-        .orderBy("doc_id")),
-
-    // E7: deterministic mixture sampling — down-sample each source toward
-    // a 2000-token budget via per-source keep-rates + salted hash
-    // selection (the data-mixing step; no per-group windows, so no
-    // single-task-per-source skew).
-    "mix_sample" -> ((s, dir) => {
-      val d = docs(s, dir)
-      Splits.sampleToTokenBudget(d, "doc_id", "source",
-          TextAnalysis.tokenCount(col("text")), budgetPerGroup = 2000L)
-        .select(col("doc_id"), col("source"),
-          TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"))
-        .orderBy("doc_id")
-    }),
-
-    // E7: sequence packing — assign docs (in id order) to fixed
-    // 512-token training sequences: seq_id = floor(exclusive running
-    // token sum / budget). Implemented with per-partition offsets, NOT a
-    // global SUM-OVER window (the assignIdsOrdered shape), so packing a
-    // 100 TB corpus never funnels through one task; the oracle replays
-    // the window formulation, which is equivalent and fine at 500 rows.
-    "pack_sequences" -> ((s, dir) =>
-      Splits.packSequences(
-          docs(s, dir).select(col("doc_id"), col("text")), "doc_id",
-          TextAnalysis.tokenCount(col("text")), budgetTokens = 512L)
-        .select(col("doc_id"), col("seq_id"))
-        .orderBy("doc_id")),
-
-    // E7 composition: filter-audit → mixture-sample as ONE chain — the
-    // curation half of a corpus build (quality gate first, THEN mix to
-    // budget over the surviving token mass; rates computed after the
-    // filter, which is the ordering a real recipe needs). Composing the
-    // two new operators catches interface drift the per-operator rows
-    // cannot, the same argument as pipeline_hygiene.
-    "pipeline_filter_mix" -> ((s, dir) => {
-      // filter + token count via the FUSED metrics pass (one tokenize per
-      // row; field-equal to the Column forms by spec + the
-      // text_metrics_fused oracle row)
-      val m = docs(s, dir)
-        .select(col("doc_id"), col("source"), TextAnalysis.metrics(col("text")).as("m"))
-        .select(col("doc_id"), col("source"),
-          col("m.n_tokens").as("n_tokens"), col("m.reasons").as("reasons"))
-      val kept = m.filter(col("reasons") === "")
-      Splits.sampleToTokenBudget(kept, "doc_id", "source",
-          col("n_tokens"), budgetPerGroup = 1500L)
-        .select(col("doc_id"), col("source"), col("n_tokens"))
-        .orderBy("doc_id")
-    }),
-
-    // E7 composition: filter-audit → sequence PACKING as one chain — the
-    // assembly half of a corpus build (quality gate, then pack survivors
-    // in id order into 512-token sequences). The pack REUSES the fused
-    // metrics' n_tokens (round-9 precomputed-token path): one tokenize
-    // per row feeds filter AND pack, instead of packSequences
-    // re-tokenizing the kept corpus — at 100 TB the re-tokenize is the
-    // dominant pack cost (SCALE.md).
-    "pipeline_filter_pack" -> ((s, dir) => {
-      val kept = docs(s, dir)
-        .select(col("doc_id"), TextAnalysis.metrics(col("text")).as("m"))
-        .select(col("doc_id"), col("m.n_tokens").cast("long").as("n_tokens"),
-          col("m.reasons").as("reasons"))
-        .filter(col("reasons") === "").drop("reasons")
-      Splits.packSequences(kept, "doc_id", col("n_tokens"), budgetTokens = 512L)
-        .select(col("doc_id"), col("n_tokens"), col("seq_id"))
-        .orderBy("doc_id")
-    }),
-
-    // multimodal: fake decode → feature vectors. Hash-checked since
-    // round 12: the digest covers the decoder's INTEGER bucket
-    // accumulation (Multimodal.fakeDecodeAccum), whose stride hash has a
-    // closed form (h = C·31^k + Σ bⱼ·31^(k−1−j) mod 2^64) the DuckDB
-    // oracle re-derives with HUGEINT arithmetic — Long wraparound,
-    // signed bytes, and Java % semantics reproduced exactly. The float
-    // half (L2 normalize) stays covered by the hash-checked
-    // `multimodal_invariants` twin below, and MultimodalSpec pins
-    // accumulate→normalize == featurize.
-    "multimodal_features" -> ((s, dir) =>
-      Multimodal.fakeAssets(docs(s, dir).filter(col("doc_id") < 50), "text")
-        .withColumn("accum", Multimodal.decodeAccumCol(col("asset_bytes"), 32))
-        .select(col("doc_id"),
-          md5(to_json(col("accum"))).as("feat_digest"))
-        .orderBy("doc_id")),
-
-    // Hash-checked invariants of the multimodal featurizer, mirroring the
-    // embed_hash pattern: the fake decoder always emits dim-length
-    // vectors, and L2-normalizes any non-zero accumulation — each 8-byte
-    // stride contributes exactly ±1 to one bucket, so non-empty bytes
-    // yield a non-zero vector unless every bucket's ±1 contributions
-    // cancel exactly (verified impossible on the fixtures: every text is
-    // non-empty and no doc cancels). Both columns are DuckDB-derivable
-    // from the text alone, which upgrades the multimodal pipeline from
-    // rows-only to a real oracle row. The 1e-3 tolerance is far above
-    // float32 normalization error (~5e-7).
-    "multimodal_invariants" -> ((s, dir) =>
-      Multimodal.featurize(docs(s, dir).filter(col("doc_id") < 50), "text", 32)
-        .select(col("doc_id"),
-          size(col("features")).cast("long").as("n_features"),
-          when(abs(l2_norm(col("features")) - 1.0d) < 0.001d, 1L)
-            .otherwise(0L).as("unit_norm"))
-        .orderBy("doc_id")),
-
-    // E2 recall floors: |approx top-k ∩ exact top-k| / k for the two
-    // persisted-index probes. The scalar is seed-dependent (the oracle
-    // would have to replay the LSH/k-means); the FLOOR VERDICT is an
-    // invariant — so the row emits (k, floor_met) and hash-checks against
-    // a constant oracle (round-10, the ann_append_parity pattern). The
-    // scalar itself stays observable at spec level (OperatorsSpec).
-    // Round-11: with md5-portable planes the recall VALUE is itself
-    // DuckDB-derivable (exact top-k ∩ probed top-k, both re-derived from
-    // scratch), so this row emits the scalar instead of a floor flag —
-    // stronger check, observable number, and no fixture-tuned threshold
-    // to flip across sfs (the floor form broke at sf0.001 where this
-    // single query's neighborhood hashes unluckily; quality floors live
-    // in OperatorsSpec where the probed query is chosen to be stable).
-    "ann_recall" -> ((s, dir) => {
-      val exact = Similarity.topK(embs(s, dir), "embedding", "vec_id", queryVec(s, dir), RecallK)
-        .select(col("vec_id").as("id"))
-      AnnIndex.queryTopK(lshIndex(s, dir), queryVec(s, dir), RecallK, annCfg)
-        .select("id").join(exact, Seq("id"))
-        .agg(round(count(lit(1)).cast("double") / RecallK.toDouble, 6).as("recall"))
-        .select(lit(RecallK.toLong).as("k"), col("recall"))
-    }),
-
-    "ivf_recall" -> ((s, dir) => {
-      val (model, idx) = ivfIndex(s, dir)
-      recallRow(s, dir, IvfIndex.queryTopK(idx, model, queryVec(s, dir), RecallK,
-        nProbe = IvfIndex.defaultNProbe(model.centroids.length)))
-    }),
-
-    // E2 index MAINTENANCE (round-9): append-vs-rebuild probe parity for
-    // both persisted indexes + the frozen-model drift verdict — the
-    // invariants are constants, so this row is hash-checked against a
-    // constant oracle (the computation is real; see annAppendParity).
-    "ann_append_parity" -> ((s, dir) => annAppendParity(s, dir)),
-
-    // E4 quality floor: pair-level recall of the LSH near-dup SCALE path
-    // against the exact pair set on the same guarded subset (the
-    // `near_dup_pairs` query's slice, which is oracle-green). Precision
-    // is 1.0 by construction — nearDupPairsLSH exact-reranks candidates
-    // with the codegen cosine — so recall is the one open quality
-    // question, and this row pins it the way ann_recall/ivf_recall pin
-    // the top-k probes. Hash-checked (round-10): DuckDB re-derives
-    // n_exact from the exact cosine pair SQL and pins floor_met=1; the
-    // seed-dependent scalar stays spec territory.
-    "near_dup_lsh_recall" -> ((s, dir) => {
-      val sub = embs(s, dir).filter(col("vec_id") < 200)
-      pairRecallRow(
-        Dedup.nearDupPairsExact(sub, "vec_id", "embedding", threshold = 0.3),
-        AnnIndex.nearDupPairsLSH(sub, "vec_id", "embedding",
-          threshold = 0.3, AnnIndex.Config(dim = 64, nBits = 4, nTables = 12)))
-    }),
-
-    // E4 quality floor: MinHash-LSH pair recall against the EXACT shingle
-    // Jaccard pair set (jaccardPairs with the hot-shingle cap opted out =
-    // textbook Jaccard) on the guarded doc_id<60 slice — the last near-dup
-    // path with neither an oracle row nor a floor (round-9). Misses can
-    // come only from minhash banding and 2^18 feature-hash collisions;
-    // MLlib's join reports exact feature-set Jaccard for candidates, so
-    // precision is ~1 and recall is the open question. Hash-checked
-    // (round-10): DuckDB re-derives n_exact from the textbook unigram
-    // jaccard SQL and pins floor_met=1.
-    "minhash_recall" -> ((s, dir) => {
-      val sub = docs(s, dir).filter(col("doc_id") < 60)
-      pairRecallRow(
-        Dedup.jaccardPairs(sub, "doc_id", "text", n = 1, threshold = 0.5,
-          maxDocFreq = Long.MaxValue),
-        MinHashDedup.nearDupPairs(sub, "doc_id", "text", n = 1, maxDistance = 0.5))
-    })
-  )
-
-  private val RecallK = 10
-  private val RecallFloor = 0.5d
-  // Pair-level floor for the LSH near-dup scale path: 4 bits × 12 tables
-  // gives per-pair collision ≥ 1-(1-0.6^4)^12 ≈ 0.81 at the s=0.3
-  // threshold boundary and higher above it — 0.6 leaves noise margin
-  // while still failing loudly on a broken banding join.
-  private val NearDupRecallFloor = 0.6d
-
-  /** One (k, floor_met) row: |`approx` ∩ exact top-k| / k against the
-    * brute-force scan for the flagship query vector, reduced to a floor
-    * flag. Used by `ivf_recall` (k-means seeding is not SQL-derivable, so
-    * a constant-flag oracle is the strongest available form); `ann_recall`
-    * emits the derived scalar instead since round 11 (portable planes).
-    */
-  /** One (n_exact, floor_met, recall) row: fraction of the exact near-dup
-    * pair set an approximate pair operator recovered. Shared by the
-    * hyperplane-LSH and MinHash recall rows so the floor, the join keys
-    * and the rounding cannot drift between them. Both inputs must carry
-    * (a_id, b_id) with a < b (every pair operator's contract).
-    */
-  private def pairRecallRow(exact: DataFrame, approx: DataFrame): DataFrame =
-    exact.select("a_id", "b_id")
-      .join(approx.select("a_id", "b_id").distinct().withColumn("hit", lit(1)),
-        Seq("a_id", "b_id"), "left")
-      .agg(count(lit(1)).cast("double").as("n"),
-        sum(coalesce(col("hit"), lit(0))).cast("double").as("hits"))
-      .select(col("n").cast("long").as("n_exact"),
-        when(col("hits") / col("n") >= NearDupRecallFloor, 1L).otherwise(0L).as("floor_met"))
-
-  private def recallRow(s: SparkSession, dir: String, approx: DataFrame): DataFrame = {
-    val exact = Similarity.topK(embs(s, dir), "embedding", "vec_id", queryVec(s, dir), RecallK)
-      .select(col("vec_id").as("id"))
-    approx.select("id").join(exact, Seq("id"))
-      .agg((count(lit(1)).cast("double") / RecallK.toDouble).as("recall"))
-      .select(lit(RecallK.toLong).as("k"),
-        when(col("recall") >= RecallFloor, 1L).otherwise(0L).as("floor_met"))
-  }
-
-  // ======================================================== the oracles
-
-  /** DuckDB cosine machinery: dim is fixed at 64 by the fixtures
-    * (FIXTURES.md), so positions come from `range(1,65)`; products are
-    * CAST to DOUBLE first so both engines do float32→float64 math; the
-    * zero-norm guard mirrors `vectolite.py:159-162`.
-    */
-  private val qVecCte =
-    "q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)"
-
-  private val scoreVsQ =
-    s"""WITH $qVecCte,
-       |s AS (
-       |  SELECT e.vec_id,
-       |    SUM(CAST(e.embedding[r.i] AS DOUBLE) * CAST(q.qe[r.i] AS DOUBLE)) AS dot,
-       |    SQRT(SUM(CAST(e.embedding[r.i] AS DOUBLE) * CAST(e.embedding[r.i] AS DOUBLE))) AS na,
-       |    SQRT(SUM(CAST(q.qe[r.i] AS DOUBLE) * CAST(q.qe[r.i] AS DOUBLE))) AS nb
-       |  FROM embeddings e CROSS JOIN q CROSS JOIN range(1,65) r(i)
-       |  GROUP BY e.vec_id
-       |),
-       |sc AS (SELECT vec_id, CASE WHEN na * nb = 0 THEN 0.0 ELSE dot / (na * nb) END AS score,
-       |              dot, na FROM s)""".stripMargin
-
-  /** Shared CTE pair re-deriving the LSH index FROM SCRATCH in SQL —
-    * possible because [[graft.operators.AnnIndex.tablePlanes]] is
-    * md5-derived (round-11): plane(t,b,i) = 2·(u1+u2+u3)−3 where u_j is
-    * the j-th 8-hex-digit chunk of md5("plane:seed:t:b:i") over 2^32.
-    * Every intermediate is an exact double (32-bit dyadic rationals,
-    * ≤ 34 significand bits summed), so DuckDB reproduces the planes
-    * bit-identically; bucket sign margins sit far above the ~1e-15
-    * summation-order noise of the dot fold. `sigs` is (vec_id, t,
-    * bucket) for every vector — exactly `AnnIndex.buildIndex` minus the
-    * embedding payload. Used by the five LSH oracle rows (`near_dup_lsh`,
-    * `ann_topk`, `near_dedup_apply_lsh`, both stream probes): the oracle
-    * is an independent re-derivation, not a replay.
-    */
-  private def lshSigsCte(nTables: Int, nBits: Int, seed: Int = 42, dim: Int = 64): String = {
-    def u(off: Int) = s"(('0x' || substr(md5(k), $off, 8))::BIGINT / 4294967296.0)"
-    s"""planes AS (
-       |  SELECT t.t, b.b, i.i,
-       |    2.0 * (${u(1)} + ${u(9)} + ${u(17)}) - 3.0 AS w
-       |  FROM (SELECT UNNEST(range($nTables)) AS t) t
-       |  CROSS JOIN (SELECT UNNEST(range($nBits)) AS b) b
-       |  CROSS JOIN (SELECT UNNEST(range($dim)) AS i) i
-       |  CROSS JOIN LATERAL (SELECT 'plane:$seed:' || t.t || ':' || b.b || ':' || i.i AS k) m),
-       |sigs AS (
-       |  SELECT vec_id, t,
-       |    SUM(CASE WHEN dot > 0 THEN (1 << b) ELSE 0 END)::BIGINT AS bucket
-       |  FROM (
-       |    SELECT e.vec_id, p.t, p.b,
-       |      SUM(p.w * CAST(e.embedding[p.i + 1] AS DOUBLE)) AS dot
-       |    FROM embeddings e CROSS JOIN planes p
-       |    GROUP BY e.vec_id, p.t, p.b)
-       |  GROUP BY vec_id, t)""".stripMargin
-  }
-
-  /** BM25 CTE chain ending in `bm(doc_id, score)` — replays [[Bm25.topK]]
-    * for [[bm25Terms]]: same tokenization, same arithmetic shape
-    * (`((idf·tf)·2.2)/denom`, `dl·n/total` length norm), so doubles agree
-    * bit-for-bit up to the `ln` libm ulp that ROUND(…,6) absorbs.
-    * WITHOUT a leading `WITH` so it can splice after other CTEs.
-    */
-  /** DuckDB CTE chain deriving dHash signatures for a preceding CTE
-    * `src(doc_id, text)` — the stride-sampler fallback arithmetic of
-    * [[graft.operators.Multimodal.dHash64]] re-derived from the raw
-    * UTF-8 bytes (round-18): sample byte ⌊i·n/72⌋ into a 9×8 grid, set
-    * bit y·8+x iff grid(y,x+1) > grid(y,x), kept as two 32-bit halves
-    * (the simhash_pairs discipline — no bit-63 shift). Parameterized
-    * like [[bm25CteFor]] so the batch and corpus sides of the
-    * incremental oracles splice the SAME arithmetic (one copy to edit,
-    * oracles can never desync); WITHOUT a leading `WITH`; yields
-    * `${p}sig(doc_id, sig_lo, sig_hi)`. NULL/empty text maps to
-    * signature 0 — exactly dHash64's null/empty-bytes early return
-    * (`n IS NULL OR n = 0` covers both; a WHERE n > 0 alone would
-    * silently DROP a null-text row the Spark side keeps).
-    */
-  private def dhashSigsCte(src: String, p: String): String =
-    s"""${p}raw AS (
-      |  SELECT doc_id, hex(encode(text)) AS hx, octet_length(encode(text)) AS n
-      |  FROM $src),
-      |${p}grid AS (
-      |  SELECT doc_id, n,
-      |    list_transform(range(0, 72), i ->
-      |      ('0x' || substr(hx, 2 * ((i * n) // 72) + 1, 2))::INT) AS g
-      |  FROM ${p}raw WHERE n > 0),
-      |${p}sig AS (
-      |  SELECT doc_id,
-      |    COALESCE(list_sum(list_transform(range(0, 32), p ->
-      |      CASE WHEN g[(p // 8) * 9 + (p % 8) + 2] > g[(p // 8) * 9 + (p % 8) + 1]
-      |        THEN (CAST(1 AS BIGINT) << p) ELSE CAST(0 AS BIGINT) END)), 0) AS sig_lo,
-      |    COALESCE(list_sum(list_transform(range(32, 64), p ->
-      |      CASE WHEN g[(p // 8) * 9 + (p % 8) + 2] > g[(p // 8) * 9 + (p % 8) + 1]
-      |        THEN (CAST(1 AS BIGINT) << (p - 32)) ELSE CAST(0 AS BIGINT) END)), 0) AS sig_hi
-      |  FROM ${p}grid
-      |  UNION ALL
-      |  SELECT doc_id, 0 AS sig_lo, 0 AS sig_hi FROM ${p}raw WHERE n IS NULL OR n = 0)""".stripMargin
-
-  private def bm25CteFor(where: String) =
-    s"""tok AS (
-      |  SELECT doc_id,
-      |    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-      |         ELSE regexp_split_to_array(trim(text), '\\s+') END AS t
-      |  FROM documents$where),
-      |d AS (SELECT doc_id, len(t) AS dl, t FROM tok),
-      |st AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n, CAST(SUM(dl) AS DOUBLE) AS total FROM d),
-      |qt AS (SELECT unnest(['vector', 'stream', 'hash']) AS term),
-      |p AS (
-      |  SELECT d.doc_id, d.dl, qt.term, len(list_filter(d.t, x -> x = qt.term)) AS tf
-      |  FROM d CROSS JOIN qt),
-      |p2 AS (SELECT * FROM p WHERE tf > 0),
-      |f AS (SELECT term, CAST(COUNT(*) AS DOUBLE) AS df FROM p2 GROUP BY term),
-      |bm AS (
-      |  SELECT p2.doc_id,
-      |    SUM(ln(1.0 + (st.n - f.df + 0.5) / (f.df + 0.5))
-      |      * CAST(p2.tf AS DOUBLE) * 2.2
-      |      / (CAST(p2.tf AS DOUBLE)
-      |         + 1.2 * (0.25 + 0.75 * CAST(p2.dl AS DOUBLE) * st.n / st.total))) AS score
-      |  FROM p2 JOIN f USING (term) CROSS JOIN st
-      |  GROUP BY p2.doc_id)""".stripMargin
-
-  private val bm25Cte = bm25CteFor("")
-
-  private val bm25TopkSql =
-    s"""WITH $bm25Cte
-       |SELECT doc_id, ROUND(score, 6) AS score
-       |FROM bm ORDER BY ROUND(score, 6) DESC, doc_id LIMIT 10""".stripMargin
-
-  /** ONE heavy-hitters invariant oracle shared by the batch and streaming
-    * sketch rows (see [[hhInvariantRow]]).
-    */
-  private val heavyHittersSql =
-    """WITH tok AS (
-      |  SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS word
-      |  FROM documents WHERE trim(text) <> ''),
-      |cnt AS (SELECT word, COUNT(*) AS tf FROM tok GROUP BY word),
-      |n AS (SELECT CAST(SUM(tf) AS DOUBLE) AS total FROM cnt)
-      |SELECT CAST(20 AS BIGINT) AS k,
-      |  CAST((SELECT COUNT(*) FROM cnt, n WHERE tf > total / 21) AS BIGINT)
-      |    AS n_guaranteed,
-      |  CAST(1 AS BIGINT) AS all_found,
-      |  CAST(1 AS BIGINT) AS bounds_ok""".stripMargin
-
-  /** ONE line-cleaning oracle (list-HOF replay of the C4-style rules over
-    * the planted 4-line layout — trim/empty-drop mirrors
-    * `TextAnalysis.linesOf`; the cleaned string hash-checks the whole
-    * rule set) shared by the batch `line_clean` row and the streaming
-    * `stream_line_clean` row: the pass is a stateless projection, so the
-    * batch replay IS the stream's semantics.
-    */
-  private val lineCleanSql =
-    """WITH aug AS (
-      |  SELECT doc_id,
-      |    'Subscribe to our newsletter' || chr(10) || text || '.' || chr(10) ||
-      |    'copyright footer all pages share' || chr(10) ||
-      |    'unique ' || CAST(doc_id AS VARCHAR) AS t
-      |  FROM documents),
-      |l AS (
-      |  SELECT doc_id,
-      |    list_filter(list_transform(string_split(t, chr(10)), s -> trim(s)),
-      |      s -> s <> '') AS ls
-      |  FROM aug),
-      |k AS (
-      |  SELECT doc_id, ls,
-      |    list_filter(ls, s ->
-      |      len(list_filter(string_split_regex(s, '\s+'), w -> w <> '')) >= 5
-      |      AND NOT regexp_matches(s, '(?i)subscribe|cookie')) AS kept
-      |  FROM l)
-      |SELECT doc_id, CAST(len(ls) AS BIGINT) AS n_lines,
-      |  CAST(len(kept) AS BIGINT) AS n_kept,
-      |  array_to_string(kept, chr(10)) AS cleaned
-      |FROM k ORDER BY doc_id""".stripMargin
-
-  /** ONE phrase oracle (token positions replayed with 1-based inclusive
-    * list slices; the candidate range(1, len) covers every bigram start)
-    * shared by the full-scan `phrase_search` row AND the positional-index
-    * `phrase_index_topk` row — the shared hash proves index-served phrase
-    * == corpus-scan phrase, the same probe==scan pattern as
-    * `bm25_index_topk`.
-    */
-  /** Boilerplate-line removal replay over the planted 4-line layout —
-    * shared by `line_boilerplate` (hot set recomputed from the corpus)
-    * and `hotlines_append_parity` (hot set served from the persisted
-    * table after build+append+compact).
-    */
-  private val lineBoilerplateSql: String = lineBoilerplateSqlFor("")
-
-  /** [[lineBoilerplateSql]] over a RESTRICTED corpus (`where` applies to
-    * the aug CTE, so both the hot-line df and the removal pass see the
-    * same surviving docs) — the delete-parity oracle's shape.
-    */
-  private def lineBoilerplateSqlFor(where: String): String =
-    s"""WITH aug AS (
-        |  SELECT doc_id,
-        |    'Subscribe to our newsletter' || chr(10) || text || '.' || chr(10) ||
-        |    'copyright footer all pages share' || chr(10) ||
-        |    'unique ' || CAST(doc_id AS VARCHAR) AS t
-        |  FROM documents $where),
-        |l AS (
-        |  SELECT doc_id,
-        |    list_filter(list_transform(string_split(t, chr(10)), s -> trim(s)),
-        |      s -> s <> '') AS ls
-        |  FROM aug),
-        |df AS (
-        |  SELECT line, COUNT(*) AS n_docs FROM (
-        |    SELECT DISTINCT doc_id, line FROM (
-        |      SELECT doc_id, unnest(ls) AS line FROM l))
-        |  GROUP BY line),
-        |hot AS (SELECT line FROM df WHERE n_docs > 100),
-        |pos AS (
-        |  SELECT doc_id, u.i, u.s AS line
-        |  FROM (SELECT doc_id,
-        |          unnest(list_transform(ls, (x, i) -> struct_pack(s := x, i := i))) AS u
-        |        FROM l)),
-        |kept AS (
-        |  SELECT p.doc_id, p.i, p.line
-        |  FROM pos p LEFT JOIN hot h ON p.line = h.line WHERE h.line IS NULL),
-        |agg AS (SELECT doc_id, list(line ORDER BY i) AS kls FROM kept GROUP BY doc_id)
-        |SELECT l.doc_id,
-        |  CAST(len(l.ls) - COALESCE(len(a.kls), 0) AS BIGINT) AS n_removed,
-        |  md5(COALESCE(array_to_string(a.kls, chr(10)), '')) AS clean_sha
-        |FROM l LEFT JOIN agg a USING (doc_id) ORDER BY doc_id""".stripMargin
-
-  private val phraseSearchSql =
-    """WITH t AS (
-      |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-      |  FROM documents WHERE trim(text) <> ''),
-      |m AS (
-      |  SELECT doc_id,
-      |    list_filter(range(1, len(t)), i -> t[i:i+1] = ['vector', 'stream']) AS p
-      |  FROM t)
-      |SELECT doc_id, CAST(len(p) AS BIGINT) AS n_hits,
-      |  CAST(COALESCE(list_min(p), 0) AS BIGINT) AS first_pos
-      |FROM m WHERE len(p) > 0 ORDER BY doc_id""".stripMargin
-
-  /** Pairwise cosine over a `cand(a_id, b_id)` CTE — the [[scoreVsQ]]
-    * fold applied to both sides of each candidate pair.
-    */
-  private val pairCosineCte =
-    """sc AS (
-      |  SELECT c.a_id, c.b_id,
-      |    SUM(CAST(ea.embedding[r.i] AS DOUBLE) * CAST(eb.embedding[r.i] AS DOUBLE)) AS dot,
-      |    SQRT(SUM(CAST(ea.embedding[r.i] AS DOUBLE) * CAST(ea.embedding[r.i] AS DOUBLE))) AS na,
-      |    SQRT(SUM(CAST(eb.embedding[r.i] AS DOUBLE) * CAST(eb.embedding[r.i] AS DOUBLE))) AS nb
-      |  FROM cand c
-      |  JOIN embeddings ea ON ea.vec_id = c.a_id
-      |  JOIN embeddings eb ON eb.vec_id = c.b_id
-      |  CROSS JOIN range(1, 65) r(i)
-      |  GROUP BY c.a_id, c.b_id),
-      |scored AS (
-      |  SELECT a_id, b_id,
-      |    CASE WHEN na * nb = 0 THEN 0.0 ELSE dot / (na * nb) END AS score
-      |  FROM sc)""".stripMargin
-
-  /** Shared by `stream_ann_probe` and `stream_ann_probe_wm`: both
-    * serving forms emit the same pair set on this bounded replay (each
-    * q_id arrives exactly once — see the row docs), so one SQL
-    * derivation oracle-checks both.
-    */
-  private lazy val streamAnnProbeOracle: String =
-    s"""WITH ${lshSigsCte(nTables = 16, nBits = 6)},
-       |qs AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < 20),
-       |qb AS (SELECT q.q_id, s.t, s.bucket FROM qs q JOIN sigs s ON s.vec_id = q.q_id),
-       |cand AS (
-       |  SELECT DISTINCT qb.q_id, s.vec_id AS c_id
-       |  FROM qb JOIN sigs s ON s.t = qb.t AND s.bucket = qb.bucket),
-       |sc AS (
-       |  SELECT c.q_id, c.c_id,
-       |    SUM(CAST(e.embedding[r.i] AS DOUBLE) * CAST(q.q_emb[r.i] AS DOUBLE)) AS dot,
-       |    SQRT(SUM(CAST(e.embedding[r.i] AS DOUBLE) * CAST(e.embedding[r.i] AS DOUBLE))) AS na,
-       |    SQRT(SUM(CAST(q.q_emb[r.i] AS DOUBLE) * CAST(q.q_emb[r.i] AS DOUBLE))) AS nb
-       |  FROM cand c
-       |  JOIN embeddings e ON e.vec_id = c.c_id
-       |  JOIN qs q ON q.q_id = c.q_id
-       |  CROSS JOIN range(1, 65) r(i)
-       |  GROUP BY c.q_id, c.c_id),
-       |scored AS (
-       |  SELECT q_id, c_id,
-       |    CASE WHEN na * nb = 0 THEN 0.0 ELSE dot / (na * nb) END AS score
-       |  FROM sc)
-       |SELECT q_id, c_id, ROUND(score, 6) AS score
-       |FROM scored WHERE score > 0.5
-       |ORDER BY q_id, c_id""".stripMargin
-
-  /** Shared by `pii_scrub` and `stream_pii_scrub`: the streaming face is
-    * a stateless projection of the same redaction pass over the same
-    * planted PII, so one SQL derivation oracle-checks both.
-    */
-  private lazy val piiScrubOracle: String =
-    """WITH aug AS (
-      |  SELECT doc_id,
-      |    text || ' contact user' || CAST(doc_id AS VARCHAR) ||
-      |    '@mail.example.com or 555-' || CAST(1000 + doc_id % 9000 AS VARCHAR) ||
-      |    ' now' AS t
-      |  FROM documents
-      |),
-      |s AS (
-      |  SELECT doc_id,
-      |    regexp_replace(t, '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}', '<EMAIL>', 'g') AS e,
-      |    CAST(len(regexp_extract_all(t, '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}')) AS BIGINT) AS n_email
-      |  FROM aug
-      |)
-      |SELECT doc_id,
-      |  regexp_replace(e, '\b[0-9]{3}-[0-9]{3}-[0-9]{4}\b|\b[0-9]{3}-[0-9]{4}\b', '<PHONE>', 'g') AS scrubbed,
-      |  n_email + CAST(len(regexp_extract_all(e, '\b[0-9]{3}-[0-9]{3}-[0-9]{4}\b|\b[0-9]{3}-[0-9]{4}\b')) AS BIGINT) AS n_pii
-      |FROM s ORDER BY doc_id""".stripMargin
-
-  private val langCase = {
-    def hits(ms: Seq[String]) =
-      s"len(list_filter(tok, x -> x IN (${ms.map(m => s"'$m'").mkString(",")})))"
-    val en = hits(Seq("the", "and", "of", "is", "with", "for"))
-    val de = hits(Seq("der", "die", "und", "ist", "mit", "für"))
-    val es = hits(Seq("el", "la", "los", "es", "con", "para"))
-    val fr = hits(Seq("le", "la", "les", "est", "avec", "pour"))
-    // Tie-break mirrors Spark's array_max over (hits, lang) structs:
-    // equal hit counts resolve to the lexicographically larger lang code.
-    s"""CASE WHEN GREATEST($en,$de,$es,$fr) = 0 THEN 'und'
-       |     WHEN $fr >= $en AND $fr >= $de AND $fr >= $es THEN 'fr'
-       |     WHEN $es >= $en AND $es >= $de THEN 'es'
-       |     WHEN $en >= $de THEN 'en'
-       |     ELSE 'de' END""".stripMargin
-  }
-
-  def oracleSql: Map[String, String] = Map(
-
-    "count_documents" ->
-      "SELECT COUNT(*) AS n_docs FROM documents",
-
-    "point_lookup" ->
-      "SELECT doc_id, text, lang, source, n_chars FROM documents WHERE doc_id = 42",
-
-    "list_page" ->
-      """SELECT doc_id, lang, source, n_chars FROM documents
-        |ORDER BY doc_id DESC LIMIT 10 OFFSET 5""".stripMargin,
-
-    "list_page_text" ->
-      """SELECT doc_id, lang, source, n_chars,
-        |  CASE WHEN length(text) > 100 THEN substr(text, 1, 100) || '...' ELSE text END AS display_text,
-        |  CAST(length(text) AS BIGINT) AS full_text_length
-        |FROM documents ORDER BY doc_id DESC LIMIT 10 OFFSET 5""".stripMargin,
-
-    "delete_docs" ->
-      """SELECT doc_id, text, lang, source, n_chars FROM documents
-        |WHERE doc_id NOT IN (1,2,3,5,8,13,21,34) ORDER BY doc_id""".stripMargin,
-
-    "insert_append" ->
-      """SELECT (SELECT MAX(doc_id) FROM documents) + ROW_NUMBER() OVER (ORDER BY text) AS id, text
-        |FROM documents WHERE source = 'src1' ORDER BY id""".stripMargin,
-
-    "stats_table" ->
-      """SELECT COUNT(*) AS n_docs, CAST(SUM(length(text)) AS BIGINT) AS total_chars,
-        |  ROUND(AVG(length(text)), 6) AS avg_chars FROM documents""".stripMargin,
-
-    "json_metadata" ->
-      """SELECT doc_id,
-        |  CAST(to_json(struct_pack(lang := lang, source := source)) AS VARCHAR) AS metadata,
-        |  lang AS lang_rt
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "cosine_scores" ->
-      s"""$scoreVsQ
-         |SELECT vec_id, ROUND(score, 6) AS score FROM sc ORDER BY vec_id""".stripMargin,
-
-    "dot_norm" ->
-      s"""$scoreVsQ
-         |SELECT vec_id, ROUND(dot, 6) AS dot, ROUND(na, 6) AS norm FROM sc ORDER BY vec_id""".stripMargin,
-
-    "topk_cosine" ->
-      s"""$scoreVsQ,
-         |top AS (SELECT vec_id AS doc_id, score FROM sc ORDER BY score DESC, vec_id LIMIT 10)
-         |SELECT t.doc_id, ROUND(t.score, 6) AS score, d.text
-         |FROM top t JOIN documents d ON d.doc_id = t.doc_id
-         |ORDER BY ROUND(t.score, 6) DESC, t.doc_id""".stripMargin,
-
-    "sim_join_topk" ->
-      """WITH s AS (
-        |  SELECT a.vec_id AS q_id, b.vec_id AS c_id,
-        |    SUM(CAST(b.embedding[r.i] AS DOUBLE) * CAST(a.embedding[r.i] AS DOUBLE)) AS dot,
-        |    SQRT(SUM(CAST(a.embedding[r.i] AS DOUBLE) * CAST(a.embedding[r.i] AS DOUBLE))) AS na,
-        |    SQRT(SUM(CAST(b.embedding[r.i] AS DOUBLE) * CAST(b.embedding[r.i] AS DOUBLE))) AS nb
-        |  FROM embeddings a CROSS JOIN embeddings b CROSS JOIN range(1,65) r(i)
-        |  WHERE a.vec_id < 10
-        |  GROUP BY 1, 2
-        |),
-        |sc AS (SELECT q_id, c_id, CASE WHEN na * nb = 0 THEN 0.0 ELSE dot / (na * nb) END AS score FROM s),
-        |rk AS (
-        |  SELECT q_id, c_id, score,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY score DESC, c_id) AS BIGINT) AS "rank"
-        |  FROM sc QUALIFY "rank" <= 3
-        |)
-        |SELECT q_id, c_id, ROUND(score, 6) AS score, "rank" FROM rk ORDER BY q_id, "rank"""".stripMargin,
-
-    "near_dup_pairs" ->
-      """WITH s AS (
-        |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-        |    SUM(CAST(a.embedding[r.i] AS DOUBLE) * CAST(b.embedding[r.i] AS DOUBLE)) AS dot,
-        |    SQRT(SUM(CAST(a.embedding[r.i] AS DOUBLE) * CAST(a.embedding[r.i] AS DOUBLE))) AS na,
-        |    SQRT(SUM(CAST(b.embedding[r.i] AS DOUBLE) * CAST(b.embedding[r.i] AS DOUBLE))) AS nb
-        |  FROM embeddings a JOIN embeddings b
-        |    ON a.vec_id < b.vec_id AND a.vec_id < 200 AND b.vec_id < 200
-        |  CROSS JOIN range(1,65) r(i)
-        |  GROUP BY 1, 2
-        |),
-        |sc AS (SELECT a_id, b_id, CASE WHEN na * nb = 0 THEN 0.0 ELSE dot / (na * nb) END AS score FROM s)
-        |SELECT a_id, b_id, ROUND(score, 6) AS score FROM sc WHERE score > 0.3
-        |ORDER BY a_id, b_id""".stripMargin,
-
-    "exact_dup_sha" ->
-      """WITH u AS (
-        |  SELECT * FROM documents
-        |  UNION ALL SELECT * FROM documents WHERE doc_id < 50
-        |)
-        |SELECT sha256(text) AS text_sha, COUNT(*) AS n_dups, MIN(doc_id) AS keep_id
-        |FROM u GROUP BY 1 HAVING COUNT(*) > 1 ORDER BY keep_id""".stripMargin,
-
-    "jaccard_pairs" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |        FROM documents WHERE doc_id < 60)
-        |),
-        |p AS (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |    len(list_intersect(a.sh, b.sh)) AS common, len(a.sh) AS asz, len(b.sh) AS bsz
-        |  FROM t a JOIN t b ON a.doc_id < b.doc_id
-        |)
-        |SELECT a_id, b_id, ROUND(CAST(common AS DOUBLE) / (asz + bsz - common), 6) AS jaccard
-        |FROM p WHERE CAST(common AS DOUBLE) / (asz + bsz - common) >= 0.05
-        |ORDER BY a_id, b_id""".stripMargin,
-
-    // SimHash pairs, INDEPENDENTLY re-derived (round-11): simhash64's
-    // per-token bits are the first 16 hex digits of md5(token) (two
-    // big-endian 32-bit halves), so DuckDB recomputes every signature
-    // from scratch in SQL and brute-forces the hamming<=12 filter over
-    // the slice. Spark's banded self-join must produce EXACTLY this set
-    // — the oracle independently verifies both the hash portability and
-    // the pigeonhole completeness of the banding.
-    "simhash_pairs" ->
-      """WITH s AS (
-        |  SELECT doc_id,
-        |    list_transform(
-        |      list_filter(regexp_split_to_array(lower(text), '\s+'), x -> x <> ''),
-        |      t -> [('0x' || substr(md5(t), 1, 8))::BIGINT,
-        |            ('0x' || substr(md5(t), 9, 8))::BIGINT]) AS hs
-        |  FROM documents WHERE doc_id < 200),
-        |g AS (
-        |  SELECT doc_id,
-        |    COALESCE(list_sum(list_transform(range(0, 32), b ->
-        |      CASE WHEN COALESCE(list_sum(list_transform(hs, h ->
-        |          CASE WHEN ((h[1] >> b) & 1) = 1 THEN 1 ELSE -1 END)), 0) > 0
-        |        THEN (CAST(1 AS BIGINT) << b) ELSE CAST(0 AS BIGINT) END)), 0) AS sig_lo,
-        |    COALESCE(list_sum(list_transform(range(0, 32), b ->
-        |      CASE WHEN COALESCE(list_sum(list_transform(hs, h ->
-        |          CASE WHEN ((h[2] >> b) & 1) = 1 THEN 1 ELSE -1 END)), 0) > 0
-        |        THEN (CAST(1 AS BIGINT) << b) ELSE CAST(0 AS BIGINT) END)), 0) AS sig_hi
-        |  FROM s)
-        |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |  CAST(bit_count(xor(a.sig_lo, b.sig_lo)) + bit_count(xor(a.sig_hi, b.sig_hi)) AS BIGINT) AS hamming
-        |FROM g a JOIN g b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.sig_lo, b.sig_lo)) + bit_count(xor(a.sig_hi, b.sig_hi)) <= 12
-        |ORDER BY a_id, b_id""".stripMargin,
-
-    // Perceptual dHash near-dup, INDEPENDENTLY re-derived (round-18):
-    // the non-image fallback samples byte ⌊i·n/72⌋ of the payload into a
-    // 9×8 grid and sets bit y·8+x iff grid(y,x+1) > grid(y,x) — pure
-    // integer arithmetic DuckDB replays from hex(encode(text)) (the
-    // multimodal_features byte-access idiom), split into two 32-bit
-    // halves (the simhash_pairs discipline — no bit-63 shift), then
-    // brute-forced over all pairs: signatures, banding COMPLETENESS and
-    // the popcount verify all hash-check against an engine sharing no
-    // code with Spark.
-    "multimodal_near_dup" ->
-      s"""WITH b AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id < 300
-        |  UNION ALL
-        |  SELECT doc_id + 100000 AS doc_id, 'Z' || substr(text, 2) AS text
-        |  FROM documents WHERE doc_id < 300 AND doc_id % 7 = 0),
-        |${dhashSigsCte("b", "")},
-        |allp AS (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |    CAST(bit_count(xor(a.sig_lo, b.sig_lo)) + bit_count(xor(a.sig_hi, b.sig_hi)) AS BIGINT) AS hamming
-        |  FROM sig a JOIN sig b ON a.doc_id < b.doc_id)
-        |SELECT a_id, b_id, hamming FROM allp
-        |WHERE hamming <= 10 ORDER BY a_id, b_id""".stripMargin,
-
-    // Incremental image dedup, INDEPENDENTLY re-derived (round-18): the
-    // corpus index's signatures, the batch's signatures (novel ∪
-    // first-char-flipped re-deliveries), the within-batch pair set, its
-    // transitive closure (the near_dedup_apply_lsh walk), the min-id
-    // survivor pick, and the cross-index Hamming gate — all from raw
-    // bytes in one statement. The emitted survivor id set must be
-    // byte-equal.
-    "multimodal_dedup_incremental" ->
-      s"""WITH RECURSIVE b AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id >= 250 AND doc_id < 325
-        |  UNION ALL
-        |  SELECT doc_id + 200000 AS doc_id, 'Z' || substr(text, 2) AS text
-        |  FROM documents WHERE doc_id < 250 AND doc_id % 9 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 300000 AS doc_id, 'Z' || substr(text, 2) AS text
-        |  FROM documents WHERE doc_id >= 250 AND doc_id < 325 AND doc_id % 11 = 0),
-        |${dhashSigsCte("b", "")},
-        |cb AS (SELECT doc_id, text FROM documents WHERE doc_id < 250),
-        |${dhashSigsCte("cb", "c")},
-        |pr AS (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
-        |  FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-        |  WHERE bit_count(xor(a.sig_lo, b.sig_lo)) + bit_count(xor(a.sig_hi, b.sig_hi)) <= 10),
-        |edges AS (
-        |  SELECT a_id AS src, b_id AS dst FROM pr
-        |  UNION SELECT b_id, a_id FROM pr),
-        |walk AS (
-        |  SELECT src, dst FROM edges
-        |  UNION
-        |  SELECT w.src, e.dst FROM walk w JOIN edges e ON w.dst = e.src),
-        |lab AS (SELECT src AS id, LEAST(src, MIN(dst)) AS group_id FROM walk GROUP BY src),
-        |surv AS (
-        |  SELECT s.doc_id, s.sig_lo, s.sig_hi FROM sig s
-        |  WHERE s.doc_id NOT IN (SELECT id FROM lab WHERE id <> group_id))
-        |SELECT s.doc_id FROM surv s
-        |WHERE NOT EXISTS (
-        |  SELECT 1 FROM csig c
-        |  WHERE bit_count(xor(s.sig_lo, c.sig_lo)) + bit_count(xor(s.sig_hi, c.sig_hi)) <= 10)
-        |ORDER BY doc_id""".stripMargin,
-
-    // The closed multimodal loop, INDEPENDENTLY re-derived (round-18):
-    // the two-wave chain — per-wave signatures, per-wave transitive
-    // closure + min-id survivor, wave-1 gate vs the corpus signatures,
-    // wave-2 gate vs corpus ∪ wave-1 survivors — replayed from raw
-    // bytes in one statement (two recursive walks, the
-    // stream_jaccard_gate_append precedent). Wave membership is
-    // id-range-derivable: wave 1 = [250,287) ∪ [200000,300000), wave 2
-    // = [287,325) ∪ [400000,∞).
-    "stream_image_gate_append" ->
-      s"""WITH RECURSIVE b AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id >= 250 AND doc_id < 325
-        |  UNION ALL
-        |  SELECT doc_id + 200000 AS doc_id, 'Z' || substr(text, 2) AS text
-        |  FROM documents WHERE doc_id < 250 AND doc_id % 9 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 400000 AS doc_id, 'Z' || substr(text, 2) AS text
-        |  FROM documents WHERE doc_id >= 250 AND doc_id < 287 AND doc_id % 5 = 0),
-        |${dhashSigsCte("b", "")},
-        |cb AS (SELECT doc_id, text FROM documents WHERE doc_id < 250),
-        |${dhashSigsCte("cb", "c")},
-        |s1 AS (SELECT * FROM sig
-        |  WHERE (doc_id >= 250 AND doc_id < 287) OR (doc_id >= 200000 AND doc_id < 300000)),
-        |s2 AS (SELECT * FROM sig
-        |  WHERE (doc_id >= 287 AND doc_id < 325) OR doc_id >= 400000),
-        |pr1 AS (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id FROM s1 a JOIN s1 b ON a.doc_id < b.doc_id
-        |  WHERE bit_count(xor(a.sig_lo, b.sig_lo)) + bit_count(xor(a.sig_hi, b.sig_hi)) <= 10),
-        |e1 AS (SELECT a_id AS src, b_id AS dst FROM pr1 UNION SELECT b_id, a_id FROM pr1),
-        |walk1 AS (
-        |  SELECT src, dst FROM e1
-        |  UNION SELECT w.src, e.dst FROM walk1 w JOIN e1 e ON w.dst = e.src),
-        |lab1 AS (SELECT src AS id, LEAST(src, MIN(dst)) AS group_id FROM walk1 GROUP BY src),
-        |surv1 AS (
-        |  SELECT s.doc_id, s.sig_lo, s.sig_hi FROM s1 s
-        |  WHERE s.doc_id NOT IN (SELECT id FROM lab1 WHERE id <> group_id)
-        |    AND NOT EXISTS (SELECT 1 FROM csig c
-        |      WHERE bit_count(xor(s.sig_lo, c.sig_lo)) + bit_count(xor(s.sig_hi, c.sig_hi)) <= 10)),
-        |pr2 AS (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id FROM s2 a JOIN s2 b ON a.doc_id < b.doc_id
-        |  WHERE bit_count(xor(a.sig_lo, b.sig_lo)) + bit_count(xor(a.sig_hi, b.sig_hi)) <= 10),
-        |e2 AS (SELECT a_id AS src, b_id AS dst FROM pr2 UNION SELECT b_id, a_id FROM pr2),
-        |walk2 AS (
-        |  SELECT src, dst FROM e2
-        |  UNION SELECT w.src, e.dst FROM walk2 w JOIN e2 e ON w.dst = e.src),
-        |lab2 AS (SELECT src AS id, LEAST(src, MIN(dst)) AS group_id FROM walk2 GROUP BY src),
-        |surv2 AS (
-        |  SELECT s.doc_id FROM s2 s
-        |  WHERE s.doc_id NOT IN (SELECT id FROM lab2 WHERE id <> group_id)
-        |    AND NOT EXISTS (SELECT 1 FROM csig c
-        |      WHERE bit_count(xor(s.sig_lo, c.sig_lo)) + bit_count(xor(s.sig_hi, c.sig_hi)) <= 10)
-        |    AND NOT EXISTS (SELECT 1 FROM surv1 v
-        |      WHERE bit_count(xor(s.sig_lo, v.sig_lo)) + bit_count(xor(s.sig_hi, v.sig_hi)) <= 10))
-        |SELECT doc_id FROM surv1
-        |UNION ALL SELECT doc_id FROM surv2
-        |ORDER BY doc_id""".stripMargin,
-
-    // Banded-index lifecycle gate (round-19): ground truth is just "is
-    // the probe's signature within Hamming 10 of ANY indexed signature"
-    // — the index after the append+compact holds docs < 287, so DuckDB
-    // replays both probes' verdicts from raw bytes with no knowledge of
-    // the tail/main split, the compaction, or the gate's cost-based
-    // path choice. If compaction lost a signature or a pruned read
-    // skipped a colliding bucket, a dup id would go missing here.
-    "multimodal_gate_compacted" ->
-      s"""WITH idx AS (SELECT doc_id, text FROM documents WHERE doc_id < 287),
-        |${dhashSigsCte("idx", "c")},
-        |bp AS (
-        |  SELECT doc_id + 400000 AS doc_id, 'Z' || substr(text, 2) AS text
-        |  FROM documents WHERE doc_id >= 250 AND doc_id < 287 AND doc_id % 5 = 0
-        |  UNION ALL
-        |  SELECT doc_id, text FROM documents WHERE doc_id >= 287 AND doc_id < 300),
-        |${dhashSigsCte("bp", "")},
-        |sp AS (
-        |  SELECT doc_id + 500000 AS doc_id, 'Z' || substr(text, 2) AS text
-        |  FROM documents WHERE doc_id = 252
-        |  UNION ALL
-        |  SELECT doc_id, text FROM documents WHERE doc_id = 320),
-        |${dhashSigsCte("sp", "s")}
-        |SELECT * FROM (
-        |  SELECT 'big' AS probe, b.doc_id FROM sig b
-        |  WHERE EXISTS (SELECT 1 FROM csig c
-        |    WHERE bit_count(xor(b.sig_lo, c.sig_lo)) + bit_count(xor(b.sig_hi, c.sig_hi)) <= 10)
-        |  UNION ALL
-        |  SELECT 'small' AS probe, s.doc_id FROM ssig s
-        |  WHERE EXISTS (SELECT 1 FROM csig c
-        |    WHERE bit_count(xor(s.sig_lo, c.sig_lo)) + bit_count(xor(s.sig_hi, c.sig_hi)) <= 10))
-        |ORDER BY probe, doc_id""".stripMargin,
-
-    // DELETE-lifecycle gate (round-20): ground truth is "within Hamming
-    // 10 of any SURVIVING indexed signature" — the index holds docs
-    // < 287 minus the deleted id sets (every 10th id below 250, every
-    // 3rd in [250, 287)); DuckDB replays both probes' verdicts from raw
-    // bytes with no knowledge of tombstones, the merge-on-read
-    // anti-join, or the physical fold, and the two phases (tombstoned,
-    // compacted) must agree row-for-row.
-    "multimodal_delete_parity" ->
-      s"""WITH idx AS (
-        |  SELECT doc_id, text FROM documents
-        |  WHERE doc_id < 287
-        |    AND NOT (doc_id < 250 AND doc_id % 10 = 0)
-        |    AND NOT (doc_id >= 250 AND doc_id % 3 = 0)),
-        |${dhashSigsCte("idx", "c")},
-        |bp AS (
-        |  SELECT doc_id + 600000 AS doc_id, 'Z' || substr(text, 2) AS text
-        |  FROM documents WHERE doc_id >= 240 AND doc_id < 287
-        |  UNION ALL
-        |  SELECT doc_id, text FROM documents WHERE doc_id >= 287 AND doc_id < 300),
-        |${dhashSigsCte("bp", "")},
-        |sp AS (
-        |  SELECT doc_id + 700000 AS doc_id, 'Z' || substr(text, 2) AS text
-        |  FROM documents WHERE doc_id IN (240, 241)),
-        |${dhashSigsCte("sp", "s")},
-        |verd AS (
-        |  SELECT 'big' AS probe, b.doc_id FROM sig b
-        |  WHERE EXISTS (SELECT 1 FROM csig c
-        |    WHERE bit_count(xor(b.sig_lo, c.sig_lo)) + bit_count(xor(b.sig_hi, c.sig_hi)) <= 10)
-        |  UNION ALL
-        |  SELECT 'small' AS probe, s.doc_id FROM ssig s
-        |  WHERE EXISTS (SELECT 1 FROM csig c
-        |    WHERE bit_count(xor(s.sig_lo, c.sig_lo)) + bit_count(xor(s.sig_hi, c.sig_hi)) <= 10))
-        |SELECT phase, probe, doc_id FROM (
-        |  SELECT 'tomb' AS phase, probe, doc_id FROM verd
-        |  UNION ALL
-        |  SELECT 'compacted' AS phase, probe, doc_id FROM verd)
-        |ORDER BY phase, probe, doc_id""".stripMargin,
-
-    // MinHash pairs, INDEPENDENTLY re-derived (round-11): the portable
-    // variant's whole hash family is md5 — shingle base-hash = first 7
-    // hex digits of md5(shingle) (28-bit), permutation p = affine map
-    // with constants hex7("perm-a:p")|1 / hex7("perm-b:p") mod 2^28 — so
-    // DuckDB re-derives every signature, every candidate bucket
-    // collision, and the exact-Jaccard verify from scratch in SQL. The
-    // emitted pair set (candidates ∩ jaccard >= 0.5) must be byte-equal.
-    "minhash_pairs" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '')) AS sh
-        |  FROM documents WHERE doc_id < 100),
-        |hv AS (
-        |  SELECT doc_id, sh,
-        |    list_transform(sh, x -> ('0x' || substr(md5(x), 1, 7))::BIGINT) AS hs
-        |  FROM t WHERE len(sh) > 0),
-        |sig AS (
-        |  SELECT doc_id, p.p AS perm,
-        |    list_min(list_transform(hs, y ->
-        |      ((('0x' || substr(md5('perm-a:' || p.p), 1, 7))::BIGINT | 1) * y
-        |       + ('0x' || substr(md5('perm-b:' || p.p), 1, 7))::BIGINT) % 268435456)) AS sig
-        |  FROM hv CROSS JOIN (SELECT UNNEST(range(0, 8)) AS p) p),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-        |  FROM sig a JOIN sig b ON a.perm = b.perm AND a.sig = b.sig AND a.doc_id < b.doc_id),
-        |j AS (
-        |  SELECT c.a_id, c.b_id,
-        |    len(list_intersect(ta.sh, tb.sh)) AS common, len(ta.sh) AS asz, len(tb.sh) AS bsz
-        |  FROM cand c JOIN t ta ON ta.doc_id = c.a_id JOIN t tb ON tb.doc_id = c.b_id)
-        |SELECT a_id, b_id, ROUND(CAST(common AS DOUBLE) / (asz + bsz - common), 6) AS jaccard
-        |FROM j WHERE CAST(common AS DOUBLE) / (asz + bsz - common) >= 0.5
-        |ORDER BY a_id, b_id""".stripMargin,
-
-    // LSH embedding near-dup, INDEPENDENTLY re-derived (round-11): the
-    // md5 hyperplanes (see lshSigsCte) let DuckDB rebuild every bucket of
-    // the 12-table/4-bit index from scratch, band-join candidates, and
-    // exact-cosine-verify them — the complete seeded-LSH pipeline
-    // hash-checked against an engine that shares no code with Spark.
-    "near_dup_lsh" ->
-      s"""WITH ${lshSigsCte(nTables = 12, nBits = 4)},
-         |cand AS (
-         |  SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
-         |  FROM sigs a JOIN sigs b
-         |    ON a.t = b.t AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
-         |$pairCosineCte
-         |SELECT a_id, b_id, ROUND(score, 6) AS score
-         |FROM scored WHERE score > 0.3
-         |ORDER BY a_id, b_id""".stripMargin,
-
-    // Same pipeline + connected components (the near_dedup_apply walk) +
-    // survivor drop — the full embedding-space near-dedup END-TO-END
-    // re-derived in one SQL statement.
-    "near_dedup_apply_lsh" ->
-      s"""WITH RECURSIVE ${lshSigsCte(nTables = 12, nBits = 4)},
-         |cand AS (
-         |  SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
-         |  FROM sigs a JOIN sigs b
-         |    ON a.t = b.t AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
-         |$pairCosineCte,
-         |pr AS (SELECT a_id, b_id FROM scored WHERE score > 0.3),
-         |edges AS (
-         |  SELECT a_id AS src, b_id AS dst FROM pr
-         |  UNION SELECT b_id, a_id FROM pr),
-         |walk AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT w.src, e.dst FROM walk w JOIN edges e ON w.dst = e.src),
-         |lab AS (SELECT src AS id, LEAST(src, MIN(dst)) AS group_id FROM walk GROUP BY src)
-         |SELECT vec_id FROM embeddings
-         |WHERE vec_id NOT IN (SELECT id FROM lab WHERE id <> group_id)
-         |ORDER BY vec_id""".stripMargin,
-
-    // The persisted-index probe re-derived from scratch: query bucket per
-    // table from the md5 planes, candidate union across the 16 tables,
-    // exact-cosine rank, (score DESC, id) tie-break, k=10. Max-score
-    // dedup is a no-op in SQL (DISTINCT ids carry one vector each).
-    "ann_topk" ->
-      s"""WITH ${lshSigsCte(nTables = 16, nBits = 6)},
-         |qb AS (SELECT t, bucket FROM sigs WHERE vec_id = 0),
-         |cand AS (
-         |  SELECT DISTINCT s.vec_id AS id
-         |  FROM sigs s JOIN qb ON s.t = qb.t AND s.bucket = qb.bucket),
-         |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-         |sc AS (
-         |  SELECT c.id,
-         |    SUM(CAST(e.embedding[r.i] AS DOUBLE) * CAST(q.qe[r.i] AS DOUBLE)) AS dot,
-         |    SQRT(SUM(CAST(e.embedding[r.i] AS DOUBLE) * CAST(e.embedding[r.i] AS DOUBLE))) AS na,
-         |    SQRT(SUM(CAST(q.qe[r.i] AS DOUBLE) * CAST(q.qe[r.i] AS DOUBLE))) AS nb
-         |  FROM cand c JOIN embeddings e ON e.vec_id = c.id
-         |  CROSS JOIN q CROSS JOIN range(1, 65) r(i)
-         |  GROUP BY c.id),
-         |ranked AS (
-         |  SELECT id, CASE WHEN na * nb = 0 THEN 0.0 ELSE dot / (na * nb) END AS score
-         |  FROM sc ORDER BY score DESC, id LIMIT 10)
-         |SELECT id, ROUND(score, 6) AS score FROM ranked
-         |ORDER BY score DESC, id""".stripMargin,
-
-    // ann_topk's derivation with the tombstoned ids excluded from the
-    // candidate set — everything else (planes, buckets, exact rerank,
-    // tie-break) identical.
-    "ann_delete_parity" ->
-      s"""WITH ${lshSigsCte(nTables = 16, nBits = 6)},
-         |qb AS (SELECT t, bucket FROM sigs WHERE vec_id = 0),
-         |cand AS (
-         |  SELECT DISTINCT s.vec_id AS id
-         |  FROM sigs s JOIN qb ON s.t = qb.t AND s.bucket = qb.bucket
-         |  WHERE s.vec_id >= 50),
-         |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-         |sc AS (
-         |  SELECT c.id,
-         |    SUM(CAST(e.embedding[r.i] AS DOUBLE) * CAST(q.qe[r.i] AS DOUBLE)) AS dot,
-         |    SQRT(SUM(CAST(e.embedding[r.i] AS DOUBLE) * CAST(e.embedding[r.i] AS DOUBLE))) AS na,
-         |    SQRT(SUM(CAST(q.qe[r.i] AS DOUBLE) * CAST(q.qe[r.i] AS DOUBLE))) AS nb
-         |  FROM cand c JOIN embeddings e ON e.vec_id = c.id
-         |  CROSS JOIN q CROSS JOIN range(1, 65) r(i)
-         |  GROUP BY c.id),
-         |ranked AS (
-         |  SELECT id, CASE WHEN na * nb = 0 THEN 0.0 ELSE dot / (na * nb) END AS score
-         |  FROM sc ORDER BY score DESC, id LIMIT 10)
-         |SELECT id, ROUND(score, 6) AS score FROM ranked
-         |ORDER BY score DESC, id""".stripMargin,
-
-    // The streaming serving join's exact emitted set: every (query <20,
-    // candidate) pair colliding in any of the 16 tables whose exact
-    // cosine clears 0.5 — stream-static join semantics are micro-batch
-    // invariant, so the sink equals this batch-derivable set (StreamsSpec
-    // additionally pins stream == batch on the engine side).
-    "stream_ann_probe" -> streamAnnProbeOracle,
-
-    // The watermarked (bounded-state) form emits the identical pair set
-    // on this replay — each q_id arrives once, so every cross-table
-    // duplicate lands in one micro-batch, well inside the 365-day
-    // horizon. Same oracle, independently proving the
-    // dropDuplicatesWithinWatermark rewrite preserved semantics.
-    "stream_ann_probe_wm" -> streamAnnProbeOracle,
-
-    // The composed hygiene pipeline, replayed stage-for-stage as one CTE
-    // cascade: synthetic-dup ingest → chunk (= Java-trim on this
-    // single-paragraph fixture) → exact dedup (min id per distinct chunk)
-    // → drop eval docs + decontaminate against them (distinct shared
-    // bigrams >= 3) → token/embedding invariants + md5-bucket split. Each
-    // fragment is lifted verbatim from the already-green per-stage oracle
-    // (chunk_single, exact_dup_sha, decontaminate, token_count,
-    // embed_hash, split_assign).
-    "pipeline_hygiene" ->
-      """WITH raw AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 10000 AS doc_id, text FROM documents WHERE doc_id < 50
-        |),
-        |ch AS (
-        |  SELECT doc_id, trim(text, ' ' || chr(9) || chr(10) || chr(13)) AS chunk FROM raw
-        |),
-        |ded AS (SELECT MIN(doc_id) AS doc_id, chunk FROM ch GROUP BY chunk),
-        |corp AS (SELECT doc_id, chunk FROM ded WHERE doc_id >= 10),
-        |cs AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(chunk), '\s+') AS toks FROM corp)
-        |),
-        |ps AS (
-        |  SELECT doc_id AS probe_id,
-        |    list_distinct(list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |        FROM documents WHERE doc_id < 10)
-        |),
-        |contam AS (
-        |  SELECT DISTINCT cs.doc_id FROM cs CROSS JOIN ps
-        |  WHERE len(list_intersect(cs.sh, ps.sh)) >= 3
-        |),
-        |clean AS (
-        |  SELECT doc_id, chunk FROM corp
-        |  WHERE doc_id NOT IN (SELECT doc_id FROM contam)
-        |)
-        |SELECT doc_id,
-        |  CASE WHEN trim(chunk) = '' THEN 0
-        |       ELSE CAST(len(regexp_split_to_array(trim(chunk), '\s+')) AS BIGINT) END AS n_tokens,
-        |  CAST(64 AS BIGINT) AS dim,
-        |  CAST(CASE WHEN regexp_matches(lower(chunk), '[a-z0-9]') THEN 1 ELSE 0 END AS BIGINT) AS unit_norm,
-        |  CASE WHEN b < 8000 THEN 'train' WHEN b < 9000 THEN 'val' ELSE 'test' END AS split
-        |FROM (SELECT doc_id, chunk,
-        |        ('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10000 AS b
-        |      FROM clean)
-        |ORDER BY doc_id""".stripMargin,
-
-    // Pairs → groups: rebuild the jaccard_pairs edge set, symmetrize, walk
-    // the transitive closure with a recursive CTE (UNION dedups, so the
-    // walk terminates on the fixed node set), then label every node with
-    // the min over itself and everything reachable — the component min,
-    // exactly nearDupGroups' converged label.
-    "near_dup_groups" ->
-      """WITH RECURSIVE
-        |t AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |        FROM documents WHERE doc_id < 200)
-        |),
-        |pr AS (
-        |  SELECT a_id, b_id FROM (
-        |    SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |      len(list_intersect(a.sh, b.sh)) AS common, len(a.sh) AS asz, len(b.sh) AS bsz
-        |    FROM t a JOIN t b ON a.doc_id < b.doc_id)
-        |  WHERE CAST(common AS DOUBLE) / (asz + bsz - common) >= 0.09
-        |),
-        |edges AS (
-        |  SELECT a_id AS src, b_id AS dst FROM pr
-        |  UNION SELECT b_id, a_id FROM pr
-        |),
-        |walk AS (
-        |  SELECT src, dst FROM edges
-        |  UNION
-        |  SELECT w.src, e.dst FROM walk w JOIN edges e ON w.dst = e.src
-        |),
-        |lab AS (SELECT src AS id, LEAST(src, MIN(dst)) AS group_id FROM walk GROUP BY src)
-        |SELECT id, group_id,
-        |  CAST(COUNT(*) OVER (PARTITION BY group_id) AS BIGINT) AS group_size
-        |FROM lab ORDER BY id""".stripMargin,
-
-    // Apply the survivor pick: same transitive closure, then the slice
-    // minus every node whose converged label is not itself.
-    "near_dedup_apply" ->
-      """WITH RECURSIVE
-        |t AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |        FROM documents WHERE doc_id < 200)
-        |),
-        |pr AS (
-        |  SELECT a_id, b_id FROM (
-        |    SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |      len(list_intersect(a.sh, b.sh)) AS common, len(a.sh) AS asz, len(b.sh) AS bsz
-        |    FROM t a JOIN t b ON a.doc_id < b.doc_id)
-        |  WHERE CAST(common AS DOUBLE) / (asz + bsz - common) >= 0.09
-        |),
-        |edges AS (
-        |  SELECT a_id AS src, b_id AS dst FROM pr
-        |  UNION SELECT b_id, a_id FROM pr
-        |),
-        |walk AS (
-        |  SELECT src, dst FROM edges
-        |  UNION
-        |  SELECT w.src, e.dst FROM walk w JOIN edges e ON w.dst = e.src
-        |),
-        |lab AS (SELECT src AS id, LEAST(src, MIN(dst)) AS group_id FROM walk GROUP BY src)
-        |SELECT doc_id, lang, source
-        |FROM documents
-        |WHERE doc_id < 200
-        |  AND doc_id NOT IN (SELECT id FROM lab WHERE id <> group_id)
-        |ORDER BY doc_id""".stripMargin,
-
-    // Same transitive closure, survivor = argmax(ROUND(quality,6), then
-    // min id) per component — quality CTEs copied verbatim from the
-    // quality_score oracle (its hash row pins cross-engine equality of
-    // the rounded values, so the equality join on q = mq is exact).
-    "near_dedup_apply_best" ->
-      """WITH RECURSIVE
-        |t AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |        FROM documents WHERE doc_id < 200)
-        |),
-        |pr AS (
-        |  SELECT a_id, b_id FROM (
-        |    SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |      len(list_intersect(a.sh, b.sh)) AS common, len(a.sh) AS asz, len(b.sh) AS bsz
-        |    FROM t a JOIN t b ON a.doc_id < b.doc_id)
-        |  WHERE CAST(common AS DOUBLE) / (asz + bsz - common) >= 0.09
-        |),
-        |edges AS (
-        |  SELECT a_id AS src, b_id AS dst FROM pr
-        |  UNION SELECT b_id, a_id FROM pr
-        |),
-        |walk AS (
-        |  SELECT src, dst FROM edges
-        |  UNION
-        |  SELECT w.src, e.dst FROM walk w JOIN edges e ON w.dst = e.src
-        |),
-        |lab AS (SELECT src AS id, LEAST(src, MIN(dst)) AS group_id FROM walk GROUP BY src),
-        |qt0 AS (
-        |  SELECT doc_id, text,
-        |    regexp_split_to_array(trim(lower(text)), '\s+') AS tok,
-        |    CASE WHEN trim(text) = '' THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS ntok,
-        |    CAST(length(text) AS DOUBLE) AS len
-        |  FROM documents WHERE doc_id < 200
-        |),
-        |qt1 AS (
-        |  SELECT doc_id,
-        |    LEAST(len / 200.0, 1.0) AS len_score,
-        |    LEAST(ntok / 40.0, 1.0) AS tok_score,
-        |    GREATEST(1.0 - (CASE WHEN len = 0 THEN 0.0
-        |      ELSE (len - length(regexp_replace(text, '[^a-zA-Z0-9\s]', '', 'g'))) / len END) * 4.0, 0.0) AS punct_score,
-        |    LEAST((CASE WHEN ntok = 0 THEN 0.0
-        |      ELSE len(list_filter(tok, x -> x IN ('the','a','an','and','of','to','in','is','it','for','on','with'))) / CAST(ntok AS DOUBLE) END) * 5.0, 1.0) AS stop_score
-        |  FROM qt0
-        |),
-        |qt AS (SELECT doc_id, ROUND((len_score + tok_score + punct_score + stop_score) / 4.0, 6) AS q FROM qt1),
-        |mq AS (SELECT l.group_id, MAX(q.q) AS mq FROM lab l JOIN qt q ON q.doc_id = l.id GROUP BY l.group_id),
-        |win AS (
-        |  SELECT l.group_id, MIN(l.id) AS keep_id
-        |  FROM lab l JOIN qt q ON q.doc_id = l.id
-        |  JOIN mq ON mq.group_id = l.group_id AND q.q = mq.mq
-        |  GROUP BY l.group_id),
-        |losers AS (
-        |  SELECT l.id FROM lab l JOIN win w ON w.group_id = l.group_id
-        |  WHERE l.id <> w.keep_id)
-        |SELECT doc_id, lang, source
-        |FROM documents
-        |WHERE doc_id < 200 AND doc_id NOT IN (SELECT id FROM losers)
-        |ORDER BY doc_id""".stripMargin,
-
-    // single-paragraph texts (no blank lines in the fixture) → exactly one
-    // chunk = trimmed text; the greedy path is unit-tested, not oracled.
-    // trim char set matches Java String.trim (space/tab/LF/CR), not
-    // DuckDB's space-only default.
-    "chunk_single" ->
-      """SELECT doc_id, CAST(0 AS BIGINT) AS chunk_index, CAST(1 AS BIGINT) AS total_chunks,
-        |  trim(text, ' ' || chr(9) || chr(10) || chr(13)) AS chunk
-        |FROM documents ORDER BY doc_id, chunk_index""".stripMargin,
-
-    // Greedy packing oracle: a recursive CTE that replays the reference
-    // algorithm (vectolite.py:389-403) paragraph by paragraph — flush when
-    // len(cur)+len(para)+2 > max_chars(80), seed the next chunk with the
-    // last overlap(10) chars of the UNTRIMMED buffer when len(cur)>overlap.
-    // Paragraphs here are words (the declared query rewrites ' '→'\n\n').
-    // Java trim charset (space/tab/LF/CR) spelled out, as in chunk_single.
-    "chunk_greedy" ->
-      """WITH RECURSIVE
-        |w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |pn AS (
-        |  SELECT doc_id, ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY g.i) AS i,
-        |    trim(ws[g.i], ' ' || chr(9) || chr(10) || chr(13)) AS para
-        |  FROM w, LATERAL (SELECT unnest(generate_series(1, len(ws))) AS i) g
-        |  WHERE len(trim(ws[g.i], ' ' || chr(9) || chr(10) || chr(13))) > 0
-        |),
-        |rec AS (
-        |  SELECT doc_id, i, para AS cur, CAST(NULL AS VARCHAR) AS flushed
-        |  FROM pn WHERE i = 1
-        |  UNION ALL
-        |  SELECT r.doc_id, p.i,
-        |    CASE WHEN len(r.cur) + len(p.para) + 2 > 80
-        |         THEN CASE WHEN len(r.cur) > 10
-        |                   THEN substr(r.cur, len(r.cur) - 10 + 1) || chr(10) || chr(10) || p.para
-        |                   ELSE p.para END
-        |         ELSE r.cur || chr(10) || chr(10) || p.para END AS cur,
-        |    CASE WHEN len(r.cur) + len(p.para) + 2 > 80
-        |         THEN trim(r.cur, ' ' || chr(9) || chr(10) || chr(13)) ELSE NULL END AS flushed
-        |  FROM rec r JOIN pn p ON p.doc_id = r.doc_id AND p.i = r.i + 1
-        |),
-        |emitted AS (
-        |  SELECT doc_id, i, flushed AS chunk FROM rec WHERE flushed IS NOT NULL
-        |  UNION ALL
-        |  SELECT r.doc_id, r.i + 1, trim(r.cur, ' ' || chr(9) || chr(10) || chr(13)) AS chunk
-        |  FROM rec r JOIN (SELECT doc_id, MAX(i) AS mi FROM rec GROUP BY doc_id) m
-        |    ON r.doc_id = m.doc_id AND r.i = m.mi
-        |)
-        |SELECT doc_id,
-        |  CAST(ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY i) - 1 AS BIGINT) AS chunk_index,
-        |  CAST(COUNT(*) OVER (PARTITION BY doc_id) AS BIGINT) AS total_chunks,
-        |  chunk
-        |FROM emitted ORDER BY doc_id, chunk_index""".stripMargin,
-
-    // single-paragraph fixture text → 1 chunk per doc; ids continue after
-    // the seed (10000), ordered by (doc_id, chunk_index) like the
-    // reference's sequential insert loop (vectolite.py:521-525).
-    "ingest_pipeline" ->
-      """SELECT 10000 + ROW_NUMBER() OVER (ORDER BY doc_id) AS id, doc_id,
-        |  CAST(0 AS BIGINT) AS chunk_index, CAST(1 AS BIGINT) AS total_chunks,
-        |  CAST(to_json(struct_pack(source := source, chunk_index := 0, total_chunks := 1)) AS VARCHAR) AS metadata,
-        |  trim(text, ' ' || chr(9) || chr(10) || chr(13)) AS chunk
-        |FROM documents ORDER BY id""".stripMargin,
-
-    // guard: DuckDB splits '' into [''] (1 token) while the engine's
-    // tokenizer filters empties — blank text must count 0 on both sides.
-    "token_count" ->
-      """SELECT doc_id,
-        |  CASE WHEN trim(text) = '' THEN 0
-        |       ELSE CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) END AS n_tokens,
-        |  CASE WHEN trim(text) = '' THEN 0
-        |       ELSE CAST(list_sum(list_transform(regexp_split_to_array(trim(text), '\s+'),
-        |            x -> GREATEST(CAST(CEIL(length(x) / 4.0) AS BIGINT), 1))) AS BIGINT) END AS approx_subwords
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // ntok mirrors the engine tokenizer (blank text → 0, not ['']); the
-    // len=0 / ntok=0 guards reproduce the Column implementation's
-    // when(...) branches (punct ratio 0 and stopword ratio 0 for blanks).
-    "quality_score" ->
-      """WITH t AS (
-        |  SELECT doc_id, text,
-        |    regexp_split_to_array(trim(lower(text)), '\s+') AS tok,
-        |    CASE WHEN trim(text) = '' THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS ntok,
-        |    CAST(length(text) AS DOUBLE) AS len
-        |  FROM documents
-        |),
-        |c AS (
-        |  SELECT doc_id,
-        |    LEAST(len / 200.0, 1.0) AS len_score,
-        |    LEAST(ntok / 40.0, 1.0) AS tok_score,
-        |    GREATEST(1.0 - (CASE WHEN len = 0 THEN 0.0
-        |      ELSE (len - length(regexp_replace(text, '[^a-zA-Z0-9\s]', '', 'g'))) / len END) * 4.0, 0.0) AS punct_score,
-        |    LEAST((CASE WHEN ntok = 0 THEN 0.0
-        |      ELSE len(list_filter(tok, x -> x IN ('the','a','an','and','of','to','in','is','it','for','on','with'))) / CAST(ntok AS DOUBLE) END) * 5.0, 1.0) AS stop_score
-        |  FROM t
-        |)
-        |SELECT doc_id, ROUND((len_score + tok_score + punct_score + stop_score) / 4.0, 6) AS quality
-        |FROM c ORDER BY doc_id""".stripMargin,
-
-    "lang_id" ->
-      s"""WITH t AS (
-         |  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS tok FROM documents
-         |)
-         |SELECT doc_id, $langCase AS lang_guess FROM t ORDER BY doc_id""".stripMargin,
-
-    "doc_fingerprint" ->
-      """SELECT doc_id,
-        |  md5(array_to_string(list_sort(list_distinct(regexp_split_to_array(trim(lower(text)), '\s+')))[1:8], ' ')) AS fp
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "text_stats" ->
-      """SELECT lang, source, COUNT(*) AS n_docs,
-        |  CAST(SUM(length(text)) AS BIGINT) AS total_chars,
-        |  ROUND(AVG(length(text)), 6) AS avg_chars,
-        |  CAST(SUM(CASE WHEN trim(text) = '' THEN 0
-        |           ELSE len(regexp_split_to_array(trim(text), '\s+')) END) AS BIGINT) AS total_tokens
-        |FROM documents GROUP BY lang, source ORDER BY lang, source""".stripMargin,
-
-    // exact decimal sums mirror Streams.eventsWindowAgg; avg uses the
-    // FLOOR(x*1e6+0.5)/1e6 construction because engine ROUND builtins
-    // disagree on near-half binary doubles
-    "events_window" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-        |  event_type, COUNT(*) AS n_events,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value,
-        |  FLOOR(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) * 1e6 + 0.5) / 1e6 AS avg_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "events_window_stream" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-        |  event_type, COUNT(*) AS n_events,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value,
-        |  FLOOR(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) * 1e6 + 0.5) / 1e6 AS avg_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // batch twin of the streaming score+filter: identical cosine CTE as
-    // cosine_scores, threshold applied to the UNROUNDED score (nearest
-    // fixture score is >1e-3 from the 0.2 boundary at every sf checked).
-    "stream_sim_filter" ->
-      s"""$scoreVsQ
-         |SELECT vec_id, ROUND(score, 6) AS score FROM sc WHERE score > 0.2
-         |ORDER BY vec_id""".stripMargin,
-
-    // each event lands in exactly two 1h/30m sliding windows: starts at
-    // time_bucket(30m, ts) and 30 minutes earlier.
-    "events_sliding" ->
-      """WITH cand AS (
-        |  SELECT time_bucket(INTERVAL '30 minutes', ts) - k.s * INTERVAL '30 minutes' AS ws,
-        |         event_type, value
-        |  FROM events CROSS JOIN (VALUES (0), (1)) k(s)
-        |)
-        |SELECT strftime(ws, '%Y-%m-%d %H:%M:%S') AS window_start, event_type,
-        |  COUNT(*) AS n_events,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        |FROM cand GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "cube_agg" ->
-      """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS BIGINT) AS sum_qty
-        |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-
-    "median_agg" ->
-      """SELECT l_returnflag,
-        |  ROUND(quantile_cont(l_extendedprice, 0.5), 6) AS median_price,
-        |  ROUND(quantile_cont(l_quantity, 0.5), 6) AS median_qty
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    // Exact percentiles recomputed (quantile_cont == Spark's interpolated
-    // percentile — proven by median_agg); the sketch verdicts are pinned
-    // constant TRUE.
-    "approx_quantiles" ->
-      """SELECT
-        |  ROUND(quantile_cont(l_extendedprice, 0.5), 6) AS p50_exact,
-        |  ROUND(quantile_cont(l_extendedprice, 0.9), 6) AS p90_exact,
-        |  TRUE AS p50_ok, TRUE AS p90_ok
-        |FROM lineitem""".stripMargin,
-
-    "sessionize" ->
-      """WITH s AS (
-        |  SELECT user_id, ts, event_id,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-        |         THEN 1 ELSE 0 END AS new_s
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |),
-        |g AS (
-        |  SELECT user_id,
-        |    SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS session_seq
-        |  FROM s
-        |),
-        |c AS (SELECT user_id, session_seq, COUNT(*) AS n_events FROM g GROUP BY 1, 2)
-        |SELECT user_id, COUNT(*) AS n_sessions, ROUND(AVG(n_events), 6) AS avg_events_per_session
-        |FROM c GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    // the stateful sessionizer emits only CLOSED sessions: the window
-    // construction of `sessionize`, minus each user's last (max
-    // session_seq) session, which is still open when the stream ends.
-    "sessionize_stateful" ->
-      """WITH s AS (
-        |  SELECT user_id, ts, event_id,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-        |         THEN 1 ELSE 0 END AS new_s
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |),
-        |g AS (
-        |  SELECT user_id,
-        |    SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS session_seq
-        |  FROM s
-        |),
-        |c AS (SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq, COUNT(*) AS n_events
-        |      FROM g GROUP BY 1, 2)
-        |SELECT user_id, session_seq, n_events FROM c
-        |QUALIFY session_seq < MAX(session_seq) OVER (PARTITION BY user_id)
-        |ORDER BY user_id, session_seq""".stripMargin,
-
-    // The expiring form: same session assignment, but a FINAL session also
-    // emits when its gap boundary (last event + 30 min, ms-floored the way
-    // the engine arms the event-time alarm) lies before the final
-    // watermark (global max ts, delay 0). No fixture user sits within
-    // 1 ms of the boundary, so comparison strictness cannot flip a row.
-    "sessionize_stateful_exp" ->
-      """WITH s AS (
-        |  SELECT user_id, ts, event_id,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-        |         THEN 1 ELSE 0 END AS new_s
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |),
-        |g AS (
-        |  SELECT user_id, ts,
-        |    SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS session_seq
-        |  FROM s
-        |),
-        |c AS (SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq, COUNT(*) AS n_events,
-        |             MAX(ts) AS last_ts
-        |      FROM g GROUP BY 1, 2),
-        |m AS (SELECT MAX(ts) AS maxts FROM events)
-        |SELECT user_id, session_seq, n_events FROM c CROSS JOIN m
-        |QUALIFY session_seq < MAX(session_seq) OVER (PARTITION BY user_id)
-        |     OR epoch_us(last_ts) // 1000 + 1800000 < epoch_us(maxts) // 1000
-        |ORDER BY user_id, session_seq""".stripMargin,
-
-    "events_setops" ->
-      """SELECT DISTINCT user_id FROM events
-        |  WHERE event_type = 'purchase' AND ts < TIMESTAMP '2024-01-02 00:00:00'
-        |EXCEPT
-        |SELECT DISTINCT user_id FROM events
-        |  WHERE event_type = 'error' AND ts < TIMESTAMP '2024-01-02 00:00:00'
-        |ORDER BY user_id""".stripMargin,
-
-    "json_props" ->
-      """SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS BIGINT) AS sum_qty,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
-        |  FLOOR(CAST(SUM(CAST(l_discount AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) * 1e6 + 0.5) / 1e6 AS avg_disc,
-        |  COUNT(*) AS n
-        |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "join_agg" ->
-      """SELECT c_mktsegment, COUNT(*) AS n_orders,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "price_histogram" ->
-      """SELECT CAST(FLOOR(o_totalprice / 50000) AS BIGINT) AS bucket, COUNT(*) AS n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS bucket_total
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "string_funcs" ->
-      """SELECT doc_id, upper(lang) AS lang_up, lpad(source, 8, '_') AS src_pad,
-        |  reverse(lang) AS lang_rev, regexp_replace(source, 'src', 's', 'g') AS src_short,
-        |  lang || '|' || source AS combo
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "window_topn" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice,
-        |  CAST(ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS BIGINT) AS rn
-        |FROM orders WHERE o_custkey < 50
-        |QUALIFY rn <= 3 ORDER BY o_custkey, rn""".stripMargin,
-
-    // CAST(ts AS TIMESTAMP) truncates DuckDB's TIMESTAMP_NS to the same
-    // microsecond precision Spark reads (Tables.events) — boundary
-    // comparisons are then precision-identical by construction.
-    "asof_join" ->
-      """SELECT l.event_id, l.user_id, r.value AS purchase_value
-        |FROM (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts FROM events
-        |      WHERE event_type = 'click') l
-        |ASOF LEFT JOIN (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, MAX(value) AS value
-        |      FROM events WHERE event_type = 'purchase' GROUP BY 1, 2) r
-        |  ON l.user_id = r.user_id AND l.ts >= r.ts
-        |ORDER BY l.event_id""".stripMargin,
-
-    "range_join" ->
-      """SELECT p.event_id, COUNT(*) AS n_clicks
-        |FROM (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts FROM events
-        |      WHERE event_type = 'purchase') p
-        |JOIN (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events
-        |      WHERE event_type = 'click') c
-        |  ON c.user_id = p.user_id AND c.ts >= p.ts AND c.ts <= p.ts + INTERVAL 1 HOUR
-        |GROUP BY p.event_id ORDER BY p.event_id""".stripMargin,
-
-    "rollup_agg" ->
-      """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS BIGINT) AS sum_qty
-        |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-
-    "distinct_agg" ->
-      """SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS n_parts,
-        |  COUNT(DISTINCT l_suppkey) AS n_supps
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    // E1 invariants, engine-independent: the hashing embedder emits dim=64
-    // always, and a unit-norm vector exactly when the text contains at
-    // least one [a-z0-9] character (otherwise the token stream is empty →
-    // zero vector → norm 0).
-    "embed_hash" ->
-      """SELECT doc_id, CAST(64 AS BIGINT) AS dim,
-        |  CAST(CASE WHEN regexp_matches(lower(text), '[a-z0-9]') THEN 1 ELSE 0 END AS BIGINT) AS unit_norm
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // int8 quantization twin: identical double math over the float32
-    // inputs — scale = max|x|/127, q_i = FLOOR(x_i/scale + 0.5) (the one
-    // rounding both engines express the same way), Σ q_i exact in
-    // BIGINT, max|x_i − q_i·scale| rounded at the end.
-    "embed_quantize" ->
-      """WITH q AS (
-        |  SELECT vec_id, embedding,
-        |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / 127 AS scale
-        |  FROM embeddings)
-        |SELECT vec_id,
-        |  ROUND(scale, 6) AS scale,
-        |  CASE WHEN scale = 0 THEN CAST(0 AS BIGINT)
-        |    ELSE CAST(list_sum(list_transform(embedding,
-        |      x -> FLOOR(CAST(x AS DOUBLE) / scale + 0.5))) AS BIGINT) END AS q_sum,
-        |  ROUND(CASE WHEN scale = 0 THEN 0.0
-        |    ELSE list_max(list_transform(embedding,
-        |      x -> abs(CAST(x AS DOUBLE) - FLOOR(CAST(x AS DOUBLE) / scale + 0.5) * scale)))
-        |    END, 6) AS max_err
-        |FROM q ORDER BY vec_id""".stripMargin,
-
-    // the permutation is pure md5 arithmetic — any engine reproduces it
-    "shuffle_order" ->
-      """SELECT doc_id, md5('shuffle:' || CAST(doc_id AS VARCHAR)) AS shuffle_key
-        |FROM documents ORDER BY shuffle_key, doc_id""".stripMargin,
-
-    // Quantized-corpus top-k: re-derive the int8 reconstruction per
-    // element (same FLOOR(v+0.5) half-up, cast through FLOAT exactly as
-    // the engine's float32 dequant does), then the standard cosine rank.
-    "topk_cosine_quantized" ->
-      """WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-        |se AS (
-        |  SELECT vec_id, embedding,
-        |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / 127 AS s
-        |  FROM embeddings),
-        |s2 AS (
-        |  SELECT e.vec_id,
-        |    SUM(CAST(CAST((CASE WHEN e.s = 0 THEN 0.0
-        |        ELSE FLOOR(CAST(e.embedding[r.i] AS DOUBLE) / e.s + 0.5) * e.s END) AS FLOAT) AS DOUBLE)
-        |      * CAST(q.qe[r.i] AS DOUBLE)) AS dot,
-        |    SQRT(SUM(CAST(CAST((CASE WHEN e.s = 0 THEN 0.0
-        |        ELSE FLOOR(CAST(e.embedding[r.i] AS DOUBLE) / e.s + 0.5) * e.s END) AS FLOAT) AS DOUBLE)
-        |      * CAST(CAST((CASE WHEN e.s = 0 THEN 0.0
-        |        ELSE FLOOR(CAST(e.embedding[r.i] AS DOUBLE) / e.s + 0.5) * e.s END) AS FLOAT) AS DOUBLE))) AS na,
-        |    SQRT(SUM(CAST(q.qe[r.i] AS DOUBLE) * CAST(q.qe[r.i] AS DOUBLE))) AS nb
-        |  FROM se e CROSS JOIN q CROSS JOIN range(1, 65) r(i)
-        |  GROUP BY e.vec_id),
-        |sc AS (SELECT vec_id, CASE WHEN na * nb = 0 THEN 0.0 ELSE dot / (na * nb) END AS score FROM s2),
-        |top AS (SELECT vec_id AS doc_id, score FROM sc ORDER BY score DESC, vec_id LIMIT 10)
-        |SELECT doc_id, ROUND(score, 6) AS score FROM top
-        |ORDER BY ROUND(score, 6) DESC, doc_id""".stripMargin,
-
-    // Tokenization + blank guard mirror token_count; tie-break (tf desc,
-    // word asc) is total because words are distinct after the rollup.
-    "vocab_topn" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS word
-        |  FROM documents WHERE trim(text) <> ''
-        |)
-        |SELECT word, CAST(COUNT(*) AS BIGINT) AS tf,
-        |  CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
-        |FROM tok GROUP BY word ORDER BY tf DESC, word LIMIT 30""".stripMargin,
-
-    // The sketch side is engine-internal (HLL++); the oracle checks the
-    // EXACT count and the constant within-5% verdict the row emits.
-    "approx_distinct" ->
-      """WITH tok AS (
-        |  SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS word
-        |  FROM documents WHERE trim(text) <> ''
-        |)
-        |SELECT CAST(COUNT(DISTINCT word) AS BIGINT) AS n_words,
-        |  TRUE AS approx_ok FROM tok""".stripMargin,
-
-    // Same augmentation, patterns, replacement order and 'replace-all'
-    // semantics as the engine row; phone count runs after email
-    // redaction on both sides so the two totals decompose identically.
-    "pii_scrub" -> piiScrubOracle,
-
-    // Line rules replayed with list HOFs over the same planted 4-line
-    // layout; shared with the streaming row (stateless projection — the
-    // batch replay IS the stream's semantics).
-    "line_clean" -> lineCleanSql,
-    "stream_line_clean" -> lineCleanSql,
-
-    // The chain's closed form on the planted layout (header+footer are
-    // interdoc-hot and removed; 'unique N' fails the word floor; the
-    // content line survives iff the original text has >= 5 tokens, and
-    // the trailing '.' glues to the last token so the count is exactly
-    // the original's) — any stage misbehaving breaks the row/hash match.
-    "pipeline_line_curation" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CASE WHEN trim(text) = '' THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS ntok
-        |  FROM documents)
-        |SELECT doc_id, CAST(ntok AS BIGINT) AS n_tokens
-        |FROM d WHERE ntok >= 5 ORDER BY doc_id""".stripMargin,
-
-    // Interdoc hot-line removal replayed as per-doc-DISTINCT line df →
-    // hot set (> 100 docs) → indexed anti-join → order-restoring
-    // regroup; md5 of the re-joined survivors hash-checks the removal.
-    "line_boilerplate" -> lineBoilerplateSql,
-
-    // The persisted-table row must equal the recompute-from-corpus row
-    // exactly — one oracle serves both (served == recomputed, the
-    // append-parity pattern; the index is built 60% + appended 40% +
-    // compacted, so the shared hash proves the whole lifecycle). The
-    // stream-maintained table shares it too: recomputed == batch-
-    // maintained == stream-maintained under one hash.
-    "hotlines_append_parity" -> lineBoilerplateSql,
-    "stream_hotlines_maintain" -> lineBoilerplateSql,
-
-    // Delete-parity: the same replay RESTRICTED to the surviving docs —
-    // build-full + delete-tail + compact must serve exactly what a
-    // from-scratch pass over the survivors computes.
-    "hotlines_delete_parity" -> lineBoilerplateSqlFor("WHERE doc_id < 300"),
-
-    // Designed constants: epoch count through build(1) → append(2) →
-    // compact(1) → append(2) on a dedicated index.
-    "epoch_count_lifecycle" ->
-      """SELECT CAST(1 AS BIGINT) AS after_build,
-        |       CAST(2 AS BIGINT) AS after_append,
-        |       CAST(1 AS BIGINT) AS after_compact,
-        |       CAST(2 AS BIGINT) AS after_second_append""".stripMargin,
-
-
-    // The streaming face is a stateless projection of the same pass —
-    // one oracle serves both (same planted PII, same augmentation).
-    "stream_pii_scrub" -> piiScrubOracle,
-
-    // Trigram construction mirrors bigram_novelty's CTE shape; the
-    // HAVING prune and (cnt desc, ngram asc) tie-break are total.
-    "ngram_counts" ->
-      """WITH tok AS (
-        |  SELECT regexp_split_to_array(trim(text), '\s+') AS t
-        |  FROM documents WHERE trim(text) <> ''
-        |),
-        |ng AS (
-        |  SELECT unnest(list_transform(range(1, len(t) - 1),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS ngram
-        |  FROM tok
-        |)
-        |SELECT ngram, CAST(COUNT(*) AS BIGINT) AS cnt
-        |FROM ng GROUP BY ngram HAVING COUNT(*) >= 2
-        |ORDER BY cnt DESC, ngram LIMIT 50""".stripMargin,
-
-    "bm25_topk" -> bm25TopkSql,
-
-    // Batch probe replay: a VALUES query table, the same single contrib
-    // shape, per-(query,doc) sum, rank partitioned by query on the
-    // rounded score with doc_id tiebreak. df/n/total recomputed from the
-    // corpus the index covers.
-    "bm25_batch_topk" ->
-      """WITH tok AS (
-        |  SELECT doc_id,
-        |    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-        |         ELSE regexp_split_to_array(trim(text), '\s+') END AS t
-        |  FROM documents),
-        |d AS (SELECT doc_id, len(t) AS dl, t FROM tok),
-        |st AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n, CAST(SUM(dl) AS DOUBLE) AS total FROM d),
-        |qts(q_id, term) AS (VALUES
-        |  (0, 'vector'), (0, 'stream'),
-        |  (1, 'hash'), (1, 'join'),
-        |  (2, 'sort'), (2, 'merge'), (2, 'scan'),
-        |  (3, 'filter'), (3, 'row'),
-        |  (4, 'query'), (4, 'vector')),
-        |tp AS (SELECT DISTINCT term FROM qts),
-        |p AS (
-        |  SELECT d.doc_id, d.dl, tp.term, len(list_filter(d.t, x -> x = tp.term)) AS tf
-        |  FROM d CROSS JOIN tp),
-        |p2 AS (SELECT * FROM p WHERE tf > 0),
-        |f AS (SELECT term, CAST(COUNT(*) AS DOUBLE) AS df FROM p2 GROUP BY term),
-        |sc2 AS (
-        |  SELECT qts.q_id, p2.doc_id,
-        |    SUM(ln(1.0 + (st.n - f.df + 0.5) / (f.df + 0.5))
-        |      * CAST(p2.tf AS DOUBLE) * 2.2
-        |      / (CAST(p2.tf AS DOUBLE)
-        |         + 1.2 * (0.25 + 0.75 * CAST(p2.dl AS DOUBLE) * st.n / st.total))) AS score
-        |  FROM p2 JOIN qts USING (term) JOIN f USING (term) CROSS JOIN st
-        |  GROUP BY qts.q_id, p2.doc_id),
-        |rk AS (
-        |  SELECT q_id, doc_id, score,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY q_id
-        |      ORDER BY ROUND(score, 6) DESC, doc_id) AS BIGINT) AS "rank"
-        |  FROM sc2)
-        |SELECT CAST(q_id AS BIGINT) AS q_id, doc_id, ROUND(score, 6) AS score, "rank"
-        |FROM rk WHERE "rank" <= 5 ORDER BY q_id, "rank"""".stripMargin,
-
-    // Integer floor-div bucketing — exact on both engines.
-    "length_histogram" ->
-      """WITH d AS (
-        |  SELECT CASE WHEN trim(text) = '' THEN 0
-        |    ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n
-        |  FROM documents)
-        |SELECT CAST(n // 20 AS BIGINT) AS bucket,
-        |  CAST((n // 20) * 20 AS BIGINT) AS lo,
-        |  CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(SUM(n) AS BIGINT) AS n_tokens
-        |FROM d GROUP BY 1, 2 ORDER BY bucket""".stripMargin,
-
-    "phrase_search" -> phraseSearchSql,
-
-    // The positional-index probe must equal the full-scan phrase search
-    // exactly — one oracle serves both (probe == scan, keyword-phrase
-    // edition; the index is built 60% + appended 40%, so the shared hash
-    // also re-proves append == rebuild for the positions column).
-    "phrase_index_topk" -> phraseSearchSql,
-    "stream_phrase_match" -> phraseSearchSql,
-
-    // Batch phrase replay: a VALUES phrase table, the SAME full-scan
-    // start-position derivation as phraseSearchSql generalized to a
-    // per-row phrase length, then rank(n_hits desc, doc_id) cut at 5 —
-    // integer hit counts, so no rounding anywhere.
-    "phrase_batch_topk" ->
-      """WITH q(q_id, phrase) AS (VALUES
-        |  (0, ['vector', 'stream']),
-        |  (1, ['table', 'hash']),
-        |  (2, ['slow', 'hash', 'batch']),
-        |  (3, ['big', 'table']),
-        |  (4, ['merge', 'group'])),
-        |t AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-        |  FROM documents WHERE trim(text) <> ''),
-        |m AS (
-        |  SELECT q.q_id, t.doc_id,
-        |    list_filter(range(1, len(t.t) - len(q.phrase) + 2),
-        |      i -> t.t[i:i+len(q.phrase)-1] = q.phrase) AS p
-        |  FROM q CROSS JOIN t),
-        |h AS (
-        |  SELECT q_id, doc_id, CAST(len(p) AS BIGINT) AS n_hits
-        |  FROM m WHERE len(p) > 0),
-        |rk AS (
-        |  SELECT q_id, doc_id, n_hits,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY q_id
-        |      ORDER BY n_hits DESC, doc_id) AS BIGINT) AS "rank"
-        |  FROM h)
-        |SELECT CAST(q_id AS BIGINT) AS q_id, doc_id, n_hits, "rank"
-        |FROM rk WHERE "rank" <= 5 ORDER BY q_id, "rank"""".stripMargin,
-
-    // The streaming router is the batch phrase derivation WITHOUT the
-    // rank cut (every match routes), plus first_pos — the same VALUES
-    // phrase table and slice-compare start-position formula.
-    "stream_phrase_route" ->
-      """WITH q(q_id, phrase) AS (VALUES
-        |  (0, ['vector', 'stream']),
-        |  (1, ['table', 'hash']),
-        |  (2, ['slow', 'hash', 'batch']),
-        |  (3, ['big', 'table']),
-        |  (4, ['merge', 'group'])),
-        |t AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-        |  FROM documents WHERE trim(text) <> ''),
-        |m AS (
-        |  SELECT q.q_id, t.doc_id,
-        |    list_filter(range(1, len(t.t) - len(q.phrase) + 2),
-        |      i -> t.t[i:i+len(q.phrase)-1] = q.phrase) AS p
-        |  FROM q CROSS JOIN t)
-        |SELECT CAST(q_id AS BIGINT) AS q_id, doc_id,
-        |  CAST(len(p) AS BIGINT) AS n_hits,
-        |  CAST(COALESCE(list_min(p), 0) AS BIGINT) AS first_pos
-        |FROM m WHERE len(p) > 0 ORDER BY q_id, doc_id""".stripMargin,
-
-    // Batch proximity replay: per-query closed forms UNION ALL'd — the
-    // 2-term span is min |pa − pb| + 1, the 3-term span is the min over
-    // all occurrence triples of (greatest − least + 1); both are exactly
-    // the engine's k-way smallest-range on integer positions.
-    "proximity_batch_topk" ->
-      """WITH t AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-        |  FROM documents WHERE trim(text) <> ''),
-        |pos AS (
-        |  SELECT doc_id, u.i, u.w AS word
-        |  FROM (SELECT doc_id,
-        |          unnest(list_transform(t, (x, i) -> struct_pack(w := x, i := i))) AS u
-        |        FROM t)),
-        |sp AS (
-        |  SELECT 0 AS q_id, a.doc_id, MIN(ABS(a.i - b.i) + 1) AS min_span
-        |  FROM (SELECT doc_id, i FROM pos WHERE word = 'vector') a
-        |  JOIN (SELECT doc_id, i FROM pos WHERE word = 'stream') b USING (doc_id)
-        |  GROUP BY a.doc_id
-        |  UNION ALL
-        |  SELECT 1, a.doc_id, MIN(ABS(a.i - b.i) + 1)
-        |  FROM (SELECT doc_id, i FROM pos WHERE word = 'table') a
-        |  JOIN (SELECT doc_id, i FROM pos WHERE word = 'hash') b USING (doc_id)
-        |  GROUP BY a.doc_id
-        |  UNION ALL
-        |  SELECT 2, a.doc_id, MIN(ABS(a.i - b.i) + 1)
-        |  FROM (SELECT doc_id, i FROM pos WHERE word = 'merge') a
-        |  JOIN (SELECT doc_id, i FROM pos WHERE word = 'group') b USING (doc_id)
-        |  GROUP BY a.doc_id
-        |  UNION ALL
-        |  SELECT 3, a.doc_id, MIN(ABS(a.i - b.i) + 1)
-        |  FROM (SELECT doc_id, i FROM pos WHERE word = 'slow') a
-        |  JOIN (SELECT doc_id, i FROM pos WHERE word = 'batch') b USING (doc_id)
-        |  GROUP BY a.doc_id
-        |  UNION ALL
-        |  SELECT 4, a.doc_id,
-        |    MIN(GREATEST(a.i, b.i, c.i) - LEAST(a.i, b.i, c.i) + 1)
-        |  FROM (SELECT doc_id, i FROM pos WHERE word = 'vector') a
-        |  JOIN (SELECT doc_id, i FROM pos WHERE word = 'table') b USING (doc_id)
-        |  JOIN (SELECT doc_id, i FROM pos WHERE word = 'hash') c USING (doc_id)
-        |  GROUP BY a.doc_id),
-        |h AS (SELECT q_id, doc_id, CAST(min_span AS BIGINT) AS min_span
-        |      FROM sp WHERE min_span <= 10),
-        |rk AS (
-        |  SELECT q_id, doc_id, min_span,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY q_id
-        |      ORDER BY min_span ASC, doc_id) AS BIGINT) AS "rank"
-        |  FROM h)
-        |SELECT CAST(q_id AS BIGINT) AS q_id, doc_id, min_span, "rank"
-        |FROM rk WHERE "rank" <= 5 ORDER BY q_id, "rank"""".stripMargin,
-
-    // The MG guarantees are theorems — the oracle recomputes the
-    // guaranteed-set size from EXACT counts and pins both checks at 1;
-    // the engine row goes red iff the sketch violates a bound. One
-    // oracle serves batch AND streaming maintenance (guarantees are
-    // merge-order-free).
-    "heavy_hitters" -> heavyHittersSql,
-    "stream_heavy_hitters" -> heavyHittersSql,
-
-    // Two-term proximity has a closed form the SQL replays directly:
-    // min over occurrence pairs of |pa − pb| + 1 (the engine's k-way
-    // smallest-range reduces to exactly this at k=2). 1-based vs 0-based
-    // positions cancel in the difference.
-    "proximity_search" ->
-      """WITH t AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-        |  FROM documents WHERE trim(text) <> ''),
-        |pos AS (
-        |  SELECT doc_id, u.i, u.w AS word
-        |  FROM (SELECT doc_id,
-        |          unnest(list_transform(t, (x, i) -> struct_pack(w := x, i := i))) AS u
-        |        FROM t)),
-        |a AS (SELECT doc_id, i FROM pos WHERE word = 'vector'),
-        |b AS (SELECT doc_id, i FROM pos WHERE word = 'stream'),
-        |sp AS (
-        |  SELECT a.doc_id, MIN(ABS(a.i - b.i) + 1) AS min_span
-        |  FROM a JOIN b USING (doc_id) GROUP BY a.doc_id)
-        |SELECT doc_id, CAST(min_span AS BIGINT) AS min_span
-        |FROM sp WHERE min_span <= 10 ORDER BY doc_id""".stripMargin,
-
-    // The ranked list is bm25_topk's; the snippet replays Spark's
-    // locate/least/substr with strpos/LEAST/substr (both 1-based, both
-    // LEAST-ignore-NULLs, 0-miss mapped to NULL via NULLIF). maxTermLen
-    // of (vector, stream, hash) = 6 → window 2·15+6.
-    "search_snippet" ->
-      s"""WITH $bm25Cte,
-         |top AS (
-         |  SELECT doc_id, ROUND(score, 6) AS score FROM bm
-         |  ORDER BY ROUND(score, 6) DESC, doc_id LIMIT 10),
-         |sn AS (
-         |  SELECT t.doc_id, t.score, d.text,
-         |    LEAST(NULLIF(strpos(d.text, 'vector'), 0),
-         |          NULLIF(strpos(d.text, 'stream'), 0),
-         |          NULLIF(strpos(d.text, 'hash'), 0)) AS p
-         |  FROM top t JOIN documents d USING (doc_id))
-         |SELECT doc_id, score,
-         |  CASE WHEN p IS NULL THEN ''
-         |       ELSE substr(text, GREATEST(p - 15, 1), 2 * 15 + 6) END AS snippet
-         |FROM sn ORDER BY score DESC, doc_id""".stripMargin,
-
-    // The routing stream is a stateless replay of the batch score with
-    // index-frozen stats; the index covers the full corpus, so the
-    // corpus-derived df/n/total here are the SAME numbers the stream
-    // folded into its literals. Threshold on the ROUNDED score — both
-    // sides, so summation-order noise can't flip membership.
-    "stream_bm25_route" ->
-      s"""WITH $bm25Cte
-         |SELECT doc_id, ROUND(score, 6) AS score
-         |FROM bm WHERE ROUND(score, 6) >= 1.1 ORDER BY doc_id""".stripMargin,
-
-    // The indexed probe must equal the direct scan exactly — one oracle
-    // serves both, and the shared hash proves probe == scan == rebuild
-    // (the index is built 60% + appended 40%).
-    "bm25_index_topk" -> bm25TopkSql,
-
-    // The delete-parity probe must equal the direct scan over ONLY the
-    // surviving docs: same CTE, corpus filtered to doc_id >= 50 — the
-    // exact set the engine tombstoned.
-    "bm25_delete_parity" ->
-      s"""WITH ${bm25CteFor(" WHERE doc_id >= 50")}
-         |SELECT doc_id, ROUND(score, 6) AS score
-         |FROM bm ORDER BY ROUND(score, 6) DESC, doc_id LIMIT 10""".stripMargin,
-
-    // RRF fusion: rank the BM25 top-20 (on the rounded score, doc_id
-    // tiebreak — the emitted ordering) and the cosine top-20 (raw score,
-    // vec_id tiebreak — Similarity.topK's ordering), then fuse with
-    // 1/(60+rank) in DOUBLE arithmetic. Integer ranks make the fused
-    // scores engine-exact.
-    "hybrid_rrf" ->
-      s"""$scoreVsQ,
-         |$bm25Cte,
-         |lex AS (
-         |  SELECT doc_id, ROUND(score, 6) AS score FROM bm
-         |  ORDER BY ROUND(score, 6) DESC, doc_id LIMIT 20),
-         |lexr AS (SELECT doc_id,
-         |    ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS r FROM lex),
-         |semt AS (SELECT vec_id AS doc_id, score FROM sc
-         |  ORDER BY score DESC, vec_id LIMIT 20),
-         |semr AS (SELECT doc_id,
-         |    ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS r FROM semt),
-         |fu AS (
-         |  SELECT COALESCE(l.doc_id, s2.doc_id) AS doc_id,
-         |    COALESCE(CAST(1 AS DOUBLE) / CAST(60 + l.r AS DOUBLE), 0)
-         |      + COALESCE(CAST(1 AS DOUBLE) / CAST(60 + s2.r AS DOUBLE), 0) AS rrf
-         |  FROM lexr l FULL OUTER JOIN semr s2 ON l.doc_id = s2.doc_id)
-         |SELECT doc_id, ROUND(rrf, 9) AS rrf
-         |FROM fu ORDER BY ROUND(rrf, 9) DESC, doc_id LIMIT 10""".stripMargin,
-
-    // Vocab ranking replayed as a window (fine at oracle scale); the
-    // indexed-lambda struct unnest reproduces posexplode's positions
-    // (DuckDB's lambda index is 1-based — the i-1 shift aligns it with
-    // Spark's 0-based posexplode). Scalar rows only: the r13 array form
-    // crashed the driver's pandas sort. Blank docs yield no rows on
-    // either side.
-    "token_ids" ->
-      """WITH tokraw AS (
-        |  SELECT doc_id,
-        |    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-        |         ELSE regexp_split_to_array(trim(text), '\s+') END AS t
-        |  FROM documents
-        |),
-        |cnt AS (
-        |  SELECT word, COUNT(*) AS tf
-        |  FROM (SELECT unnest(t) AS word FROM tokraw) GROUP BY word
-        |),
-        |v AS (SELECT word, ROW_NUMBER() OVER (ORDER BY tf DESC, word) AS id FROM cnt),
-        |pos AS (
-        |  SELECT doc_id, u.i, u.w AS word
-        |  FROM (SELECT doc_id,
-        |          unnest(list_transform(t, (x, i) -> struct_pack(w := x, i := i))) AS u
-        |        FROM tokraw)
-        |),
-        |m AS (SELECT p.doc_id, p.i, COALESCE(v.id, 0) AS id FROM pos p LEFT JOIN v USING (word))
-        |SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, CAST(id AS BIGINT) AS token_id
-        |FROM m ORDER BY doc_id, pos""".stripMargin,
-
-    // |token_ids| == the tokenizer's count, so the pack replays the
-    // pack_sequences window formulation over the same ntok.
-    "pipeline_tokenize_pack" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CASE WHEN trim(text) = '' THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS ntok
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, ntok,
-        |    COALESCE(SUM(ntok) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS pre
-        |  FROM d)
-        |SELECT doc_id, CAST(ntok AS BIGINT) AS n_tokens,
-        |  CAST(pre // 512 AS BIGINT) AS seq_id
-        |FROM c ORDER BY doc_id""".stripMargin,
-
-    // The engine row proves append+compact == rebuild on the maintained
-    // count table and emits the table's invariant totals; the oracle
-    // recomputes those totals from scratch and pins parity at 1.
-    "vocab_index_append_parity" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS word
-        |  FROM documents WHERE trim(text) <> ''
-        |)
-        |SELECT CAST(COUNT(DISTINCT word) AS BIGINT) AS n_ngrams,
-        |  CAST(COUNT(*) AS BIGINT) AS total_tf,
-        |  CAST(COUNT(DISTINCT (doc_id, word)) AS BIGINT) AS total_df,
-        |  CAST(1 AS BIGINT) AS parity
-        |FROM tok""".stripMargin,
-
-    // The delete row's totals recomputed over ONLY the surviving 3/4 —
-    // the engine's maintained table (after negated-delta delete +
-    // compact) must land on exactly these numbers.
-    "vocab_delete_parity" ->
-      """WITH cut AS (SELECT COUNT(*) * 3 // 4 AS c FROM documents),
-        |tok AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS word
-        |  FROM documents, cut WHERE trim(text) <> '' AND doc_id < cut.c
-        |)
-        |SELECT CAST(COUNT(DISTINCT word) AS BIGINT) AS n_ngrams,
-        |  CAST(COUNT(*) AS BIGINT) AS total_tf,
-        |  CAST(COUNT(DISTINCT (doc_id, word)) AS BIGINT) AS total_df,
-        |  CAST(1 AS BIGINT) AS parity
-        |FROM tok""".stripMargin,
-
-    // Quality CTEs replayed from quality_score (the hash row proving both
-    // engines agree at 6dp — so the >= tier cuts decide identically),
-    // then the salted-md5 keep-rate arithmetic of the other samplers.
-    "curriculum_sample" ->
-      """WITH t AS (
-        |  SELECT doc_id, text,
-        |    regexp_split_to_array(trim(lower(text)), '\s+') AS tok,
-        |    CASE WHEN trim(text) = '' THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS ntok,
-        |    CAST(length(text) AS DOUBLE) AS len
-        |  FROM documents
-        |),
-        |c AS (
-        |  SELECT doc_id,
-        |    LEAST(len / 200.0, 1.0) AS len_score,
-        |    LEAST(ntok / 40.0, 1.0) AS tok_score,
-        |    GREATEST(1.0 - (CASE WHEN len = 0 THEN 0.0
-        |      ELSE (len - length(regexp_replace(text, '[^a-zA-Z0-9\s]', '', 'g'))) / len END) * 4.0, 0.0) AS punct_score,
-        |    LEAST((CASE WHEN ntok = 0 THEN 0.0
-        |      ELSE len(list_filter(tok, x -> x IN ('the','a','an','and','of','to','in','is','it','for','on','with'))) / CAST(ntok AS DOUBLE) END) * 5.0, 1.0) AS stop_score
-        |  FROM t
-        |),
-        |q AS (
-        |  SELECT doc_id,
-        |    ROUND((len_score + tok_score + punct_score + stop_score) / 4.0, 6) AS quality
-        |  FROM c
-        |),
-        |tiered AS (
-        |  SELECT doc_id, quality,
-        |    CASE WHEN quality >= 0.8 THEN 'high'
-        |         WHEN quality >= 0.65 THEN 'mid' ELSE 'low' END AS tier
-        |  FROM q
-        |)
-        |SELECT doc_id, tier, quality FROM tiered
-        |WHERE ('0x' || substr(md5('curr:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10000
-        |      < CAST(FLOOR((CASE tier WHEN 'high' THEN 1.0 WHEN 'mid' THEN 0.5 ELSE 0.2 END) * 10000) AS BIGINT)
-        |ORDER BY doc_id""".stripMargin,
-
-    // Bigram construction mirrors decontaminate (WITHOUT list_distinct —
-    // novelty counts every occurrence); all-integer outputs, zeros for
-    // <2-token docs via the left join.
-    "bigram_novelty" ->
-      """WITH tok AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-        |  FROM documents WHERE trim(text) <> ''
-        |),
-        |bg AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS bigram
-        |  FROM tok
-        |),
-        |cf AS (SELECT bigram, COUNT(*) AS c FROM bg GROUP BY bigram),
-        |per AS (
-        |  SELECT bg.doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-        |    CAST(SUM(cf.c) AS BIGINT) AS familiarity,
-        |    CAST(MIN(cf.c) AS BIGINT) AS rarest_cf
-        |  FROM bg JOIN cf USING (bigram) GROUP BY bg.doc_id
-        |)
-        |SELECT d.doc_id,
-        |  CAST(COALESCE(p.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-        |  CAST(COALESCE(p.familiarity, 0) AS BIGINT) AS familiarity,
-        |  CAST(COALESCE(p.rarest_cf, 0) AS BIGINT) AS rarest_cf
-        |FROM documents d LEFT JOIN per p USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-
-    // octet_length(encode(..)): UTF-8 BYTES, matching Spark's
-    // length(binary) — plain length() counts characters and diverges on
-    // any non-ASCII text.
-    "multimodal_bytes" ->
-      """SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |  'text/plain' AS mime
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // Resize contract: payload capped at the 12×16 = 192-byte budget
-    // (stride-sampling never grows data), metadata pinned to the target
-    // shape.
-    "multimodal_resize" ->
-      """SELECT doc_id,
-        |  CAST(LEAST(octet_length(encode(text)), 192) AS BIGINT) AS n_bytes,
-        |  CAST(12 AS BIGINT) AS width, CAST(16 AS BIGINT) AS height
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // Decontamination: same bigram-shingle construction as jaccard_pairs,
-    // corpus×probe instead of self-join; n_shared counts DISTINCT shared
-    // shingles (both sides deduplicate their shingle lists).
-    "decontaminate" ->
-      """WITH c AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |        FROM documents WHERE doc_id >= 10 AND doc_id < 300)
-        |),
-        |p AS (
-        |  SELECT doc_id AS probe_id,
-        |    list_distinct(list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |        FROM documents WHERE doc_id < 10)
-        |)
-        |SELECT doc_id, probe_id, n_shared FROM (
-        |  SELECT c.doc_id, p.probe_id, CAST(len(list_intersect(c.sh, p.sh)) AS BIGINT) AS n_shared
-        |  FROM c CROSS JOIN p)
-        |WHERE n_shared >= 3 ORDER BY doc_id, probe_id""".stripMargin,
-
-    // Deterministic split: both engines md5 the salted decimal id string
-    // ('split:<id>' — the salt decorrelates splits from samples), parse
-    // the first 8 hex chars as an int, and bucket mod 10000; cuts are
-    // 8000/9000 for 80/10/10.
-    "split_assign" ->
-      """SELECT doc_id,
-        |  CASE WHEN b < 8000 THEN 'train' WHEN b < 9000 THEN 'val' ELSE 'test' END AS split
-        |FROM (SELECT doc_id,
-        |        ('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10000 AS b
-        |      FROM documents)
-        |ORDER BY doc_id""".stripMargin,
-
-    // Diversity-capped sample: the four designed invariants are the only
-    // acceptable outcome (membership is seeded-k-means territory and
-    // stays spec-pinned).
-    "diversity_sample" ->
-      """SELECT CAST(20 AS BIGINT) AS cap, CAST(1 AS BIGINT) AS exact_counts,
-        |  CAST(1 AS BIGINT) AS subset_ok,
-        |  CAST(1 AS BIGINT) AS deterministic""".stripMargin,
-
-    // Incremental dedup: within-batch min-id survivor (row_number over
-    // text) then NOT IN the corpus text set — sha equality ≡ text
-    // equality, so the oracle compares texts directly.
-    "incremental_dedup" ->
-      """WITH batch AS (
-        |  SELECT doc_id, text, lang, source, n_chars,
-        |         row_number() OVER (PARTITION BY text ORDER BY doc_id) AS rn
-        |  FROM documents WHERE doc_id >= 250)
-        |SELECT doc_id, lang, source, n_chars
-        |FROM batch
-        |WHERE rn = 1
-        |  AND text NOT IN (SELECT text FROM documents WHERE doc_id < 300)
-        |ORDER BY doc_id""".stripMargin,
-
-    // Incremental jaccard dedup: bigram shingle sets for the 75-doc batch
-    // and the 300-doc corpus; within-batch pairs >= 0.2 resolve to
-    // transitive components (min-id survivor, the near_dedup_apply
-    // construction); survivors drop when any corpus doc reaches jaccard
-    // 0.2 (exact int arithmetic in double — boundary-identical to Spark).
-    "incremental_jaccard_dedup" ->
-      """WITH RECURSIVE
-        |bt AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |        FROM documents WHERE doc_id >= 250 AND doc_id < 325)
-        |),
-        |ct AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |        FROM documents WHERE doc_id < 300)
-        |),
-        |pr AS (
-        |  SELECT a_id, b_id FROM (
-        |    SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |      len(list_intersect(a.sh, b.sh)) AS common, len(a.sh) AS asz, len(b.sh) AS bsz
-        |    FROM bt a JOIN bt b ON a.doc_id < b.doc_id)
-        |  WHERE common > 0 AND CAST(common AS DOUBLE) / (asz + bsz - common) >= 0.2
-        |),
-        |edges AS (
-        |  SELECT a_id AS src, b_id AS dst FROM pr
-        |  UNION SELECT b_id, a_id FROM pr
-        |),
-        |walk AS (
-        |  SELECT src, dst FROM edges
-        |  UNION
-        |  SELECT w.src, e.dst FROM walk w JOIN edges e ON w.dst = e.src
-        |),
-        |lab AS (SELECT src AS id, LEAST(src, MIN(dst)) AS group_id FROM walk GROUP BY src),
-        |surv AS (
-        |  SELECT doc_id, sh FROM bt
-        |  WHERE doc_id NOT IN (SELECT id FROM lab WHERE id <> group_id)
-        |),
-        |dup AS (
-        |  SELECT DISTINCT s.doc_id
-        |  FROM surv s JOIN ct c ON len(list_intersect(s.sh, c.sh)) > 0
-        |  WHERE CAST(len(list_intersect(s.sh, c.sh)) AS DOUBLE)
-        |        / (len(s.sh) + len(c.sh) - len(list_intersect(s.sh, c.sh))) >= 0.2
-        |)
-        |SELECT d.doc_id, d.lang, d.source
-        |FROM documents d
-        |JOIN surv s ON d.doc_id = s.doc_id
-        |WHERE d.doc_id NOT IN (SELECT doc_id FROM dup)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // The streaming gate is the cross-index half of the incremental row
-    // alone (per-doc + index-only — no within-batch dedup, which is
-    // batching-dependent and stays with the nightly pass): same bt/ct
-    // shingle sets, drop iff max jaccard vs the indexed corpus >= 0.2.
-    "stream_jaccard_gate" ->
-      """WITH bt AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |        FROM documents WHERE doc_id >= 250 AND doc_id < 325)
-        |),
-        |ct AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |        FROM documents WHERE doc_id < 300)
-        |),
-        |dup AS (
-        |  SELECT DISTINCT b.doc_id
-        |  FROM bt b JOIN ct c ON len(list_intersect(b.sh, c.sh)) > 0
-        |  WHERE CAST(len(list_intersect(b.sh, c.sh)) AS DOUBLE)
-        |        / (len(b.sh) + len(c.sh) - len(list_intersect(b.sh, c.sh))) >= 0.2
-        |)
-        |SELECT d.doc_id, d.lang, d.source
-        |FROM documents d
-        |JOIN bt ON d.doc_id = bt.doc_id
-        |WHERE d.doc_id NOT IN (SELECT doc_id FROM dup)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // Gate-then-append: the incremental_jaccard_dedup replay applied
-    // TWICE — wave 1 (250-290) within-dedup + cross vs the doc_id<250
-    // corpus, then wave 2 (290-325) within-dedup + cross vs corpus ∪
-    // wave-1 survivors (the appended postings). Exact int arithmetic in
-    // double keeps the 0.2 threshold boundary-identical to Spark.
-    "stream_jaccard_gate_append" ->
-      """WITH RECURSIVE
-        |allsh AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |        FROM documents)
-        |),
-        |ct1 AS (SELECT doc_id, sh FROM allsh WHERE doc_id < 250),
-        |b1 AS (SELECT doc_id, sh FROM allsh WHERE doc_id >= 250 AND doc_id < 290),
-        |pr1 AS (
-        |  SELECT a_id, b_id FROM (
-        |    SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |      len(list_intersect(a.sh, b.sh)) AS common, len(a.sh) AS asz, len(b.sh) AS bsz
-        |    FROM b1 a JOIN b1 b ON a.doc_id < b.doc_id)
-        |  WHERE common > 0 AND CAST(common AS DOUBLE) / (asz + bsz - common) >= 0.2
-        |),
-        |edges1 AS (SELECT a_id AS src, b_id AS dst FROM pr1 UNION SELECT b_id, a_id FROM pr1),
-        |walk1 AS (
-        |  SELECT src, dst FROM edges1
-        |  UNION
-        |  SELECT w.src, e.dst FROM walk1 w JOIN edges1 e ON w.dst = e.src
-        |),
-        |lab1 AS (SELECT src AS id, LEAST(src, MIN(dst)) AS group_id FROM walk1 GROUP BY src),
-        |sw1 AS (SELECT doc_id, sh FROM b1 WHERE doc_id NOT IN (SELECT id FROM lab1 WHERE id <> group_id)),
-        |dup1 AS (
-        |  SELECT DISTINCT s.doc_id
-        |  FROM sw1 s JOIN ct1 c ON len(list_intersect(s.sh, c.sh)) > 0
-        |  WHERE CAST(len(list_intersect(s.sh, c.sh)) AS DOUBLE)
-        |        / (len(s.sh) + len(c.sh) - len(list_intersect(s.sh, c.sh))) >= 0.2
-        |),
-        |s1 AS (SELECT doc_id, sh FROM sw1 WHERE doc_id NOT IN (SELECT doc_id FROM dup1)),
-        |ct2 AS (SELECT doc_id, sh FROM ct1 UNION ALL SELECT doc_id, sh FROM s1),
-        |b2 AS (SELECT doc_id, sh FROM allsh WHERE doc_id >= 290 AND doc_id < 325),
-        |pr2 AS (
-        |  SELECT a_id, b_id FROM (
-        |    SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |      len(list_intersect(a.sh, b.sh)) AS common, len(a.sh) AS asz, len(b.sh) AS bsz
-        |    FROM b2 a JOIN b2 b ON a.doc_id < b.doc_id)
-        |  WHERE common > 0 AND CAST(common AS DOUBLE) / (asz + bsz - common) >= 0.2
-        |),
-        |edges2 AS (SELECT a_id AS src, b_id AS dst FROM pr2 UNION SELECT b_id, a_id FROM pr2),
-        |walk2 AS (
-        |  SELECT src, dst FROM edges2
-        |  UNION
-        |  SELECT w.src, e.dst FROM walk2 w JOIN edges2 e ON w.dst = e.src
-        |),
-        |lab2 AS (SELECT src AS id, LEAST(src, MIN(dst)) AS group_id FROM walk2 GROUP BY src),
-        |sw2 AS (SELECT doc_id, sh FROM b2 WHERE doc_id NOT IN (SELECT id FROM lab2 WHERE id <> group_id)),
-        |dup2 AS (
-        |  SELECT DISTINCT s.doc_id
-        |  FROM sw2 s JOIN ct2 c ON len(list_intersect(s.sh, c.sh)) > 0
-        |  WHERE CAST(len(list_intersect(s.sh, c.sh)) AS DOUBLE)
-        |        / (len(s.sh) + len(c.sh) - len(list_intersect(s.sh, c.sh))) >= 0.2
-        |),
-        |s2 AS (SELECT doc_id FROM sw2 WHERE doc_id NOT IN (SELECT doc_id FROM dup2))
-        |SELECT d.doc_id, d.lang, d.source
-        |FROM documents d
-        |WHERE d.doc_id IN (SELECT doc_id FROM s1 UNION SELECT doc_id FROM s2)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // Repetition: duplicate-token / duplicate-bigram fractions. Blank
-    // text guards mirror token_count (DuckDB splits '' into ['']); bigram
-    // i ranges over 1..ntok-1 with an inclusive 2-element slice.
-    "repetition_stats" ->
-      """WITH t AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS tok,
-        |    CASE WHEN trim(text) = '' THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS ntok
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id, tok, ntok,
-        |    CASE WHEN ntok < 2 THEN []::VARCHAR[]
-        |         ELSE list_transform(range(1, ntok), i -> array_to_string(tok[i:i+1], ' ')) END AS ng
-        |  FROM t)
-        |SELECT doc_id,
-        |  ROUND(CASE WHEN ntok = 0 THEN 0.0
-        |    ELSE (ntok - len(list_distinct(tok))) / CAST(ntok AS DOUBLE) END, 6) AS dup_token_frac,
-        |  ROUND(CASE WHEN len(ng) = 0 THEN 0.0
-        |    ELSE (len(ng) - len(list_distinct(ng))) / CAST(len(ng) AS DOUBLE) END, 6) AS dup_2gram_frac
-        |FROM g ORDER BY doc_id""".stripMargin,
-
-    // Fused metrics: one CTE chain replaying token count, both repetition
-    // fractions, the rounded quality formula, and the audit reasons —
-    // the DuckDB check that the single-pass Scala engine is bit-equal to
-    // the relational formulation.
-    "text_metrics_fused" ->
-      """WITH t AS (
-        |  SELECT doc_id, text,
-        |    regexp_split_to_array(trim(lower(text)), '\s+') AS ltok,
-        |    regexp_split_to_array(trim(text), '\s+') AS tok,
-        |    CASE WHEN trim(text) = '' THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS ntok,
-        |    CAST(length(text) AS DOUBLE) AS len
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id, text, ltok, tok, ntok, len,
-        |    CASE WHEN ntok < 2 THEN []::VARCHAR[]
-        |         ELSE list_transform(range(1, ntok), i -> array_to_string(tok[i:i+1], ' ')) END AS ng
-        |  FROM t),
-        |q AS (
-        |  SELECT doc_id, ntok, len, ng,
-        |    CASE WHEN ntok = 0 THEN 0.0
-        |      ELSE (ntok - len(list_distinct(tok))) / CAST(ntok AS DOUBLE) END AS dupfrac,
-        |    CASE WHEN len(ng) = 0 THEN 0.0
-        |      ELSE (len(ng) - len(list_distinct(ng))) / CAST(len(ng) AS DOUBLE) END AS dup2,
-        |    ROUND((LEAST(len / 200.0, 1.0) + LEAST(ntok / 40.0, 1.0) +
-        |      GREATEST(1.0 - (CASE WHEN len = 0 THEN 0.0
-        |        ELSE (len - length(regexp_replace(text, '[^a-zA-Z0-9\s]', '', 'g'))) / len END) * 4.0, 0.0) +
-        |      LEAST((CASE WHEN ntok = 0 THEN 0.0
-        |        ELSE len(list_filter(ltok, x -> x IN ('the','a','an','and','of','to','in','is','it','for','on','with'))) / CAST(ntok AS DOUBLE) END) * 5.0, 1.0)
-        |      ) / 4.0, 6) AS quality
-        |  FROM g)
-        |SELECT doc_id, CAST(ntok AS BIGINT) AS n_tokens,
-        |  ROUND(dupfrac, 6) AS dup_token_frac,
-        |  ROUND(dup2, 6) AS dup_2gram_frac,
-        |  quality,
-        |  concat_ws(',',
-        |    CASE WHEN len < 50 THEN 'too_short' END,
-        |    CASE WHEN ntok < 10 THEN 'too_few_tokens' END,
-        |    CASE WHEN dupfrac > 0.5 THEN 'repetitive' END,
-        |    CASE WHEN quality < 0.3 THEN 'low_quality' END) AS reasons
-        |FROM q ORDER BY doc_id""".stripMargin,
-
-    // Streaming quality filter: stateless, so the batch replay IS the
-    // oracle — the quality_filter CTEs restricted to the kept rows.
-    "stream_quality_filter" ->
-      """WITH t AS (
-        |  SELECT doc_id, text,
-        |    regexp_split_to_array(trim(lower(text)), '\s+') AS ltok,
-        |    regexp_split_to_array(trim(text), '\s+') AS tok,
-        |    CASE WHEN trim(text) = '' THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS ntok,
-        |    CAST(length(text) AS DOUBLE) AS len
-        |  FROM documents),
-        |q AS (
-        |  SELECT doc_id, len, ntok,
-        |    ROUND((LEAST(len / 200.0, 1.0) + LEAST(ntok / 40.0, 1.0) +
-        |      GREATEST(1.0 - (CASE WHEN len = 0 THEN 0.0
-        |        ELSE (len - length(regexp_replace(text, '[^a-zA-Z0-9\s]', '', 'g'))) / len END) * 4.0, 0.0) +
-        |      LEAST((CASE WHEN ntok = 0 THEN 0.0
-        |        ELSE len(list_filter(ltok, x -> x IN ('the','a','an','and','of','to','in','is','it','for','on','with'))) / CAST(ntok AS DOUBLE) END) * 5.0, 1.0)
-        |      ) / 4.0, 6) AS quality,
-        |    CASE WHEN ntok = 0 THEN 0.0
-        |      ELSE (ntok - len(list_distinct(tok))) / CAST(ntok AS DOUBLE) END AS dupfrac
-        |  FROM t)
-        |SELECT doc_id, CAST(ntok AS BIGINT) AS n_tokens, quality
-        |FROM q
-        |WHERE NOT (len < 50) AND NOT (ntok < 10)
-        |  AND NOT (dupfrac > 0.5) AND NOT (quality < 0.3)
-        |ORDER BY doc_id""".stripMargin,
-
-    // Filter audit: reasons = concat_ws over the failing rules (NULL
-    // branches skipped on both engines); quality replays the
-    // quality_score formula INCLUDING its ROUND(...,6) — the Spark side
-    // compares the rounded score too, so the 0.3 cut is engine-stable.
-    "quality_filter" ->
-      """WITH t AS (
-        |  SELECT doc_id, text,
-        |    regexp_split_to_array(trim(lower(text)), '\s+') AS ltok,
-        |    regexp_split_to_array(trim(text), '\s+') AS tok,
-        |    CASE WHEN trim(text) = '' THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS ntok,
-        |    CAST(length(text) AS DOUBLE) AS len
-        |  FROM documents),
-        |q AS (
-        |  SELECT doc_id, len, ntok,
-        |    ROUND((LEAST(len / 200.0, 1.0) + LEAST(ntok / 40.0, 1.0) +
-        |      GREATEST(1.0 - (CASE WHEN len = 0 THEN 0.0
-        |        ELSE (len - length(regexp_replace(text, '[^a-zA-Z0-9\s]', '', 'g'))) / len END) * 4.0, 0.0) +
-        |      LEAST((CASE WHEN ntok = 0 THEN 0.0
-        |        ELSE len(list_filter(ltok, x -> x IN ('the','a','an','and','of','to','in','is','it','for','on','with'))) / CAST(ntok AS DOUBLE) END) * 5.0, 1.0)
-        |      ) / 4.0, 6) AS quality,
-        |    CASE WHEN ntok = 0 THEN 0.0
-        |      ELSE (ntok - len(list_distinct(tok))) / CAST(ntok AS DOUBLE) END AS dupfrac
-        |  FROM t)
-        |SELECT doc_id,
-        |  CAST(CASE WHEN reasons = '' THEN 1 ELSE 0 END AS BIGINT) AS kept, reasons
-        |FROM (SELECT doc_id, concat_ws(',',
-        |    CASE WHEN len < 50 THEN 'too_short' END,
-        |    CASE WHEN ntok < 10 THEN 'too_few_tokens' END,
-        |    CASE WHEN dupfrac > 0.5 THEN 'repetitive' END,
-        |    CASE WHEN quality < 0.3 THEN 'low_quality' END) AS reasons
-        |  FROM q)
-        |ORDER BY doc_id""".stripMargin,
-
-    // Sequence packing: exclusive running token sum over doc order //
-    // budget — the window formulation the distributed implementation
-    // avoids but equals.
-    "pack_sequences" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CASE WHEN trim(text) = '' THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS ntok
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id,
-        |    COALESCE(SUM(ntok) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS pre
-        |  FROM d)
-        |SELECT doc_id, CAST(pre // 512 AS BIGINT) AS seq_id
-        |FROM c ORDER BY doc_id""".stripMargin,
-
-    // Filter → mix composition: the quality_filter CTE keeps reasons='',
-    // then the mix_sample CTE recomputes per-source rates over the KEPT
-    // token mass only (filter-then-mix ordering).
-    "pipeline_filter_mix" ->
-      """WITH t AS (
-        |  SELECT doc_id, source, text,
-        |    regexp_split_to_array(trim(lower(text)), '\s+') AS ltok,
-        |    regexp_split_to_array(trim(text), '\s+') AS tok,
-        |    CASE WHEN trim(text) = '' THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS ntok,
-        |    CAST(length(text) AS DOUBLE) AS len
-        |  FROM documents),
-        |q AS (
-        |  SELECT doc_id, source, ntok, len,
-        |    ROUND((LEAST(len / 200.0, 1.0) + LEAST(ntok / 40.0, 1.0) +
-        |      GREATEST(1.0 - (CASE WHEN len = 0 THEN 0.0
-        |        ELSE (len - length(regexp_replace(text, '[^a-zA-Z0-9\s]', '', 'g'))) / len END) * 4.0, 0.0) +
-        |      LEAST((CASE WHEN ntok = 0 THEN 0.0
-        |        ELSE len(list_filter(ltok, x -> x IN ('the','a','an','and','of','to','in','is','it','for','on','with'))) / CAST(ntok AS DOUBLE) END) * 5.0, 1.0)
-        |      ) / 4.0, 6) AS quality,
-        |    CASE WHEN ntok = 0 THEN 0.0
-        |      ELSE (ntok - len(list_distinct(tok))) / CAST(ntok AS DOUBLE) END AS dupfrac
-        |  FROM t),
-        |kept AS (
-        |  SELECT doc_id, source, ntok FROM q
-        |  WHERE NOT (len < 50) AND NOT (ntok < 10)
-        |    AND NOT (dupfrac > 0.5) AND NOT (quality < 0.3)),
-        |r AS (
-        |  SELECT source, LEAST(1.0, 1500.0 / CAST(SUM(ntok) AS DOUBLE)) AS rate
-        |  FROM kept GROUP BY source)
-        |SELECT k.doc_id, k.source, CAST(k.ntok AS BIGINT) AS n_tokens
-        |FROM kept k JOIN r USING (source)
-        |WHERE ('0x' || substr(md5('mix:' || CAST(k.doc_id AS VARCHAR)), 1, 8))::BIGINT % 10000
-        |      < CAST(FLOOR(rate * 10000) AS BIGINT)
-        |ORDER BY k.doc_id""".stripMargin,
-
-    // Append-parity invariants: the Spark side builds, appends and probes
-    // both indexes for real; the oracle pins the only acceptable outcome
-    // (probe parity, no refit on a same-distribution batch) — the
-    // embed_hash invariant-oracle pattern.
-    "ann_append_parity" ->
-      """SELECT CAST(10 AS BIGINT) AS k,
-        |  CAST(1 AS BIGINT) AS parity_lsh,
-        |  CAST(1 AS BIGINT) AS parity_compact,
-        |  CAST(1 AS BIGINT) AS parity_ivf,
-        |  CAST(0 AS BIGINT) AS refit_recommended""".stripMargin,
-
-    // Batch==single-probe parity (round-11, wiring the r10 refactor): the
-    // Spark side runs the 20-query batch probe AND 20 single probes for
-    // real and compares ids+rounded scores in rank order; the oracle pins
-    // the only acceptable outcome — the ann_append_parity pattern.
-    "ann_batch_topk" ->
-      """SELECT CAST(20 AS BIGINT) AS n_queries, CAST(10 AS BIGINT) AS k,
-        |  CAST(1 AS BIGINT) AS parity""".stripMargin,
-
-    "ivf_batch_topk" ->
-      """SELECT CAST(20 AS BIGINT) AS n_queries, CAST(10 AS BIGINT) AS k,
-        |  CAST(1 AS BIGINT) AS parity""".stripMargin,
-
-    // Round-17: batch quantized probe == per-query persisted packed
-    // probe, the only acceptable outcome.
-    "ivf_batch_topk_quantized" ->
-      """SELECT CAST(20 AS BIGINT) AS n_queries, CAST(10 AS BIGINT) AS k,
-        |  CAST(1 AS BIGINT) AS parity""".stripMargin,
-
-    // Cluster stats: every vector lands in exactly one cluster, so the
-    // per-cluster counts SUM to the corpus size — DuckDB re-derives it;
-    // the flags pin the only acceptable outcome.
-    "ivf_cluster_stats" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n_vectors,
-        |  CAST(1 AS BIGINT) AS clusters_ok, CAST(1 AS BIGINT) AS cohesion_ok,
-        |  CAST(1 AS BIGINT) AS skew_bounded
-        |FROM embeddings""".stripMargin,
-
-    // Round-13: the last two rows-only queries become invariant rows.
-    // ivf_topk: the Spark side probes the persisted index for real and
-    // compares against a fresh re-assignment rerank + the exact top-10
-    // recall floor; the oracle pins the only acceptable outcome.
-    "ivf_topk" ->
-      """SELECT CAST(10 AS BIGINT) AS k, CAST(1 AS BIGINT) AS parity,
-        |  CAST(1 AS BIGINT) AS recall_floor_met""".stripMargin,
-
-    // Quantized-index serving: the Spark side probes the int8 index with
-    // a float re-rank for real and checks the served scores are exact
-    // float cosines + a 0.9 recall floor vs the float probe + the
-    // byte-packed (BINARY codes) twin ranking identically; the oracle
-    // pins the only acceptable outcome.
-    "ivf_topk_quantized" ->
-      """SELECT CAST(10 AS BIGINT) AS k, CAST(1 AS BIGINT) AS rerank_float_exact,
-        |  CAST(1 AS BIGINT) AS recall_floor_met,
-        |  CAST(1 AS BIGINT) AS packed_parity""".stripMargin,
-
-    // Persisted packed-IVF lifecycle: append == rebuild, delete ==
-    // rebuild-without, compact == no-op + epoch fan-in 1; the oracle
-    // pins the only acceptable outcome.
-    "ivf_packed_lifecycle" ->
-      """SELECT CAST(10 AS BIGINT) AS k, CAST(1 AS BIGINT) AS append_parity,
-        |  CAST(1 AS BIGINT) AS delete_parity,
-        |  CAST(1 AS BIGINT) AS compact_parity""".stripMargin,
-
-    // stream_ivf_probe: streaming emission == batch emission of the same
-    // plan, and the executed streaming plan ran zero state operators.
-    "stream_ivf_probe" ->
-      """SELECT CAST(20 AS BIGINT) AS n_queries, CAST(1 AS BIGINT) AS parity,
-        |  CAST(1 AS BIGINT) AS stateless""".stripMargin,
-
-    // Quantized streaming probe: stream == batch, emitted set == the
-    // float probe's (the per-row proven bound swallowed the int8 error),
-    // zero state ops.
-    "stream_ivf_probe_quantized" ->
-      """SELECT CAST(20 AS BIGINT) AS n_queries, CAST(1 AS BIGINT) AS parity,
-        |  CAST(1 AS BIGINT) AS float_parity,
-        |  CAST(1 AS BIGINT) AS stateless""".stripMargin,
-
-    // Streaming packed-IVF maintenance: two-wave stream-append == fresh
-    // frozen-model batch build, and the compactEvery=2 governor folded
-    // the epoch fan-in to 1. Constant flags pin the only acceptable
-    // outcome.
-    "stream_ivf_packed_maintain" ->
-      """SELECT CAST(2 AS BIGINT) AS n_waves, CAST(1 AS BIGINT) AS parity,
-        |  CAST(1 AS BIGINT) AS auto_compacted""".stripMargin,
-
-    // Incremental near-dedup invariants: n_batch re-derives the Spark
-    // side's `vec_id >= count*3/4` batch slice straight from the parquet
-    // (no density assumption — the FILTER mirrors the Spark filter); the
-    // three computed flags (survivors ⊆ batch, brute-force-verified
-    // cross-index precision, append-roundtrip drop) must all hold.
-    "incremental_near_dedup" ->
-      """SELECT
-        |  CAST(COUNT(*) FILTER (WHERE vec_id >= (SELECT (COUNT(*) * 3) // 4 FROM embeddings)) AS BIGINT) AS n_batch,
-        |  CAST(1 AS BIGINT) AS subset_ok,
-        |  CAST(1 AS BIGINT) AS precision_ok,
-        |  CAST(1 AS BIGINT) AS roundtrip_ok
-        |FROM embeddings""".stripMargin,
-
-    // Recall floors (round-11): the scalar recall is seed-dependent and
-    // stays spec territory (OperatorsSpec/AnnBatchSpec re-compute it);
-    // the floor VERDICT is the designed invariant — 4 bits × 12 tables
-    // (dedup geometry) / nProbe clusters give comfortable margin over the
-    // 0.5/0.6 floors, and a broken probe join fails loudly.
-    // Recall@10 of the LSH probe, INDEPENDENTLY re-derived: both the
-    // exact top-10 (brute-force cosine rank) and the probed top-10
-    // (md5-plane buckets → candidate union → cosine rank) are computed
-    // from scratch; the engine's reported recall must equal theirs.
-    "ann_recall" ->
-      s"""WITH ${lshSigsCte(nTables = 16, nBits = 6)},
-         |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-         |sc AS (
-         |  SELECT e.vec_id,
-         |    SUM(CAST(e.embedding[r.i] AS DOUBLE) * CAST(q.qe[r.i] AS DOUBLE)) AS dot,
-         |    SQRT(SUM(CAST(e.embedding[r.i] AS DOUBLE) * CAST(e.embedding[r.i] AS DOUBLE))) AS na,
-         |    SQRT(SUM(CAST(q.qe[r.i] AS DOUBLE) * CAST(q.qe[r.i] AS DOUBLE))) AS nb
-         |  FROM embeddings e CROSS JOIN q CROSS JOIN range(1, 65) r(i)
-         |  GROUP BY e.vec_id),
-         |scored AS (
-         |  SELECT vec_id, CASE WHEN na * nb = 0 THEN 0.0 ELSE dot / (na * nb) END AS score
-         |  FROM sc),
-         |exact AS (SELECT vec_id FROM scored ORDER BY score DESC, vec_id LIMIT 10),
-         |qb AS (SELECT t, bucket FROM sigs WHERE vec_id = 0),
-         |cand AS (
-         |  SELECT DISTINCT s.vec_id
-         |  FROM sigs s JOIN qb ON s.t = qb.t AND s.bucket = qb.bucket),
-         |approx AS (
-         |  SELECT vec_id FROM scored
-         |  WHERE vec_id IN (SELECT vec_id FROM cand)
-         |  ORDER BY score DESC, vec_id LIMIT 10)
-         |SELECT CAST(10 AS BIGINT) AS k,
-         |  ROUND(COUNT(*) / 10.0, 6) AS recall
-         |FROM approx WHERE vec_id IN (SELECT vec_id FROM exact)""".stripMargin,
-
-    "ivf_recall" ->
-      "SELECT CAST(10 AS BIGINT) AS k, CAST(1 AS BIGINT) AS floor_met",
-
-    "ann_batch_recall" ->
-      "SELECT CAST(20 AS BIGINT) AS n_queries, CAST(1 AS BIGINT) AS floor_met",
-
-    // Postings-index lifecycle parity: n_batch re-derives the 3/4-cut
-    // batch slice; the append+compact==rebuild parity (cap binding) is
-    // the only acceptable outcome — the ann_append_parity pattern.
-    "jaccard_index_append_parity" ->
-      """SELECT
-        |  CAST(COUNT(*) FILTER (WHERE doc_id >= (SELECT (COUNT(*) * 3) // 4 FROM documents)) AS BIGINT) AS n_batch,
-        |  CAST(1 AS BIGINT) AS parity
-        |FROM documents""".stripMargin,
-
-    // The WHOLE nightly loop re-derived independently (round-12): exact
-    // text dedup → bigram-jaccard vs corpus → md5-plane LSH banding +
-    // exact cosine, within-batch union-find at each near-dup stage. Every
-    // stage reuses a construction that is hash-green on its own row
-    // (incremental_dedup, incremental_jaccard_dedup, near_dedup_apply_lsh)
-    // — composable because round-11 made the LSH planes md5-derivable.
-    //
-    // PRECONDITION (ADVICE r12): the stage-2 CTEs below (bt/ct/dup2)
-    // model UNCAPPED full bigram-shingle sets, while the engine path
-    // applies the hot-shingle cap (maxDocFreq = 1000: a bigram appearing
-    // in > 1000 corpus docs is dropped from the postings index AND from
-    // the batch side, and jaccard denominators use post-cap set sizes —
-    // Dedup.buildJaccardIndex/jaccardIncremental). The two agree exactly
-    // while no bigram's document frequency exceeds 1000 — true at every
-    // shipped fixture sf (the oracle runs at sf0.01: ~3.8k corpus docs,
-    // max observed bigram df far below the cap) and asserted green every
-    // round by the driver's hash compare, which would surface the first
-    // generation where the cap binds as a loud red row, not a silent
-    // skew. Replicating the cap in SQL would mean re-deriving df over
-    // the corpus slice and recomputing post-cap set sizes in every
-    // downstream CTE; documented instead, per the advisor's option (b).
-    "pipeline_daily_drop" ->
-      s"""WITH RECURSIVE ${lshSigsCte(nTables = 12, nBits = 4)},
-         |cut AS (SELECT COUNT(*) * 3 // 4 AS c FROM documents),
-         |ecut AS (SELECT COUNT(*) * 3 // 4 AS c FROM embeddings),
-         |s1 AS (
-         |  SELECT doc_id, text FROM (
-         |    SELECT doc_id, text,
-         |      row_number() OVER (PARTITION BY text ORDER BY doc_id) AS rn
-         |    FROM documents WHERE doc_id >= (SELECT c FROM cut))
-         |  WHERE rn = 1
-         |    AND text NOT IN (SELECT text FROM documents WHERE doc_id < (SELECT c FROM cut))),
-         |bt AS (
-         |  SELECT doc_id,
-         |    list_distinct(list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])) AS sh
-         |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks FROM s1)),
-         |ct AS (
-         |  SELECT doc_id,
-         |    list_distinct(list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])) AS sh
-         |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-         |        FROM documents WHERE doc_id < (SELECT c FROM cut))),
-         |pr2 AS (
-         |  SELECT a_id, b_id FROM (
-         |    SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-         |      len(list_intersect(a.sh, b.sh)) AS common, len(a.sh) AS asz, len(b.sh) AS bsz
-         |    FROM bt a JOIN bt b ON a.doc_id < b.doc_id)
-         |  WHERE common > 0 AND CAST(common AS DOUBLE) / (asz + bsz - common) >= 0.2),
-         |edges2 AS (
-         |  SELECT a_id AS src, b_id AS dst FROM pr2
-         |  UNION SELECT b_id, a_id FROM pr2),
-         |walk2 AS (
-         |  SELECT src, dst FROM edges2
-         |  UNION
-         |  SELECT w.src, e.dst FROM walk2 w JOIN edges2 e ON w.dst = e.src),
-         |lab2 AS (SELECT src AS id, LEAST(src, MIN(dst)) AS group_id FROM walk2 GROUP BY src),
-         |surv2a AS (
-         |  SELECT doc_id, sh FROM bt
-         |  WHERE doc_id NOT IN (SELECT id FROM lab2 WHERE id <> group_id)),
-         |dup2 AS (
-         |  SELECT DISTINCT s.doc_id
-         |  FROM surv2a s JOIN ct c ON len(list_intersect(s.sh, c.sh)) > 0
-         |  WHERE CAST(len(list_intersect(s.sh, c.sh)) AS DOUBLE)
-         |        / (len(s.sh) + len(c.sh) - len(list_intersect(s.sh, c.sh))) >= 0.2),
-         |s2 AS (
-         |  SELECT doc_id FROM surv2a WHERE doc_id NOT IN (SELECT doc_id FROM dup2)),
-         |b3 AS (
-         |  SELECT s2.doc_id AS vec_id FROM s2
-         |  JOIN embeddings e ON e.vec_id = s2.doc_id
-         |  WHERE s2.doc_id >= (SELECT c FROM ecut)),
-         |cand AS (
-         |  SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
-         |  FROM sigs a JOIN sigs b ON a.t = b.t AND a.bucket = b.bucket AND a.vec_id < b.vec_id
-         |  WHERE a.vec_id IN (SELECT vec_id FROM b3) AND b.vec_id IN (SELECT vec_id FROM b3)),
-         |$pairCosineCte,
-         |pr3 AS (SELECT a_id, b_id FROM scored WHERE score > 0.3),
-         |edges3 AS (
-         |  SELECT a_id AS src, b_id AS dst FROM pr3
-         |  UNION SELECT b_id, a_id FROM pr3),
-         |walk3 AS (
-         |  SELECT src, dst FROM edges3
-         |  UNION
-         |  SELECT w.src, e.dst FROM walk3 w JOIN edges3 e ON w.dst = e.src),
-         |lab3 AS (SELECT src AS id, LEAST(src, MIN(dst)) AS group_id FROM walk3 GROUP BY src),
-         |surv3a AS (
-         |  SELECT vec_id FROM b3
-         |  WHERE vec_id NOT IN (SELECT id FROM lab3 WHERE id <> group_id)),
-         |xcand AS (
-         |  SELECT DISTINCT q.vec_id AS q_id, s.vec_id AS c_id
-         |  FROM surv3a q
-         |  JOIN sigs sq ON sq.vec_id = q.vec_id
-         |  JOIN sigs s ON s.t = sq.t AND s.bucket = sq.bucket
-         |  WHERE s.vec_id < (SELECT c FROM ecut)),
-         |xsc AS (
-         |  SELECT c.q_id, c.c_id,
-         |    SUM(CAST(eq.embedding[r.i] AS DOUBLE) * CAST(ec.embedding[r.i] AS DOUBLE)) AS dot,
-         |    SQRT(SUM(CAST(eq.embedding[r.i] AS DOUBLE) * CAST(eq.embedding[r.i] AS DOUBLE))) AS na,
-         |    SQRT(SUM(CAST(ec.embedding[r.i] AS DOUBLE) * CAST(ec.embedding[r.i] AS DOUBLE))) AS nb
-         |  FROM xcand c
-         |  JOIN embeddings eq ON eq.vec_id = c.q_id
-         |  JOIN embeddings ec ON ec.vec_id = c.c_id
-         |  CROSS JOIN range(1, 65) r(i)
-         |  GROUP BY c.q_id, c.c_id),
-         |xdup AS (
-         |  SELECT DISTINCT q_id FROM xsc
-         |  WHERE (CASE WHEN na * nb = 0 THEN 0.0 ELSE dot / (na * nb) END) > 0.3)
-         |SELECT vec_id AS doc_id FROM surv3a
-         |WHERE vec_id NOT IN (SELECT q_id FROM xdup)
-         |ORDER BY doc_id""".stripMargin,
-
-    // Pair-recall floors: DuckDB re-derives n_exact from the exact pair
-    // SQL — the near_dup_pairs oracle's pair set (hash-green at the same
-    // slice/threshold) and the textbook unigram-jaccard pair set — and
-    // pins floor_met.
-    "near_dup_lsh_recall" ->
-      """WITH s AS (
-        |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-        |    SUM(CAST(a.embedding[r.i] AS DOUBLE) * CAST(b.embedding[r.i] AS DOUBLE)) AS dot,
-        |    SQRT(SUM(CAST(a.embedding[r.i] AS DOUBLE) * CAST(a.embedding[r.i] AS DOUBLE))) AS na,
-        |    SQRT(SUM(CAST(b.embedding[r.i] AS DOUBLE) * CAST(b.embedding[r.i] AS DOUBLE))) AS nb
-        |  FROM embeddings a JOIN embeddings b
-        |    ON a.vec_id < b.vec_id AND a.vec_id < 200 AND b.vec_id < 200
-        |  CROSS JOIN range(1,65) r(i)
-        |  GROUP BY 1, 2
-        |)
-        |SELECT CAST(COUNT(*) AS BIGINT) AS n_exact, CAST(1 AS BIGINT) AS floor_met
-        |FROM s WHERE CASE WHEN na * nb = 0 THEN 0.0 ELSE dot / (na * nb) END > 0.3""".stripMargin,
-
-    "minhash_recall" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '')) AS sh
-        |  FROM documents WHERE doc_id < 60
-        |),
-        |p AS (
-        |  SELECT len(list_intersect(a.sh, b.sh)) AS common,
-        |    len(a.sh) AS asz, len(b.sh) AS bsz
-        |  FROM t a JOIN t b ON a.doc_id < b.doc_id
-        |)
-        |SELECT CAST(COUNT(*) AS BIGINT) AS n_exact, CAST(1 AS BIGINT) AS floor_met
-        |FROM p WHERE CAST(common AS DOUBLE) / (asz + bsz - common) >= 0.5""".stripMargin,
-
-    // Filter → pack composition: the quality_filter CTE keeps reasons='',
-    // then the pack CTE runs the exclusive-running-sum window over the
-    // KEPT rows only (filter-then-pack ordering; window formulation =
-    // the distributed per-partition-offset implementation).
-    "pipeline_filter_pack" ->
-      """WITH t AS (
-        |  SELECT doc_id, text,
-        |    regexp_split_to_array(trim(lower(text)), '\s+') AS ltok,
-        |    regexp_split_to_array(trim(text), '\s+') AS tok,
-        |    CASE WHEN trim(text) = '' THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS ntok,
-        |    CAST(length(text) AS DOUBLE) AS len
-        |  FROM documents),
-        |q AS (
-        |  SELECT doc_id, ntok, len,
-        |    ROUND((LEAST(len / 200.0, 1.0) + LEAST(ntok / 40.0, 1.0) +
-        |      GREATEST(1.0 - (CASE WHEN len = 0 THEN 0.0
-        |        ELSE (len - length(regexp_replace(text, '[^a-zA-Z0-9\s]', '', 'g'))) / len END) * 4.0, 0.0) +
-        |      LEAST((CASE WHEN ntok = 0 THEN 0.0
-        |        ELSE len(list_filter(ltok, x -> x IN ('the','a','an','and','of','to','in','is','it','for','on','with'))) / CAST(ntok AS DOUBLE) END) * 5.0, 1.0)
-        |      ) / 4.0, 6) AS quality,
-        |    CASE WHEN ntok = 0 THEN 0.0
-        |      ELSE (ntok - len(list_distinct(tok))) / CAST(ntok AS DOUBLE) END AS dupfrac
-        |  FROM t),
-        |kept AS (
-        |  SELECT doc_id, ntok FROM q
-        |  WHERE NOT (len < 50) AND NOT (ntok < 10)
-        |    AND NOT (dupfrac > 0.5) AND NOT (quality < 0.3)),
-        |c AS (
-        |  SELECT doc_id, ntok,
-        |    COALESCE(SUM(ntok) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS pre
-        |  FROM kept)
-        |SELECT doc_id, CAST(ntok AS BIGINT) AS n_tokens,
-        |  CAST(pre // 512 AS BIGINT) AS seq_id
-        |FROM c ORDER BY doc_id""".stripMargin,
-
-    // Mixture sampling: per-source keep-rate from token totals, salted
-    // md5 bucket under FLOOR(rate*10000) — floor, not round, because
-    // round-half rules differ across engines.
-    "mix_sample" ->
-      """WITH d AS (
-        |  SELECT doc_id, source, text,
-        |    CASE WHEN trim(text) = '' THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_tokens
-        |  FROM documents),
-        |r AS (
-        |  SELECT source, LEAST(1.0, 2000.0 / CAST(SUM(n_tokens) AS DOUBLE)) AS rate
-        |  FROM d GROUP BY source)
-        |SELECT d.doc_id, d.source, CAST(d.n_tokens AS BIGINT) AS n_tokens
-        |FROM d JOIN r USING (source)
-        |WHERE ('0x' || substr(md5('mix:' || CAST(d.doc_id AS VARCHAR)), 1, 8))::BIGINT % 10000
-        |      < CAST(FLOOR(rate * 10000) AS BIGINT)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // Streaming exact dedup: the distinct sha set is order-free and both
-    // engines hash the identical UTF-8 text bytes.
-    "stream_dedup" ->
-      """SELECT DISTINCT sha256(text) AS text_sha
-        |FROM documents ORDER BY text_sha""".stripMargin,
-
-    // Watermarked streaming dedup: the doubled arrival set collapses back
-    // to the distinct sha set (the 365-day delay outlives the synthetic
-    // id-second event-time span, so no state expires mid-run — a
-    // re-arrival is always inside the horizon and dropped).
-    "stream_dedup_wm" ->
-      """SELECT DISTINCT sha256(text) AS text_sha
-        |FROM documents ORDER BY text_sha""".stripMargin,
-
-    // Streaming hygiene composition: the batch replay is quality_filter's
-    // kept set collapsed to distinct (sha, metrics) rows — stateless
-    // filter + within-horizon dedup where the 365-day delay outlives the
-    // synthetic event-time span, so stream and batch agree exactly.
-    "stream_hygiene" ->
-      """WITH t AS (
-        |  SELECT doc_id, text,
-        |    regexp_split_to_array(trim(lower(text)), '\s+') AS ltok,
-        |    regexp_split_to_array(trim(text), '\s+') AS tok,
-        |    CASE WHEN trim(text) = '' THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS ntok,
-        |    CAST(length(text) AS DOUBLE) AS len
-        |  FROM documents),
-        |q AS (
-        |  SELECT doc_id, text, ntok, len,
-        |    ROUND((LEAST(len / 200.0, 1.0) + LEAST(ntok / 40.0, 1.0) +
-        |      GREATEST(1.0 - (CASE WHEN len = 0 THEN 0.0
-        |        ELSE (len - length(regexp_replace(text, '[^a-zA-Z0-9\s]', '', 'g'))) / len END) * 4.0, 0.0) +
-        |      LEAST((CASE WHEN ntok = 0 THEN 0.0
-        |        ELSE len(list_filter(ltok, x -> x IN ('the','a','an','and','of','to','in','is','it','for','on','with'))) / CAST(ntok AS DOUBLE) END) * 5.0, 1.0)
-        |      ) / 4.0, 6) AS quality,
-        |    CASE WHEN ntok = 0 THEN 0.0
-        |      ELSE (ntok - len(list_distinct(tok))) / CAST(ntok AS DOUBLE) END AS dupfrac
-        |  FROM t)
-        |SELECT DISTINCT sha256(text) AS text_sha,
-        |  CAST(ntok AS BIGINT) AS n_tokens, quality
-        |FROM q
-        |WHERE NOT (len < 50) AND NOT (ntok < 10)
-        |  AND NOT (dupfrac > 0.5) AND NOT (quality < 0.3)
-        |ORDER BY text_sha""".stripMargin,
-
-    // Multimodal featurizer invariants, engine-independent: the (fake)
-    // decoder always emits dim=32 features, and L2-normalizes to unit norm
-    // exactly when the payload (UTF-8 text bytes) is non-empty — each
-    // 8-byte stride deposits ±1 into one bucket, and the fixtures contain
-    // no all-cancelling doc (asserted by the Spark side's norm check).
-    "multimodal_invariants" ->
-      """SELECT doc_id, CAST(32 AS BIGINT) AS n_features,
-        |  CAST(CASE WHEN octet_length(encode(text)) = 0 THEN 0 ELSE 1 END AS BIGINT) AS unit_norm
-        |FROM documents WHERE doc_id < 50 ORDER BY doc_id""".stripMargin,
-
-    // The fake decoder's integer accumulation re-derived from scratch
-    // (round-12): per 8-byte stride the Java rolling hash
-    // h = h*31 + signed_byte (Long wraparound) has the closed form
-    // C·31^k + Σ bⱼ·31^(k−1−j), evaluated in HUGEINT and reduced mod
-    // 2^64; the signed reinterpretation + Java truncated-% pick the
-    // bucket, the low bit picks ±1. Exact 31-powers come from a literal
-    // list (DuckDB's ** returns DOUBLE and rounds at these magnitudes).
-    // The digest string matches Spark's to_json(array<int>) compact form.
-    "multimodal_features" ->
-      """WITH b AS (
-        |  SELECT doc_id, hex(encode(text)) AS hx, octet_length(encode(text)) AS n
-        |  FROM documents WHERE doc_id < 50),
-        |strides AS (
-        |  SELECT doc_id, hx, n, s.s AS s, LEAST(8, n - s.s) AS k
-        |  FROM b, LATERAL (SELECT UNNEST(range(0, n, 8)) AS s) s),
-        |hashes AS (
-        |  SELECT doc_id, s,
-        |    ((h_raw % 18446744073709551616::HUGEINT) + 18446744073709551616::HUGEINT)
-        |      % 18446744073709551616::HUGEINT AS h
-        |  FROM (
-        |    SELECT st.doc_id, st.s,
-        |      1125899906842597::HUGEINT
-        |        * list_value(1::HUGEINT,31,961,29791,923521,28629151,887503681,27512614111,852891037441)[st.k + 1]
-        |      + COALESCE(SUM(
-        |          (CASE WHEN bv > 127 THEN bv - 256 ELSE bv END)::HUGEINT
-        |          * list_value(1::HUGEINT,31,961,29791,923521,28629151,887503681,27512614111,852891037441)[st.k - j.j]), 0) AS h_raw
-        |    FROM strides st, LATERAL (
-        |      SELECT UNNEST(range(st.k)) AS j,
-        |        ('0x' || substr(st.hx, 2 * (st.s + UNNEST(range(st.k))) + 1, 2))::INT AS bv) j
-        |    GROUP BY st.doc_id, st.s, st.k)),
-        |contrib AS (
-        |  SELECT doc_id,
-        |    (((CASE WHEN h >= 9223372036854775808::HUGEINT
-        |        THEN h - 18446744073709551616::HUGEINT ELSE h END) % 32) + 32) % 32 AS idx,
-        |    CASE WHEN h % 2 = 0 THEN 1 ELSE -1 END AS c
-        |  FROM hashes),
-        |accum AS (
-        |  SELECT b.doc_id, g.i AS i, COALESCE(SUM(c.c), 0)::BIGINT AS v
-        |  FROM b CROSS JOIN (SELECT UNNEST(range(32)) AS i) g
-        |  LEFT JOIN contrib c ON c.doc_id = b.doc_id AND c.idx = g.i
-        |  GROUP BY b.doc_id, g.i)
-        |SELECT doc_id,
-        |  md5('[' || string_agg(v, ',' ORDER BY i) || ']') AS feat_digest
-        |FROM accum GROUP BY doc_id ORDER BY doc_id""".stripMargin
-  )
 }

@@ -490,7 +490,7 @@ object Dedup {
     // Pin ONE evaluation of the batch-sized frames each consumed twice
     // (`nb` by the pair subtree + the survivor anti-join; `within` by the
     // cross-index postings probe + the final anti-join): in a composed
-    // chain (see SparkEntry's daily-drop rehearsal) the unpinned form
+    // chain (see PipelineRows.dailyDropRehearsal) the unpinned form
     // re-runs the whole upstream hygiene chain once per consumer — 2.6×
     // the end-to-end cost at sf0.1 (dev profile, since removed; Bench's
     // pipeline_daily_drop row times the pinned chain). LAZY checkpoints:

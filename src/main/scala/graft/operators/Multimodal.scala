@@ -240,12 +240,6 @@ object Multimodal {
       case None => fakeDecodeFeatures(bytes, dim)
     }
 
-  /** Column form of [[decodeFeaturesReal]]. */
-  def decodeFeaturesRealCol(bytes: Column, dim: Int = 64): Column = {
-    val f = udf((b: Array[Byte]) => decodeFeaturesReal(b, dim))
-    f(bytes)
-  }
-
   /** REAL image resize: decode → bilinear scale to target pixels →
     * re-encode (`png` by default — lossless, so the resized payload
     * decodes to exactly the scaled pixels). Falls back to the

@@ -49,12 +49,4 @@ object Similarity {
     Validate.positiveTopK(k)
     scored.orderBy(desc("score"), col(idCol).asc).limit(k)
   }
-
-  /** Batch top-k per query — see [[SimJoin.topKPerQuery]] for the scale
-    * contract (partial top-k before the shuffle).
-    */
-  def simJoinTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-                  qId: String = "q_id", qEmb: String = "q_emb",
-                  cId: String = "c_id", cEmb: String = "c_emb"): DataFrame =
-    SimJoin.topKPerQuery(queries, corpus, k, qId, qEmb, cId, cEmb)
 }

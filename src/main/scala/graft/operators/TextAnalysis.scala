@@ -285,19 +285,6 @@ object TextAnalysis {
     f(text)
   }
 
-  /** Per-group rollups over a corpus (E5): doc counts, char/token mass,
-    * quality aggregates. One hash-shuffle groupBy — partial aggregation
-    * makes this scan-bound at any scale.
-    */
-  def corpusStats(docs: DataFrame, textCol: String, groupCols: Seq[String]): DataFrame =
-    docs.groupBy(groupCols.map(col): _*)
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(length(col(textCol))).as("total_chars"),
-        round(avg(length(col(textCol))), 6).as("avg_chars"),
-        sum(tokenCount(col(textCol))).as("total_tokens"),
-        round(avg(qualityScore(col(textCol))), 6).as("avg_quality"))
-
   // ------------------------------------------------ vocabulary building
   /** Corpus VOCABULARY: the top-N words by total term frequency with
     * document frequency alongside — the first pass of any tokenizer

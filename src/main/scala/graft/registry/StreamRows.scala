@@ -1,0 +1,892 @@
+package graft.registry
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+
+import graft.core.{SessionCache, Tables}
+import graft.operators._
+import graft.streaming.Streams
+
+import Artifacts._
+import OracleSql._
+import Bm25Rows.{bm25Cte, bm25Terms, phraseBatchQueries, phraseSearchSql}
+import TextRows.{HhK, heavyHittersSql, hhInvariantRow, lineBoilerplateSql, lineCleanSql, piiScrubOracle}
+
+/** Structured Streaming rows (E6): every AvailableNow stream, each hash-
+  * checked against its batch twin's semantics.
+  */
+private[graft] object StreamRows {
+
+  /** Invariant flags of the streaming IVF probe, declared as the
+    * hash-checked `stream_ivf_probe` row (round-13; rows-only through
+    * r12 — the pair listing is seeded-k-means territory and stays pinned
+    * by StreamsSpec). The probe is mode-agnostic DataFrame code, so the
+    * designed invariants are:
+    *
+    *  - `parity`: the streaming execution (file source → AvailableNow →
+    *    memory sink) emits EXACTLY the (q_id, c_id, rounded score) set
+    *    the same [[Streams.ivfProbeStream]] plan produces on the batch
+    *    frame — the StreamsSpec equality, re-proven on the driver
+    *    fixtures every round;
+    *  - `stateless`: the executed streaming plan ran ZERO state
+    *    operators (each indexed id lives in exactly one cluster, so no
+    *    dedup store exists) — checked on the actual
+    *    StreamingQueryProgress, not the code.
+    *
+    * Constant row → constant oracle (the ann_batch_topk pattern).
+    * Cached: the bench-only `bench_stream_ivf_probe_20q` row times the
+    * live streaming probe per iteration.
+    */
+  private def streamIvfParity(s: SparkSession, dir: String): DataFrame =
+    SessionCache.getOrCreate(s"stream_ivf_parity:$dir") {
+      val (model, idx) = ivfIndex(s, dir)
+      val nProbe = IvfIndex.defaultNProbe(model.centroids.length)
+      val sinkName = "graft_stream_ivf_probe"
+      val sq = Streams.ivfProbeStream(
+          Tables.embeddingsStream(s, dir).filter(col("vec_id") < 20),
+          "vec_id", "embedding", idx, model, threshold = 0.5, nProbe)
+        .select(col("q_id"), col("c_id"), round(col("score"), 6).as("score"))
+        .writeStream.format("memory").queryName(sinkName).outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      graft.streaming.Streams.awaitOrAbort(sq, "stream_ivf_probe")
+      val stateless = sq.lastProgress != null && sq.lastProgress.stateOperators.isEmpty
+      def rows(df: DataFrame): Set[(Long, Long, Double)] =
+        df.select(col("q_id"), col("c_id"), col("score"))
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val got = rows(s.table(sinkName))
+      val expected = rows(Streams.ivfProbeStream(
+          embs(s, dir).filter(col("vec_id") < 20),
+          "vec_id", "embedding", idx, model, threshold = 0.5, nProbe)
+        .select(col("q_id"), col("c_id"), round(col("score"), 6).as("score")))
+      import s.implicits._
+      Seq((20L, if (got == expected) 1L else 0L, if (stateless) 1L else 0L))
+        .toDF("n_queries", "parity", "stateless")
+    }
+
+  /** Invariant flags of the QUANTIZED streaming IVF probe (round-16;
+    * VERDICT r15 next #3) — [[Streams.ivfProbeStreamQuantized]] over the
+    * PERSISTED packed index: int8 candidate pass on the BINARY codes,
+    * float-side join only for near-threshold survivors, exact float
+    * threshold. Three designed invariants, the stream_ivf_probe pattern:
+    *
+    *  - `parity`: streaming emission == the same plan on the batch frame
+    *    (mode-agnostic by construction);
+    *  - `float_parity`: the emitted set == the FLOAT [[Streams.ivfProbeStream]]
+    *    emission over the same queries/corpus — the int8 prescreen's
+    *    margin provably swallowed the quantization error, so the cheap
+    *    serving form answers EXACTLY like the expensive one;
+    *  - `stateless`: the executed streaming plan ran zero state
+    *    operators (joins and filters only), checked on the actual
+    *    StreamingQueryProgress.
+    *
+    * Constant row → constant oracle.
+    */
+  private def streamIvfQuantParity(s: SparkSession, dir: String): DataFrame =
+    SessionCache.getOrCreate(s"stream_ivf_quant_parity:$dir") {
+      val (model, idx) = ivfIndex(s, dir)
+      val root = ivfPackedIdx(s, dir)
+      val packed = IvfPackedIndex.readPacked(s, root)
+      val floatSide = IvfPackedIndex.readFloat(s, root)
+      val nProbe = IvfIndex.defaultNProbe(model.centroids.length)
+      val sinkName = "graft_stream_ivf_probe_quant"
+      val sq = Streams.ivfProbeStreamQuantized(
+          Tables.embeddingsStream(s, dir).filter(col("vec_id") < 20),
+          "vec_id", "embedding", packed, floatSide, model,
+          threshold = 0.5, nProbe)
+        .select(col("q_id"), col("c_id"), round(col("score"), 6).as("score"))
+        .writeStream.format("memory").queryName(sinkName).outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      graft.streaming.Streams.awaitOrAbort(sq, "stream_ivf_probe_quantized")
+      val stateless = sq.lastProgress != null && sq.lastProgress.stateOperators.isEmpty
+      def rows(df: DataFrame): Set[(Long, Long, Double)] =
+        df.select(col("q_id"), col("c_id"), col("score"))
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val got = rows(s.table(sinkName))
+      val expected = rows(Streams.ivfProbeStreamQuantized(
+          embs(s, dir).filter(col("vec_id") < 20),
+          "vec_id", "embedding", packed, floatSide, model,
+          threshold = 0.5, nProbe)
+        .select(col("q_id"), col("c_id"), round(col("score"), 6).as("score")))
+      val floatExpected = rows(Streams.ivfProbeStream(
+          embs(s, dir).filter(col("vec_id") < 20),
+          "vec_id", "embedding", idx, model, threshold = 0.5, nProbe)
+        .select(col("q_id"), col("c_id"), round(col("score"), 6).as("score")))
+      import s.implicits._
+      Seq((20L, if (got == expected) 1L else 0L,
+        if (got == floatExpected) 1L else 0L, if (stateless) 1L else 0L))
+        .toDF("n_queries", "parity", "float_parity", "stateless")
+    }
+
+  /** Invariant flags of the STREAMING packed-IVF maintenance (round-17;
+    * VERDICT r16 next #7 + #8): the persisted two-form index built
+    * ENTIRELY by a stream — two controlled waves (sequential
+    * AvailableNow drains over one checkpoint, the daily-drop resume
+    * shape) foreachBatch-append via
+    * [[graft.operators.IvfPackedIndex.append]] (single-commit per
+    * micro-batch, frozen-model assignment, empty batches no-ops), with
+    * the opt-in epoch governor `compactEvery = 2` folding the fan-in as
+    * it grows:
+    *
+    *  - `parity`: the drained index serves EXACTLY what the byte-packed
+    *    rerank over a fresh frozen-model batch build of the same corpus
+    *    serves — stream-append == batch build (deterministic assignment
+    *    makes it split-invariant; StreamsSpec proves the loop on
+    *    designed vectors, this row re-proves it on the driver fixtures);
+    *  - `auto_compacted`: [[graft.store.EpochCommit.compactIfNeeded]]
+    *    fired inside the maintainer and collapsed the committed-epoch
+    *    count to 1 — a forever-appending maintainer can no longer grow
+    *    the listing and the merge-on-read fan-in unboundedly.
+    *
+    * Constant row → constant oracle. Cached: lifecycle churn is a
+    * verification artifact (the ivf_packed_lifecycle precedent).
+    */
+  private def streamIvfPackedMaintain(s: SparkSession, dir: String): DataFrame =
+    SessionCache.getOrCreate(s"stream_ivf_packed_maintain:$dir") {
+      val q = queryVec(s, dir)
+      val (model, _) = ivfIndex(s, dir)
+      val nProbe = IvfIndex.defaultNProbe(model.centroids.length)
+      val e = embs(s, dir)
+      val cut = e.count() / 2
+      val root = SessionCache.newTempDir("graft-ivfp-maintain")
+      val arrival = SessionCache.newTempDir("graft-ivfp-maintain-src")
+      val ckpt = SessionCache.newTempDir("graft-ivfp-maintain-ckpt")
+      for (w <- Seq(e.filter(col("vec_id") < cut), e.filter(col("vec_id") >= cut))) {
+        w.coalesce(1).write.mode("append").parquet(arrival)
+        Streams.ivfPackedMaintainAvailableNow(
+          s.readStream.schema(e.schema).parquet(arrival),
+          "vec_id", "embedding", model, root,
+          compactEvery = 2, checkpoint = Some(ckpt))
+      }
+      val served = probed(IvfPackedIndex.queryTopK(s, root, model, q, RecallK, nProbe))
+      val assigned = IvfIndex.buildIndex(e, "vec_id", "embedding", model)
+        .localCheckpoint(eager = false)
+      val fresh = probed(IvfIndex.queryTopKPackedRerank(
+        IvfIndex.quantizeIndexPacked(assigned), assigned, model, q, RecallK, nProbe))
+      val compacted = graft.store.EpochCommit.committedCount(s, root) == 1
+      import s.implicits._
+      Seq((2L, if (served == fresh) 1L else 0L, if (compacted) 1L else 0L))
+        .toDF("n_waves", "parity", "auto_compacted")
+    }
+
+  /** Shared by `stream_ann_probe` and `stream_ann_probe_wm`: both
+    * serving forms emit the same pair set on this bounded replay (each
+    * q_id arrives exactly once — see the row docs), so one SQL
+    * derivation oracle-checks both.
+    */
+  private lazy val streamAnnProbeOracle: String =
+    s"""WITH ${lshSigsCte(nTables = 16, nBits = 6)},
+       |qs AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < 20),
+       |qb AS (SELECT q.q_id, s.t, s.bucket FROM qs q JOIN sigs s ON s.vec_id = q.q_id),
+       |cand AS (
+       |  SELECT DISTINCT qb.q_id, s.vec_id AS c_id
+       |  FROM qb JOIN sigs s ON s.t = qb.t AND s.bucket = qb.bucket),
+       |sc AS (
+       |  SELECT c.q_id, c.c_id,
+       |    SUM(CAST(e.embedding[r.i] AS DOUBLE) * CAST(q.q_emb[r.i] AS DOUBLE)) AS dot,
+       |    SQRT(SUM(CAST(e.embedding[r.i] AS DOUBLE) * CAST(e.embedding[r.i] AS DOUBLE))) AS na,
+       |    SQRT(SUM(CAST(q.q_emb[r.i] AS DOUBLE) * CAST(q.q_emb[r.i] AS DOUBLE))) AS nb
+       |  FROM cand c
+       |  JOIN embeddings e ON e.vec_id = c.c_id
+       |  JOIN qs q ON q.q_id = c.q_id
+       |  CROSS JOIN range(1, 65) r(i)
+       |  GROUP BY c.q_id, c.c_id),
+       |scored AS (
+       |  SELECT q_id, c_id,
+       |    CASE WHEN na * nb = 0 THEN 0.0 ELSE dot / (na * nb) END AS score
+       |  FROM sc)
+       |SELECT q_id, c_id, ROUND(score, 6) AS score
+       |FROM scored WHERE score > 0.5
+       |ORDER BY q_id, c_id""".stripMargin
+
+  val rows: Seq[Declared] = Seq(
+    // ---- E6: the SAME rollup through actual Structured Streaming -----
+    // (file stream + watermark + AvailableNow into a memory sink; shares
+    // the batch twin's oracle — stream and batch must agree exactly).
+    // Streams the fixture parquet DIRECTLY (nanos cast inside the
+    // streaming read, Tables.eventsStream) — round 3 rewrote a normalized
+    // temp copy of the whole table per run: 11 s of pure gate overhead
+    // and a temp-disk leak.
+    Declared("events_window_stream", (s, dir) => {
+      val sinkName = "graft_events_window_stream"
+      // stateful start (r22): window-agg state stores sized by
+      // Streams.stateShufflePartitions, not scan parallelism
+      Streams.startStatefulAwait(s, Streams.toMemorySink(
+          Streams.eventsWindowAggStream(Tables.eventsStream(s, dir)), sinkName)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
+        "events_window_stream")
+      s.table(sinkName).orderBy("window_start", "event_type")
+    },
+      oracle = """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
+        |  event_type, COUNT(*) AS n_events,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value,
+        |  FLOOR(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) * 1e6 + 0.5) / 1e6 AS avg_value
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+
+    // ---- E6: streaming similarity filter (stateless map) -------------
+    // The streaming face of the flagship scan: score each arriving vector
+    // against the query vector, keep matches above the threshold. Append
+    // mode, no state, no watermark — and because it filters a precomputed
+    // embedding column, its batch twin IS the DuckDB cosine CTE: a real
+    // oracle row for streaming beyond windowed aggregation.
+    Declared("stream_sim_filter", (s, dir) => {
+      val q = queryVec(s, dir)
+      // glob + basePath: see Tables.eventsStream — a bare file path trips
+      // FileStreamSource's basePath override
+      val stream = s.readStream.schema(embs(s, dir).schema)
+        .option("basePath", dir).parquet(s"$dir/{embeddings.parquet}")
+      val sinkName = "graft_stream_sim_filter"
+      val sq = Streams.scoreFilter(stream, "embedding", q, threshold = 0.2)
+        .select(col("vec_id"), round(col("score"), 6).as("score"))
+        .writeStream.format("memory").queryName(sinkName).outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      graft.streaming.Streams.awaitOrAbort(sq, "stream_sim_filter")
+      s.table(sinkName).orderBy("vec_id")
+    },
+      // batch twin of the streaming score+filter: identical cosine CTE as
+      // cosine_scores, threshold applied to the UNROUNDED score (nearest
+      // fixture score is >1e-3 from the 0.2 boundary at every sf checked).
+      oracle = s"""$scoreVsQ
+         |SELECT vec_id, ROUND(score, 6) AS score FROM sc WHERE score > 0.2
+         |ORDER BY vec_id""".stripMargin),
+
+    // E2/E6 (round-9): ONLINE ANN serving — query vectors arrive as a
+    // stream and probe the STATIC persisted index via a stream-static
+    // equi-join on (table, bucket); exact-cosine threshold + cross-table
+    // dedup make the match set deterministic under ANY micro-batching
+    // (StreamsSpec pins stream == batch equality). Queries are corpus
+    // members, so each finds at least its self-match. Hash-checked
+    // (round-11): the md5 planes let the DuckDB oracle re-derive the
+    // exact emitted pair set from scratch.
+    Declared("stream_ann_probe", (s, dir) => {
+      val sinkName = "graft_stream_ann_probe"
+      Streams.startStatefulAwait(s, Streams.annProbeStream(
+          Tables.embeddingsStream(s, dir).filter(col("vec_id") < 20),
+          "vec_id", "embedding", lshIndex(s, dir), threshold = 0.5, annCfg)
+        .select(col("q_id"), col("c_id"), round(col("score"), 6).as("score"))
+        .writeStream.format("memory").queryName(sinkName).outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
+        "stream_ann_probe")
+      s.table(sinkName).orderBy("q_id", "c_id")
+    },
+      // The streaming serving join's exact emitted set: every (query <20,
+      // candidate) pair colliding in any of the 16 tables whose exact
+      // cosine clears 0.5 — stream-static join semantics are micro-batch
+      // invariant, so the sink equals this batch-derivable set (StreamsSpec
+      // additionally pins stream == batch on the engine side).
+      oracle = streamAnnProbeOracle),
+
+    // E2/E6 (round-11): the BOUNDED-STATE serving form — same probe join,
+    // but the cross-table dedup state expires past the event-time
+    // watermark (dropDuplicatesWithinWatermark), so a continuous
+    // deployment's state is O(horizon), not O(pairs ever). Synthetic
+    // arrival time (epoch + vec_id seconds) + a 365-day delay cover the
+    // whole query span, so this bounded replay emits exactly the
+    // unwatermarked row's pair set (StreamsSpec pins the equality).
+    // Hash-checked (round-11) against the same from-scratch DuckDB
+    // derivation as stream_ann_probe.
+    Declared("stream_ann_probe_wm", (s, dir) => {
+      val sinkName = "graft_stream_ann_probe_wm"
+      val queries = Tables.embeddingsStream(s, dir).filter(col("vec_id") < 20)
+        .withColumn("arrival_ts", timestamp_seconds(lit(1704067200L) + col("vec_id")))
+      Streams.startStatefulAwait(s, Streams.annProbeStreamWithinWatermark(queries,
+          "vec_id", "embedding", lshIndex(s, dir), threshold = 0.5, annCfg,
+          tsCol = "arrival_ts", delay = "365 days")
+        .select(col("q_id"), col("c_id"), round(col("score"), 6).as("score"))
+        .writeStream.format("memory").queryName(sinkName).outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
+        "stream_ann_probe_wm")
+      s.table(sinkName).orderBy("q_id", "c_id")
+    },
+      // The watermarked (bounded-state) form emits the identical pair set
+      // on this replay — each q_id arrives once, so every cross-table
+      // duplicate lands in one micro-batch, well inside the 365-day
+      // horizon. Same oracle, independently proving the
+      // dropDuplicatesWithinWatermark rewrite preserved semantics.
+      oracle = streamAnnProbeOracle),
+
+    // E2/E6 (round-9): the IVF twin of stream_ann_probe — and fully
+    // STATELESS: each indexed id lives in exactly one cluster, so no
+    // (q_id, c_id) dedup store exists in the plan at all. Declared
+    // (round-13) as the stream==batch parity + zero-state-operators
+    // invariant row, hash-checked against a constant oracle — the
+    // listing itself is seeded-k-means territory (StreamsSpec pins it).
+    Declared("stream_ivf_probe", (s, dir) => streamIvfParity(s, dir),
+      // stream_ivf_probe: streaming emission == batch emission of the same
+      // plan, and the executed streaming plan ran zero state operators.
+      oracle = """SELECT CAST(20 AS BIGINT) AS n_queries, CAST(1 AS BIGINT) AS parity,
+        |  CAST(1 AS BIGINT) AS stateless""".stripMargin, cached = true),
+
+    // E2/E6 (round-16): the QUANTIZED twin — the int8 candidate pass +
+    // float re-rank served as a query-vector stream over the PERSISTED
+    // packed index. Declared as stream==batch parity + emitted-set ==
+    // float-probe parity (the prescreen margin swallows quantization
+    // error) + zero-state-operators, hash-checked against a constant
+    // oracle (see streamIvfQuantParity).
+    Declared("stream_ivf_probe_quantized", (s, dir) => streamIvfQuantParity(s, dir),
+      // Quantized streaming probe: stream == batch, emitted set == the
+      // float probe's (the per-row proven bound swallowed the int8 error),
+      // zero state ops.
+      oracle = """SELECT CAST(20 AS BIGINT) AS n_queries, CAST(1 AS BIGINT) AS parity,
+        |  CAST(1 AS BIGINT) AS float_parity,
+        |  CAST(1 AS BIGINT) AS stateless""".stripMargin, cached = true),
+
+    Declared("stream_ivf_packed_maintain", (s, dir) => streamIvfPackedMaintain(s, dir),
+      // Streaming packed-IVF maintenance: two-wave stream-append == fresh
+      // frozen-model batch build, and the compactEvery=2 governor folded
+      // the epoch fan-in to 1. Constant flags pin the only acceptable
+      // outcome.
+      oracle = """SELECT CAST(2 AS BIGINT) AS n_waves, CAST(1 AS BIGINT) AS parity,
+        |  CAST(1 AS BIGINT) AS auto_compacted""".stripMargin, cached = true),
+
+    // ---- E6: CUSTOM STATE — flatMapGroupsWithState sessionizer through
+    // an actual stream (file source → groupByKey → per-user GroupState →
+    // append memory sink). Emits a session row when its gap closes; each
+    // user's final in-flight session stays in state, so the oracle is the
+    // window sessionization MINUS every user's max session_seq. The gap
+    // arithmetic is integer epoch-micros on both paths.
+    Declared("sessionize_stateful", (s, dir) => {
+      import s.implicits._
+      val evs = Tables.eventsStream(s, dir)
+        .select(col("user_id"), col("ts")).as[Streams.Ev]
+      val sinkName = "graft_sessionize_stateful"
+      Streams.startStatefulAwait(s, Streams.sessionizeStateful(evs, gapMinutes = 30).toDF()
+        .writeStream.format("memory").queryName(sinkName).outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
+        "sessionize_stateful")
+      s.table(sinkName).orderBy("user_id", "session_seq")
+    },
+      // the stateful sessionizer emits only CLOSED sessions: the window
+      // construction of `sessionize`, minus each user's last (max
+      // session_seq) session, which is still open when the stream ends.
+      oracle = """WITH s AS (
+        |  SELECT user_id, ts, event_id,
+        |    CASE WHEN lag(ts) OVER w IS NULL
+        |           OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
+        |         THEN 1 ELSE 0 END AS new_s
+        |  FROM events
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+        |),
+        |g AS (
+        |  SELECT user_id,
+        |    SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS session_seq
+        |  FROM s
+        |),
+        |c AS (SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq, COUNT(*) AS n_events
+        |      FROM g GROUP BY 1, 2)
+        |SELECT user_id, session_seq, n_events FROM c
+        |QUALIFY session_seq < MAX(session_seq) OVER (PARTITION BY user_id)
+        |ORDER BY user_id, session_seq""".stripMargin),
+
+    // E6 (round-11): the DEPLOYABLE sessionizer — EventTimeTimeout flushes
+    // an idle user's final session once the watermark passes its gap
+    // boundary and FREES the key's state (the NoTimeout form above keeps
+    // every user forever and swallows finals). With delay 0 the final
+    // watermark is the global max event time, so the bounded replay emits
+    // the closed sessions PLUS every final whose last event sits > gap
+    // before the stream's end — all oracle-derivable (the fixtures have
+    // no user within 1 ms of the boundary at any sf, so engine
+    // strict-vs-nonstrict comparisons cannot flip a row). The timeout
+    // fires in the engine's trailing no-data micro-batch.
+    Declared("sessionize_stateful_exp", (s, dir) => {
+      import s.implicits._
+      val evs = Tables.eventsStream(s, dir)
+        .select(col("user_id"), col("ts")).as[Streams.Ev]
+        .withWatermark("ts", "0 seconds")
+      val sinkName = "graft_sessionize_stateful_exp"
+      Streams.startStatefulAwait(s, Streams.sessionizeStatefulExpiring(evs, gapMinutes = 30).toDF()
+        .writeStream.format("memory").queryName(sinkName).outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
+        "sessionize_stateful_exp")
+      s.table(sinkName).orderBy("user_id", "session_seq")
+    },
+      // The expiring form: same session assignment, but a FINAL session also
+      // emits when its gap boundary (last event + 30 min, ms-floored the way
+      // the engine arms the event-time alarm) lies before the final
+      // watermark (global max ts, delay 0). No fixture user sits within
+      // 1 ms of the boundary, so comparison strictness cannot flip a row.
+      oracle = """WITH s AS (
+        |  SELECT user_id, ts, event_id,
+        |    CASE WHEN lag(ts) OVER w IS NULL
+        |           OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
+        |         THEN 1 ELSE 0 END AS new_s
+        |  FROM events
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+        |),
+        |g AS (
+        |  SELECT user_id, ts,
+        |    SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS session_seq
+        |  FROM s
+        |),
+        |c AS (SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq, COUNT(*) AS n_events,
+        |             MAX(ts) AS last_ts
+        |      FROM g GROUP BY 1, 2),
+        |m AS (SELECT MAX(ts) AS maxts FROM events)
+        |SELECT user_id, session_seq, n_events FROM c CROSS JOIN m
+        |QUALIFY session_seq < MAX(session_seq) OVER (PARTITION BY user_id)
+        |     OR epoch_us(last_ts) // 1000 + 1800000 < epoch_us(maxts) // 1000
+        |ORDER BY user_id, session_seq""".stripMargin),
+
+    // E5×E6: streaming ingest-time quality filter over the documents
+    // arrival stream — one fused metrics pass per arriving doc, keep the
+    // clean rows. Stateless (append mode, no watermark), so the batch
+    // twin replays it exactly: the streaming face of quality_filter.
+    Declared("stream_quality_filter", (s, dir) => {
+      val sinkName = "graft_stream_quality_filter"
+      val sq = Streams.qualityFilterStream(Tables.documentsStream(s, dir), "text")
+        .select(col("doc_id"), col("n_tokens"), col("quality"))
+        .writeStream.format("memory").queryName(sinkName).outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      graft.streaming.Streams.awaitOrAbort(sq, "stream_quality_filter")
+      s.table(sinkName).orderBy("doc_id")
+    },
+      // Streaming quality filter: stateless, so the batch replay IS the
+      // oracle — the quality_filter CTEs restricted to the kept rows.
+      oracle = s"""WITH ${qualityCte()}
+         |SELECT doc_id, CAST(ntok AS BIGINT) AS n_tokens, quality
+         |FROM qs WHERE $qualityKept
+         |ORDER BY doc_id""".stripMargin),
+
+    // E4×E6: streaming exact dedup over the documents ARRIVAL stream —
+    // the ingest-time dedup of a training pipeline, run as a REAL
+    // AvailableNow stream through dropDuplicates state. WHICH duplicate
+    // survives is arrival-order dependent, so the declared row emits the
+    // distinct sha set itself (order-free, deterministic); DuckDB's
+    // sha256() replays Spark's sha2(text, 256) hex exactly.
+    Declared("stream_dedup", (s, dir) => {
+      val sinkName = "graft_stream_dedup"
+      Streams.startStatefulAwait(s,
+        Streams.dedupExactStream(Tables.documentsStream(s, dir), "text")
+        .select("text_sha")
+        .writeStream.format("memory").queryName(sinkName).outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
+        "stream_dedup")
+      s.table(sinkName).orderBy("text_sha")
+    },
+      // Streaming exact dedup: the distinct sha set is order-free and both
+      // engines hash the identical UTF-8 text bytes.
+      oracle = """SELECT DISTINCT sha256(text) AS text_sha
+        |FROM documents ORDER BY text_sha""".stripMargin),
+
+    // E4×E6 bounded-state variant: dedup WITHIN THE WATERMARK HORIZON
+    // (dropDuplicatesWithinWatermark) — the only deployable form on an
+    // actually-unbounded 100 TB stream, since state expires `delay` past
+    // the event-time watermark instead of growing with |distinct corpus|.
+    // The arrival dir holds the fixture file TWICE and maxFilesPerTrigger=1
+    // forces the duplicate copy into a LATER micro-batch, so the dedup
+    // state genuinely crosses batches. Event time is synthetic
+    // (epoch + doc_id seconds) and the delay (365 days) covers the whole
+    // id span at any tested sf, so no state expires mid-run and the output
+    // is exactly the distinct sha set — order-free and deterministic.
+    Declared("stream_dedup_wm", (s, dir) => {
+      val arrivals = Tables.documentsArrivalStream(s, docsTwice(s, dir), maxFilesPerTrigger = 1)
+        .withColumn("arrival_ts", timestamp_seconds(lit(1704067200L) + col("doc_id")))
+      val sinkName = "graft_stream_dedup_wm"
+      Streams.startStatefulAwait(s,
+        Streams.dedupExactStreamWithinWatermark(arrivals, "text", "arrival_ts", "365 days")
+        .select("text_sha")
+        .writeStream.format("memory").queryName(sinkName).outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
+        "stream_dedup_wm")
+      s.table(sinkName).orderBy("text_sha")
+    },
+      // Watermarked streaming dedup: the doubled arrival set collapses back
+      // to the distinct sha set (the 365-day delay outlives the synthetic
+      // id-second event-time span, so no state expires mid-run — a
+      // re-arrival is always inside the horizon and dropped).
+      oracle = """SELECT DISTINCT sha256(text) AS text_sha
+        |FROM documents ORDER BY text_sha""".stripMargin),
+
+    // E5×E4×E6 composition (round-9): the STREAMING face of the hygiene
+    // pipeline — quality-filter each arriving doc, then exact-dedup the
+    // survivors within the watermark horizon, chained as ONE AvailableNow
+    // stream (both stages individually green; the composition row catches
+    // interface drift between them, the pipeline_hygiene argument). The
+    // doubled arrival dir + maxFilesPerTrigger=1 forces the dedup state to
+    // genuinely cross micro-batches. Output: the kept distinct sha set
+    // plus the fused metrics the filter attached — deterministic functions
+    // of the text, so WHICH copy survives cannot change the row.
+    Declared("stream_hygiene", (s, dir) => {
+      val arrivals = Tables.documentsArrivalStream(s, docsTwice(s, dir), maxFilesPerTrigger = 1)
+        .withColumn("arrival_ts", timestamp_seconds(lit(1704067200L) + col("doc_id")))
+      val sinkName = "graft_stream_hygiene"
+      Streams.startStatefulAwait(s, Streams.dedupExactStreamWithinWatermark(
+          Streams.qualityFilterStream(arrivals, "text"), "text", "arrival_ts", "365 days")
+        .select(col("text_sha"), col("n_tokens"), col("quality"))
+        .writeStream.format("memory").queryName(sinkName).outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
+        "stream_hygiene")
+      s.table(sinkName).orderBy("text_sha")
+    },
+      // Streaming hygiene composition: the batch replay is quality_filter's
+      // kept set collapsed to distinct (sha, metrics) rows — stateless
+      // filter + within-horizon dedup where the 365-day delay outlives the
+      // synthetic event-time span, so stream and batch agree exactly.
+      oracle = s"""WITH ${qualityCte()}
+         |SELECT DISTINCT sha256(text) AS text_sha,
+         |  CAST(ntok AS BIGINT) AS n_tokens, quality
+         |FROM qs WHERE $qualityKept
+         |ORDER BY text_sha""".stripMargin),
+
+    // E5×E6 (round-14): STREAMING line cleaning — the ingest-time face
+    // of line_clean as a REAL AvailableNow stream: stateless codegen
+    // projection (no state store, no watermark), so the batch oracle
+    // replays it exactly — the stream_pii_scrub pattern.
+    Declared("stream_line_clean", (s, dir) => {
+      val sinkName = "graft_stream_line_clean"
+      val aug = Tables.documentsStream(s, dir)
+        .select(col("doc_id"), lineAugmented.as("text"))
+      val sq = Streams.lineCleanStream(aug, "text",
+          minWords = 5, boilerplateRe = "(?i)subscribe|cookie")
+        .select(col("doc_id"), col("n_lines"), col("n_kept"), col("cleaned"))
+        .writeStream.format("memory").queryName(sinkName).outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      graft.streaming.Streams.awaitOrAbort(sq, "stream_line_clean")
+      s.table(sinkName).orderBy("doc_id")
+    },
+      oracle = lineCleanSql),
+
+    // E5×E6 (round-13): streaming PII scrub — the ingest-time redaction
+    // pass as a REAL AvailableNow stream: stateless projection, so the
+    // batch pii_scrub oracle replays it exactly (same planted PII).
+    Declared("stream_pii_scrub", (s, dir) => {
+      val sinkName = "graft_stream_pii_scrub"
+      val aug = Tables.documentsStream(s, dir)
+        .select(col("doc_id"), piiAugmented.as("__aug"))
+      val sq = Streams.piiScrubStream(aug, "__aug")
+        .select(col("doc_id"), col("scrubbed"), col("n_pii"))
+        .writeStream.format("memory").queryName(sinkName).outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      graft.streaming.Streams.awaitOrAbort(sq, "stream_pii_scrub")
+      s.table(sinkName).orderBy("doc_id")
+    },
+      // The streaming face is a stateless projection of the same pass —
+      // one oracle serves both (same planted PII, same augmentation).
+      oracle = piiScrubOracle),
+
+    // E5×E6 (round-14): the SAME sketch MAINTAINED over a stream — each
+    // micro-batch sketched, folded into the running summary with the
+    // mergeable-summaries combine. The MG theorems hold under any merge
+    // order, so the drained sketch passes the identical invariant check
+    // against the full corpus's exact counts — one oracle pins batch ==
+    // stream for the sketch family.
+    Declared("stream_heavy_hitters", (s, dir) =>
+      hhInvariantRow(s, dir,
+        Streams.heavyHittersAvailableNow(
+          Tables.documentsStream(s, dir), "text", HhK)),
+      oracle = heavyHittersSql),
+
+    // E3×E6 (round-14): STREAMING phrase routing — each arriving doc
+    // checked in-row for the exact phrase (there is no corpus to index
+    // at ingest; the positional index serves the standing-corpus side).
+    // Stateless AvailableNow stream; shares the full-scan phrase oracle,
+    // so one hash pins scan == index probe == stream.
+    Declared("stream_phrase_match", (s, dir) => {
+      val sinkName = "graft_stream_phrase_match"
+      val sq = Streams.phraseMatchStream(
+          Tables.documentsStream(s, dir), "text", Seq("vector", "stream"))
+        .select(col("doc_id"), col("n_hits"), col("first_pos"))
+        .writeStream.format("memory").queryName(sinkName).outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      graft.streaming.Streams.awaitOrAbort(sq, "stream_phrase_match")
+      s.table(sinkName).orderBy("doc_id")
+    },
+      oracle = phraseSearchSql),
+
+    // E3×E6 (round-15): MULTI-PHRASE streaming ROUTER — the ingest twin
+    // of phrase_batch_topk: every arriving doc checked in-row against
+    // the 5 standing phrases in ONE stateless projection, emitting a
+    // row per matching (phrase, doc). N standing alerts cost one pass
+    // per doc at ingest, exactly as they cost one pruned scan in batch.
+    Declared("stream_phrase_route", (s, dir) => {
+      val sinkName = "graft_stream_phrase_route"
+      val sq = Streams.phraseRouteStream(
+          Tables.documentsStream(s, dir), "text", phraseBatchQueries)
+        .select(col("q_id"), col("doc_id"), col("n_hits"), col("first_pos"))
+        .writeStream.format("memory").queryName(sinkName).outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      graft.streaming.Streams.awaitOrAbort(sq, "stream_phrase_route")
+      s.table(sinkName).orderBy("q_id", "doc_id")
+    },
+      // The streaming router is the batch phrase derivation WITHOUT the
+      // rank cut (every match routes), plus first_pos — the same VALUES
+      // phrase table and slice-compare start-position formula.
+      oracle = """WITH q(q_id, phrase) AS (VALUES
+        |  (0, ['vector', 'stream']),
+        |  (1, ['table', 'hash']),
+        |  (2, ['slow', 'hash', 'batch']),
+        |  (3, ['big', 'table']),
+        |  (4, ['merge', 'group'])),
+        |t AS (
+        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
+        |  FROM documents WHERE trim(text) <> ''),
+        |m AS (
+        |  SELECT q.q_id, t.doc_id,
+        |    list_filter(range(1, len(t.t) - len(q.phrase) + 2),
+        |      i -> t.t[i:i+len(q.phrase)-1] = q.phrase) AS p
+        |  FROM q CROSS JOIN t)
+        |SELECT CAST(q_id AS BIGINT) AS q_id, doc_id,
+        |  CAST(len(p) AS BIGINT) AS n_hits,
+        |  CAST(COALESCE(list_min(p), 0) AS BIGINT) AS first_pos
+        |FROM m WHERE len(p) > 0 ORDER BY q_id, doc_id""".stripMargin),
+
+    // E3×E6 (round-13): STREAMING BM25 ROUTING — each arriving document
+    // scored against the standing keyword profile with statistics FROZEN
+    // from the maintained inverted index (the alerting face of keyword
+    // search). Stateless codegen projection: no state store, no
+    // watermark, identical to the batch backfill (the oracle replays it
+    // batch-wise). Threshold filter on the ROUNDED score (both sides),
+    // so membership can't flip on float-summation order.
+    Declared("stream_bm25_route", (s, dir) => {
+      val sinkName = "graft_stream_bm25_route"
+      val (ts, n, total) = IndexedBm25.frozenStats(s, bm25Index(s, dir), bm25Terms)
+      val sq = Streams.bm25RouteStream(
+          Tables.documentsStream(s, dir), "text", ts, n, total, threshold = 1.1)
+        .select(col("doc_id"), col("score"))
+        .writeStream.format("memory").queryName(sinkName).outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      graft.streaming.Streams.awaitOrAbort(sq, "stream_bm25_route")
+      s.table(sinkName)
+        .select(col("doc_id"), round(col("score"), 6).as("score"))
+        .orderBy("doc_id")
+    },
+      // The routing stream is a stateless replay of the batch score with
+      // index-frozen stats; the index covers the full corpus, so the
+      // corpus-derived df/n/total here are the SAME numbers the stream
+      // folded into its literals. Threshold on the ROUNDED score — both
+      // sides, so summation-order noise can't flip membership.
+      oracle = s"""WITH $bm25Cte
+         |SELECT doc_id, ROUND(score, 6) AS score
+         |FROM bm WHERE ROUND(score, 6) >= 1.1 ORDER BY doc_id""".stripMargin),
+
+    // E4×E6 (round-18): the CLOSED MULTIMODAL ingest loop — the dHash
+    // twin of stream_jaccard_gate_append. Two controlled waves arrive
+    // as sequential AvailableNow drains over one checkpoint; each
+    // micro-batch dedups within itself, gates against the signature
+    // index SO FAR, and appends its survivors' signatures — wave 2's
+    // planted twins of wave-1 NOVEL docs (+400000) drop ONLY because
+    // wave 1's survivors were appended, the closed-loop proof. Wave 1
+    // also carries re-deliveries of INDEXED docs (+200000, first char
+    // flipped) that the index gate must drop. DuckDB replays the
+    // two-wave chain from raw bytes: per-wave signatures, per-wave
+    // transitive closure + min-id survivor, then the Hamming gate vs
+    // corpus (wave 1) and corpus ∪ wave-1 survivors (wave 2).
+    Declared("stream_image_gate_append", (s, dir) => {
+      val d = docs(s, dir)
+      val waveFiles = imageGateWaves(s, dir)
+      // the stream MUTATES its index: fresh hardlink view per call
+      val idx = SessionCache.newTempDir("graft-imgate-idx") + "/idx"
+      SessionCache.linkTree(dhashBaseIdx(s, dir), idx)
+      val arrival = SessionCache.newTempDir("graft-imgate-src")
+      val ckpt = SessionCache.newTempDir("graft-imgate-ckpt")
+      val out = SessionCache.newTempDir("graft-imgate-out") + "/surv"
+      val waveSchema = s.read.parquet(waveFiles.head).schema
+      for ((f, i) <- waveFiles.zipWithIndex) {
+        java.nio.file.Files.copy(java.nio.file.Paths.get(f),
+          java.nio.file.Paths.get(arrival, s"arrival-$i.parquet"))
+        Streams.imageGateMaintainAvailableNow(
+          s.readStream.schema(waveSchema).parquet(arrival),
+          "doc_id", "asset_bytes", idx, out,
+          maxHamming = 10, checkpoint = Some(ckpt))
+      }
+      Streams.readGateOutput(s, out).select(col("doc_id")).orderBy("doc_id")
+    },
+      // The closed multimodal loop, INDEPENDENTLY re-derived (round-18):
+      // the two-wave chain — per-wave signatures, per-wave transitive
+      // closure + min-id survivor, wave-1 gate vs the corpus signatures,
+      // wave-2 gate vs corpus ∪ wave-1 survivors — replayed from raw
+      // bytes in one statement (two recursive walks, the
+      // stream_jaccard_gate_append precedent). Wave membership is
+      // id-range-derivable: wave 1 = [250,287) ∪ [200000,300000), wave 2
+      // = [287,325) ∪ [400000,∞).
+      oracle = s"""WITH RECURSIVE b AS (
+        |  SELECT doc_id, text FROM documents WHERE doc_id >= 250 AND doc_id < 325
+        |  UNION ALL
+        |  SELECT doc_id + 200000 AS doc_id, 'Z' || substr(text, 2) AS text
+        |  FROM documents WHERE doc_id < 250 AND doc_id % 9 = 0
+        |  UNION ALL
+        |  SELECT doc_id + 400000 AS doc_id, 'Z' || substr(text, 2) AS text
+        |  FROM documents WHERE doc_id >= 250 AND doc_id < 287 AND doc_id % 5 = 0),
+        |${dhashSigsCte("b", "")},
+        |cb AS (SELECT doc_id, text FROM documents WHERE doc_id < 250),
+        |${dhashSigsCte("cb", "c")},
+        |s1 AS (SELECT * FROM sig
+        |  WHERE (doc_id >= 250 AND doc_id < 287) OR (doc_id >= 200000 AND doc_id < 300000)),
+        |s2 AS (SELECT * FROM sig
+        |  WHERE (doc_id >= 287 AND doc_id < 325) OR doc_id >= 400000),
+        |pr1 AS (
+        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id FROM s1 a JOIN s1 b ON a.doc_id < b.doc_id
+        |  WHERE bit_count(xor(a.sig_lo, b.sig_lo)) + bit_count(xor(a.sig_hi, b.sig_hi)) <= 10),
+        |${componentsCte("1")},
+        |surv1 AS (
+        |  SELECT s.doc_id, s.sig_lo, s.sig_hi FROM s1 s
+        |  WHERE s.doc_id NOT IN (SELECT id FROM lab1 WHERE id <> group_id)
+        |    AND NOT EXISTS (SELECT 1 FROM csig c
+        |      WHERE bit_count(xor(s.sig_lo, c.sig_lo)) + bit_count(xor(s.sig_hi, c.sig_hi)) <= 10)),
+        |pr2 AS (
+        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id FROM s2 a JOIN s2 b ON a.doc_id < b.doc_id
+        |  WHERE bit_count(xor(a.sig_lo, b.sig_lo)) + bit_count(xor(a.sig_hi, b.sig_hi)) <= 10),
+        |${componentsCte("2")},
+        |surv2 AS (
+        |  SELECT s.doc_id FROM s2 s
+        |  WHERE s.doc_id NOT IN (SELECT id FROM lab2 WHERE id <> group_id)
+        |    AND NOT EXISTS (SELECT 1 FROM csig c
+        |      WHERE bit_count(xor(s.sig_lo, c.sig_lo)) + bit_count(xor(s.sig_hi, c.sig_hi)) <= 10)
+        |    AND NOT EXISTS (SELECT 1 FROM surv1 v
+        |      WHERE bit_count(xor(s.sig_lo, v.sig_lo)) + bit_count(xor(s.sig_hi, v.sig_hi)) <= 10))
+        |SELECT doc_id FROM surv1
+        |UNION ALL SELECT doc_id FROM surv2
+        |ORDER BY doc_id""".stripMargin),
+
+    // E4×E6 (round-15; VERDICT r14 next #5): STREAMING jaccard ingest
+    // gate — each arriving doc probes the PERSISTED shingle-postings
+    // index (built 60% + appended, the lifecycle exercised stream-side)
+    // and drops when near-duplicate of ANY indexed doc; re-delivered
+    // text scores jaccard 1 and always drops. foreachBatch per-doc
+    // gate == the batch gate under any micro-batch split (the decision
+    // is per-doc + index-only), so a plain SQL derivation oracles the
+    // stream exactly — the text twin of stream_ann_probe.
+    Declared("stream_jaccard_gate", (s, dir) => {
+      jaccardCapGuard(s, dir)
+      val d = docs(s, dir)
+      val postingsPath = jaccardGateIdx(s, dir)
+      val out = SessionCache.newTempDir("graft-jgate-out")
+      Streams.jaccardGateAvailableNow(
+        Tables.documentsStream(s, dir)
+          .filter(col("doc_id") >= 250 && col("doc_id") < 325),
+        "doc_id", "text", n = 2, threshold = 0.2,
+        Dedup.readPostingsIndex(s, postingsPath, 2), out)
+      s.read.parquet(out)
+        .select(col("doc_id"), col("lang"), col("source"))
+        .orderBy("doc_id")
+    },
+      // The streaming gate is the cross-index half of the incremental row
+      // alone (per-doc + index-only — no within-batch dedup, which is
+      // batching-dependent and stays with the nightly pass): same bt/ct
+      // shingle sets, drop iff max jaccard vs the indexed corpus >= 0.2.
+      oracle = s"""WITH ${bigramSetsCte("bt", "documents WHERE doc_id >= 250 AND doc_id < 325")},
+        |${bigramSetsCte("ct", "documents WHERE doc_id < 300")},
+        |dup AS (
+        |  SELECT DISTINCT b.doc_id
+        |  FROM bt b JOIN ct c ON len(list_intersect(b.sh, c.sh)) > 0
+        |  WHERE CAST(len(list_intersect(b.sh, c.sh)) AS DOUBLE)
+        |        / (len(b.sh) + len(c.sh) - len(list_intersect(b.sh, c.sh))) >= 0.2
+        |)
+        |SELECT d.doc_id, d.lang, d.source
+        |FROM documents d
+        |JOIN bt ON d.doc_id = bt.doc_id
+        |WHERE d.doc_id NOT IN (SELECT doc_id FROM dup)
+        |ORDER BY d.doc_id""".stripMargin),
+
+    // E4×E6 (round-17; VERDICT r16 "missing" #1 — the CLOSED ingest
+    // loop): gate-then-APPEND. Two controlled waves (250-290, 290-325)
+    // arrive as sequential AvailableNow drains over one checkpoint; each
+    // micro-batch runs the full jaccardIncremental discipline against
+    // the index-SO-FAR (built over doc_id < 250), then appends its
+    // survivors' postings single-commit — so wave 2 gates against wave
+    // 1's survivors immediately instead of waiting for a nightly
+    // rebuild (at sf0.01 exactly that path fires: one wave-2 doc drops
+    // PURELY because a wave-1 survivor was appended). Fully
+    // oracle-checked: DuckDB replays the two-step chain — within-wave
+    // transitive closure, cross-index jaccard vs the initial corpus,
+    // then wave 2 vs corpus ∪ wave-1 survivors.
+    Declared("stream_jaccard_gate_append", (s, dir) => {
+      jaccardCapGuard(s, dir)
+      val d = docs(s, dir)
+      // the INITIAL index and the two wave ARRIVAL FILES are setup, not
+      // serving — built once per session (the pipeline_daily_drop /
+      // stream_dedup_wm precedents: cached artifacts are inputs, never
+      // results). Per call the stream still starts from the identical
+      // committed state: the index arrives as a HARDLINK tree (the
+      // stream MUTATES it by appending NEW epoch dirs — linked file
+      // bytes stay immutable, see SessionCache.linkTree; round-18,
+      // VERDICT r17 "wrong" #4: the byte-copy + per-wave Spark write
+      // jobs were most of this row's bench cost) and each wave file is
+      // one java.nio copy into a fresh arrival dir.
+      val waveFiles = jaccardGateWaves(s, dir)
+      val idx = SessionCache.newTempDir("graft-jgatea-idx") + "/idx"
+      SessionCache.linkTree(jaccardGateBaseIdx(s, dir), idx)
+      val arrival = SessionCache.newTempDir("graft-jgatea-src")
+      val ckpt = SessionCache.newTempDir("graft-jgatea-ckpt")
+      val out = SessionCache.newTempDir("graft-jgatea-out") + "/surv"
+      for ((f, i) <- waveFiles.zipWithIndex) {
+        java.nio.file.Files.copy(java.nio.file.Paths.get(f),
+          java.nio.file.Paths.get(arrival, s"arrival-$i.parquet"))
+        Streams.jaccardGateMaintainAvailableNow(
+          s.readStream.schema(d.schema).parquet(arrival),
+          "doc_id", "text", n = 2, threshold = 0.2, idx, out,
+          checkpoint = Some(ckpt))
+      }
+      s.read.parquet(out)
+        .select(col("doc_id"), col("lang"), col("source"))
+        .orderBy("doc_id")
+    },
+      // Gate-then-append: the incremental_jaccard_dedup replay applied
+      // TWICE — wave 1 (250-290) within-dedup + cross vs the doc_id<250
+      // corpus, then wave 2 (290-325) within-dedup + cross vs corpus ∪
+      // wave-1 survivors (the appended postings). Exact int arithmetic in
+      // double keeps the 0.2 threshold boundary-identical to Spark.
+      oracle = s"""WITH RECURSIVE
+        |${bigramSetsCte("allsh", "documents")},
+        |ct1 AS (SELECT doc_id, sh FROM allsh WHERE doc_id < 250),
+        |b1 AS (SELECT doc_id, sh FROM allsh WHERE doc_id >= 250 AND doc_id < 290),
+        |pr1 AS (
+        |  SELECT a_id, b_id FROM (
+        |    SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+        |      len(list_intersect(a.sh, b.sh)) AS common, len(a.sh) AS asz, len(b.sh) AS bsz
+        |    FROM b1 a JOIN b1 b ON a.doc_id < b.doc_id)
+        |  WHERE common > 0 AND CAST(common AS DOUBLE) / (asz + bsz - common) >= 0.2
+        |),
+        |${componentsCte("1")},
+        |sw1 AS (SELECT doc_id, sh FROM b1 WHERE doc_id NOT IN (SELECT id FROM lab1 WHERE id <> group_id)),
+        |dup1 AS (
+        |  SELECT DISTINCT s.doc_id
+        |  FROM sw1 s JOIN ct1 c ON len(list_intersect(s.sh, c.sh)) > 0
+        |  WHERE CAST(len(list_intersect(s.sh, c.sh)) AS DOUBLE)
+        |        / (len(s.sh) + len(c.sh) - len(list_intersect(s.sh, c.sh))) >= 0.2
+        |),
+        |s1 AS (SELECT doc_id, sh FROM sw1 WHERE doc_id NOT IN (SELECT doc_id FROM dup1)),
+        |ct2 AS (SELECT doc_id, sh FROM ct1 UNION ALL SELECT doc_id, sh FROM s1),
+        |b2 AS (SELECT doc_id, sh FROM allsh WHERE doc_id >= 290 AND doc_id < 325),
+        |pr2 AS (
+        |  SELECT a_id, b_id FROM (
+        |    SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+        |      len(list_intersect(a.sh, b.sh)) AS common, len(a.sh) AS asz, len(b.sh) AS bsz
+        |    FROM b2 a JOIN b2 b ON a.doc_id < b.doc_id)
+        |  WHERE common > 0 AND CAST(common AS DOUBLE) / (asz + bsz - common) >= 0.2
+        |),
+        |${componentsCte("2")},
+        |sw2 AS (SELECT doc_id, sh FROM b2 WHERE doc_id NOT IN (SELECT id FROM lab2 WHERE id <> group_id)),
+        |dup2 AS (
+        |  SELECT DISTINCT s.doc_id
+        |  FROM sw2 s JOIN ct2 c ON len(list_intersect(s.sh, c.sh)) > 0
+        |  WHERE CAST(len(list_intersect(s.sh, c.sh)) AS DOUBLE)
+        |        / (len(s.sh) + len(c.sh) - len(list_intersect(s.sh, c.sh))) >= 0.2
+        |),
+        |s2 AS (SELECT doc_id FROM sw2 WHERE doc_id NOT IN (SELECT doc_id FROM dup2))
+        |SELECT d.doc_id, d.lang, d.source
+        |FROM documents d
+        |WHERE d.doc_id IN (SELECT doc_id FROM s1 UNION SELECT doc_id FROM s2)
+        |ORDER BY d.doc_id""".stripMargin),
+
+    // E5×E6 (round-15): STREAMING hot-lines maintenance — the persisted
+    // boilerplate table built ENTIRELY by a stream (foreachBatch appends
+    // one single-commit delta per arriving micro-batch; per-batch line
+    // dfs sum exactly under any split), then served into the same
+    // removal pass. Shares line_boilerplate's recompute oracle: one hash
+    // pins recomputed == batch-maintained == stream-maintained.
+    Declared("stream_hotlines_maintain", (s, dir) => {
+      val path = SessionCache.newTempDir("graft-hotlines-stream")
+      Streams.hotLinesMaintainAvailableNow(
+        Tables.documentsStream(s, dir)
+          .select(col("doc_id"), lineAugmented.as("text")),
+        "text", path)
+      val aug = docs(s, dir).select(col("doc_id"), lineAugmented.as("text"))
+      TextAnalysis.removeHotLines(aug, "text",
+          HotLinesIndex.hotLines(s, path, maxDocFreq = 100L))
+        .select(col("doc_id"), col("n_removed"),
+          md5(col("cleaned")).as("clean_sha"))
+        .orderBy("doc_id")
+    },
+      oracle = lineBoilerplateSql),
+  )
+}

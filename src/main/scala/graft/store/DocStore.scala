@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.core.Validate
 import graft.operators.Embedder
 
 /** The document-store surface — Spark mappings of the reference's ten
@@ -372,12 +371,4 @@ object DocStore {
       .schema(graft.core.Tables.documentStoreSchema)
       .option("timestampFormat", JsonlTsFormat)
       .json(path)
-
-  // ---------------------------------------------------------- O17 validation
-  /** Driver-side input guards, same messages as the reference
-    * (`vectolite.py:97-98,137-138,419-420`).
-    */
-  def validateInsertText(text: String): Unit = Validate.nonEmptyText(text)
-  def validateTopK(k: Int): Unit = Validate.positiveTopK(k)
-  def validatePath(path: String): Unit = Validate.supportedSuffix(path)
 }

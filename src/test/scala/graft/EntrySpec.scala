@@ -1,7 +1,8 @@
 package graft
 
-/** Driver-contract smoke: entry() returns rows on sf0.001, every oracle has
-  * a query, and every query runs against the smallest fixture.
+/** Driver-contract smoke: entry() returns rows on sf0.001, the declared
+  * registry pairs every query with one oracle, and every query runs
+  * against the smallest fixture.
   */
 class EntrySpec extends SparkSpec {
 
@@ -11,16 +12,20 @@ class EntrySpec extends SparkSpec {
     assert(rows.map(_.getLong(0)).contains(0L)) // self-match ranks first
   }
 
-  test("every oracleSql key has a queries twin; oracle coverage never shrinks") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracles without queries: $missing")
-    // a typo'd key silently downgrades a query to rows-only — pin the floor
-    // at the round-20 surface (142 oracles / 142 queries: every declared
-    // query has an oracle twin)
-    assert(SparkEntry.oracleSql.size >= 142, s"oracle count ${SparkEntry.oracleSql.size}")
-    assert(SparkEntry.queries.size >= 142, s"query count ${SparkEntry.queries.size}")
-    val rowsOnly = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(rowsOnly.isEmpty, s"queries without oracles (rows-only): $rowsOnly")
+  test("registry: unique row names, paired queries/oracles, 142 floor, cached set") {
+    // a duplicate name would silently collapse in the derived maps
+    val dups = SparkEntry.rows.groupBy(_.name).collect { case (n, rs) if rs.size > 1 => n }
+    assert(dups.isEmpty, s"names declared more than once: $dups")
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+    // the floor: 142 declared rows, each with an oracle
+    assert(SparkEntry.rows.size >= 142, s"row count ${SparkEntry.rows.size}")
+    assert(SparkEntry.queries.size == SparkEntry.rows.size)
+    assert(SparkEntry.cachedQueryNames == Set(
+      "ann_append_parity", "ann_batch_topk", "ivf_batch_topk",
+      "ivf_topk", "ivf_topk_quantized", "ivf_packed_lifecycle",
+      "stream_ivf_probe", "stream_ivf_probe_quantized",
+      "stream_ivf_packed_maintain", "ivf_batch_topk_quantized",
+      "incremental_near_dedup", "jaccard_index_append_parity"))
   }
 
   test("round-13 IVF invariant rows equal the constants their oracles pin") {

@@ -5,6 +5,9 @@ this script compares each <out>/<name> parquet against the DuckDB result of
 <out>/oracle_sql.json's SQL over the same fixture tables.
 
 Usage: python3 tools/oracle_check.py <sfDir> <verifyOutDir>
+
+Exits 1 unless every oracle-checked row matches and no row errored, so a
+script can gate on the GREEN n/n line.
 """
 import json, sys, math
 from pathlib import Path
@@ -73,7 +76,8 @@ def main(sf_dir, out_dir):
     noracle = [n for n, e in results.items() if not e.get("oracle")]
     print(json.dumps(results, indent=1))
     print(f"\nGREEN {ok}/{len(oracle)} oracle-checked; rows-only: {noracle}; FAILING: {bad}")
+    return 0 if ok == len(oracle) and not bad else 1
 
 
 if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2])
+    sys.exit(main(sys.argv[1], sys.argv[2]))
