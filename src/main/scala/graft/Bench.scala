@@ -388,12 +388,11 @@ object Bench {
       val ivfStreamVolume = timed { () =>
         benchStreamSinkSeq += 1
         val sink = s"bench_ivf_stream_$benchStreamSinkSeq"
-        val sq = streaming.Streams.ivfProbeStream(
+        val sq = streaming.Streams.toMemorySink(streaming.Streams.ivfProbeStream(
             core.Tables.embeddingsStream(spark, sfDir).filter(col("vec_id") < 20),
             "vec_id", "embedding", ivfBenchIdx, ivfBenchModel,
-            threshold = 0.5, ivfBenchNProbe)
-          .writeStream.format("memory").queryName(sink).outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+            threshold = 0.5, ivfBenchNProbe),
+          sink, "append").start()
         streaming.Streams.awaitOrAbort(sq, "bench stream_ivf_probe")
         ()
       }

@@ -191,10 +191,9 @@ object ScaleProbe {
         .write.mode("overwrite").parquet(evDir)
       val sevs = spark.readStream.schema("user_id LONG, ts TIMESTAMP")
         .parquet(evDir).as[graft.streaming.Streams.Ev]
-      val sq = graft.streaming.Streams.sessionizeStateful(sevs, gapMinutes = 30).toDF()
-        .writeStream.format("memory").queryName("scale_sessionize")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      val sq = graft.streaming.Streams.toMemorySink(
+        graft.streaming.Streams.sessionizeStateful(sevs, gapMinutes = 30).toDF(),
+        "scale_sessionize", "append").start()
       require(sq.awaitTermination(600000), "stream did not finish in 600s")
       val n = spark.table("scale_sessionize").count()
       println(s"[scale]   -> $n closed sessions")
@@ -527,13 +526,12 @@ object ScaleProbe {
         val queries = spark.readStream
           .schema(spark.read.parquet(qDir).schema)
           .option("maxFilesPerTrigger", 1).parquet(qDir)
-        val sq = graft.streaming.Streams.annProbeStreamWithinWatermark(
-            queries, "vec_id", "embedding", index, threshold = 0.9, cfg,
-            tsCol = "arrival_ts", delay = "10 minutes")
-          .select(col("q_id"), col("c_id"))
-          .writeStream.format("memory").queryName("scale_stream_ann")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        val sq = graft.streaming.Streams.toMemorySink(
+          graft.streaming.Streams.annProbeStreamWithinWatermark(
+              queries, "vec_id", "embedding", index, threshold = 0.9, cfg,
+              tsCol = "arrival_ts", delay = "10 minutes")
+            .select(col("q_id"), col("c_id")),
+          "scale_stream_ann", "append").start()
         require(sq.awaitTermination(600000), "serving stream did not finish in 600s")
         val progresses = sq.recentProgress.filter(_.numInputRows > 0)
         val stateRows = progresses.flatMap(_.stateOperators.map(_.numRowsTotal))

@@ -122,68 +122,24 @@ object AnnIndex {
     */
   val FormatVersion = 1
 
-  /** Record THIS artifact's full [[Config]] in the shared `_meta`
-    * sidecar (round-20; VERDICT r19 closed this hazard class for
-    * IVF/dHash/BM25 — the LSH family was the last carrier): every
-    * bucket on disk is a deterministic function of (dim, nBits,
-    * nTables, seed), so a probe or append under a DIFFERENT config
-    * derives different hyperplanes — appends silently mis-bucket,
-    * probes scan the wrong (often empty) dirs, both with zero errors
-    * and silently degraded recall. Until this sidecar the contract was
-    * documentation ("pass the same Config a deployment stores alongside
-    * the index path"); now the path IS the record: [[readConfigMeta]]
-    * recovers the exact build config and every path-based append/read
-    * validates loudly.
+  /** The `_meta` format (round-20; VERDICT r19 closed this hazard class
+    * for IVF/dHash/BM25): every bucket on disk is a deterministic
+    * function of (dim, nBits, nTables, seed), so the path records its
+    * config. Every read requires all five keys; a config-free read
+    * compares the format version only, [[layout]] adds a caller's config.
     */
-  def writeConfigMeta(spark: org.apache.spark.sql.SparkSession, path: String,
-                      cfg: Config): Unit =
-    graft.store.MetaSidecar.write(spark, path, Seq(
-      "formatVersion" -> FormatVersion, "dim" -> cfg.dim, "nBits" -> cfg.nBits,
-      "nTables" -> cfg.nTables, "seed" -> cfg.seed))
+  private val Layout = graft.store.MetaSidecar.Format("ann (LSH) index",
+    Seq("formatVersion", "dim", "nBits", "nTables", "seed"),
+    Map("formatVersion" -> FormatVersion),
+    "different configs derive different hyperplanes, so appends would mis-bucket " +
+      "and probes would scan the wrong dirs, both silently")
 
-  /** The persisted build config, if the artifact carries one (None = a
-    * pre-r20 artifact; the next append/compact backfills it). A
-    * PRESENT-but-incomplete sidecar or an unknown formatVersion is LOUD
-    * — corruption must never read as "no metadata, assume compatible".
+  /** [[Layout]] for an index built with `cfg`: a probe or append under
+    * another config is refused.
     */
-  def readConfigMeta(spark: org.apache.spark.sql.SparkSession,
-                     path: String): Option[Config] =
-    graft.store.MetaSidecar.read(spark, path, "ann (LSH)").map { kv =>
-      (kv.get("formatVersion"), kv.get("dim"), kv.get("nBits"),
-        kv.get("nTables"), kv.get("seed")) match {
-        case (Some(f), _, _, _, _) if f != FormatVersion =>
-          throw new graft.core.EngineError(
-            s"ann index at $path has formatVersion=$f; this build reads " +
-            s"formatVersion=$FormatVersion — refusing to serve an artifact whose " +
-            "layout this build cannot verify")
-        case (Some(_), Some(d), Some(b), Some(t), Some(s)) => Config(d, b, t, s)
-        case _ => throw new graft.core.EngineError(
-          s"ann config sidecar at $path/_meta is missing " +
-          s"formatVersion/dim/nBits/nTables/seed (found keys: " +
-          s"${kv.keys.mkString(", ")}) — refusing to serve an index whose " +
-          "hyperplane config cannot be verified")
-      }
-    }
-
-  /** Loud mismatch check run by every path-based read and append: the
-    * passed config must equal the artifact's recorded one — hyperplanes
-    * differ in ANY field and buckets stop corresponding, so proceeding
-    * would silently mis-bucket appends / probe the wrong dirs. Sidecar
-    * absent = a pre-r20 artifact (backfilled on the next append).
-    */
-  def validateConfigMeta(spark: org.apache.spark.sql.SparkSession, path: String,
-                         cfg: Config, what: String): Unit =
-    readConfigMeta(spark, path).foreach { m =>
-      if (m != cfg)
-        throw new graft.core.EngineError(
-          s"$what at $path was built with Config(dim=${m.dim}, nBits=${m.nBits}, " +
-          s"nTables=${m.nTables}, seed=${m.seed}) but this call passed " +
-          s"Config(dim=${cfg.dim}, nBits=${cfg.nBits}, nTables=${cfg.nTables}, " +
-          s"seed=${cfg.seed}) — different configs derive different hyperplanes, so " +
-          "appends would mis-bucket and probes would scan the wrong dirs, both " +
-          "silently; pass the recorded config (AnnIndex.readConfigMeta returns it) " +
-          "or rebuild the index")
-    }
+  private def layout(cfg: Config): graft.store.MetaSidecar.Format =
+    Layout.expecting("dim" -> cfg.dim, "nBits" -> cfg.nBits, "nTables" -> cfg.nTables,
+      "seed" -> cfg.seed)
 
   /** Persist the index partitioned by (table, bucket) so probes prune.
     * Repartitioning ON the partition columns first means each output dir
@@ -194,17 +150,17 @@ object AnnIndex {
     * sf0.1 write 24 s single-threaded.
     *
     * Takes the build [[Config]] (round-20) so the artifact records its
-    * own hyperplane constants ([[writeConfigMeta]]) — `cfg` must be the
+    * own hyperplane constants in `_meta` — `cfg` must be the
     * one `index` was built with (it is in every call shape, since the
     * frame comes from [[buildIndex]] with the same config in hand).
     */
   def writeIndex(index: DataFrame, path: String, cfg: Config): Unit = {
     writeIndexData(index, path)
-    writeConfigMeta(index.sparkSession, path, cfg)
+    graft.store.MetaSidecar.stamp(index.sparkSession, path, layout(cfg))
   }
 
   /** The raw partitioned write, sidecar-free — compact rewrites through
-    * this (it re-stamps the RECORDED meta, not a caller config).
+    * this (it carries the RECORDED meta, not a caller config).
     */
   private def writeIndexData(index: DataFrame, path: String): Unit =
     index.repartition(col("table"), col("bucket"))
@@ -227,17 +183,16 @@ object AnnIndex {
     * Caveats: (1) the caller owns id-uniqueness across batches — append
     * does not dedup (pair with [[graft.operators.Dedup.dedupIncremental]]
     * upstream); (2) `cfg` must equal the build config — enforced since
-    * round-20 against the artifact's `_meta` sidecar
-    * ([[validateConfigMeta]]; a mismatch refuses loudly instead of
-    * silently mis-bucketing, and an append onto a pre-sidecar artifact
-    * backfills the record); (3) after an append, re-list the path
+    * round-20 against the artifact's `_meta` sidecar (a mismatch
+    * refuses loudly instead of silently mis-bucketing); (3) after an
+    * append, re-list the path
     * (`spark.read.parquet`) — a cached file index predates the new
     * files.
     */
   def appendToIndex(newRows: DataFrame, path: String, idCol: String,
                     embCol: String, cfg: Config): Unit = {
     val spark = newRows.sparkSession
-    validateConfigMeta(spark, path, cfg, "ann index append")
+    graft.store.MetaSidecar.check(spark, path, layout(cfg))
     // under the swap lock (r20 advisor): this mode("append") write is
     // neither epoch-committed nor tombstone-sidecar'd, so without the
     // lock a concurrent compactIndex's rewrite could list the tree
@@ -249,7 +204,6 @@ object AnnIndex {
       buildIndex(newRows, idCol, embCol, cfg)
         .repartition(col("table"), col("bucket"))
         .write.mode("append").partitionBy("table", "bucket").parquet(path)
-      writeConfigMeta(spark, path, cfg) // backfills pre-r20 artifacts
     }
   }
 
@@ -266,17 +220,14 @@ object AnnIndex {
     * Tombstoned rows are folded away; an index whose every row is
     * tombstoned is refused ([[graft.store.EpochCommit.swapRewrite]]).
     */
-  def compactIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    // the swap replaces the WHOLE dir, so the config sidecar must be
-    // carried into the tmp tree (read before, re-stamped inside) — compact
-    // takes no Config of its own: it preserves the RECORDED constants
-    val meta = readConfigMeta(spark, path)
+  def compactIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
     graft.store.EpochCommit.swapRewrite(spark, path, tombstones,
         readIndex(spark, path)) { tmp =>
       writeIndexData(readIndex(spark, path), tmp)
-      meta.foreach(cfg => writeConfigMeta(spark, tmp, cfg))
+      // the swap replaces the WHOLE dir and compact takes no Config of
+      // its own: it carries the RECORDED constants into the tmp tree
+      graft.store.MetaSidecar.carry(spark, path, tmp, Layout)
     }
-  }
 
   private val tombstones = graft.store.Tombstones("_tombstones", "id", "vector")
 
@@ -307,22 +258,22 @@ object AnnIndex {
     * bounded by deletions since the last compact). Use this instead of a
     * raw `spark.read.parquet(path)` wherever deletions may exist.
     */
-  def readIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    readConfigMeta(spark, path) // loud on corruption / unknown formatVersion
-    tombstones.fold(spark, path, spark.read.parquet(path))
-  }
+  def readIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
+    read(spark, path, Layout)
 
   /** [[readIndex]] for a caller about to PROBE with `cfg`: additionally
-    * refuses an artifact whose recorded config differs — the probe-side
-    * face of [[validateConfigMeta]] (a mismatched probe computes its
-    * buckets under foreign hyperplanes and scans the wrong dirs,
-    * silently). One sidecar read per call, same cost contract as the
-    * IVF family's path-based validation.
+    * refuses an artifact whose recorded config differs (a mismatched
+    * probe computes its buckets under foreign hyperplanes and scans the
+    * wrong dirs, silently). One sidecar read per call.
     */
   def readIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                cfg: Config): DataFrame = {
-    validateConfigMeta(spark, path, cfg, "ann index probe")
-    readIndex(spark, path)
+                cfg: Config): DataFrame =
+    read(spark, path, layout(cfg))
+
+  private def read(spark: org.apache.spark.sql.SparkSession, path: String,
+                   format: graft.store.MetaSidecar.Format): DataFrame = {
+    graft.store.MetaSidecar.check(spark, path, format)
+    tombstones.fold(spark, path, spark.read.parquet(path))
   }
 
   /** Approximate top-k: probe the query's bucket in every table, score

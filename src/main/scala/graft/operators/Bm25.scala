@@ -247,42 +247,14 @@ object IndexedBm25 {
     */
   val FormatVersion = 1
 
-  /** Record THIS build's layout constants at the index root (round-20;
-    * VERDICT r19 "missing" #2 — the exact silent-candidate-subset class
-    * r19 closed for IVF and the banded dHash index): [[Partitions]]
-    * drives both the writer's partition-dir derivation and the probe's
-    * `pt IN (…)` prune, so a probe whose constant differs from the
-    * artifact's prunes under the WRONG modulus and silently drops
-    * postings. Written at build/append/compact — appends backfill
-    * pre-r20 artifacts (those were written with this lineage's constant
-    * by construction).
+  /** The `_meta` format (round-20; VERDICT r19 "missing" #2):
+    * [[Partitions]] drives both the writer's partition-dir derivation
+    * and the probe's `pt IN (…)` prune.
     */
-  private def writeLayoutMeta(spark: SparkSession, path: String): Unit =
-    graft.store.MetaSidecar.write(spark, path,
-      Seq("formatVersion" -> FormatVersion, "partitions" -> Partitions))
-
-  /** Loud mismatch check run by every probe and append: absent sidecar
-    * = pre-r20 artifact (compatible by lineage; the next append/compact
-    * backfills it); PRESENT sidecar must match this build's constants
-    * exactly — correct candidates or a loud error, never a silent
-    * subset. Compact deliberately skips this check: its reads never
-    * prune on `pt`, so it is modulus-independent and serves as the
-    * migration path (it re-derives `pt` with THIS build's constant and
-    * stamps what it wrote).
-    */
-  private def validateLayoutMeta(spark: SparkSession, path: String): Unit =
-    graft.store.MetaSidecar.read(spark, path, "bm25 index").foreach { kv =>
-      (kv.get("formatVersion"), kv.get("partitions")) match {
-        case (Some(FormatVersion), Some(Partitions)) => ()
-        case (f, p) => throw new graft.core.EngineError(
-          s"bm25 index at $path was written with formatVersion=${f.getOrElse("?")}, " +
-          s"partitions=${p.getOrElse("?")}; this build expects " +
-          s"formatVersion=$FormatVersion, partitions=$Partitions — probing would " +
-          "derive pt partition dirs under the wrong modulus and silently drop " +
-          "postings; compact the index with this build (compact reads without " +
-          "pruning and migrates the layout) or rebuild it")
-      }
-    }
+  private val Layout = graft.store.MetaSidecar.Format.of("bm25 index",
+    Seq("formatVersion" -> FormatVersion, "partitions" -> Partitions),
+    "probes prune pt dirs as xxhash64(term) % partitions, so a foreign modulus " +
+      "silently drops postings")
 
   private def postingsDir(path: String) = s"$path/postings"
   private def metaDir(path: String) = s"$path/meta"
@@ -344,13 +316,14 @@ object IndexedBm25 {
                                  terms: Seq[String],
                                  selectCols: Seq[String]): DataFrame = {
     import spark.implicits._
-    validateLayoutMeta(spark, path) // the pt prune below assumes the artifact's modulus
+    // epoch ∈ committed is a second partition-pruning predicate (listing-
+    // level, like pt): staged-but-uncommitted appends are invisible here.
+    // Listed first: an unbuilt or mid-swap index names its own recovery.
+    val es = graft.store.EpochCommit.committedOrThrow(spark, path, "bm25 index")
+    graft.store.MetaSidecar.check(spark, path, Layout) // the pt prune assumes it
     val pts = terms.toDF("term")
       .select(pmod(xxhash64(col("term")), lit(Partitions.toLong)))
       .as[Long].collect().distinct.toSeq
-    // epoch ∈ committed is a second partition-pruning predicate (listing-
-    // level, like pt): staged-but-uncommitted appends are invisible here.
-    val es = graft.store.EpochCommit.committedOrThrow(spark, path, "bm25 index")
     tombstones.fold(spark, path,
       spark.read.parquet(postingsDir(path))
         .filter(col(graft.store.EpochCommit.Col).isin(es: _*) &&
@@ -392,7 +365,7 @@ object IndexedBm25 {
   def build(docs: DataFrame, idCol: String, textCol: String, path: String): Unit = {
     graft.store.EpochCommit.rebuild(docs.sparkSession, path)(
       stageBatch(docs, idCol, textCol, path))
-    writeLayoutMeta(docs.sparkSession, path)
+    graft.store.MetaSidecar.stamp(docs.sparkSession, path, Layout)
   }
 
   /** Stage one batch's postings + meta delta + doclens under a fresh
@@ -424,10 +397,9 @@ object IndexedBm25 {
   def append(batch: DataFrame, idCol: String, textCol: String, path: String): Unit = {
     // BEFORE staging: appending under a different modulus than the
     // artifact's would mix two pt derivations in one tree
-    validateLayoutMeta(batch.sparkSession, path)
+    graft.store.MetaSidecar.check(batch.sparkSession, path, Layout)
     graft.store.EpochCommit.commit(batch.sparkSession, path,
       stageBatch(batch, idCol, textCol, path))
-    writeLayoutMeta(batch.sparkSession, path) // backfills pre-r20 artifacts
   }
 
   /** DELETE documents from the index WITHOUT touching postings files —
@@ -453,6 +425,7 @@ object IndexedBm25 {
     */
   def delete(spark: SparkSession, path: String, ids: Seq[Long]): Unit = {
     require(ids.nonEmpty, "bm25 delete: empty id list")
+    graft.store.MetaSidecar.check(spark, path, Layout)
     // only ids the index actually holds are tombstoned (collect bounded
     // by |ids|) — so "unknown ids are no-ops" holds literally, and a
     // later append REUSING a never-ingested id is not silently filtered
@@ -473,7 +446,8 @@ object IndexedBm25 {
     * garbage-collected here. Refused once every document is deleted
     * ([[graft.store.EpochCommit.swapRewrite]]).
     */
-  def compact(spark: SparkSession, path: String): Unit =
+  def compact(spark: SparkSession, path: String): Unit = {
+    graft.store.MetaSidecar.check(spark, path, Layout.only("formatVersion"))
     graft.store.EpochCommit.compact(spark, path, tombstones,
         liveDoclens(spark, path)) { (tmp, st) =>
       val postings = tombstones.fold(spark, path,
@@ -483,15 +457,16 @@ object IndexedBm25 {
         // read prunes nothing, so it is the one modulus-independent
         // pass — rewriting under the current constant makes it the
         // migration path for a foreign-modulus artifact (the
-        // IvfIndex.compactIndex / compactBandedDHashIndex precedent)
-        // instead of relabeling stale dirs
+        // compactBandedDHashIndex precedent) instead of relabeling
+        // stale dirs
         .withColumn("pt", pmod(xxhash64(col("term")), lit(Partitions.toLong)))
       st.write(postings.repartition(col("pt")), postingsDir(tmp), "pt")
       st.write(mergedStats(spark, path).select(col("n").cast("long").as("n"),
         col("total").cast("long").as("total")), metaDir(tmp))
       st.write(liveDoclens(spark, path), doclensDir(tmp))
-      writeLayoutMeta(spark, tmp) // stamp what was actually written
+      graft.store.MetaSidecar.stamp(spark, tmp, Layout) // stamp what was written
     }
+  }
 
   /** Probe the persisted index: reads the query terms' hash partitions
     * plus the scalar meta deltas. With tombstones present (between a

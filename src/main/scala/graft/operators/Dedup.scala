@@ -251,7 +251,7 @@ object Dedup {
                          n: Int, path: String, maxDocFreq: Long = 1000L): Unit = {
     graft.store.EpochCommit.rebuild(corpus.sparkSession, path)(
       stagePostingsBatch(corpus, idCol, textCol, n, path, maxDocFreq))
-    writePostingsMeta(corpus.sparkSession, path, n)
+    graft.store.MetaSidecar.stamp(corpus.sparkSession, path, postingsLayout(n))
   }
 
   /** On-disk format version of a persisted shingle-postings index (1 =
@@ -260,60 +260,22 @@ object Dedup {
     */
   val PostingsFormatVersion = 1
 
-  /** Record the index's SHINGLE WIDTH in the shared `_meta` sidecar
-    * (round-20; the last member of the format-constant hazard class
-    * VERDICT r19 closed for IVF/dHash/BM25): a shingle row only means
-    * anything relative to the `n` it was cut with — a batch shingled at
-    * a different `n` NEVER collides with the corpus postings, so a
-    * mismatched append poisons the index with unmatchable rows and a
-    * mismatched gate admits every duplicate, both with zero errors.
-    * `maxDocFreq` is deliberately NOT a format constant: the uncapped
-    * freqs/ sidecar exists precisely so [[compactPostingsIndex]] can
-    * re-apply ANY cap globally — changing the cap is a supported
-    * lifecycle operation, changing `n` is a rebuild.
+  /** The `_meta` format of a postings index (round-20): a shingle row
+    * only means anything relative to the width `shingleN` it was cut
+    * with. Every read requires both keys; a width-free read compares
+    * the format version only, [[postingsLayout]] adds a caller's width. `maxDocFreq` is
+    * deliberately NOT a format constant: the uncapped freqs/ sidecar
+    * exists precisely so [[compactPostingsIndex]] can re-apply ANY cap
+    * globally — changing the cap is a supported lifecycle operation,
+    * changing `n` is a rebuild.
     */
-  def writePostingsMeta(spark: org.apache.spark.sql.SparkSession, path: String,
-                        n: Int): Unit =
-    graft.store.MetaSidecar.write(spark, path,
-      Seq("formatVersion" -> PostingsFormatVersion, "shingleN" -> n))
+  private val PostingsLayout = graft.store.MetaSidecar.Format("shingle postings index",
+    Seq("formatVersion", "shingleN"), Map("formatVersion" -> PostingsFormatVersion),
+    "shingles of different widths never match, so appends would add unmatchable " +
+      "rows and gates would admit every duplicate, both silently")
 
-  /** The recorded shingle width, or None for a pre-r20 artifact (the
-    * next append backfills it). A PRESENT-but-incomplete sidecar or an
-    * unknown formatVersion is LOUD — corruption must never read as "no
-    * metadata, assume compatible".
-    */
-  def readPostingsMeta(spark: org.apache.spark.sql.SparkSession,
-                       path: String): Option[Int] =
-    graft.store.MetaSidecar.read(spark, path, "shingle postings index").map { kv =>
-      (kv.get("formatVersion"), kv.get("shingleN")) match {
-        case (Some(PostingsFormatVersion), Some(n)) => n
-        case (Some(f), _) if f != PostingsFormatVersion =>
-          throw new graft.core.EngineError(
-            s"shingle postings index at $path/_meta has formatVersion=$f; this " +
-            s"build reads formatVersion=$PostingsFormatVersion — refusing to serve " +
-            "an artifact whose layout this build cannot verify")
-        case _ => throw new graft.core.EngineError(
-          s"shingle postings sidecar at $path/_meta is missing formatVersion/" +
-          s"shingleN (found keys: ${kv.keys.mkString(", ")}) — refusing to serve " +
-          "an index whose shingle width cannot be verified")
-      }
-    }
-
-  /** Loud mismatch check run by every n-aware path-based read and
-    * append: shingles cut at a different width never match the indexed
-    * ones, so proceeding would silently poison the index (appends) or
-    * admit every duplicate (gates).
-    */
-  def validatePostingsMeta(spark: org.apache.spark.sql.SparkSession, path: String,
-                           n: Int, what: String): Unit =
-    readPostingsMeta(spark, path).foreach { recorded =>
-      if (recorded != n)
-        throw new graft.core.EngineError(
-          s"$what at $path was built with shingle width n=$recorded but this call " +
-          s"passed n=$n — shingles of different widths never match, so appends " +
-          "would add unmatchable rows and gates would admit every duplicate, both " +
-          "silently; pass n=" + recorded + " or rebuild the index")
-    }
+  private def postingsLayout(n: Int): graft.store.MetaSidecar.Format =
+    PostingsLayout.expecting("shingleN" -> n)
 
   /** Stage one batch's capped postings + uncapped freqs under a fresh
     * UNCOMMITTED epoch and return its id — `private[graft]` so the
@@ -355,10 +317,9 @@ object Dedup {
     // can no longer leave postings visible without the frequencies that
     // compactPostingsIndex's global re-cap needs.
     val s = batch.sparkSession
-    validatePostingsMeta(s, path, n, "shingle postings append")
-    graft.store.EpochCommit.append(s, path, idempotencyTag, Nil)(
+    graft.store.MetaSidecar.check(s, path, postingsLayout(n))
+    graft.store.EpochCommit.append(s, path, idempotencyTag)(
       stagePostingsBatch(batch, idCol, textCol, n, path, maxDocFreq, _))
-    writePostingsMeta(s, path, n) // backfills pre-r20 artifacts
   }
 
   /** The postings frame of a persisted index — feed directly to
@@ -372,23 +333,25 @@ object Dedup {
     * and for one-off probes where the extra write isn't worth it.
     */
   def readPostingsIndex(spark: org.apache.spark.sql.SparkSession,
-                        path: String): DataFrame = {
-    readPostingsMeta(spark, path) // loud on corruption / unknown formatVersion
-    graft.store.EpochCommit.readCommitted(spark, path, postingsDir(path),
-      "shingle postings index")
-  }
+                        path: String): DataFrame =
+    readPostings(spark, path, PostingsLayout)
 
   /** [[readPostingsIndex]] for a caller about to shingle a probe/batch
     * at width `n` against the returned frame ([[jaccardIncremental]],
     * the streaming gates): additionally refuses an artifact whose
-    * recorded width differs — the probe-side face of
-    * [[validatePostingsMeta]]. One sidecar read per call.
+    * recorded width differs. One sidecar read per call.
     */
   def readPostingsIndex(spark: org.apache.spark.sql.SparkSession,
-                        path: String, n: Int): DataFrame = {
-    validatePostingsMeta(spark, path, n, "shingle postings probe")
-    graft.store.EpochCommit.readCommitted(spark, path, postingsDir(path),
+                        path: String, n: Int): DataFrame =
+    readPostings(spark, path, postingsLayout(n))
+
+  private def readPostings(spark: org.apache.spark.sql.SparkSession, path: String,
+                           format: graft.store.MetaSidecar.Format): DataFrame = {
+    // committed epochs first: an unbuilt or mid-swap index names its own recovery
+    val postings = graft.store.EpochCommit.readCommitted(spark, path, postingsDir(path),
       "shingle postings index")
+    graft.store.MetaSidecar.check(spark, path, format)
+    postings
   }
 
   /** Register a persisted postings index as a SHINGLE-BUCKETED catalog
@@ -439,12 +402,11 @@ object Dedup {
   def compactPostingsIndex(spark: org.apache.spark.sql.SparkSession,
                            path: String, maxDocFreq: Long = 1000L): Unit = {
     require(maxDocFreq > 0, s"maxDocFreq must be positive, got $maxDocFreq")
-    // the swap replaces the WHOLE dir, so the recorded shingle width must
-    // be carried into the tmp tree — compact takes no `n` of its own: the
-    // cap is its parameter (re-appliable by design), the width is not
-    val recordedN = readPostingsMeta(spark, path)
     graft.store.EpochCommit.compact(spark, path) { (tmp, st) =>
-      recordedN.foreach(n => writePostingsMeta(spark, tmp, n))
+      // the swap replaces the WHOLE dir, so the recorded shingle width
+      // is carried into the tmp tree — compact takes no `n` of its own:
+      // the cap is its parameter (re-appliable by design), the width is not
+      graft.store.MetaSidecar.carry(spark, path, tmp, PostingsLayout)
       val freqs = graft.store.EpochCommit
         .readCommitted(spark, path, freqsDir(path), "shingle postings index")
         .groupBy("shingle").agg(sum(col("n_docs")).as("n_docs"))
@@ -677,7 +639,7 @@ object Dedup {
   }
 
   /** Pigeonhole band split shared by the self-join ([[hammingPairs]])
-    * and the cross-index gate ([[imageDupIdsVsIndex]]): the 64-bit
+    * and the cross-index gate ([[sigDupIdsVsIndex]]): the 64-bit
     * signature splits into at least `maxHamming + 1` bands
     * (`width = floor(64 / (maxHamming+1))`, last band may be narrower),
     * so any pair within the radius agrees on at least one full band.
@@ -718,35 +680,6 @@ object Dedup {
       Multimodal.dHashCol(col(bytesCol)).as("sig")), maxHamming)
 
   // ------------------------------------- incremental image dedup (round-18)
-  /** Persisted dHash SIGNATURE index — the artifact the daily image
-    * drop gates against without ever re-decoding the corpus: one
-    * (id LONG, sig LONG) row per asset, 16 bytes — 10B images fit in
-    * ~160 GB, and the gate reads only the signature table, never a
-    * corpus byte. Single parquet dir with job-atomic appends (the
-    * [[AnnIndex.appendToIndex]] precedent — the multi-dir
-    * [[graft.store.EpochCommit]] protocol exists for indexes whose
-    * state spans several dirs; this one is one dir, one write).
-    */
-  def buildDHashIndex(df: DataFrame, idCol: String, bytesCol: String,
-                      path: String): Unit =
-    df.select(col(idCol).cast("long").as("id"),
-        Multimodal.dHashCol(col(bytesCol)).as("sig"))
-      .write.mode("overwrite").parquet(path)
-
-  /** Append a batch's signatures — linear in the batch (decode+hash the
-    * arriving assets only); caller owns id-uniqueness, as with every
-    * index append in the engine.
-    */
-  def appendDHashIndex(df: DataFrame, idCol: String, bytesCol: String,
-                       path: String): Unit =
-    df.select(col(idCol).cast("long").as("id"),
-        Multimodal.dHashCol(col(bytesCol)).as("sig"))
-      .write.mode("append").parquet(path)
-
-  def readDHashIndex(spark: org.apache.spark.sql.SparkSession,
-                     path: String): DataFrame =
-    spark.read.parquet(path)
-
   /** Ids of a `(id, sig)` signature frame within `maxHamming` of ANY
     * indexed signature — the cross-index half of
     * [[imageNearDupIncremental]], the [[dupIdsVsIndex]] shape in
@@ -772,40 +705,12 @@ object Dedup {
       .select(col("__b_id")).distinct()
   }
 
-  /** Byte-level face of [[sigDupIdsVsIndex]] — hashes the batch once
-    * and gates it against the index.
-    */
-  def imageDupIdsVsIndex(batch: DataFrame, idCol: String, bytesCol: String,
-                         indexSigs: DataFrame, maxHamming: Int): DataFrame =
-    sigDupIdsVsIndex(
-      batch.select(col(idCol).cast("long").as("id"),
-        Multimodal.dHashCol(col(bytesCol)).as("sig")),
-      indexSigs, maxHamming)
-
-  /** [[imageNearDupIncremental]] with the survivors' signatures riding
-    * along as `__sig` — the maintainer's form: the signature of each
-    * asset is computed EXACTLY ONCE per batch (for real images a
-    * signature is a full decode + rescale, the dominant per-asset cost;
-    * the first draft decoded three times — pairs, gate, append) and the
-    * caller appends the emitted `(id, __sig)` pairs via
-    * [[appendDHashSigs]] without re-hashing bytes.
-    */
-  private[graft] def imageNearDupIncrementalSigs(newBatch: DataFrame, idCol: String,
-                                                 bytesCol: String, indexSigs: DataFrame,
-                                                 maxHamming: Int): DataFrame = {
-    val withSigs = withinBatchImageSurvivorsSigs(newBatch, idCol, bytesCol, maxHamming)
-    withSigs.join(
-      sigDupIdsVsIndex(
-        withSigs.select(col(idCol).cast("long").as("id"), col("__sig").as("sig")),
-        indexSigs, maxHamming),
-      withSigs(idCol).cast("long") === col("__b_id"), "left_anti")
-  }
-
   /** The WITHIN-BATCH half of the incremental image dedup (pairs →
     * groups → min-id survivor), survivors' signatures riding as
-    * `__sig`: shared by the flat- and banded-index gates. One decode
-    * pass per batch — pairs, the downstream gate, and the index append
-    * all reuse the signature.
+    * `__sig`: shared by the in-memory and banded-index gates. One
+    * decode pass per batch — pairs, the downstream gate, and the index
+    * append all reuse the signature (for real images a signature is a
+    * full decode + rescale, the dominant per-asset cost).
     */
   private def withinBatchImageSurvivorsSigs(newBatch: DataFrame, idCol: String,
                                             bytesCol: String,
@@ -822,8 +727,11 @@ object Dedup {
       .localCheckpoint(eager = false)
   }
 
-  /** [[imageNearDupIncrementalSigs]] against a PERSISTED BANDED index
-    * (round-19) — the maintainer's form for the closed streaming loop:
+  /** [[imageNearDupIncremental]] against a PERSISTED BANDED index, the
+    * survivors' signatures riding along as `__sig` (round-19) — the
+    * maintainer's form for the closed streaming loop, which appends the
+    * emitted `(id, __sig)` pairs via [[appendBandedDHashSigs]] without
+    * re-hashing bytes:
     * the gate prunes the index to its colliding `gb` buckets (or takes
     * the flat-slice fallback) via [[sigDupIdsVsBandedIndex]] instead of
     * re-banding the whole signature table inside every micro-batch
@@ -858,25 +766,24 @@ object Dedup {
     * [[jaccardIncremental]], embedding [[AnnIndex.dedupIncrementalLSH]],
     * perceptual-hash here; round-18): dedup the NEW batch within itself
     * (dHash banding pairs → groups → min-id survivor), then drop every
-    * survivor within `maxHamming` of ANY indexed signature. Output is
-    * ready to append, and [[appendDHashIndex]] closes the daily loop.
+    * survivor within `maxHamming` of ANY signature of `indexSigs`.
+    * Output is ready to append — the frame-level reference the banded
+    * gate ([[imageNearDupIncrementalBanded]]) is checked against.
     * Same evaluation-pinning discipline as [[jaccardIncremental]] (lazy
     * localCheckpoints: each batch-sized frame evaluates once across its
     * consumers), and each asset is decoded+hashed exactly once.
     */
   def imageNearDupIncremental(newBatch: DataFrame, idCol: String,
                               bytesCol: String, indexSigs: DataFrame,
-                              maxHamming: Int = 6): DataFrame =
-    imageNearDupIncrementalSigs(newBatch, idCol, bytesCol, indexSigs, maxHamming)
+                              maxHamming: Int = 6): DataFrame = {
+    val withSigs = withinBatchImageSurvivorsSigs(newBatch, idCol, bytesCol, maxHamming)
+    withSigs.join(
+      sigDupIdsVsIndex(
+        withSigs.select(col(idCol).cast("long").as("id"), col("__sig").as("sig")),
+        indexSigs, maxHamming),
+      withSigs(idCol).cast("long") === col("__b_id"), "left_anti")
       .drop("__sig")
-
-  /** Append precomputed `(id, sig)` rows — the maintainer's append:
-    * signatures computed once by [[imageNearDupIncrementalSigs]] land
-    * without a second decode pass.
-    */
-  def appendDHashSigs(sigs: DataFrame, path: String): Unit =
-    sigs.select(col("id").cast("long").as("id"), col("sig").cast("long").as("sig"))
-      .write.mode("append").parquet(path)
+  }
 
   // --------------------------------- BANDED persisted dHash index (round-19)
   /** Directory-bucket count of the banded layout's ONE partition axis
@@ -906,13 +813,22 @@ object Dedup {
   private def dirBucket(band: Column, key: Column): Column =
     pmod(xxhash64(band, key), lit(DHashKeyBuckets.toLong)).cast("int")
 
-  private def bandedMeta(spark: org.apache.spark.sql.SparkSession,
-                         path: String): Map[String, Int] =
-    graft.store.MetaSidecar.read(spark, path, "banded dHash index").getOrElse(
-      throw new graft.core.EngineError(
-        s"no _meta sidecar at $path — not a banded dHash signature index " +
-        "(build one with buildBandedDHashIndex; the flat (id, sig) form has " +
-        "no banding constants to validate)"))
+  /** The `_meta` format of a banded index serving radius `maxHamming`
+    * (banding at the built radius is complete for every radius up to it).
+    */
+  private def bandedLayout(maxHamming: Int): graft.store.MetaSidecar.Format =
+    graft.store.MetaSidecar.Format.of("banded dHash index",
+      Seq("formatVersion" -> 1, "maxHamming" -> maxHamming, "keyBuckets" -> DHashKeyBuckets),
+      "a serving radius above the built maxHamming misses pairs that disagree on " +
+        "every band, and a foreign keyBuckets modulus skips colliding buckets, both silently",
+      ceilings = Set("maxHamming"))
+
+  /** The built radius of the banded index at `path`, once `format`
+    * checks: its maxHamming is the least radius the index must serve.
+    */
+  private def builtRadius(spark: org.apache.spark.sql.SparkSession, path: String,
+                          format: graft.store.MetaSidecar.Format): Int =
+    graft.store.MetaSidecar.check(spark, path, format)("maxHamming")
 
   private def mainDir(path: String) = s"$path/main"
   private def tailDir(path: String) = s"$path/tail"
@@ -951,8 +867,9 @@ object Dedup {
 
   /** Persisted BANDED dHash signature index (round-19; VERDICT r18
     * "missing" #1): the [[registerPostingsBucketed]] precedent applied
-    * to Hamming space. The flat `(id, sig)` index is gated by
-    * re-banding the WHOLE table inside every micro-batch closure — a
+    * to Hamming space. A flat `(id, sig)` signature table is gated
+    * ([[sigDupIdsVsIndex]]) by re-banding the WHOLE table inside every
+    * micro-batch closure — a
     * `maxHamming+1`-way explode over the full corpus per arriving wave
     * (at the operator's own 10B-image sizing, ~terabytes of banded rows
     * re-materialized per batch). This form pays the banding shuffle
@@ -968,7 +885,7 @@ object Dedup {
     *    compact, ONE file per append (a micro-batch append writing 64
     *    bucket dirs per wave measured ~5× the flat write cost AND
     *    accumulates a file per dir per append — the tail keeps appends
-    *    at the flat index's single-file cost, bounded re-banding of the
+    *    at a single-file cost, bounded re-banding of the
     *    tail at gate time is the price, governed by the compaction
     *    cadence);
     *  - `_meta` — banding radius + bucket modulus (format constants).
@@ -1001,10 +918,9 @@ object Dedup {
     * exactly once — [[readBandedDHashFlat]] serves the flat view from
     * it (a pushed `band = 0` filter over the leading rows of every
     * file — row-group pruned by the sort) plus the tail, so the banded
-    * artifact SUBSUMES the flat one. Appends stay single-dir
-    * job-atomic (the same replay-idempotence argument as the flat
-    * index: duplicate signatures cannot change an exists-within-radius
-    * verdict).
+    * artifact is also the flat signature table. Appends stay
+    * single-dir job-atomic (replay-idempotent: duplicate signatures
+    * cannot change an exists-within-radius verdict).
     *
     * The banding radius is a FORMAT constant: serving is complete for
     * any radius ≤ the built radius (a pair within r ≤ R agrees on ≥1 of
@@ -1020,9 +936,8 @@ object Dedup {
       path, maxHamming)
 
   /** [[buildBandedDHashIndex]] from PRECOMPUTED `(id, sig)` rows — for
-    * corpora whose signatures already exist (a flat index migrating to
-    * the banded form, a rehearsal's one-pass hash): same artifact, no
-    * second decode pass.
+    * corpora whose signatures already exist (a flat signature table, a
+    * rehearsal's one-pass hash): same artifact, no second decode pass.
     */
   def buildBandedDHashIndexFromSigs(sigs: DataFrame, path: String,
                                     maxHamming: Int = 6): Unit = {
@@ -1033,19 +948,17 @@ object Dedup {
     writeBandedMain(
       sigs.select(col("id").cast("long").as("id"), col("sig").cast("long").as("sig")),
       path, maxHamming)
-    graft.store.MetaSidecar.write(sigs.sparkSession, path,
-      Seq("formatVersion" -> 1, "maxHamming" -> maxHamming,
-        "keyBuckets" -> DHashKeyBuckets))
+    graft.store.MetaSidecar.stamp(sigs.sparkSession, path, bandedLayout(maxHamming))
   }
 
   /** Append precomputed `(id, sig)` rows to a banded index — the
     * maintainer's append (signatures computed once per batch by
-    * [[imageNearDupIncrementalSigs]]): ONE flat file into `tail/`, the
-    * flat index's append cost; [[compactBandedDHashIndex]] folds the
-    * tail into the banded main on the operator's cadence.
+    * [[imageNearDupIncrementalSigsBanded]]): ONE flat file into `tail/`;
+    * [[compactBandedDHashIndex]] folds the tail into the banded main on
+    * the operator's cadence.
     */
   def appendBandedDHashSigs(sigs: DataFrame, path: String): Unit = {
-    bandedMeta(sigs.sparkSession, path) // loud on a non-banded artifact
+    builtRadius(sigs.sparkSession, path, bandedLayout(0))
     sigs.select(col("id").cast("long").as("id"), col("sig").cast("long").as("sig"))
       .coalesce(1)
       .write.mode("append").parquet(tailDir(path))
@@ -1064,19 +977,16 @@ object Dedup {
     */
   def compactBandedDHashIndex(spark: org.apache.spark.sql.SparkSession,
                               path: String): Unit = {
-    val meta = bandedMeta(spark, path)
+    // the flat band-0 read below is modulus-independent, so the check
+    // compares no keyBuckets value: compact migrates an old-modulus artifact
+    val builtR = builtRadius(spark, path,
+      bandedLayout(0).only("formatVersion", "maxHamming"))
     graft.store.EpochCommit.swapRewrite(spark, path, dhashTombstones,
-        readBandedDHashFlat(spark, path)) { tmp =>
-      writeBandedMain(readBandedDHashFlat(spark, path), tmp, meta("maxHamming"))
-      // stamp what was actually WRITTEN: the banding radius carries over
-      // (writeBandedMain banded at it, above), but the dir modulus is
-      // re-derived with THIS build's DHashKeyBuckets — so compact
-      // migrates an old-modulus artifact instead of relabeling it
-      // (the flat band-0 read above is modulus-independent), the
-      // IvfIndex.compactIndex precedent
-      graft.store.MetaSidecar.write(spark, tmp,
-        Seq("formatVersion" -> 1, "maxHamming" -> meta("maxHamming"),
-          "keyBuckets" -> DHashKeyBuckets))
+        bandedFlat(spark, path)) { tmp =>
+      writeBandedMain(bandedFlat(spark, path), tmp, builtR)
+      // stamp what was actually WRITTEN: the banding radius carries over,
+      // the dir modulus is re-derived with THIS build's DHashKeyBuckets
+      graft.store.MetaSidecar.stamp(spark, tmp, bandedLayout(builtR))
     }
   }
 
@@ -1112,7 +1022,7 @@ object Dedup {
   def deleteFromDHashIndex(spark: org.apache.spark.sql.SparkSession,
                            path: String, ids: Seq[Long]): Unit = {
     require(ids.nonEmpty, "banded dHash delete: empty id list")
-    bandedMeta(spark, path) // loud on a non-banded/corrupt artifact
+    builtRadius(spark, path, bandedLayout(0))
     dhashTombstones.record(spark, path, ids)
   }
 
@@ -1120,16 +1030,20 @@ object Dedup {
     * slice holds every compacted signature exactly once (the pushed
     * `band = 0` predicate row-group-prunes to each file's leading rows
     * — the (band, key, sig) sort), plus the flat tail. The read costs
-    * ≈ the flat index's bytes, not the banded tree's.
+    * ≈ 16 bytes per signature, not the banded tree's bytes.
     */
   def readBandedDHashFlat(spark: org.apache.spark.sql.SparkSession,
                           path: String): DataFrame = {
-    bandedMeta(spark, path) // loud on a non-banded/corrupt artifact
+    builtRadius(spark, path, bandedLayout(0))
+    bandedFlat(spark, path)
+  }
+
+  private def bandedFlat(spark: org.apache.spark.sql.SparkSession,
+                         path: String): DataFrame =
     dhashTombstones.fold(spark, path,
       spark.read.parquet(mainDir(path))
         .filter(col("band") === 0).select("id", "sig")
         .unionByName(readTail(spark, path)))
-  }
 
   /** [[sigDupIdsVsIndex]] against a PERSISTED banded index, with a
     * COST-BASED read path (round-19): the batch bands at the index's
@@ -1161,18 +1075,7 @@ object Dedup {
   def sigDupIdsVsBandedIndex(batchSigs: DataFrame, path: String,
                              maxHamming: Int): DataFrame = {
     val spark = batchSigs.sparkSession
-    val meta = bandedMeta(spark, path)
-    val (builtR, kbN) = (meta("maxHamming"), meta("keyBuckets"))
-    if (maxHamming > builtR)
-      throw new graft.core.EngineError(
-        s"banded dHash index at $path was built for radius $builtR; serving radius " +
-        s"$maxHamming > $builtR would silently miss pairs that disagree on every " +
-        "band — rebuild the index at the serving radius")
-    if (kbN != DHashKeyBuckets)
-      throw new graft.core.EngineError(
-        s"banded dHash index at $path was written with keyBuckets=$kbN; this build " +
-        s"expects $DHashKeyBuckets — pruning under the wrong modulus would silently " +
-        "skip colliding buckets; rebuild the index")
+    val builtR = builtRadius(spark, path, bandedLayout(maxHamming))
     // lazy pin: the touched-cell collect and the join must see ONE
     // evaluation of the batch banding (the AnnIndex.probeBatch discipline)
     val b = bandSigs(batchSigs, builtR)

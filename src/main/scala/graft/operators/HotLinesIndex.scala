@@ -94,15 +94,7 @@ object HotLinesIndex {
     val delta = lineFreqs(batch, textCol).localCheckpoint(eager = false)
     try if (!delta.isEmpty) {
       val salted = tag.map(t => (if (negated) "hl-delete:" else "hl-append:") + t)
-      // Also honor the LEGACY UNSALTED tag's epoch as committed (r20
-      // advisor, medium): a maintainer stream checkpointed under a
-      // pre-salt build committed this batch under the unsalted id — a
-      // crash-between-commit-and-offset restart on this build must
-      // recognize it, or the replay double-counts the batch's line
-      // frequencies (the exact at-least-once window the tag closes).
-      // Appends only: no pre-salt build ever committed a delete tag.
-      val legacy = tag.filter(_ => !negated).toSeq
-      graft.store.EpochCommit.append(s, path, salted, legacy)(
+      graft.store.EpochCommit.append(s, path, salted)(
         stageDelta(delta, path, _, negated))
     } finally graft.operators.Dedup.releaseCheckpointBlocks(delta)
   }

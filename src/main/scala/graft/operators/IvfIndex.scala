@@ -121,103 +121,26 @@ object IvfIndex {
     * The probe's candidate SET is unchanged (the bucket prune is a
     * superset of the cluster prune by construction).
     *
-    * The constant is part of the ON-DISK FORMAT: readers derive a
-    * probe's bucket list as `cluster % ClusterBuckets`, so changing it
-    * requires rebuilding (or compacting, which migrates) existing
-    * indexes. Legacy per-cluster layouts stay readable — probes add the
-    * bucket prune only when the frame carries a `bucket` column.
+    * The constant is part of the ON-DISK FORMAT ([[Layout]]): readers
+    * derive a probe's bucket list as `cluster % ClusterBuckets`, so
+    * changing it requires rebuilding existing indexes.
     */
   val ClusterBuckets = 64
 
-  /** On-disk format version of a persisted IVF layout: 2 = the round-18
-    * bucketed layout ([[ClusterBuckets]] dirs, cluster as a data column);
-    * 1 = the pre-r18 per-cluster layout (identified by its `cluster=`
-    * partition dirs — those artifacts predate the sidecar and never
-    * carry one).
+  /** On-disk format version of a persisted IVF layout: 2 = the bucketed
+    * layout ([[ClusterBuckets]] dirs, cluster as a data column).
     */
   val FormatVersion = 2
 
-  /** What the `_meta` sidecar records (round-19; VERDICT r18 "missing"
-    * #2): [[ClusterBuckets]] is part of the ON-DISK FORMAT, but until
-    * this sidecar nothing persisted recorded which modulus an artifact
-    * was written with — a build whose constant differs from the
-    * artifact's (a fork that tuned it, or a future bump) would derive
-    * bucket lists with the WRONG modulus in [[pruneProbes]], a
-    * superset-violating prune that silently DROPS candidates. With the
-    * sidecar, every path-based read and append validates first: correct
-    * candidates or a loud error, never a silent subset.
+  /** The `_meta` format of a persisted IVF index, shared by the packed
+    * family: a reader under a different [[ClusterBuckets]] would derive
+    * bucket lists with the wrong modulus in [[pruneProbes]] — a
+    * superset-violating prune that silently drops candidates.
     */
-  final case class LayoutMeta(formatVersion: Int, clusterBuckets: Int)
-
-  private def fsOf(spark: org.apache.spark.sql.SparkSession,
-                   p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Record THIS build's layout constants at the index root (shared
-    * [[graft.store.MetaSidecar]] format). Written at build/append/
-    * compact — appends backfill it onto r18-era bucketed artifacts that
-    * predate the sidecar.
-    */
-  def writeLayoutMeta(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    graft.store.MetaSidecar.write(spark, path,
-      Seq("formatVersion" -> FormatVersion, "clusterBuckets" -> ClusterBuckets))
-
-  /** The persisted layout descriptor, if the artifact carries one.
-    * A PRESENT-but-unparseable/incomplete sidecar is loud (corruption
-    * must never read as "no metadata, assume compatible").
-    */
-  def readLayoutMeta(spark: org.apache.spark.sql.SparkSession,
-                     path: String): Option[LayoutMeta] =
-    graft.store.MetaSidecar.read(spark, path, "IVF").map { kv =>
-      (kv.get("formatVersion"), kv.get("clusterBuckets")) match {
-        case (Some(f), Some(c)) => LayoutMeta(f, c)
-        case _ => throw new graft.core.EngineError(
-          s"IVF layout sidecar at $path/_meta is missing formatVersion/clusterBuckets " +
-          s"(found keys: ${kv.keys.mkString(", ")}) — refusing to serve an index whose " +
-          "bucket modulus cannot be verified")
-      }
-    }
-
-  /** Loud mismatch check run by every path-based read and append: an
-    * artifact written under a different [[ClusterBuckets]] (or an
-    * unknown format version) is REFUSED — serving it would prune bucket
-    * dirs with the wrong modulus and silently drop candidates. Sidecar
-    * absent = a pre-r19 artifact; those were written with this build's
-    * lineage constant by construction, and the next append/compact
-    * backfills the sidecar.
-    */
-  def validateLayoutMeta(spark: org.apache.spark.sql.SparkSession,
-                         path: String, what: String): Unit =
-    readLayoutMeta(spark, path).foreach { m =>
-      if (m.clusterBuckets != ClusterBuckets || m.formatVersion != FormatVersion)
-        throw new graft.core.EngineError(
-          s"$what at $path was written with formatVersion=${m.formatVersion}, " +
-          s"clusterBuckets=${m.clusterBuckets}; this build expects " +
-          s"formatVersion=$FormatVersion, clusterBuckets=$ClusterBuckets — probing " +
-          "would derive bucket dirs under the wrong modulus and silently drop " +
-          "candidates; rebuild the index (or compact it with the matching build)")
-    }
-
-  /** Refuse to append a BUCKETED batch into a pre-r18 PER-CLUSTER tree
-    * (round-19; advisor r18): mixing `bucket=` and `cluster=` partition
-    * dirs under one data root makes every subsequent read throw on
-    * conflicting partition columns — including the compact that is the
-    * documented migration, leaving only manual dir surgery. Detect the
-    * legacy layout pre-write and fail with the fix in the message.
-    */
-  private[graft] def assertNotLegacyLayout(spark: org.apache.spark.sql.SparkSession,
-                                           dirs: Seq[String], what: String): Unit =
-    dirs.foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      val f = fsOf(spark, p)
-      if (f.exists(p) && f.listStatus(p).exists(st =>
-            st.isDirectory && st.getPath.getName.startsWith("cluster=")))
-        throw new graft.core.EngineError(
-          s"$what at $d uses the pre-r18 per-cluster directory layout — appending a " +
-          "bucketed batch would mix partition schemes and break every subsequent " +
-          "read (conflicting partition columns); run compact first: it migrates " +
-          "the artifact to the bucketed layout")
-    }
+  private[graft] val Layout = graft.store.MetaSidecar.Format.of("IVF index",
+    Seq("formatVersion" -> FormatVersion, "clusterBuckets" -> ClusterBuckets),
+    "probes derive bucket dirs as cluster % clusterBuckets, so a foreign modulus " +
+      "silently drops candidates")
 
   /** Bucket-partitioned write shape shared by every persisted IVF
     * writer: derive `bucket` (reusing it if the frame already carries
@@ -235,8 +158,8 @@ object IvfIndex {
 
   /** Cluster prune that ALSO prunes the bucketed directory layout when
     * the frame carries one (persisted indexes; session-derived frames
-    * and legacy per-cluster layouts skip it): a superset partition
-    * filter, so the candidate set is exactly the cluster filter's.
+    * skip it): a superset partition filter, so the candidate set is
+    * exactly the cluster filter's.
     */
   private[graft] def pruneProbes(df: DataFrame, probes: Seq[Int]): DataFrame = {
     val base = df.filter(col("cluster").isin(probes.map(Int.box): _*))
@@ -253,7 +176,7 @@ object IvfIndex {
   def writeIndex(index: DataFrame, path: String): Unit = {
     bucketized(index)
       .write.mode("overwrite").partitionBy("bucket").parquet(path)
-    writeLayoutMeta(index.sparkSession, path)
+    graft.store.MetaSidecar.stamp(index.sparkSession, path, Layout)
   }
 
   /** APPEND a new batch into an existing persisted index against the
@@ -272,11 +195,8 @@ object IvfIndex {
     * SERVABLE throughout — drift degrades recall gradually, never
     * correctness, because probes exact-rerank whatever the buckets
     * hold). Caller owns id-uniqueness and config identity, as with the
-    * LSH append. Appending into a pre-r18 PER-CLUSTER layout would mix
-    * partition schemes and break every subsequent read — it is REFUSED
-    * pre-write ([[assertNotLegacyLayout]], round-19): run
-    * [[compactIndex]] first; it migrates. A `_meta` bucket-modulus
-    * mismatch is refused the same way ([[validateLayoutMeta]]).
+    * LSH append. An index whose `_meta` does not record this build's
+    * [[Layout]] is refused pre-write.
     *
     * `driftBaseline` (round-20; VERDICT r19 "missing" #3: the drift
     * health record persisted only on the packed family, so a deployment
@@ -294,8 +214,7 @@ object IvfIndex {
                     driftTolerance: Double = 0.05,
                     onDrift: Drift => Unit = IvfPackedIndex.logDrift): Unit = {
     val spark = newRows.sparkSession
-    validateLayoutMeta(spark, path, "IVF index")
-    assertNotLegacyLayout(spark, Seq(path), "IVF index")
+    graft.store.MetaSidecar.check(spark, path, Layout)
     // under the swap lock (r20 advisor; the AnnIndex.appendToIndex twin):
     // a plain mode("append") landing while a concurrent compactIndex
     // rewrite is in flight would vanish at the dir swap — the lock
@@ -303,7 +222,6 @@ object IvfIndex {
     graft.store.DocStore.withSwapLock(spark, path) {
       bucketized(buildIndex(newRows, idCol, embCol, model))
         .write.mode("append").partitionBy("bucket").parquet(path)
-      writeLayoutMeta(spark, path) // backfills pre-r19 artifacts
     }
     driftBaseline.foreach { b =>
       val d = driftCheck(newRows, embCol, model, b, driftTolerance)
@@ -338,7 +256,7 @@ object IvfIndex {
     * reaches the scan (the probe filter pushes below the anti-join).
     */
   def readIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    validateLayoutMeta(spark, path, "IVF index")
+    graft.store.MetaSidecar.check(spark, path, Layout)
     tombstones.fold(spark, path, spark.read.parquet(path))
   }
 

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.store.{EpochCommit, Tombstones}
+import graft.store.{EpochCommit, MetaSidecar, Tombstones}
 
 /** PERSISTED quantized-serving IVF index (round-16; VERDICT r15 next #2):
   * the byte-packed int8 sidecar promoted from a per-session derivation
@@ -41,8 +41,8 @@ import graft.store.{EpochCommit, Tombstones}
   * (bucket, cluster, id)-sorted files give every row group a tight
   * cluster range — a probe still touches only its `nProbe` clusters'
   * bytes, with the listing no longer scaling in k. See
-  * [[IvfIndex.ClusterBuckets]] for the format contract; [[compact]]
-  * migrates a pre-r18 per-cluster artifact.
+  * [[IvfIndex.ClusterBuckets]] for the format contract, recorded in the
+  * root's `_meta` ([[Layout]]).
   *
   * APPEND quantizes only the ARRIVING batch (assignment against the
   * frozen centroid model is deterministic, so appended state equals a
@@ -67,28 +67,8 @@ object IvfPackedIndex {
   private def packedDir(root: String) = s"$root/packed"
   private val tombstones = Tombstones("_tombstones", "id", "vector")
 
-  /** Pre-append guard (round-19; advisor r18 + VERDICT r18 "missing"
-    * #2): refuse a bucket-modulus mismatch recorded in the root's
-    * `_meta` sidecar, and refuse to stage a bucketed epoch next to
-    * pre-r18 PER-CLUSTER epochs — the mixed tree would throw on
-    * conflicting partition columns at every read, INCLUDING the
-    * [[compact]] that is the documented migration (recovery would need
-    * manual epoch-dir surgery). Both failures name `compact`/rebuild as
-    * the fix. Cost: one bounded listing of the two data dirs' epoch
-    * dirs per append — trivial next to the staging writes.
-    */
-  private def assertAppendable(spark: SparkSession, root: String): Unit = {
-    IvfIndex.validateLayoutMeta(spark, root, "packed IVF index")
-    val epochDirs = for {
-      d <- Seq(floatDir(root), packedDir(root))
-      p = new org.apache.hadoop.fs.Path(d)
-      f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if f.exists(p)
-      st <- f.listStatus(p).toSeq
-      if st.isDirectory && st.getPath.getName.startsWith(s"${EpochCommit.Col}=")
-    } yield st.getPath.toString
-    IvfIndex.assertNotLegacyLayout(spark, epochDirs, "packed IVF index")
-  }
+  /** The IVF [[IvfIndex.Layout]]: both precision forms bucket alike. */
+  private val Layout = IvfIndex.Layout.copy(what = "packed IVF index")
 
   /** Stage one batch under a fresh UNCOMMITTED epoch — `private[graft]`
     * so the crash-injection spec can stop between the two data writes
@@ -127,7 +107,7 @@ object IvfPackedIndex {
       s"packed ivf build at $root: corpus is empty — refusing to commit an " +
       "index whose data dirs contain no files (reads would fail schema inference)")
     EpochCommit.rebuild(emb.sparkSession, root)(stageBatch(emb, idCol, embCol, model, root))
-    IvfIndex.writeLayoutMeta(emb.sparkSession, root)
+    MetaSidecar.stamp(emb.sparkSession, root, Layout)
   }
 
   /** APPEND a batch against the FROZEN model — linear in the batch;
@@ -164,10 +144,16 @@ object IvfPackedIndex {
              onDrift: IvfIndex.Drift => Unit = logDrift): Unit =
     if (!newRows.isEmpty) {
       val s = newRows.sparkSession
-      assertAppendable(s, root)
-      val committedNow = EpochCommit.append(s, root, idempotencyTag, Nil)(
+      // an append into an empty root starts the index (a maintainer
+      // stream IS the builder): only a root with neither a sidecar nor a
+      // committed epoch is stamped instead of refused
+      try MetaSidecar.check(s, root, Layout)
+      catch { case e: graft.core.EngineError =>
+        if (MetaSidecar.present(s, root) || EpochCommit.committed(s, root).nonEmpty) throw e
+        MetaSidecar.stamp(s, root, Layout)
+      }
+      val committedNow = EpochCommit.append(s, root, idempotencyTag)(
         stageBatch(newRows, idCol, embCol, model, root, _))
-      IvfIndex.writeLayoutMeta(s, root) // backfills pre-r19 artifacts
       driftBaseline.foreach { b =>
         val d = IvfIndex.driftCheck(newRows, embCol, model, b, driftTolerance)
         // persist only for a FRESHLY committed batch (r20 review): the
@@ -203,7 +189,7 @@ object IvfPackedIndex {
     if (i == NaNSentinel) Double.NaN else i / 10000.0
 
   private def writeDriftStatus(spark: SparkSession, dir: String, s: DriftStatus): Unit =
-    graft.store.MetaSidecar.write(spark, dir, Seq(
+    MetaSidecar.write(spark, dir, Seq(
       "degradedBatches" -> s.degradedBatches,
       "lastRefitRecommended" -> (if (s.lastRefitRecommended) 1 else 0),
       "lastBatchMeanCos1e4" -> toFixed(s.lastBatchMeanCos),
@@ -232,12 +218,12 @@ object IvfPackedIndex {
     * as None with a loud stderr line, not an exception — this is an
     * observability sidecar, and the `stats`/`indexStats` surface it
     * feeds must keep reporting epoch health even when the health file
-    * itself is damaged (format sidecars like `_meta` stay
-    * loud-on-corrupt: THOSE gate correctness).
+    * itself is damaged (the `_meta` format check stays
+    * loud-on-corrupt: IT gates correctness).
     */
   def readDriftStatus(spark: SparkSession, root: String): Option[DriftStatus] =
     try
-      graft.store.MetaSidecar.read(spark, root, "packed IVF drift record", DriftFile)
+      MetaSidecar.read(spark, root, DriftFile)
         .map { kv =>
           DriftStatus(
             kv.getOrElse("degradedBatches", 0),
@@ -246,11 +232,10 @@ object IvfPackedIndex {
             fromFixed(kv.getOrElse("lastBaselineMeanCos1e4", NaNSentinel)))
         }
     catch { case scala.util.control.NonFatal(e) =>
-      // ADVICE r19: MetaSidecar.read can also throw raw IOExceptions
-      // (e.g. a local-FS ChecksumException from a stale .crc after a
-      // partial/hand-edited write) — ANY non-fatal failure here must
-      // degrade to "no health", never crash the stats surface this
-      // record exists to feed
+      // a corrupt record, or a raw IOException (e.g. a local-FS
+      // ChecksumException from a stale .crc after a partial/hand-edited
+      // write) — ANY non-fatal failure here must degrade to "no health",
+      // never crash the stats surface this record exists to feed
       System.err.println(s"[graft] unreadable drift record at $root/$DriftFile " +
         s"(${e.getMessage}) — reporting no drift health for this index; the next " +
         "drift-checked append rewrites it")
@@ -281,16 +266,20 @@ object IvfPackedIndex {
     * cluster) — cluster pruning pushes below the anti-join.
     */
   def readFloat(spark: SparkSession, root: String): DataFrame = {
-    IvfIndex.validateLayoutMeta(spark, root, "packed IVF index")
-    tombstones.fold(spark, root,
-      EpochCommit.readCommitted(spark, root, floatDir(root), "packed IVF index (float side)"))
+    // committed epochs first: an unbuilt or mid-swap index names its own recovery
+    val committed = EpochCommit.readCommitted(spark, root, floatDir(root),
+      "packed IVF index (float side)")
+    MetaSidecar.check(spark, root, Layout)
+    tombstones.fold(spark, root, committed)
   }
 
   /** Committed-only, tombstone-folded packed side (id, codes, cluster). */
   def readPacked(spark: SparkSession, root: String): DataFrame = {
-    IvfIndex.validateLayoutMeta(spark, root, "packed IVF index")
-    tombstones.fold(spark, root,
-      EpochCommit.readCommitted(spark, root, packedDir(root), "packed IVF index (packed side)"))
+    // committed epochs first: an unbuilt or mid-swap index names its own recovery
+    val committed = EpochCommit.readCommitted(spark, root, packedDir(root),
+      "packed IVF index (packed side)")
+    MetaSidecar.check(spark, root, Layout)
+    tombstones.fold(spark, root, committed)
   }
 
   /** COMPACT the epoch fan-in back to one epoch per form and fold the
@@ -301,12 +290,9 @@ object IvfPackedIndex {
     */
   def compact(spark: SparkSession, root: String): Unit =
     EpochCommit.compact(spark, root, tombstones, readFloat(spark, root)) { (tmp, st) =>
-      // bucketized reuses the read-back bucket column on the current
-      // layout and DERIVES it on a pre-r18 per-cluster artifact — so
-      // compacting a legacy index migrates it to the bucketed layout
       st.write(IvfIndex.bucketized(readFloat(spark, root)), floatDir(tmp), "bucket")
       st.write(IvfIndex.bucketized(readPacked(spark, root)), packedDir(tmp), "bucket")
-      IvfIndex.writeLayoutMeta(spark, tmp)
+      MetaSidecar.stamp(spark, tmp, Layout)
       // the drift health record describes the MODEL vs recent batches —
       // still true after a compact; carried via the NEVER-FAIL wrapper
       // (r20 review): the observability sidecar must not abort a

@@ -42,12 +42,11 @@ private[graft] object StreamRows {
       val (model, idx) = ivfIndex(s, dir)
       val nProbe = IvfIndex.defaultNProbe(model.centroids.length)
       val sinkName = "graft_stream_ivf_probe"
-      val sq = Streams.ivfProbeStream(
+      val sq = Streams.toMemorySink(Streams.ivfProbeStream(
           Tables.embeddingsStream(s, dir).filter(col("vec_id") < 20),
           "vec_id", "embedding", idx, model, threshold = 0.5, nProbe)
-        .select(col("q_id"), col("c_id"), round(col("score"), 6).as("score"))
-        .writeStream.format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        .select(col("q_id"), col("c_id"), round(col("score"), 6).as("score")),
+        sinkName, "append").start()
       graft.streaming.Streams.awaitOrAbort(sq, "stream_ivf_probe")
       val stateless = sq.lastProgress != null && sq.lastProgress.stateOperators.isEmpty
       def rows(df: DataFrame): Set[(Long, Long, Double)] =
@@ -89,13 +88,12 @@ private[graft] object StreamRows {
       val floatSide = IvfPackedIndex.readFloat(s, root)
       val nProbe = IvfIndex.defaultNProbe(model.centroids.length)
       val sinkName = "graft_stream_ivf_probe_quant"
-      val sq = Streams.ivfProbeStreamQuantized(
+      val sq = Streams.toMemorySink(Streams.ivfProbeStreamQuantized(
           Tables.embeddingsStream(s, dir).filter(col("vec_id") < 20),
           "vec_id", "embedding", packed, floatSide, model,
           threshold = 0.5, nProbe)
-        .select(col("q_id"), col("c_id"), round(col("score"), 6).as("score"))
-        .writeStream.format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        .select(col("q_id"), col("c_id"), round(col("score"), 6).as("score")),
+        sinkName, "append").start()
       graft.streaming.Streams.awaitOrAbort(sq, "stream_ivf_probe_quantized")
       val stateless = sq.lastProgress != null && sq.lastProgress.stateOperators.isEmpty
       def rows(df: DataFrame): Set[(Long, Long, Double)] =
@@ -211,8 +209,7 @@ private[graft] object StreamRows {
       // stateful start (r22): window-agg state stores sized by
       // Streams.stateShufflePartitions, not scan parallelism
       Streams.startStatefulAwait(s, Streams.toMemorySink(
-          Streams.eventsWindowAggStream(Tables.eventsStream(s, dir)), sinkName)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
+          Streams.eventsWindowAggStream(Tables.eventsStream(s, dir)), sinkName, "complete"),
         "events_window_stream")
       s.table(sinkName).orderBy("window_start", "event_type")
     },
@@ -235,10 +232,10 @@ private[graft] object StreamRows {
       val stream = s.readStream.schema(embs(s, dir).schema)
         .option("basePath", dir).parquet(s"$dir/{embeddings.parquet}")
       val sinkName = "graft_stream_sim_filter"
-      val sq = Streams.scoreFilter(stream, "embedding", q, threshold = 0.2)
-        .select(col("vec_id"), round(col("score"), 6).as("score"))
-        .writeStream.format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      val sq = Streams.toMemorySink(
+        Streams.scoreFilter(stream, "embedding", q, threshold = 0.2)
+          .select(col("vec_id"), round(col("score"), 6).as("score")),
+        sinkName, "append").start()
       graft.streaming.Streams.awaitOrAbort(sq, "stream_sim_filter")
       s.table(sinkName).orderBy("vec_id")
     },
@@ -259,12 +256,11 @@ private[graft] object StreamRows {
     // exact emitted pair set from scratch.
     Declared("stream_ann_probe", (s, dir) => {
       val sinkName = "graft_stream_ann_probe"
-      Streams.startStatefulAwait(s, Streams.annProbeStream(
+      Streams.startStatefulAwait(s, Streams.toMemorySink(Streams.annProbeStream(
           Tables.embeddingsStream(s, dir).filter(col("vec_id") < 20),
           "vec_id", "embedding", lshIndex(s, dir), threshold = 0.5, annCfg)
-        .select(col("q_id"), col("c_id"), round(col("score"), 6).as("score"))
-        .writeStream.format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
+        .select(col("q_id"), col("c_id"), round(col("score"), 6).as("score")),
+        sinkName, "append"),
         "stream_ann_probe")
       s.table(sinkName).orderBy("q_id", "c_id")
     },
@@ -288,12 +284,12 @@ private[graft] object StreamRows {
       val sinkName = "graft_stream_ann_probe_wm"
       val queries = Tables.embeddingsStream(s, dir).filter(col("vec_id") < 20)
         .withColumn("arrival_ts", timestamp_seconds(lit(1704067200L) + col("vec_id")))
-      Streams.startStatefulAwait(s, Streams.annProbeStreamWithinWatermark(queries,
+      Streams.startStatefulAwait(s, Streams.toMemorySink(
+        Streams.annProbeStreamWithinWatermark(queries,
           "vec_id", "embedding", lshIndex(s, dir), threshold = 0.5, annCfg,
           tsCol = "arrival_ts", delay = "365 days")
-        .select(col("q_id"), col("c_id"), round(col("score"), 6).as("score"))
-        .writeStream.format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
+        .select(col("q_id"), col("c_id"), round(col("score"), 6).as("score")),
+        sinkName, "append"),
         "stream_ann_probe_wm")
       s.table(sinkName).orderBy("q_id", "c_id")
     },
@@ -349,9 +345,8 @@ private[graft] object StreamRows {
       val evs = Tables.eventsStream(s, dir)
         .select(col("user_id"), col("ts")).as[Streams.Ev]
       val sinkName = "graft_sessionize_stateful"
-      Streams.startStatefulAwait(s, Streams.sessionizeStateful(evs, gapMinutes = 30).toDF()
-        .writeStream.format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
+      Streams.startStatefulAwait(s, Streams.toMemorySink(
+          Streams.sessionizeStateful(evs, gapMinutes = 30).toDF(), sinkName, "append"),
         "sessionize_stateful")
       s.table(sinkName).orderBy("user_id", "session_seq")
     },
@@ -393,9 +388,8 @@ private[graft] object StreamRows {
         .select(col("user_id"), col("ts")).as[Streams.Ev]
         .withWatermark("ts", "0 seconds")
       val sinkName = "graft_sessionize_stateful_exp"
-      Streams.startStatefulAwait(s, Streams.sessionizeStatefulExpiring(evs, gapMinutes = 30).toDF()
-        .writeStream.format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
+      Streams.startStatefulAwait(s, Streams.toMemorySink(
+          Streams.sessionizeStatefulExpiring(evs, gapMinutes = 30).toDF(), sinkName, "append"),
         "sessionize_stateful_exp")
       s.table(sinkName).orderBy("user_id", "session_seq")
     },
@@ -432,10 +426,10 @@ private[graft] object StreamRows {
     // twin replays it exactly: the streaming face of quality_filter.
     Declared("stream_quality_filter", (s, dir) => {
       val sinkName = "graft_stream_quality_filter"
-      val sq = Streams.qualityFilterStream(Tables.documentsStream(s, dir), "text")
-        .select(col("doc_id"), col("n_tokens"), col("quality"))
-        .writeStream.format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      val sq = Streams.toMemorySink(
+        Streams.qualityFilterStream(Tables.documentsStream(s, dir), "text")
+          .select(col("doc_id"), col("n_tokens"), col("quality")),
+        sinkName, "append").start()
       graft.streaming.Streams.awaitOrAbort(sq, "stream_quality_filter")
       s.table(sinkName).orderBy("doc_id")
     },
@@ -455,10 +449,9 @@ private[graft] object StreamRows {
     Declared("stream_dedup", (s, dir) => {
       val sinkName = "graft_stream_dedup"
       Streams.startStatefulAwait(s,
-        Streams.dedupExactStream(Tables.documentsStream(s, dir), "text")
-        .select("text_sha")
-        .writeStream.format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
+        Streams.toMemorySink(
+          Streams.dedupExactStream(Tables.documentsStream(s, dir), "text").select("text_sha"),
+        sinkName, "append"),
         "stream_dedup")
       s.table(sinkName).orderBy("text_sha")
     },
@@ -482,10 +475,10 @@ private[graft] object StreamRows {
         .withColumn("arrival_ts", timestamp_seconds(lit(1704067200L) + col("doc_id")))
       val sinkName = "graft_stream_dedup_wm"
       Streams.startStatefulAwait(s,
-        Streams.dedupExactStreamWithinWatermark(arrivals, "text", "arrival_ts", "365 days")
-        .select("text_sha")
-        .writeStream.format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
+        Streams.toMemorySink(
+          Streams.dedupExactStreamWithinWatermark(arrivals, "text", "arrival_ts", "365 days")
+            .select("text_sha"),
+        sinkName, "append"),
         "stream_dedup_wm")
       s.table(sinkName).orderBy("text_sha")
     },
@@ -509,11 +502,11 @@ private[graft] object StreamRows {
       val arrivals = Tables.documentsArrivalStream(s, docsTwice(s, dir), maxFilesPerTrigger = 1)
         .withColumn("arrival_ts", timestamp_seconds(lit(1704067200L) + col("doc_id")))
       val sinkName = "graft_stream_hygiene"
-      Streams.startStatefulAwait(s, Streams.dedupExactStreamWithinWatermark(
+      Streams.startStatefulAwait(s, Streams.toMemorySink(
+        Streams.dedupExactStreamWithinWatermark(
           Streams.qualityFilterStream(arrivals, "text"), "text", "arrival_ts", "365 days")
-        .select(col("text_sha"), col("n_tokens"), col("quality"))
-        .writeStream.format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
+        .select(col("text_sha"), col("n_tokens"), col("quality")),
+        sinkName, "append"),
         "stream_hygiene")
       s.table(sinkName).orderBy("text_sha")
     },
@@ -535,11 +528,10 @@ private[graft] object StreamRows {
       val sinkName = "graft_stream_line_clean"
       val aug = Tables.documentsStream(s, dir)
         .select(col("doc_id"), lineAugmented.as("text"))
-      val sq = Streams.lineCleanStream(aug, "text",
+      val sq = Streams.toMemorySink(Streams.lineCleanStream(aug, "text",
           minWords = 5, boilerplateRe = "(?i)subscribe|cookie")
-        .select(col("doc_id"), col("n_lines"), col("n_kept"), col("cleaned"))
-        .writeStream.format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        .select(col("doc_id"), col("n_lines"), col("n_kept"), col("cleaned")),
+        sinkName, "append").start()
       graft.streaming.Streams.awaitOrAbort(sq, "stream_line_clean")
       s.table(sinkName).orderBy("doc_id")
     },
@@ -552,10 +544,9 @@ private[graft] object StreamRows {
       val sinkName = "graft_stream_pii_scrub"
       val aug = Tables.documentsStream(s, dir)
         .select(col("doc_id"), piiAugmented.as("__aug"))
-      val sq = Streams.piiScrubStream(aug, "__aug")
-        .select(col("doc_id"), col("scrubbed"), col("n_pii"))
-        .writeStream.format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      val sq = Streams.toMemorySink(
+        Streams.piiScrubStream(aug, "__aug").select(col("doc_id"), col("scrubbed"), col("n_pii")),
+        sinkName, "append").start()
       graft.streaming.Streams.awaitOrAbort(sq, "stream_pii_scrub")
       s.table(sinkName).orderBy("doc_id")
     },
@@ -582,11 +573,10 @@ private[graft] object StreamRows {
     // so one hash pins scan == index probe == stream.
     Declared("stream_phrase_match", (s, dir) => {
       val sinkName = "graft_stream_phrase_match"
-      val sq = Streams.phraseMatchStream(
+      val sq = Streams.toMemorySink(Streams.phraseMatchStream(
           Tables.documentsStream(s, dir), "text", Seq("vector", "stream"))
-        .select(col("doc_id"), col("n_hits"), col("first_pos"))
-        .writeStream.format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        .select(col("doc_id"), col("n_hits"), col("first_pos")),
+        sinkName, "append").start()
       graft.streaming.Streams.awaitOrAbort(sq, "stream_phrase_match")
       s.table(sinkName).orderBy("doc_id")
     },
@@ -599,11 +589,10 @@ private[graft] object StreamRows {
     // per doc at ingest, exactly as they cost one pruned scan in batch.
     Declared("stream_phrase_route", (s, dir) => {
       val sinkName = "graft_stream_phrase_route"
-      val sq = Streams.phraseRouteStream(
+      val sq = Streams.toMemorySink(Streams.phraseRouteStream(
           Tables.documentsStream(s, dir), "text", phraseBatchQueries)
-        .select(col("q_id"), col("doc_id"), col("n_hits"), col("first_pos"))
-        .writeStream.format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        .select(col("q_id"), col("doc_id"), col("n_hits"), col("first_pos")),
+        sinkName, "append").start()
       graft.streaming.Streams.awaitOrAbort(sq, "stream_phrase_route")
       s.table(sinkName).orderBy("q_id", "doc_id")
     },
@@ -639,11 +628,10 @@ private[graft] object StreamRows {
     Declared("stream_bm25_route", (s, dir) => {
       val sinkName = "graft_stream_bm25_route"
       val (ts, n, total) = IndexedBm25.frozenStats(s, bm25Index(s, dir), bm25Terms)
-      val sq = Streams.bm25RouteStream(
+      val sq = Streams.toMemorySink(Streams.bm25RouteStream(
           Tables.documentsStream(s, dir), "text", ts, n, total, threshold = 1.1)
-        .select(col("doc_id"), col("score"))
-        .writeStream.format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        .select(col("doc_id"), col("score")),
+        sinkName, "append").start()
       graft.streaming.Streams.awaitOrAbort(sq, "stream_bm25_route")
       s.table(sinkName)
         .select(col("doc_id"), round(col("score"), 6).as("score"))

@@ -703,7 +703,7 @@ private[graft] object TextRows {
         |  CAST(COUNT(*) AS BIGINT) AS total_tf,
         |  CAST(COUNT(DISTINCT (doc_id, word)) AS BIGINT) AS total_df,
         |  CAST(1 AS BIGINT) AS parity
-        |FROM tok""".stripMargin),
+        |FROM tok""".stripMargin, cached = true),
 
     // E5/E7 (round-13): count-table DELETE — negated deltas invert the
     // append exactly; parity vs a survivor recount + invariant totals the
@@ -721,7 +721,7 @@ private[graft] object TextRows {
         |  CAST(COUNT(*) AS BIGINT) AS total_tf,
         |  CAST(COUNT(DISTINCT (doc_id, word)) AS BIGINT) AS total_df,
         |  CAST(1 AS BIGINT) AS parity
-        |FROM tok""".stripMargin),
+        |FROM tok""".stripMargin, cached = true),
 
     // E5: within-document repetition signals (Gopher-style quality
     // filters) — duplicate-token and duplicate-bigram fractions; catches

@@ -73,7 +73,8 @@ import org.apache.spark.sql.functions._
   *
   * ==== The family lifecycle ====
   * Every persisted index family drives its lifecycle through this module
-  * and keeps only its own layout, `_meta` validators and sidecars:
+  * and keeps only its own layout, `_meta` format
+  * ([[MetaSidecar.Format]]) and sidecars:
   *
   *  - STAGE ([[stage]]) — a fresh random epoch stages in
   *    `errorifexists` mode (its dirs must not exist yet); a tag-derived
@@ -162,18 +163,17 @@ object EpochCommit {
   /** APPEND one batch: `stageFn` stages it under the epoch it is given
     * (None = mint a fresh one) and returns the epoch id, which is then
     * committed. With a `tag` the epoch is [[deterministicEpochId]]`(tag)`
-    * and the append is exactly-once: when that epoch — or the epoch of
-    * any of `priorTags`, the tags an older build committed the same
-    * batch under — is already committed, nothing is staged. Returns
-    * whether this call committed the batch.
+    * and the append is exactly-once: when that epoch is already
+    * committed, nothing is staged. Returns whether this call committed
+    * the batch.
     */
-  def append(spark: SparkSession, indexPath: String, tag: Option[String],
-             priorTags: Seq[String])(stageFn: Option[String] => String): Boolean =
+  def append(spark: SparkSession, indexPath: String, tag: Option[String])
+            (stageFn: Option[String] => String): Boolean =
     tag match {
       case Some(t) =>
-        val done = committed(spark, indexPath)
-        val fresh = !(t +: priorTags).exists(p => done.contains(deterministicEpochId(p)))
-        if (fresh) commit(spark, indexPath, stageFn(Some(deterministicEpochId(t))))
+        val epoch = deterministicEpochId(t)
+        val fresh = !committed(spark, indexPath).contains(epoch)
+        if (fresh) commit(spark, indexPath, stageFn(Some(epoch)))
         fresh
       case None =>
         commit(spark, indexPath, stageFn(None))

@@ -2,14 +2,14 @@ package graft.store
 
 import org.apache.spark.sql.SparkSession
 
-/** Tiny `_meta` format-descriptor sidecar shared by the persisted
-  * indexes whose LAYOUT depends on a build-time constant (round-19;
-  * VERDICT r18 "missing" #2): the IVF bucket modulus and the banded
-  * dHash index's banding radius/key-bucket count are part of their
-  * artifacts' ON-DISK FORMAT — a reader that derives its prune lists
-  * from a DIFFERENT constant silently drops candidates. The sidecar
-  * records the write-time constants so readers can refuse loudly
-  * instead.
+/** Tiny `_meta` format-descriptor sidecar shared by every persisted
+  * index family (IVF, packed IVF, LSH, BM25, shingle postings, banded
+  * dHash): each layout depends on build-time constants — a bucket
+  * modulus, a hyperplane config, a shingle width, a banding radius — and
+  * a reader that derives its prune lists from DIFFERENT constants
+  * silently drops candidates. The sidecar records the write-time
+  * constants; [[check]] refuses any artifact that does not carry this
+  * build's, so every index a reader serves has exactly one format.
   *
   * One plain-text file named `_meta` at the index root (the underscore
   * prefix keeps parquet directory listings from picking it up — the
@@ -29,9 +29,7 @@ object MetaSidecar {
   private def fs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Raw sidecar bytes as UTF-8, shared by [[read]]'s parse and
-    * [[write]]'s no-op probe (one read implementation, per review).
-    */
+  /** Raw sidecar bytes as UTF-8. */
   private def readRaw(f: org.apache.hadoop.fs.FileSystem,
                       p: org.apache.hadoop.fs.Path): String = {
     val in = f.open(p)
@@ -46,8 +44,8 @@ object MetaSidecar {
     * `create(overwrite = true)` writes through the existing INODE, and
     * [[graft.core.SessionCache.linkTree]]'s hardlinked views share
     * inodes under the contract that linked bytes are immutable for
-    * their lifetime — a per-append `_meta` backfill or `_drift` update
-    * through a linked view would silently mutate the cached base
+    * their lifetime — a `_drift` update or a re-stamped `_meta` through
+    * a linked view would silently mutate the cached base
     * artifact. Replacing the directory ENTRY breaks the hardlink
     * instead; the base keeps its bytes.
     */
@@ -56,26 +54,13 @@ object MetaSidecar {
     val p = metaPath(dir, name)
     val f = fs(spark, p)
     val content = kv.map { case (k, v) => s"$k=$v\n" }.mkString
-    // Unchanged content is a NO-OP (round-20, per review): every append
-    // backfill-stamps a record that almost never changes, so a streaming
-    // maintainer would otherwise pay a create+replace per micro-batch —
-    // pure churn (expensive on object stores) that also re-enters the
-    // replacement window below for identical bytes. A present-but-
-    // unreadable sidecar falls through to the rewrite: WRITE repairs
-    // corruption, the read paths stay loud about it.
-    val existing: Option[String] =
-      if (!f.exists(p)) None
-      else try Some(readRaw(f, p))
-      catch { case scala.util.control.NonFatal(_) => None }
-    if (existing.contains(content)) return
     val tmp = metaPath(dir, s".$name.tmp-${System.nanoTime()}")
     val out = f.create(tmp, /* overwrite = */ true)
     try out.write(content.getBytes("UTF-8"))
     finally out.close()
-    // ATOMIC replacement of the directory entry (round-20, per review:
-    // the previous delete-then-rename left a crash window in which the
-    // sidecar was ABSENT — and absence reads as "pre-sidecar artifact,
-    // assume compatible", silently erasing the loud-mismatch guarantee).
+    // ATOMIC replacement of the directory entry: a delete-then-rename
+    // would leave a crash window in which the sidecar is ABSENT, and an
+    // absent sidecar makes every reader refuse a healthy index.
     //
     // On a LOCAL filesystem the truly atomic primitive is POSIX
     // rename(2) via java.nio ATOMIC_MOVE — Hadoop's own
@@ -153,24 +138,108 @@ object MetaSidecar {
     }
   }
 
-  /** The persisted constants, or None when the artifact predates the
-    * sidecar. A PRESENT-but-unparseable file is LOUD — corruption must
-    * never read as "no metadata, assume compatible".
+  /** One index family's ON-DISK FORMAT: the `_meta` keys its build
+    * writes, in file order; the values a reader expects for them; what
+    * a reader under other values would silently get wrong; and the
+    * `ceilings` — keys whose recorded value need only be at least the
+    * expected one (a banded index serves any radius up to the one it
+    * was built at). A family declares only its formats: [[stamp]]
+    * writes them, and [[check]] is the one decision on which artifacts
+    * a reader accepts.
     */
-  def read(spark: SparkSession, dir: String, what: String,
-           name: String = DefaultName): Option[Map[String, Int]] = {
+  final case class Format(what: String, keys: Seq[String], expected: Map[String, Int],
+                          reason: String, ceilings: Set[String] = Set.empty) {
+
+    /** This format with `kv`'s values expected too. */
+    def expecting(kv: (String, Int)*): Format = copy(expected = expected ++ kv)
+
+    /** This format comparing only `ks`' values — every key must still be
+      * recorded; for a compact that re-derives the other constants
+      * instead of serving under them.
+      */
+    def only(ks: String*): Format = copy(expected = expected.filter(kv => ks.contains(kv._1)))
+  }
+
+  object Format {
+
+    /** A format whose every key has a build-time value. */
+    def of(what: String, consts: Seq[(String, Int)], reason: String,
+           ceilings: Set[String] = Set.empty): Format =
+      Format(what, consts.map(_._1), consts.toMap, reason, ceilings)
+  }
+
+  /** Record `format`'s constants at the index root. */
+  def stamp(spark: SparkSession, dir: String, format: Format): Unit = {
+    require(format.keys.forall(format.expected.contains),
+      s"${format.what}: cannot stamp without a value for every key")
+    write(spark, dir, format.keys.map(k => k -> format.expected(k)))
+  }
+
+  /** THE format check every family runs at its read, append and probe
+    * entry points: the `_meta` sidecar must be present, parseable,
+    * record every key of `format`, and match every expected value (or
+    * reach it, for a ceiling). Anything else throws an
+    * [[graft.core.EngineError]] naming the path, the recorded and the
+    * expected values: an index this build cannot verify is rebuilt,
+    * never served. Returns the recorded constants.
+    */
+  def check(spark: SparkSession, dir: String, format: Format): Map[String, Int] =
+    recorded(spark, dir, format)
+
+  /** Re-stamp `from`'s checked constants at `to` — a compact's rewrite
+    * keeps the constants it took no parameter for.
+    */
+  def carry(spark: SparkSession, from: String, to: String, format: Format): Unit = {
+    val got = recorded(spark, from, format)
+    write(spark, to, format.keys.map(k => k -> got(k)))
+  }
+
+  /** Whether `dir` has a `_meta` sidecar at all. */
+  def present(spark: SparkSession, dir: String): Boolean = {
+    val p = metaPath(dir, DefaultName)
+    fs(spark, p).exists(p)
+  }
+
+  private def recorded(spark: SparkSession, dir: String,
+                       format: Format): Map[String, Int] = {
+    val p = metaPath(dir, DefaultName)
+    val f = fs(spark, p)
+    def show(kv: Seq[(String, Any)]) = kv.map { case (k, v) => s"$k=$v" }.mkString(", ")
+    val want = format.keys.map { k =>
+      format.expected.get(k).fold(s"$k=?") { v =>
+        if (format.ceilings(k)) s"$k>=$v" else s"$k=$v" }
+    }.mkString(", ")
+    def refuse(found: String, cause: Throwable = null): Nothing =
+      throw new graft.core.EngineError(
+        s"${format.what} at $dir: $found; this build expects $want — " +
+        s"${format.reason}; rebuild the index", cause)
+    if (!f.exists(p)) refuse(s"no $DefaultName sidecar at $p")
+    val text = readRaw(f, p)
+    val got =
+      try parse(text).toMap
+      catch { case e: Exception =>
+        refuse(s"unparseable $DefaultName sidecar at $p (content: ${text.trim})", e) }
+    val bad = format.keys.filterNot { k =>
+      got.get(k).exists(r => format.expected.get(k).forall(v =>
+        if (format.ceilings(k)) v <= r else v == r))
+    }
+    if (bad.nonEmpty)
+      refuse(s"$p records ${show(bad.map(k => k -> got.getOrElse(k, "?")))}")
+    got
+  }
+
+  /** An OBSERVABILITY sidecar's values (e.g. the packed index's `_drift`
+    * health record), or None when none was written yet. Format
+    * sidecars go through [[check]] instead.
+    */
+  def read(spark: SparkSession, dir: String, name: String): Option[Map[String, Int]] = {
     val p = metaPath(dir, name)
     val f = fs(spark, p)
     if (!f.exists(p)) None
-    else {
-      val text = readRaw(f, p)
-      try Some(text.linesIterator.filter(_.contains("="))
-        .map { l => val kv = l.split("=", 2); (kv(0).trim, kv(1).trim.toInt) }.toMap)
-      catch { case e: Exception =>
-        throw new graft.core.EngineError(
-          s"unparseable $what layout sidecar at $p (content: ${text.trim}) — " +
-          "refusing to serve an index whose format constants cannot be verified", e)
-      }
-    }
+    else Some(parse(readRaw(f, p)).toMap)
   }
+
+  private def parse(text: String): List[(String, Int)] =
+    text.linesIterator.filter(_.contains("="))
+      .map { l => val kv = l.split("=", 2); (kv(0).trim, kv(1).trim.toInt) }.toList
 }

@@ -60,11 +60,15 @@ object Streams {
   def eventsWindowAggStream(events: DataFrame): DataFrame =
     eventsWindowAgg(events.withWatermark("ts", "1 hour"))
 
-  /** Convenience writer: COMPLETE-mode memory sink (full rollup visible
-    * each micro-batch; the watermark bounds state, not output).
+  /** A drain-once writer into the memory table `queryName`: AvailableNow
+    * trigger, `outputMode` "append" for row streams or "complete" for a
+    * rollup (full result visible each micro-batch; the watermark bounds
+    * state, not output).
     */
-  def toMemorySink(stream: DataFrame, queryName: String): DataStreamWriter[Row] =
-    stream.writeStream.format("memory").queryName(queryName).outputMode("complete")
+  def toMemorySink(stream: DataFrame, queryName: String,
+                   outputMode: String): DataStreamWriter[Row] =
+    stream.writeStream.format("memory").queryName(queryName).outputMode(outputMode)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
 
   /** Gap-based sessionization (batch): a new session starts when the gap
     * to the previous event of the same user exceeds `gapMinutes`. The
@@ -264,22 +268,8 @@ object Streams {
                               threshold: Double, nProbe: Int,
                               margin: Double = 0.05): DataFrame = {
     require(margin >= 0, s"margin must be >= 0, got $margin")
-    // Pre-r17 packed artifacts lack the build-time `code_norm` column
-    // (round-18; ADVICE r17: an unconditional read failed analysis on a
-    // maintained index persisted by an older build, and compact copies
-    // without re-quantizing, so the column never backfills). Fall back
-    // to the legacy margin-only prescreen there — but then `margin` IS
-    // the only slack, so a zero margin would reintroduce the silent
-    // false-drop the per-row bound exists to prevent: refuse it.
-    val hasCodeNorm = packedIndex.columns.contains("code_norm")
-    if (!hasCodeNorm) require(margin > 0,
-      "packed index has no code_norm column (pre-r17 artifact): the margin-only " +
-      "prescreen needs margin > 0, or rebuild the index to carry the per-row bound")
-    val slack =
-      if (hasCodeNorm)
-        greatest(lit(margin), graft.operators.Quantize.cosineErrorBound(
-          octet_length(col("codes")), col("code_norm")))
-      else lit(margin)
+    val slack = greatest(lit(margin), graft.operators.Quantize.cosineErrorBound(
+      octet_length(col("codes")), col("code_norm")))
     val probesUdf = udf { (v: Seq[Float]) =>
       model.nearestClusters(v.toArray, nProbe).toArray
     }
@@ -389,13 +379,9 @@ object Streams {
     // the foreachBatch at-least-once contract means a replayed batch
     // must REPLACE its own output, never re-append it — the same sink
     // discipline as the gate-then-append maintainer.
-    // LAYOUT NOTE (round-18; ADVICE r17): `outDir` is therefore a
-    // PARTITIONED dir (`batch=<run>-<batchId>/…`) — a plain read of it
-    // carries an extra `batch` string column, and pointing a run at a
-    // pre-r17 FLAT outDir mixes layouts (partition discovery fails).
-    // Start from an empty/partitioned outDir and read the survivors
-    // back through [[readGateOutput]], which drops the bookkeeping
-    // column.
+    // `outDir` is therefore a PARTITIONED dir (`batch=<run>-<batchId>/…`):
+    // a plain read of it carries an extra `batch` string column, so read
+    // the survivors back through [[readGateOutput]], which drops it.
     lazy val runTag = maintainerRunTag(stream.sparkSession, None)
     val sq = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>

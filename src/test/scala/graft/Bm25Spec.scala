@@ -96,7 +96,7 @@ class Bm25Spec extends SparkSpec {
     val path = java.nio.file.Files.createTempDirectory("graft-bm25-meta").toString
     IndexedBm25.build(corpusDF, "doc_id", "text", path)
     // the build stamped this build's constants
-    assert(graft.store.MetaSidecar.read(spark, path, "bm25").contains(
+    assert(graft.store.MetaSidecar.read(spark, path, graft.store.MetaSidecar.DefaultName).contains(
       Map("formatVersion" -> IndexedBm25.FormatVersion,
         "partitions" -> IndexedBm25.Partitions)))
     val direct = IndexedBm25.topK(spark, path, terms, 10)
@@ -132,7 +132,7 @@ class Bm25Spec extends SparkSpec {
     // stamps what it wrote, and the probe serves the same results
     writeMetaRaw(s"formatVersion=${IndexedBm25.FormatVersion}\npartitions=32\n")
     IndexedBm25.compact(spark, path)
-    assert(graft.store.MetaSidecar.read(spark, path, "bm25").contains(
+    assert(graft.store.MetaSidecar.read(spark, path, graft.store.MetaSidecar.DefaultName).contains(
       Map("formatVersion" -> IndexedBm25.FormatVersion,
         "partitions" -> IndexedBm25.Partitions)))
     assert(IndexedBm25.topK(spark, path, terms, 10)

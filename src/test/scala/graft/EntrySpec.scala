@@ -6,6 +6,21 @@ package graft
   */
 class EntrySpec extends SparkSpec {
 
+  /** The registry, family by family: each family's rows run as their own
+    * test, so a failure names its family and
+    * `testOnly graft.EntrySpec -- -z Stream` reruns one.
+    */
+  private val families: Seq[(String, Seq[registry.Declared])] = Seq(
+    "Store" -> registry.StoreRows.rows,
+    "Similarity" -> registry.SimilarityRows.rows,
+    "Ann" -> registry.AnnRows.rows,
+    "Bm25" -> registry.Bm25Rows.rows,
+    "Dedup" -> registry.DedupRows.rows,
+    "Text" -> registry.TextRows.rows,
+    "Stream" -> registry.StreamRows.rows,
+    "Relational" -> registry.RelationalRows.rows,
+    "Pipeline" -> registry.PipelineRows.rows)
+
   test("entry() returns rows > 0 (t1 smoke)") {
     val rows = SparkEntry.entry(spark).collect()
     assert(rows.length == 5)
@@ -25,7 +40,11 @@ class EntrySpec extends SparkSpec {
       "ivf_topk", "ivf_topk_quantized", "ivf_packed_lifecycle",
       "stream_ivf_probe", "stream_ivf_probe_quantized",
       "stream_ivf_packed_maintain", "ivf_batch_topk_quantized",
-      "incremental_near_dedup", "jaccard_index_append_parity"))
+      "incremental_near_dedup", "jaccard_index_append_parity",
+      "vocab_index_append_parity", "vocab_delete_parity"))
+    // the per-family tests below run every declared row exactly once
+    assert(families.flatMap(_._2).map(_.name).sorted == SparkEntry.rows.map(_.name).sorted,
+      "the per-family split does not cover SparkEntry.rows exactly")
   }
 
   test("round-13 IVF invariant rows equal the constants their oracles pin") {
@@ -37,13 +56,14 @@ class EntrySpec extends SparkSpec {
       == Seq((20L, 1L, 1L)), s"stream_ivf_probe flags: ${sp.mkString(",")}")
   }
 
-  test("all declared queries execute on sf0.001 and return rows") {
-    val empties = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val n = fn(spark, Sf0001).count()
-      if (n == 0) Some(name) else None
+  families.foreach { case (family, rows) =>
+    test(s"$family rows execute on sf0.001 and return rows") {
+      val empties = rows.sortBy(_.name).flatMap { r =>
+        if (r.run(spark, Sf0001).count() == 0) Some(r.name) else None
+      }
+      // events_setops may legitimately be empty at this sf; everything else must
+      // produce rows.
+      assert(empties.toSet.subsetOf(Set("events_setops")), s"empty results: $empties")
     }
-    // events_setops may legitimately be empty at this sf; everything else must
-    // produce rows.
-    assert(empties.toSet.subsetOf(Set("events_setops")), s"empty results: $empties")
   }
 }

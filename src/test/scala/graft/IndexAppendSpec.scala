@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{AnnIndex, IvfIndex}
+import graft.store.MetaSidecar
 
 /** Index MAINTENANCE contracts (round-9): appending a daily batch into a
   * persisted index must probe identically to a from-scratch build over
@@ -257,8 +258,7 @@ class IndexAppendSpec extends SparkSpec {
       "re-fit model still flags the batch it was trained on")
   }
 
-  // ==== round-19: the persisted bucket modulus (VERDICT r18 "missing" #2)
-  // and the legacy-layout append guard (advisor r18) ====
+  // ==== round-19: the persisted bucket modulus (VERDICT r18 "missing" #2) ====
 
   // tamper through the hadoop FS (java.nio would desync the local-FS
   // .crc sidecar and reads would fail on ChecksumException, not our guard)
@@ -267,6 +267,9 @@ class IndexAppendSpec extends SparkSpec {
     val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
     try out.write(content.getBytes("UTF-8")) finally out.close()
   }
+
+  private def recordedMeta(path: String): Option[Map[String, Int]] =
+    MetaSidecar.read(spark, path, MetaSidecar.DefaultName)
 
   private def tamperMeta(path: String, buckets: Int): Unit =
     writeMetaRaw(path,
@@ -279,8 +282,8 @@ class IndexAppendSpec extends SparkSpec {
     val path = java.nio.file.Files.createTempDirectory("graft-ivf-meta").toString
     IvfIndex.writeIndex(IvfIndex.buildIndex(old, "vec_id", "embedding", model), path)
     // the build stamped this build's constants
-    assert(IvfIndex.readLayoutMeta(spark, path)
-      .contains(IvfIndex.LayoutMeta(IvfIndex.FormatVersion, IvfIndex.ClusterBuckets)))
+    assert(recordedMeta(path).contains(Map(
+      "formatVersion" -> IvfIndex.FormatVersion, "clusterBuckets" -> IvfIndex.ClusterBuckets)))
 
     // simulate an artifact written under a DIFFERENT ClusterBuckets: the
     // probe's bucket prune would use the wrong modulus and silently drop
@@ -296,7 +299,7 @@ class IndexAppendSpec extends SparkSpec {
     intercept[graft.core.EngineError](IvfIndex.readIndex(spark, path))
 
     // matching constants serve again (same files, only the sidecar changed)
-    IvfIndex.writeLayoutMeta(spark, path)
+    MetaSidecar.stamp(spark, path, IvfIndex.Layout)
     val nProbe = IvfIndex.defaultNProbe(8)
     assert(probeRows(IvfIndex.queryTopK(
       IvfIndex.readIndex(spark, path), model, qVec, 10, nProbe)).nonEmpty)
@@ -314,68 +317,9 @@ class IndexAppendSpec extends SparkSpec {
     intercept[graft.core.EngineError](IvfPackedIndex.readPacked(spark, root))
     intercept[graft.core.EngineError](
       IvfPackedIndex.append(batch, "vec_id", "embedding", model, root))
-    IvfIndex.writeLayoutMeta(spark, root)
+    MetaSidecar.stamp(spark, root, IvfIndex.Layout)
     IvfPackedIndex.append(batch, "vec_id", "embedding", model, root)
     assert(IvfPackedIndex.readFloat(spark, root).count() == embs.count())
-  }
-
-  test("IVF append into a pre-r18 per-cluster tree is refused pre-write; compact migrates, then append probes correctly") {
-    val old = embs.filter(col("vec_id") < 150)
-    val batch = embs.filter(col("vec_id") >= 150)
-    val model = IvfIndex.fit(old, "embedding", k = 8)
-    val nProbe = IvfIndex.defaultNProbe(8)
-    val path = java.nio.file.Files.createTempDirectory("graft-ivf-legacy").toString
-    // fabricate the pre-r18 layout: partitionBy("cluster"), no bucket column
-    IvfIndex.buildIndex(old, "vec_id", "embedding", model)
-      .repartition(col("cluster"))
-      .write.mode("overwrite").partitionBy("cluster").parquet(path)
-    // the mixed tree would break every read including the migration compact
-    val e = intercept[graft.core.EngineError](
-      IvfIndex.appendToIndex(batch, path, "vec_id", "embedding", model))
-    assert(e.getMessage.contains("compact"), e.getMessage)
-    // legacy artifacts stay READABLE (no bucket prune, cluster prune only)
-    val legacyProbe = probeRows(IvfIndex.queryTopK(
-      IvfIndex.readIndex(spark, path), model, qVec, 10, nProbe))
-    // compact migrates to the bucketed layout and stamps the sidecar...
-    IvfIndex.compactIndex(spark, path)
-    assert(IvfIndex.readLayoutMeta(spark, path).isDefined)
-    assert(probeRows(IvfIndex.queryTopK(
-      IvfIndex.readIndex(spark, path), model, qVec, 10, nProbe)) == legacyProbe)
-    // ...after which the append is accepted and equals a frozen-model rebuild
-    IvfIndex.appendToIndex(batch, path, "vec_id", "embedding", model)
-    val viaRebuild = probeRows(IvfIndex.queryTopK(
-      IvfIndex.buildIndex(embs, "vec_id", "embedding", model), model, qVec, 10, nProbe))
-    assert(probeRows(IvfIndex.queryTopK(
-      IvfIndex.readIndex(spark, path), model, qVec, 10, nProbe)) == viaRebuild)
-  }
-
-  test("packed IVF append next to per-cluster epochs is refused pre-write; compact migrates") {
-    import graft.operators.IvfPackedIndex
-    import graft.store.EpochCommit
-    val old = embs.filter(col("vec_id") < 150)
-    val batch = embs.filter(col("vec_id") >= 150)
-    val model = IvfIndex.fit(old, "embedding", k = 8)
-    val root = java.nio.file.Files.createTempDirectory("graft-pki-legacy").toString
-    // fabricate a pre-r18 packed artifact: per-cluster dirs inside one
-    // committed epoch, both precision forms, no _meta sidecar
-    val e0 = EpochCommit.newEpochId()
-    val assigned = IvfIndex.buildIndex(old, "vec_id", "embedding", model)
-    assigned.repartition(col("cluster"))
-      .write.partitionBy("cluster").parquet(EpochCommit.stagePath(s"$root/float", e0))
-    IvfIndex.quantizeIndexPacked(assigned).repartition(col("cluster"))
-      .write.partitionBy("cluster").parquet(EpochCommit.stagePath(s"$root/packed", e0))
-    EpochCommit.commit(spark, root, e0)
-    // an append would stage bucket= dirs next to cluster= dirs: after the
-    // commit every read throws on conflicting partition columns and even
-    // compact can't run — refuse BEFORE any write happens
-    val err = intercept[graft.core.EngineError](
-      IvfPackedIndex.append(batch, "vec_id", "embedding", model, root))
-    assert(err.getMessage.contains("compact"), err.getMessage)
-    // nothing was staged by the refused append
-    IvfPackedIndex.compact(spark, root) // migrates to the bucketed layout
-    IvfPackedIndex.append(batch, "vec_id", "embedding", model, root)
-    assert(IvfPackedIndex.readFloat(spark, root).count() == embs.count())
-    assert(IvfPackedIndex.readPacked(spark, root).count() == embs.count())
   }
 
   // ==== round-20: the LSH family's persisted hyperplane config (the last
@@ -387,7 +331,9 @@ class IndexAppendSpec extends SparkSpec {
     val path = java.nio.file.Files.createTempDirectory("graft-lsh-meta").toString
     AnnIndex.writeIndex(AnnIndex.buildIndex(old, "vec_id", "embedding", cfg), path, cfg)
     // the build stamped the full config; the path is now the config record
-    assert(AnnIndex.readConfigMeta(spark, path).contains(cfg))
+    val cfgMeta = Map("formatVersion" -> AnnIndex.FormatVersion, "dim" -> cfg.dim,
+      "nBits" -> cfg.nBits, "nTables" -> cfg.nTables, "seed" -> cfg.seed)
+    assert(recordedMeta(path).contains(cfgMeta))
 
     // a config differing in ANY field derives foreign hyperplanes: appends
     // would mis-bucket, probes would scan the wrong dirs — both refuse
@@ -406,26 +352,22 @@ class IndexAppendSpec extends SparkSpec {
     // unknown formatVersion refuses
     writeMetaRaw(path, "formatVersion=1\ndim=64\n")
     intercept[graft.core.EngineError](AnnIndex.readIndex(spark, path))
+    intercept[graft.core.EngineError](AnnIndex.compactIndex(spark, path))
     writeMetaRaw(path, s"formatVersion=99\ndim=${cfg.dim}\nnBits=${cfg.nBits}\n" +
       s"nTables=${cfg.nTables}\nseed=${cfg.seed}\n")
     intercept[graft.core.EngineError](AnnIndex.readIndex(spark, path))
 
-    // a pre-r20 artifact (no sidecar) stays readable, and the next append
-    // backfills the record
-    val m = new org.apache.hadoop.fs.Path(s"$path/_meta")
-    m.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(m, false)
-    assert(AnnIndex.readConfigMeta(spark, path).isEmpty)
+    // the build's record serves again; append probes equal a rebuild over
+    // old ∪ new, and the compact rewrite carries the sidecar across the
+    // dir swap
+    writeMetaRaw(path, cfgMeta.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v\n" }.mkString)
     AnnIndex.appendToIndex(batch, path, "vec_id", "embedding", cfg)
-    assert(AnnIndex.readConfigMeta(spark, path).contains(cfg))
-
-    // append+backfill probes equal to a rebuild over old ∪ new, and the
-    // compact rewrite carries the sidecar across the dir swap
     val viaRebuild = probeRows(
       AnnIndex.queryTopK(AnnIndex.buildIndex(embs, "vec_id", "embedding", cfg), qVec, 10, cfg))
     assert(probeRows(AnnIndex.queryTopK(
       AnnIndex.readIndex(spark, path, cfg), qVec, 10, cfg)) == viaRebuild)
     AnnIndex.compactIndex(spark, path)
-    assert(AnnIndex.readConfigMeta(spark, path).contains(cfg))
+    assert(recordedMeta(path).contains(cfgMeta))
     assert(probeRows(AnnIndex.queryTopK(
       AnnIndex.readIndex(spark, path, cfg), qVec, 10, cfg)) == viaRebuild)
   }
@@ -527,6 +469,68 @@ class IndexAppendSpec extends SparkSpec {
       assert(err.getMessage.contains("tombstoned"), s"${f.name}: ${err.getMessage}")
       // the refusal changed nothing: the index still reads, as empty
       assert(f.liveIds(path).isEmpty, s"${f.name}: unreadable after the refusal")
+    }
+  }
+
+  /** One family's `_meta` contract under test: how to build it fresh at
+    * a path, read (or probe) it, append a batch to it, and which recorded
+    * constant a foreign build would disagree on.
+    */
+  private final case class SidecarFamily(name: String, key: String,
+                                          build: String => Unit,
+                                          read: String => Unit,
+                                          append: String => Unit)
+
+  private def sidecarFamilies: Seq[SidecarFamily] = {
+    import spark.implicits._
+    import graft.operators.{Dedup, IndexedBm25, IvfPackedIndex}
+    val vecs = embs.filter(col("vec_id") < 5)
+      .select((col("vec_id") + 10000L).as("vec_id"), col("embedding"))
+    val texts = Seq((9L, "common zebra crossing")).toDF("doc_id", "text")
+    Seq(
+      SidecarFamily("IVF", "clusterBuckets", ivfFamily.build,
+        p => IvfIndex.readIndex(spark, p),
+        p => IvfIndex.appendToIndex(vecs, p, "vec_id", "embedding", ivfModel)),
+      SidecarFamily("packed IVF", "clusterBuckets", packedIvfFamily.build,
+        p => IvfPackedIndex.readPacked(spark, p),
+        p => IvfPackedIndex.append(vecs, "vec_id", "embedding", ivfModel, p)),
+      SidecarFamily("LSH", "seed", lshFamily.build,
+        p => AnnIndex.readIndex(spark, p, cfg),
+        p => AnnIndex.appendToIndex(vecs, p, "vec_id", "embedding", cfg)),
+      SidecarFamily("BM25", "partitions", bm25Family.build,
+        p => IndexedBm25.topK(spark, p, Seq("common"), 10),
+        p => IndexedBm25.append(texts, "doc_id", "text", p)),
+      SidecarFamily("shingle postings", "shingleN",
+        p => Dedup.buildPostingsIndex(bm25Docs, "doc_id", "text", n = 2, p),
+        p => Dedup.readPostingsIndex(spark, p, 2),
+        p => Dedup.appendPostingsIndex(texts, "doc_id", "text", n = 2, p)),
+      SidecarFamily("banded dHash", "keyBuckets", dhashFamily.build,
+        p => Dedup.sigDupIdsVsBandedIndex(dhashSigs, p, 6),
+        p => Dedup.appendBandedDHashSigs(dhashSigs.limit(1), p)))
+  }
+
+  test("_meta, every family: a fresh build serves; a missing or foreign sidecar refuses read and append") {
+    sidecarFamilies.foreach { f =>
+      val path = java.nio.file.Files.createTempDirectory("graft-sidecar").toString
+      f.build(path)
+      f.read(path)
+      val recorded = recordedMeta(path).getOrElse(fail(s"${f.name}: build wrote no _meta"))
+      val meta = new org.apache.hadoop.fs.Path(s"$path/_meta")
+      meta.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(meta, false)
+      for (op <- Seq(f.read, f.append)) {
+        val e = intercept[graft.core.EngineError](op(path))
+        assert(e.getMessage.contains(path) && e.getMessage.contains("rebuild"),
+          s"${f.name}: ${e.getMessage}")
+      }
+      // a build under a different constant: the error names both values
+      val v = recorded(f.key)
+      writeMetaRaw(path,
+        recorded.updated(f.key, v + 1).map { case (k, x) => s"$k=$x\n" }.mkString)
+      for (op <- Seq(f.read, f.append)) {
+        val e = intercept[graft.core.EngineError](op(path))
+        assert(e.getMessage.contains(s"${f.key}=${v + 1}") &&
+          e.getMessage.contains(s"${f.key}=$v"), s"${f.name}: ${e.getMessage}")
+      }
     }
   }
 

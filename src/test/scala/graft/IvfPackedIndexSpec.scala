@@ -136,43 +136,6 @@ class IvfPackedIndexSpec extends SparkSpec {
       "crashed-stage retry duplicated or lost rows")
   }
 
-  test("pre-r18 PER-CLUSTER artifact: probes still serve it, compact MIGRATES it to the bucketed layout (r18)") {
-    import graft.store.EpochCommit
-    // hand-build the legacy layout exactly as r17 wrote it: epoch-staged
-    // dirs partitioned by CLUSTER, (cluster, id)-sorted, one commit
-    val root = tmp("graft-ivfp-legacy") + "/idx"
-    val assigned = IvfIndex.buildIndex(embAll, "vec_id", "embedding", model)
-    val e = EpochCommit.newEpochId()
-    assigned.repartition(col("cluster"))
-      .sortWithinPartitions(col("cluster"), col("id"))
-      .write.partitionBy("cluster")
-      .parquet(EpochCommit.stagePath(s"$root/float", e))
-    IvfIndex.quantizeIndexPacked(assigned)
-      .repartition(col("cluster"))
-      .sortWithinPartitions(col("cluster"), col("id"))
-      .write.partitionBy("cluster")
-      .parquet(EpochCommit.stagePath(s"$root/packed", e))
-    EpochCommit.commit(spark, root, e)
-
-    // legacy reads carry no bucket column, so probes skip the bucket
-    // prune and must still serve correctly
-    assert(!IvfPackedIndex.readFloat(spark, root).columns.contains("bucket"))
-    val expected = fresh(embAll)
-    assert(served(root) == expected, "legacy per-cluster artifact mis-served")
-
-    // compact = the documented migration: the rewritten tree is
-    // bucket-partitioned, probes serve identically
-    IvfPackedIndex.compact(spark, root)
-    assert(IvfPackedIndex.readFloat(spark, root).columns.contains("bucket"),
-      "compact did not migrate to the bucketed layout")
-    val floatDirs = new java.io.File(s"$root/float").listFiles()
-      .filter(_.isDirectory).flatMap(_.listFiles()).filter(_.isDirectory)
-      .map(_.getName)
-    assert(floatDirs.nonEmpty && floatDirs.forall(_.startsWith("bucket=")),
-      s"migrated dirs: ${floatDirs.toSeq}")
-    assert(served(root) == expected, "migration changed the served result")
-  }
-
   test("served scores are EXACT float cosines of the served ids") {
     val root = tmp("graft-ivfp-exact")
     IvfPackedIndex.build(embAll, "vec_id", "embedding", model, root)

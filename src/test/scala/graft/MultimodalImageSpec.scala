@@ -155,9 +155,9 @@ class MultimodalImageSpec extends SparkSpec {
       (v << 16) | (v << 8) | v
     }
     val idxPath = graft.core.SessionCache.newTempDir("spec-mmdedup") + "/idx"
-    Dedup.buildDHashIndex(
+    Dedup.buildBandedDHashIndex(
       (0 until 4).map(s => (s.toLong, pattern(s, 0))).toDF("id", "bytes"),
-      "id", "bytes", idxPath)
+      "id", "bytes", idxPath, maxHamming = 10)
     // batch: re-encoded copy of indexed #1 (drops via the index), novel
     // #7 (survives), brightness-shifted twin of #7 (within-batch pair —
     // min-id keeps 51, drops 52)
@@ -165,16 +165,16 @@ class MultimodalImageSpec extends SparkSpec {
       (50L, pattern(1, 6)), (51L, pattern(7, 0)), (52L, pattern(7, 6))
     ).toDF("id", "bytes")
     val survivors = Dedup.imageNearDupIncremental(batch, "id", "bytes",
-        Dedup.readDHashIndex(spark, idxPath), maxHamming = 10)
+        Dedup.readBandedDHashFlat(spark, idxPath), maxHamming = 10)
       .localCheckpoint() // consumed twice: assertion + the append below
     assert(survivors.select("id").as[Long].collect().toSet == Set(51L),
       s"survivors: ${survivors.collect().toSeq}")
     // append the survivors' signatures: the NEXT drop's copy of #7 now
     // gates against them — the closed daily loop
-    Dedup.appendDHashIndex(survivors, "id", "bytes", idxPath)
+    Dedup.appendBandedDHashIndex(survivors, "id", "bytes", idxPath)
     val next = Dedup.imageNearDupIncremental(
         Seq((60L, pattern(7, 3))).toDF("id", "bytes"), "id", "bytes",
-        Dedup.readDHashIndex(spark, idxPath), maxHamming = 10)
+        Dedup.readBandedDHashFlat(spark, idxPath), maxHamming = 10)
       .select("id").as[Long].collect()
     assert(next.isEmpty, s"re-delivered #7 survived the appended index: ${next.toSeq}")
   }
@@ -187,15 +187,16 @@ class MultimodalImageSpec extends SparkSpec {
       s"banded parity payload number $i with some trailing entropy $i$i".getBytes("UTF-8")))
       .toDF("id", "bytes")
     val bandedPath = graft.core.SessionCache.newTempDir("spec-banded") + "/bidx"
-    val flatPath = graft.core.SessionCache.newTempDir("spec-banded") + "/fidx"
     Dedup.buildBandedDHashIndex(corpus, "id", "bytes", bandedPath, maxHamming = 10)
-    Dedup.buildDHashIndex(corpus, "id", "bytes", flatPath)
+    // the flat reference: the corpus signatures, in memory
+    def sigsOf(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("id"), Multimodal.dHashCol(col("bytes")).as("sig"))
+    val corpusSigs = sigsOf(corpus).localCheckpoint()
 
-    // the flat view of the banded tree == the flat index, exactly
+    // the flat view of the banded tree == the corpus signatures, exactly
     val flatView = Dedup.readBandedDHashFlat(spark, bandedPath)
       .as[(Long, Long)].collect().toSet
-    val flatIdx = Dedup.readDHashIndex(spark, flatPath)
-      .as[(Long, Long)].collect().toSet
+    val flatIdx = corpusSigs.as[(Long, Long)].collect().toSet
     assert(flatView == flatIdx && flatView.size == 40)
 
     // batch: exact re-deliveries of every 3rd asset + novel payloads
@@ -203,16 +204,14 @@ class MultimodalImageSpec extends SparkSpec {
         s"banded parity payload number $i with some trailing entropy $i$i".getBytes("UTF-8"))) ++
       (0 until 6).map(i => (2000L + i, s"genuinely novel payload $i".getBytes("UTF-8"))))
       .toDF("id", "bytes")
-    val batchSigs = batch.select(col("id"),
-      Multimodal.dHashCol(col("bytes")).as("sig")).localCheckpoint()
+    val batchSigs = sigsOf(batch).localCheckpoint()
 
     // verdict parity at the built radius AND at tighter serving radii
     // (banding at R is complete for every r <= R)
     for (r <- Seq(10, 4, 0)) {
       val viaBanded = Dedup.sigDupIdsVsBandedIndex(batchSigs, bandedPath, r)
         .as[Long].collect().toSet
-      val viaFlat = Dedup.sigDupIdsVsIndex(batchSigs,
-          Dedup.readDHashIndex(spark, flatPath), r)
+      val viaFlat = Dedup.sigDupIdsVsIndex(batchSigs, corpusSigs, r)
         .as[Long].collect().toSet
       assert(viaBanded == viaFlat, s"radius $r: banded $viaBanded vs flat $viaFlat")
       if (r == 10) assert(viaBanded.size >= 10, s"re-deliveries not caught: $viaBanded")
@@ -224,6 +223,8 @@ class MultimodalImageSpec extends SparkSpec {
       Dedup.sigDupIdsVsBandedIndex(batchSigs, bandedPath, maxHamming = 11))
     assert(e.getMessage.contains("radius"), e.getMessage)
     // a non-banded artifact has no banding constants to validate — loud
+    val flatPath = graft.core.SessionCache.newTempDir("spec-banded") + "/fidx"
+    corpusSigs.write.parquet(flatPath)
     intercept[graft.core.EngineError](
       Dedup.sigDupIdsVsBandedIndex(batchSigs, flatPath, maxHamming = 10))
     intercept[graft.core.EngineError](Dedup.readBandedDHashFlat(spark, flatPath))
@@ -232,7 +233,7 @@ class MultimodalImageSpec extends SparkSpec {
     // flat tail file), verdicts stay equal
     val novel = batch.filter(col("id") >= 2000L)
     Dedup.appendBandedDHashIndex(novel, "id", "bytes", bandedPath)
-    Dedup.appendDHashIndex(novel, "id", "bytes", flatPath)
+    val appendedSigs = corpusSigs.unionByName(sigsOf(novel)).localCheckpoint()
     assert(Dedup.bandedTailFileCount(spark, bandedPath) == 1)
     assert(Dedup.readBandedDHashFlat(spark, bandedPath).count() == 46)
     val reBatch = Seq((3000L, "genuinely novel payload 2".getBytes("UTF-8")))
@@ -240,7 +241,7 @@ class MultimodalImageSpec extends SparkSpec {
     def gateB() = Dedup.imageNearDupIncrementalBanded(reBatch, "id", "bytes",
       bandedPath, maxHamming = 10).select("id").as[Long].collect().toSet
     val gotF = Dedup.imageNearDupIncremental(reBatch, "id", "bytes",
-      Dedup.readDHashIndex(spark, flatPath), maxHamming = 10)
+      appendedSigs, maxHamming = 10)
       .select("id").as[Long].collect().toSet
     assert(gateB() == gotF && gotF.isEmpty,
       s"appended novel payload did not gate its re-delivery: banded ${gateB()} flat $gotF")
@@ -337,7 +338,7 @@ class MultimodalImageSpec extends SparkSpec {
     intercept[IllegalArgumentException](
       Dedup.deleteFromDHashIndex(spark, path, Seq.empty))
     val flatPath = graft.core.SessionCache.newTempDir("spec-dhdel") + "/flat"
-    Dedup.buildDHashIndex(corpus, "id", "bytes", flatPath)
+    probeSigs(corpus).write.parquet(flatPath)
     intercept[graft.core.EngineError](
       Dedup.deleteFromDHashIndex(spark, flatPath, Seq(1L)))
     Dedup.deleteFromDHashIndex(spark, path, (0L until 30L) :+ 3L :+ 100L)

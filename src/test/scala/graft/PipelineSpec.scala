@@ -46,12 +46,15 @@ class PipelineSpec extends SparkSpec {
     val corpus = docs.filter(col("doc_id") < cut)
     val batch = docs.filter(col("doc_id") >= cut)
     val path = java.nio.file.Files.createTempDirectory("graft-postings-meta").toString
+    def recorded() = graft.store.MetaSidecar.read(spark, path, graft.store.MetaSidecar.DefaultName)
+    val width2 = Map("formatVersion" -> Dedup.PostingsFormatVersion, "shingleN" -> 2)
     Dedup.buildPostingsIndex(corpus, "doc_id", "text", n = 2, path)
-    assert(Dedup.readPostingsMeta(spark, path).contains(2))
+    assert(recorded().contains(width2))
 
     val e1 = intercept[graft.core.EngineError](
       Dedup.appendPostingsIndex(batch, "doc_id", "text", n = 3, path))
-    assert(e1.getMessage.contains("n=2") && e1.getMessage.contains("n=3"), e1.getMessage)
+    assert(e1.getMessage.contains("shingleN=2") && e1.getMessage.contains("shingleN=3"),
+      e1.getMessage)
     val e2 = intercept[graft.core.EngineError](Dedup.readPostingsIndex(spark, path, 3))
     assert(e2.getMessage.contains("widths never match"), e2.getMessage)
     // the matching width serves through the validated probe face
@@ -60,41 +63,22 @@ class PipelineSpec extends SparkSpec {
     // an incomplete sidecar is LOUD, and an unknown formatVersion refuses
     writeMetaRaw(path, "formatVersion=1\n")
     intercept[graft.core.EngineError](Dedup.readPostingsIndex(spark, path))
+    intercept[graft.core.EngineError](Dedup.compactPostingsIndex(spark, path))
     writeMetaRaw(path, "formatVersion=99\nshingleN=2\n")
     intercept[graft.core.EngineError](Dedup.readPostingsIndex(spark, path))
 
-    // a pre-r20 artifact (no sidecar) stays readable; append backfills
-    // (the batch lands in two disjoint halves so the second append can
-    // double as the no-op-stamp probe without duplicating any doc)
-    val halfCut = (cut + docs.count()) / 2
-    val m = new org.apache.hadoop.fs.Path(s"$path/_meta")
-    val mfs = m.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    mfs.delete(m, false)
-    assert(Dedup.readPostingsMeta(spark, path).isEmpty)
-    Dedup.appendPostingsIndex(batch.filter(col("doc_id") < halfCut),
-      "doc_id", "text", n = 2, path)
-    assert(Dedup.readPostingsMeta(spark, path).contains(2))
-
-    // an unchanged backfill is a NO-OP (r20 review: per-micro-batch
-    // re-stamps must not churn the file or reopen the replace window) —
-    // the sidecar's directory entry is untouched by a same-n append
-    val mtime = mfs.getFileStatus(m).getModificationTime
-    Thread.sleep(20)
-    Dedup.appendPostingsIndex(batch.filter(col("doc_id") >= halfCut),
-      "doc_id", "text", n = 2, path)
-    assert(mfs.getFileStatus(m).getModificationTime == mtime,
-      "identical-content backfill rewrote the sidecar")
-    // ...while a CORRUPT sidecar is repaired by the next stamp (write
-    // repairs; reads stay loud)
+    // a CORRUPT sidecar is repaired by the next stamp (write repairs;
+    // reads stay loud)
     writeMetaRaw(path, "garbage")
-    intercept[graft.core.EngineError](Dedup.readPostingsMeta(spark, path))
-    Dedup.writePostingsMeta(spark, path, 2)
-    assert(Dedup.readPostingsMeta(spark, path).contains(2))
+    intercept[graft.core.EngineError](Dedup.readPostingsIndex(spark, path, 2))
+    graft.store.MetaSidecar.write(spark, path, width2.toSeq.sortBy(_._1))
+    Dedup.appendPostingsIndex(batch, "doc_id", "text", n = 2, path)
+    assert(recorded().contains(width2))
 
     // the compact swap carries the record across (cap change allowed —
     // the cap is re-appliable by design; the width is not)
     Dedup.compactPostingsIndex(spark, path, maxDocFreq = 50L)
-    assert(Dedup.readPostingsMeta(spark, path).contains(2))
+    assert(recorded().contains(width2))
     val rebuilt = Dedup.shinglePostings(docs, "doc_id", "text", n = 2, 50L)
     val appended = Dedup.readPostingsIndex(spark, path, 2)
     assert(appended.except(rebuilt).isEmpty && rebuilt.except(appended).isEmpty,

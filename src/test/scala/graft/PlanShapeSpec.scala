@@ -471,14 +471,15 @@ class PlanShapeSpec extends SparkSpec {
     // CartesianProduct/BroadcastNestedLoopJoin (an all-pairs compare at
     // 100 TB). Pinned for both the self-join pairs and the cross-index
     // incremental gate.
-    import graft.operators.Dedup
+    import graft.operators.{Dedup, Multimodal}
     import spark.implicits._
     val assets = Seq.tabulate(8)(i => (i.toLong, s"payload number $i".getBytes("UTF-8")))
       .toDF("id", "bytes")
+    val assetSigs = assets.select(col("id"), Multimodal.dHashCol(col("bytes")).as("sig"))
     val idxSigs = Seq((100L, 42L), (101L, -7L)).toDF("id", "sig")
     for ((what, plan) <- Seq(
       "pairs" -> physical(Dedup.imageNearDupPairs(assets, "id", "bytes", 10)),
-      "gate" -> physical(Dedup.imageDupIdsVsIndex(assets, "id", "bytes", idxSigs, 10)))) {
+      "gate" -> physical(Dedup.sigDupIdsVsIndex(assetSigs, idxSigs, 10)))) {
       assert(plan.collect {
         case c: org.apache.spark.sql.execution.joins.CartesianProductExec => c
       }.isEmpty, s"cartesian product in the image-dedup $what plan:\n$plan")

@@ -224,8 +224,7 @@ class StreamsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
     batchEvents.write.mode("overwrite").parquet(dir)
     val stream = Streams.eventsWindowAggStream(spark, dir, batchEvents.schema)
-    val q = Streams.toMemorySink(stream, "win_agg_test").trigger(
-      org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    val q = Streams.toMemorySink(stream, "win_agg_test", "complete").start()
     q.awaitTermination(120000)
     val got = spark.table("win_agg_test")
       .orderBy("window_start", "event_type")
@@ -588,35 +587,6 @@ class StreamsSpec extends SparkSpec {
     assert(verdicts.size == 1 && verdicts(0).refitRecommended,
       s"batch append drift check: $verdicts")
     assert(IvfPackedIndex.readFloat(spark, root).count() == 30)
-  }
-
-  test("quantized probe serves a pre-r17 packed index (no code_norm): margin-only fallback, zero margin refused (r18)") {
-    import graft.operators.IvfIndex
-    val emb = Seq.tabulate(30) { i =>
-      (i.toLong, (0 until 8).map(j => math.sin(i * 0.7 + j).toFloat))
-    }.toDF("vec_id", "embedding")
-    val model = IvfIndex.fit(emb, "embedding", k = 4)
-    val assigned = IvfIndex.buildIndex(emb, "vec_id", "embedding", model)
-    // a pre-r18 maintained artifact: packed form without the build-time
-    // code_norm column (ADVICE r17 — the unconditional read failed
-    // analysis, and compact never backfills the column)
-    val legacyPacked = IvfIndex.quantizeIndexPacked(assigned).drop("code_norm")
-    val queries = emb.filter(col("vec_id") < 5)
-    def sets(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("q_id"), col("c_id"), round(col("score"), 6).as("s"))
-        .as[(Long, Long, Double)].collect().toSet
-    val got = sets(Streams.ivfProbeStreamQuantized(queries, "vec_id", "embedding",
-      legacyPacked, assigned, model, threshold = 0.5, nProbe = 2))
-    val expected = sets(Streams.ivfProbeStream(queries, "vec_id", "embedding",
-      assigned, model, threshold = 0.5, nProbe = 2))
-    assert(got == expected && got.nonEmpty,
-      s"margin-only fallback diverged: $got vs $expected")
-    // with no per-row bound, a zero margin would silently drop true
-    // matches — the degenerate config must be refused loudly
-    intercept[IllegalArgumentException] {
-      Streams.ivfProbeStreamQuantized(queries, "vec_id", "embedding",
-        legacyPacked, assigned, model, threshold = 0.5, nProbe = 2, margin = 0.0)
-    }
   }
 
   test("image gate-then-append CLOSES the multimodal loop: wave-2 copy of a wave-1 survivor drops (r18)") {
