@@ -1,5 +1,6 @@
 package graft.store
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -114,8 +115,41 @@ object DocStore {
   }
 
   /** Persist an append batch (the write side of O2). */
-  def append(batch: DataFrame, path: String): Unit =
-    batch.write.mode("append").parquet(path)
+  def append(batch: DataFrame, path: String): Unit = appendPlaced(batch, path)
+
+  /** [[append]], returning the data files it placed under `path`. The
+    * batch is written into its own sibling dir (`<path>.append-<uuid>`)
+    * and only its complete part files are renamed into `path`: two
+    * appends to one path never share a staging dir (a plain
+    * `mode("append")` shares Hadoop's `_temporary/0`, and the first job
+    * commit deletes the other's staged files), and a crashed append leaves
+    * at most some whole files under `path`, never a partial one.
+    */
+  private[store] def appendPlaced(batch: DataFrame, path: String): Seq[FileStatus] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
+    val stage = new Path(path + s".append-${java.util.UUID.randomUUID()}")
+    try {
+      batch.write.parquet(stage.toString)
+      fs.mkdirs(p)
+      dataFiles(fs, stage).map { f =>
+        val placed = new Path(p, f.getPath.getName)
+        if (!fs.rename(f.getPath, placed))
+          throw new graft.core.EngineError(s"could not place appended file: ${f.getPath} -> $placed")
+        fs.getFileStatus(placed)
+      }
+    } finally fs.delete(stage, true)
+  }
+
+  /** The data files directly under `dir` (none if it does not exist):
+    * Spark's reader skips names starting with `_` or `.` (markers,
+    * checksums, staging dirs), and so does every listing of a store.
+    */
+  private[store] def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    try fs.listStatus(dir).toSeq.filter { f =>
+      val n = f.getPath.getName
+      f.isFile && !n.startsWith("_") && !n.startsWith(".")
+    } catch { case _: java.io.FileNotFoundException => Seq.empty }
 
   /** Copy-on-write replacement of a store's contents: write `next` beside
     * `path`, move the live files aside, promote, drop the backup — every
@@ -139,7 +173,22 @@ object DocStore {
     * format's transaction log instead of this fixture-grade store.
     */
   def replaceContents(spark: SparkSession, path: String, next: DataFrame): Unit =
-    swapDirContents(spark, path)(tmp => next.write.parquet(tmp))
+    replacePlaced(spark, path, next)
+
+  /** [[replaceContents]], returning the data files the swap promoted —
+    * listed in the temp dir before the promote, so a file another writer
+    * lands in `path` right after the swap is never taken for one of them.
+    */
+  private[store] def replacePlaced(spark: SparkSession, path: String,
+                                   next: DataFrame): Seq[FileStatus] = {
+    var written = Seq.empty[FileStatus]
+    swapDirContents(spark, path) { tmp =>
+      next.write.parquet(tmp)
+      val t = new Path(tmp)
+      written = dataFiles(t.getFileSystem(spark.sparkContext.hadoopConfiguration), t)
+    }
+    written
+  }
 
   /** The swap half of [[replaceContents]], shared with index compaction
     * ([[graft.operators.AnnIndex.compactIndex]]): run `writeTo` against a

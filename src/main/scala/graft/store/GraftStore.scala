@@ -1,8 +1,13 @@
 package graft.store
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SQLContext, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow, ProjectingInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{BaseRelation, PrunedScan}
+import org.apache.spark.sql.types.StructType
 
 import graft.core.{Tables, Validate}
 import graft.operators.{Bm25, Chunker, Embedder, Ingest, Similarity}
@@ -20,11 +25,50 @@ import graft.operators.{Bm25, Chunker, Embedder, Ingest, Similarity}
   *    getDocument → `:268-298`; chunkText → `:369-409`;
   *    ingestFile → `:483-535`; stats → `:538-555`.
   *
-  * Every verb reads the store once: [[table]] is one snapshot (one file
-  * listing, the declared schema, no inference job), and every part of a
-  * verb's answer — scores, ranks, text, metadata — is planned over that
-  * one frame, so a write landing mid-verb can neither drop a hit nor
-  * attach another row's text to it.
+  * Every verb reads the store once: [[table]] is one snapshot, and every
+  * part of a verb's answer — scores, ranks, text, metadata — is planned
+  * over that one frame, so a write landing mid-verb can neither drop a
+  * hit nor attach another row's text to it.
+  *
+  * ==== Resident snapshot ====
+  * Like the reference, which scans one table that stays in the process,
+  * the store keeps one RESIDENT snapshot per path in this JVM: the rows
+  * `(id, text, metadata, embedding, created_at)` checkpointed into the
+  * block managers with no lineage to the files, shared by every handle
+  * on the path in the same session. It is built lazily by the first read
+  * (never by the constructor) and is keyed by a VERSION, the store's
+  * data-file listing `(name, length, mtime)` taken once per verb
+  * ([[GraftStore.version]]).
+  *  - Listing equal to the version: the verb reads the snapshot; no file
+  *    is opened.
+  *  - Listing that only ADDED files (another handle, JVM or a direct
+  *    [[DocStore.append]]): the snapshot plus a read of just those files.
+  *  - Any other change (an outside swap or compaction): the snapshot is
+  *    dropped, its blocks released, and rebuilt from the files (one pass
+  *    over the store).
+  *  - Own writes keep it current under the writer monitor without a
+  *    rebuild: [[insert]] adds its row as a driver-local delta,
+  *    [[deleteDocument]] rewrites the store from the snapshot and keeps
+  *    the same blocks behind one id filter (a deleted delta row leaves the
+  *    delta instead), [[compact]] drops it. The delta rows and the id
+  *    filter are applied inside the one snapshot scan, so own writes add
+  *    no union or filter to a plan (a read plans one union only for files
+  *    appended from outside). The delta travels in every scan's task
+  *    binary, so once it passes Spark's large-task-binary size the write
+  *    folds it into a new checkpoint.
+  *  - Cap: the snapshot stays resident only while the listed bytes fit a
+  *    quarter of the block managers' free storage memory (its own blocks
+  *    counted as free). Above that, every verb reads the files as a cold
+  *    `spark.read.parquet` would, opening every file.
+  * A frame a verb returns stays readable across later deletes, inserts and
+  * folds: a fold leaves the blocks it replaces to Spark's ContextCleaner,
+  * which releases them once no frame reads them. A rebuild or compaction
+  * releases the blocks at once, as a swap used to delete its files; so
+  * does the next rebuild of any path once a store's directory is gone or
+  * its session stopped. A path that still exists but is never read again
+  * keeps its snapshot for the life of the session. Nothing is registered
+  * with Spark's cache manager, so a plain `spark.read.parquet(path)` never
+  * sees the snapshot.
   *
   * Mutation is copy-on-write: a new file set is written, then swapped in —
   * the idiomatic immutable-storage shape (SURVEY §7.4). Within one JVM
@@ -37,11 +81,13 @@ import graft.operators.{Bm25, Chunker, Embedder, Ingest, Similarity}
   * forms directly.
   */
 final class GraftStore(spark: SparkSession, path: String, embedder: Embedder) {
+  import GraftStore._
 
   private def fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private lazy val writerLock =
-    GraftStore.writerLock(fs.makeQualified(new Path(path)).toString)
+  private lazy val key = fs.makeQualified(new Path(path)).toString
+
+  private lazy val writerLock = GraftStore.writerLock(key)
 
   /** Run a writing verb under this store's JVM-wide writer monitor. */
   private def writing[A](body: => A): A = writerLock.synchronized(body)
@@ -53,44 +99,111 @@ final class GraftStore(spark: SparkSession, path: String, embedder: Embedder) {
 
   def exists: Boolean = fs.exists(new Path(path))
 
-  /** One snapshot of the table: the files listed now, read with the
-    * declared [[Tables.documentStoreSchema]] — no footer-reading
-    * schema-inference job (an empty frame with the same schema if the
-    * store has no files yet).
+  /** One snapshot of the table with the declared
+    * [[Tables.documentStoreSchema]]: the resident snapshot when the store
+    * fits (see the class doc), else the files listed now, read without a
+    * schema-inference job (an empty frame if the store has no files yet).
     */
-  def table(): DataFrame =
-    if (exists) spark.read.schema(Tables.documentStoreSchema).parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], Tables.documentStoreSchema)
+  def table(): DataFrame = read().frame
 
-  /** Largest stored id, 0 for an empty store — one aggregate job. */
-  private def maxId(): Long =
-    table().agg(coalesce(max(col("id")), lit(0L))).head.getLong(0)
+  /** [[table]] against a given free block-manager storage, in bytes. */
+  private[graft] def table(freeStorage: Long): DataFrame = read(freeStorage).frame
 
-  /** Copy-on-write swap — the shared checked protocol lives in
-    * [[DocStore.replaceContents]].
+  /** Resolve one read: the resident snapshot when the listing still
+    * covers its version, else a rebuild or a cold read. Those take the
+    * writer monitor, so a read never drops a snapshot a writer is
+    * swapping under: it waits and finds the writer's successor.
     */
-  private def rewrite(next: DataFrame): Unit =
-    DocStore.replaceContents(spark, path, next)
+  private def read(free: => Long = freeStorage(spark)): Read = {
+    val held = residents.get(key) // before the listing: a writer installs only after its files land
+    val listing = version(fs, path)
+    lazy val freeNow = free
+    if (serves(held, listing, freeNow)) new Read(held, listing)
+    else if (held == null && !fits(listing, freeNow)) new Read(null, listing)
+    else writing {
+      sweep()
+      val now = residents.get(key)
+      val relisted = version(fs, path)
+      if (serves(now, relisted, freeNow)) new Read(now, relisted)
+      else if (now != null && (now.spark ne spark)) new Read(null, relisted)
+      else {
+        if (now != null) drop(now)
+        if (!fits(relisted, freeNow)) new Read(null, relisted)
+        else {
+          val built = Resident.build(spark, relisted, files(relisted.keys))
+          residents.put(key, built)
+          new Read(built, relisted)
+        }
+      }
+    }
+  }
+
+  private def serves(r: Resident, listing: Version, free: => Long): Boolean =
+    r != null && (r.spark eq spark) &&
+      r.version.forall { case (n, s) => listing.get(n).contains(s) } &&
+      fits(listing, free + r.bytes)
+
+  /** One read of the store: the resident snapshot it uses (null for a
+    * cold read) and the listing it was checked against.
+    */
+  private final class Read(val resident: Resident, listing: Version) {
+    /** Files listed beyond the snapshot's version: its file-backed delta. */
+    val added: Version = if (resident == null) Map.empty else listing -- resident.version.keys
+
+    lazy val frame: DataFrame =
+      if (resident == null) {
+        if (exists) spark.read.schema(Tables.documentStoreSchema).parquet(path)
+        else emptyTable(spark)
+      }
+      else if (added.isEmpty) resident.frame
+      else resident.frame.union(files(added.keys))
+
+    /** Largest stored id, 0 for an empty store: the snapshot's own when
+      * it has no file-backed delta, else one aggregate job.
+      */
+    def maxId: Long = if (resident != null && added.isEmpty) resident.maxId else maxIdOf(frame)
+  }
+
+  /** The named data files of the store, read with the declared schema. */
+  private def files(names: Iterable[String]): DataFrame =
+    if (names.isEmpty) emptyTable(spark)
+    else spark.read.schema(Tables.documentStoreSchema)
+      .parquet(names.map(n => new Path(path, n).toString).toSeq: _*)
+
+  /** Install `next` in place of `held` after an own write, its delta
+    * folded into a new checkpoint once it passes [[DeltaLimit]]. Callers
+    * hold the writer monitor.
+    */
+  private def advance(held: Resident, next: Resident): Unit =
+    residents.replace(key, held, if (next.deltaBytes > DeltaLimit) next.folded() else next)
+
+  private def drop(r: Resident): Unit =
+    if (residents.remove(key, r)) r.release()
 
   /** Insert one document, returning its assigned id (`lastrowid` parity,
-    * `vectolite.py:111`).
+    * `vectolite.py:111`). The row is collected on the driver (a projection
+    * of a local relation, so no job runs), written as one append, and the
+    * same row extends the resident snapshot.
     */
   def insert(text: String, metadata: Map[String, String] = Map.empty): Long = writing {
     Validate.nonEmptyText(text)
     import spark.implicits._
-    val start = maxId()
+    val snap = read()
+    val id = snap.maxId + 1
     val metaFields = metadata.toSeq.sortBy(_._1).map { case (k, v) => lit(v).as(k) }
-    val row = Seq(text).toDF("text")
+    val Array(row) = Seq(text).toDF("text")
       .withColumn("embedding", embedder.embedCol(col("text")))
       .withColumn("metadata",
         if (metaFields.isEmpty) lit(null).cast("string")
         else DocStore.packMetadata(metaFields: _*))
-      .withColumn("id", lit(start + 1))
+      .withColumn("id", lit(id))
       .withColumn("created_at", current_timestamp())
       .select("id", "text", "metadata", "embedding", "created_at")
-    DocStore.append(row, path)
-    start + 1
+      .collect()
+    val placed = DocStore.appendPlaced(
+      spark.createDataFrame(java.util.List.of(row), Tables.documentStoreSchema), path)
+    Option(snap.resident).foreach(r => advance(r, r.inserted(row, stamps(placed))))
+    id
   }
 
   /** Exact top-k similarity search; output rows (id, score, text, metadata)
@@ -176,16 +289,22 @@ final class GraftStore(spark: SparkSession, path: String, embedder: Embedder) {
   def countDocuments(): Long = table().count()
 
   /** Delete by id; true iff a row existed (`rowcount > 0`,
-    * `vectolite.py:197`). Copy-on-write rewrite of the table. The probe
-    * and the rewrite share one snapshot's file listing; the probe is a
-    * pruned count, and the rewrite may read the live files lazily
-    * because [[DocStore.replaceContents]] writes into a temp dir before
-    * it swaps anything.
+    * `vectolite.py:197`). Copy-on-write rewrite of the table from the
+    * verb's one snapshot: a resident snapshot is written out from memory
+    * and stays resident behind one more filtered id; a snapshot with a
+    * file-backed delta is dropped, since the swap removes those files.
     */
   def deleteDocument(id: Long): Boolean = writing {
-    val t = table()
-    val hit = t.filter(col("id") === id).count() > 0
-    if (hit) rewrite(DocStore.deleteByIds(t, "id", Seq(id)))
+    val snap = read()
+    val hit = snap.frame.filter(col("id") === id).count() > 0
+    if (hit) snap.resident match {
+      case r if r != null && snap.added.isEmpty =>
+        val next = r.deleted(id)
+        advance(r, next.at(stamps(DocStore.replacePlaced(spark, path, next.frame))))
+      case r =>
+        DocStore.replaceContents(spark, path, DocStore.deleteByIds(snap.frame, "id", Seq(id)))
+        if (r != null) drop(r)
+    }
     hit
   }
 
@@ -210,7 +329,7 @@ final class GraftStore(spark: SparkSession, path: String, embedder: Embedder) {
   def ingestFile(filePath: String, metadata: Map[String, String] = Map.empty,
                  chunk: Boolean = true, maxChars: Int = 2000, overlap: Int = 200): Seq[Long] = writing {
     Ingest.validatePath(filePath)
-    val batch = Ingest.ingestFiles(spark, filePath, embedder, maxId(), metadata,
+    val batch = Ingest.ingestFiles(spark, filePath, embedder, read().maxId, metadata,
       chunk, maxChars, overlap).cache() // one execution serves both the append and the id readback
     try {
       DocStore.append(batch, path)
@@ -218,9 +337,13 @@ final class GraftStore(spark: SparkSession, path: String, embedder: Embedder) {
     } finally batch.unpersist()
   }
 
-  /** Collapse accumulated append files (see [[DocStore.compact]]). */
-  def compact(targetFiles: Int = 1): Unit =
-    writing(DocStore.compact(spark, path, targetFiles))
+  /** Collapse accumulated append files (see [[DocStore.compact]]); drops
+    * the resident snapshot, which the next read rebuilds.
+    */
+  def compact(targetFiles: Int = 1): Unit = writing {
+    try DocStore.compact(spark, path, targetFiles)
+    finally Option(residents.get(key)).foreach(drop)
+  }
 
   /** (document count, storage bytes) — `vectolite.py:538-555`. */
   def stats(): (Long, Long) = {
@@ -287,4 +410,149 @@ object GraftStore {
 
   private def writerLock(qualifiedPath: String): AnyRef =
     writerLocks.computeIfAbsent(qualifiedPath, _ => new Object)
+
+  /** The resident snapshot of each qualified store path, shared like
+    * [[writerLocks]]. An entry changes only under its path's writer
+    * monitor, or is removed by [[sweep]] once its path is gone; reads that
+    * find it current take no lock.
+    */
+  private val residents = new java.util.concurrent.ConcurrentHashMap[String, Resident]()
+
+  /** A store version: data file name → (length, mtime). */
+  private[store] type Version = Map[String, (Long, Long)]
+
+  /** The store's version — its data-file listing. This one function is
+    * what a committed-epoch store would swap for its committed-epoch set.
+    */
+  private[store] def version(fs: FileSystem, path: String): Version =
+    stamps(DocStore.dataFiles(fs, new Path(path)))
+
+  private def stamps(files: Seq[FileStatus]): Version =
+    files.map(f => f.getPath.getName -> (f.getLen, f.getModificationTime)).toMap
+
+  /** Delta bytes a snapshot carries before a write folds them into a new
+    * checkpoint: Spark's large-task-binary size (`TASK_SIZE_TO_WARN_KIB`,
+    * 1000 KiB), since the delta rows and dead ids travel in the task
+    * binary of every scan of the snapshot.
+    */
+  private val DeltaLimit = 1000L * 1024
+
+  /** The cap: listed bytes must fit a quarter of the free storage memory.
+    * Decoded rows take a few times their parquet bytes, and the rest stays
+    * free for the verbs' own broadcasts and shuffles.
+    */
+  private def fits(listing: Version, freeStorage: Long): Boolean =
+    listing.valuesIterator.map(_._1).sum <= freeStorage / 4
+
+  /** Free storage memory summed over the block managers, in bytes. */
+  private def freeStorage(spark: SparkSession): Long =
+    spark.sparkContext.getExecutorMemoryStatus.valuesIterator.map(_._2).sum
+
+  /** Largest id in `t`, 0 for an empty frame — one aggregate job. */
+  private def maxIdOf(t: DataFrame): Long =
+    t.agg(coalesce(max(col("id")), lit(0L))).head.getLong(0)
+
+  private def emptyTable(spark: SparkSession): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Tables.documentStoreSchema)
+
+  /** A resident snapshot: `base` holds the rows of `version`'s files at
+    * build time, checkpointed without lineage; `local` are rows own
+    * inserts added since, `dead` the ids of `base` rows own deletes
+    * removed since, and `knownMax` the largest live id when an own write
+    * has told it.
+    */
+  private final class Resident(val spark: SparkSession, val version: Version,
+                               base: RDD[InternalRow], checkpointed: Boolean, val bytes: Long,
+                               local: Vector[InternalRow], dead: Set[Long], knownMax: Option[Long]) {
+    lazy val frame: DataFrame = spark.baseRelationToDataFrame(new SnapshotRelation(
+      spark.sqlContext, base, local, dead, version.valuesIterator.map(_._1).sum))
+
+    lazy val maxId: Long = knownMax.getOrElse(maxIdOf(frame))
+
+    /** The bytes the delta adds to a scan's task binary. */
+    def deltaBytes: Long = local.iterator.map(_.asInstanceOf[UnsafeRow].getSizeInBytes.toLong).sum +
+      8L * dead.size
+
+    def inserted(row: Row, files: Version): Resident =
+      new Resident(spark, version ++ files, base, checkpointed, bytes, local :+ internal(row),
+        dead, Some(row.getLong(0)))
+
+    /** Without `id`: a delta row leaves the delta, a `base` row is filtered. */
+    def deleted(id: Long): Resident = {
+      val kept = local.filterNot(_.getLong(0) == id)
+      new Resident(spark, version, base, checkpointed, bytes, kept,
+        if (kept.size < local.size) dead else dead + id, knownMax.filter(_ != id))
+    }
+
+    /** The same rows, now stored as `files`. */
+    def at(files: Version): Resident =
+      new Resident(spark, files, base, checkpointed, bytes, local, dead, knownMax)
+
+    /** The same rows in a new checkpoint with an empty delta. The blocks it
+      * replaces stay for the frames earlier verbs returned, until
+      * ContextCleaner finds them unreferenced.
+      */
+    def folded(): Resident = Resident.build(spark, version, frame)
+
+    /** Drop the checkpoint blocks now rather than at the next GC. */
+    def release(): Unit = if (checkpointed && !spark.sparkContext.isStopped) base.unpersist(blocking = false)
+  }
+
+  private object Resident {
+    /** Checkpoint `rows`, the rows of `version`, without lineage. */
+    def build(spark: SparkSession, version: Version, rows: DataFrame): Resident =
+      if (version.isEmpty)
+        new Resident(spark, version, spark.sparkContext.parallelize(Seq.empty[InternalRow], 1),
+          checkpointed = false, 0L, Vector.empty, Set.empty, Some(0L))
+      else {
+        val base = rows.queryExecution.toRdd.map(_.copy())
+        base.localCheckpoint()
+        base.count()
+        val bytes = spark.sparkContext.getRDDStorageInfo.filter(_.id == base.id).map(_.memSize).sum
+        new Resident(spark, version, base, checkpointed = true, bytes, Vector.empty, Set.empty, None)
+      }
+  }
+
+  /** Release the snapshots of stores whose directory is gone or whose
+    * session stopped: only a read of its own path replaces an entry, so
+    * nothing else would.
+    */
+  private def sweep(): Unit = residents.forEach { (k, r) =>
+    val sc = r.spark.sparkContext
+    val p = new Path(k)
+    if ((sc.isStopped || !p.getFileSystem(sc.hadoopConfiguration).exists(p)) && residents.remove(k, r))
+      r.release()
+  }
+
+  private def internal(row: Row): InternalRow = {
+    val schema = Tables.documentStoreSchema
+    UnsafeProjection.create(schema)(
+      CatalystTypeConverters.createToCatalystConverter(schema)(row).asInstanceOf[InternalRow]).copy()
+  }
+
+  /** The resident rows as one scan: the `base` partitions without the
+    * dead ids, the delta rows appended to the last one, and only the columns
+    * a verb reads projected out. Own writes thus add no union or filter
+    * to any plan. The scan yields internal rows (`needConversion`), and
+    * reports the listed bytes as its size, as a file scan of them would.
+    */
+  private final class SnapshotRelation(val sqlContext: SQLContext, base: RDD[InternalRow],
+                                       local: Seq[InternalRow], dead: Set[Long],
+                                       override val sizeInBytes: Long)
+      extends BaseRelation with PrunedScan {
+    override def schema: StructType = Tables.documentStoreSchema
+    override def needConversion: Boolean = false
+
+    override def buildScan(requiredColumns: Array[String]): RDD[Row] = {
+      val ordinals = requiredColumns.toIndexedSeq.map(schema.fieldIndex)
+      val fields = StructType(ordinals.map(schema(_)))
+      val (delta, gone, last) = (local, dead, base.getNumPartitions - 1)
+      base.mapPartitionsWithIndex { (i, rows) =>
+        val view = ProjectingInternalRow(fields, ordinals)
+        val kept = if (gone.isEmpty) rows else rows.filter(r => !gone.contains(r.getLong(0)))
+        (if (i == last) kept ++ delta.iterator else kept)
+          .map { r => view.project(r); view: InternalRow }
+      }.asInstanceOf[RDD[Row]]
+    }
+  }
 }

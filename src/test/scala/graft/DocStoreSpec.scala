@@ -71,6 +71,25 @@ class DocStoreSpec extends SparkSpec {
     assert(!lockFile.exists(), "successful swap must remove its lock sentinel")
   }
 
+  test("append: two threads appending to one fresh path lose no row and never throw") {
+    val path = java.nio.file.Files.createTempDirectory("graft-append")
+      .resolve("store.parquet").toString
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val writers = Seq(0L, 1000L).map(base => new Thread(() =>
+      try (1 to 20).foreach { b =>
+        val ids = (1 to 5).map(i => base + b * 10 + i)
+        DocStore.append(ids.map(i => (i, s"row $i")).toDF("id", "text").repartition(2), path)
+      } catch { case t: Throwable => errors.add(t) }))
+    writers.foreach(_.start())
+    writers.foreach(_.join())
+    assert(errors.isEmpty, errors.toArray.mkString("\n"))
+    val expected = for (base <- Seq(0L, 1000L); b <- 1 to 20; i <- 1 to 5) yield base + b * 10 + i
+    assert(spark.read.parquet(path).as[(Long, String)].collect().map(_._1).sorted.toSeq == expected.sorted)
+    // staging lives beside the store and is gone once each append returns
+    val parent = new java.io.File(path).getParentFile
+    assert(parent.list().toSeq == Seq("store.parquet"), parent.list().toSeq)
+  }
+
   test("assignIdsScalable: dense and unique without a global sort") {
     val batch = (1 to 1000).map(i => s"t$i").toDF("text").repartition(7)
     val ids = DocStore.assignIdsScalable(batch, 0L).select("id").as[Long].collect()

@@ -139,17 +139,22 @@ class IngestStoreSpec extends SparkSpec {
   }
 
   test("GraftStore: one snapshot per verb — 1 job per query, no join-back, indexed-probe answers") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, TakeOrderedAndProjectExec}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, RowDataSourceScanExec, SparkPlan, TakeOrderedAndProjectExec}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
     import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec}
     import org.apache.spark.sql.expressions.Window
     val store = new GraftStore(spark,
       tmpDir().resolve("docs.parquet").toString, HashingEmbedder(16))
     // repeated texts: BM25 and cosine scores tie, so ids break the ties
-    Seq("apple pie" -> Map("k" -> "a"), "apple pie" -> Map.empty[String, String],
+    val docs = Seq("apple pie" -> Map("k" -> "a"), "apple pie" -> Map.empty[String, String],
       "apple tart" -> Map("k" -> "c"), "banana split" -> Map.empty[String, String],
       "apple pie" -> Map("k" -> "e"), "pie crust" -> Map.empty[String, String])
-      .foreach { case (t, m) => store.insert(t, m) }
+    // five documents in one compacted file, then one insert: the resident
+    // snapshot is checkpointed from the file, and the sixth row is its delta
+    docs.init.foreach { case (t, m) => store.insert(t, m) }
+    store.compact()
+    store.insert(docs.last._1, docs.last._2)
     val q = "apple pie"
 
     // query: one Spark job, the top-k itself (no schema-inference job);
@@ -186,24 +191,42 @@ class IngestStoreSpec extends SparkSpec {
       assert(getJobs == 1, s"getDocument($id) ran $getJobs jobs")
     }
 
-    // scans and joins of the executed (final adaptive) plans
-    val helper = new AdaptiveSparkPlanHelper {}
-    def scans(p: SparkPlan): Int =
-      helper.collect(p) { case f: FileSourceScanExec => f }.size
-    def scansBelowNoCut(p: SparkPlan): Int = p match {
+    // leaves and joins of the executed (final adaptive) plans
+    def leaves(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => leaves(a.executedPlan)
+      case s: QueryStageExec => leaves(s.plan)
+      case r: ReusedExchangeExec => leaves(r.child)
+      case l if l.children.isEmpty => Seq(l)
+      case o => o.children.flatMap(leaves)
+    }
+    // the snapshot is one scan that carries the delta row; every verb
+    // reads nothing else — no file, no other cached data
+    def snapshotScans(p: SparkPlan): Seq[AnyRef] =
+      leaves(p).collect { case r: RowDataSourceScanExec => r.relation }
+    val Seq(snapshot) = snapshotScans(store.table().queryExecution.executedPlan)
+    def readsOnlySnapshot(p: SparkPlan): Boolean =
+      leaves(p).nonEmpty && leaves(p).forall {
+        case r: RowDataSourceScanExec => r.relation eq snapshot
+        case _ => false
+      }
+    def fromSnapshot(p: SparkPlan): Boolean =
+      p.isInstanceOf[RowDataSourceScanExec] || p.isInstanceOf[FileSourceScanExec]
+    def snapshotBelowNoCut(p: SparkPlan): Int = p match {
       case _: TakeOrderedAndProjectExec => 0
-      case _: FileSourceScanExec => 1
-      case a: AdaptiveSparkPlanExec => scansBelowNoCut(a.executedPlan)
-      case s: QueryStageExec => scansBelowNoCut(s.plan)
-      case o => o.children.map(scansBelowNoCut).sum
+      case l if fromSnapshot(l) => 1
+      case a: AdaptiveSparkPlanExec => snapshotBelowNoCut(a.executedPlan)
+      case s: QueryStageExec => snapshotBelowNoCut(s.plan)
+      case r: ReusedExchangeExec => snapshotBelowNoCut(r.child)
+      case o => o.children.map(snapshotBelowNoCut).sum
     }
     // a join-back joins a ranked list against the store's rows; the one
-    // join allowed to touch an uncut scan is the keyless cross join of
+    // join allowed to touch an uncut read is the keyless cross join of
     // the one-row BM25 stats
+    val helper = new AdaptiveSparkPlanHelper {}
     def joinsBack(p: SparkPlan): Seq[SparkPlan] = helper.collect(p) {
       case j: BaseJoinExec if !(j.isInstanceOf[BroadcastNestedLoopJoinExec] &&
           j.leftKeys.isEmpty && j.condition.isEmpty) &&
-          j.children.exists(scansBelowNoCut(_) > 0) => j
+          j.children.exists(snapshotBelowNoCut(_) > 0) => j
     }
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getDouble(1), r.getString(2),
@@ -212,12 +235,12 @@ class IngestStoreSpec extends SparkSpec {
     val search = store.searchKeyword(q, 2)
     val searchRows = rows(search)
     val searchPlan = search.queryExecution.executedPlan
-    assert(scans(searchPlan) == 2, s"search scans:\n$searchPlan")
+    assert(readsOnlySnapshot(searchPlan), s"search reads beyond the snapshot:\n$searchPlan")
     assert(joinsBack(searchPlan).isEmpty, s"search joins back:\n$searchPlan")
     val hybrid = store.queryHybrid(q, 3)
     val hybridRows = rows(hybrid)
     val hybridPlan = hybrid.queryExecution.executedPlan
-    assert(scans(hybridPlan) == 3, s"hybrid scans:\n$hybridPlan")
+    assert(readsOnlySnapshot(hybridPlan), s"hybrid reads beyond the snapshot:\n$hybridPlan")
     assert(joinsBack(hybridPlan).isEmpty, s"hybrid joins back:\n$hybridPlan")
 
     // the same answers from the persisted index over the same table,
