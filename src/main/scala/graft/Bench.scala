@@ -46,13 +46,8 @@ object Bench {
     if (x == 42L) println("")
   }
 
-  /** Single-thread canary: seconds for one fixed-work unit.
-    * `private[graft]`: ScaleProbe's long-run rehearsals print the same
-    * seq/par canary pair (round-19; VERDICT r18 "wrong" #2 — long-run
-    * samples carried no canary, so an out-of-band wave time could not
-    * be adjudicated against the drift rule).
-    */
-  private[graft] def canarySeconds(): Double = {
+  /** Single-thread canary: seconds for one fixed-work unit. */
+  private def canarySeconds(): Double = {
     val t0 = System.nanoTime()
     mixLoop()
     (System.nanoTime() - t0) / 1e9
@@ -166,27 +161,24 @@ object Bench {
   // run. The par ref is per-thread wall-clock with all CanaryParRefThreads
   // cores busy running only the canary itself; it is only comparable when
   // canary_par_threads in the artifact matches CanaryParRefThreads.
-  // private[graft]: ScaleProbe's canaryPair prints the same refs next to
-  // its long-run samples (ADVICE r19 — a re-measure here must never
-  // leave ScaleProbe adjudicating against stale literals)
-  private[graft] val CanaryRefSec = 0.65
-  private[graft] val CanaryParRefSec = 0.70
-  private[graft] val CanaryParRefThreads = 32
+  private val CanaryRefSec = 0.65
+  private val CanaryParRefSec = 0.70
+  private val CanaryParRefThreads = 32
 
   /** Run `f`, returning (result, wall seconds, summed task input
     * `bytesRead`). The listener bus drains ASYNC: a fixed settle sleep
-    * silently undercounts on a loaded box (advisor r18 for the bench's
-    * own bytesOf; advisor r19 for ScaleProbe's measured blocks, which
-    * now share this) — instead wait until every launched task's end
-    * event has been processed AND the count is stable across two polls
-    * (the bus is FIFO, so a start can't trail its own end), bounded so
-    * a lost event can't hang the run; a non-settled exit is LOUD, never
-    * a quiet undercount. NOTE the r19 caveat on the metric itself:
-    * executor bytesRead OVERCOUNTS under parquet filter pushdown on the
-    * local FS — fine for unfiltered-scan comparisons, unusable for
-    * pushdown-pruning claims (use ScaleProbe.admittedBytes there).
+    * silently undercounts on a loaded box (advisor r18) — instead wait
+    * until every launched task's end event has been processed AND the
+    * count is stable across two polls (the bus is FIFO, so a start
+    * can't trail its own end), bounded so a lost event can't hang the
+    * run; a non-settled exit is LOUD, never a quiet undercount. NOTE
+    * the r19 caveat on the metric itself: executor bytesRead
+    * OVERCOUNTS under parquet filter pushdown on the local FS — fine
+    * for unfiltered-scan comparisons, unusable for pushdown-pruning
+    * claims (count footer-admitted row groups there, as
+    * IvfPackedIndexSpec does).
     */
-  private[graft] def measuredWithBytes[T](spark: SparkSession)(f: => T): (T, Double, Long) = {
+  private def measuredWithBytes[T](spark: SparkSession)(f: => T): (T, Double, Long) = {
     val bytes = new java.util.concurrent.atomic.AtomicLong(0)
     val started = new java.util.concurrent.atomic.AtomicLong(0)
     val ended = new java.util.concurrent.atomic.AtomicLong(0)

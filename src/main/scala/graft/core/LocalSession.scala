@@ -3,7 +3,7 @@ package graft.core
 import org.apache.spark.sql.SparkSession
 
 /** The local session recipe shared by the harness mains (Bench, Verify,
-  * PlanAudit, ScaleProbe) and the test suite: one task slot and one
+  * PlanAudit) and the test suite: one task slot and one
   * shuffle partition per cpu, UTC, no UI, and parquet `In` pushdown wide
   * enough for the IVF rerank pools. Callers add their own app name, log
   * level and extra config. `Cli` builds its own session: its master is a

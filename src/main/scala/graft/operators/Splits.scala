@@ -107,9 +107,9 @@ object Splits {
     * [[graft.operators.TextAnalysis.metrics]]) rather than a fresh
     * `tokenCount(text)` whenever the pipeline has one. The packing scan
     * evaluates `tokensCol` over the whole corpus; at 100 TB,
-    * re-tokenizing here is the dominant cost of the pack (measured
-    * 37 s → ~1/5th at 2.5M docs, SCALE.md round-9), pure column reads
-    * are ~free.
+    * re-tokenizing here is the dominant cost of the pack (SCALE.md
+    * rounds 8–9: 37.4 s at 2.5M docs; 5.5 s → 0.65 s at 250k docs with
+    * a precomputed column), pure column reads are ~free.
     */
   def packSequences(df: DataFrame, idCol: String, tokensCol: Column,
                     budgetTokens: Long, seqCol: String = "seq_id"): DataFrame = {

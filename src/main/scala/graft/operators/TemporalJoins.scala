@@ -29,11 +29,12 @@ object TemporalJoins {
     * SKEW CONTRACT: the window partitions by `keyCol`, so ALL rows of one
     * key land in ONE task — a key with 10^8 events serializes into a
     * single sorted pass regardless of cluster size (linear in that key's
-    * rows: the carry-forward is O(1) per row, never quadratic — measured
-    * in SCALE.md's hot-key probe). When one key dominates the corpus,
-    * pre-bucket time first: window over (key, timeBucket), then stitch
-    * bucket boundaries by carrying each bucket's last right-payload into
-    * the next bucket (one extra pass over |buckets| rows). The default is
+    * rows: the carry-forward is O(1) per row, never quadratic — the
+    * window shape SCALE.md's hot-key probe timed for sessionize). When
+    * one key dominates the corpus, pre-bucket time first: window over
+    * (key, timeBucket), then stitch bucket boundaries by carrying each
+    * bucket's last right-payload into the next bucket (one extra pass
+    * over |buckets| rows). The default is
     * deliberately the simple one-shuffle form — per-key time ranges are
     * the common case and the stitch costs a second shuffle.
     */

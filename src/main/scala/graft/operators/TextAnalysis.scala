@@ -221,8 +221,8 @@ object TextAnalysis {
     * fixture-equality spec). This is the BULK path: the Column forms
     * compose and oracle-check cleanly, but each metric re-tokenizes and
     * higher-order functions evaluate interpreted, so a full audit scan
-    * pays ~6 regex splits + interpreted lambdas per row — measured 316 s
-    * for 2.5M docs vs ~30 s fused (SCALE.md 500×; same UDF-beats-HOF
+    * pays ~6 regex splits + interpreted lambdas per row — measured 303.7 s
+    * for 2.5M docs vs 31.5 s fused (SCALE.md 500×; same UDF-beats-HOF
     * trade `Dedup.shingles` documents).
     */
   def metricsOf(text: String, minChars: Int = 50, minTokens: Int = 10,

@@ -6,8 +6,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.operators.Embedder
-
 /** The document-store surface — Spark mappings of the reference's ten
   * user-facing verbs over its single `documents` table
   * (`/root/reference/vectolite.py:59-298,538-555`).
@@ -42,22 +40,6 @@ object DocStore {
                 idCol: String = "id"): DataFrame =
     newDocs.withColumn(
       idCol, row_number().over(Window.orderBy(orderBy: _*)) + lit(startId))
-
-  /** Scalable dense id assignment for huge batches: per-partition counts →
-    * prefix-sum offsets (one tiny extra job, no global sort/shuffle). Ids
-    * are dense and unique but ordered by partition layout, not by a key —
-    * the documented trade-off vs [[assignIdsOrdered]] when no key order is
-    * required at 100 TB scale.
-    */
-  def assignIdsScalable(newDocs: DataFrame, startId: Long,
-                        idCol: String = "id"): DataFrame = {
-    val spark = newDocs.sparkSession
-    val schema = StructType(newDocs.schema.fields :+ StructField(idCol, LongType, nullable = false))
-    val indexed = newDocs.rdd.zipWithIndex().map { case (row, i) =>
-      Row.fromSeq(row.toSeq :+ (startId + 1 + i))
-    }
-    spark.createDataFrame(indexed, schema)
-  }
 
   /** Dense id assignment GLOBALLY ORDERED by `orderBy`, without ever
     * planning a single-partition global window (the [[assignIds]] shape
@@ -95,23 +77,6 @@ object DocStore {
       Row.fromSeq(row.toSeq :+ (startId + 1 + i))
     }
     spark.createDataFrame(indexed, schema)
-  }
-
-  /** Full insert pipeline (↔ `insert`, `vectolite.py:81-116`): validate
-    * non-empty text, embed, serialize metadata JSON, assign ids after the
-    * current max, stamp `created_at`. The clock is injectable so declared
-    * queries stay deterministic (SURVEY §7.4).
-    */
-  def prepareInsert(existingMaxId: Long, newDocs: DataFrame, textCol: String,
-                    embedder: Embedder, metadataCols: Seq[String],
-                    createdAt: Column = current_timestamp()): DataFrame = {
-    val withEmb = embedder.embed(newDocs, textCol, "embedding") // strict: empty text fails (vectolite.py:97-98)
-    val withMeta =
-      if (metadataCols.nonEmpty)
-        withEmb.withColumn("metadata", packMetadata(metadataCols.map(c => col(c).as(c)): _*))
-      else withEmb.withColumn("metadata", lit(null).cast("string"))
-    assignIds(withMeta, Seq(col(textCol)), existingMaxId)
-      .withColumn("created_at", createdAt)
   }
 
   /** Persist an append batch (the write side of O2). */

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.HashingEmbedder
 import graft.store.DocStore
 
 class DocStoreSpec extends SparkSpec {
@@ -90,13 +89,6 @@ class DocStoreSpec extends SparkSpec {
     assert(parent.list().toSeq == Seq("store.parquet"), parent.list().toSeq)
   }
 
-  test("assignIdsScalable: dense and unique without a global sort") {
-    val batch = (1 to 1000).map(i => s"t$i").toDF("text").repartition(7)
-    val ids = DocStore.assignIdsScalable(batch, 0L).select("id").as[Long].collect()
-    assert(ids.length == 1000)
-    assert(ids.toSet == (1L to 1000L).toSet)
-  }
-
   test("getDocument: single row or empty (vectolite.py:268-298)") {
     assert(DocStore.getDocument(docs, "doc_id", 42L).count() == 1)
     assert(DocStore.getDocument(docs, "doc_id", 424242L).count() == 0)
@@ -138,17 +130,6 @@ class DocStoreSpec extends SparkSpec {
     assert(df.select(DocStore.metadataField(col("m"), "lang")).as[String].head == "en")
     val nullMeta = Seq(1L).toDF("id").withColumn("m", lit(null).cast("string"))
     assert(nullMeta.select(DocStore.metadataField(col("m"), "lang")).head.isNullAt(0))
-  }
-
-  test("prepareInsert: embeds, assigns ids after max, stamps injectable clock") {
-    val batch = Seq("new doc one", "new doc two").toDF("text")
-    val out = DocStore.prepareInsert(499L, batch, "text", HashingEmbedder(16),
-      metadataCols = Seq("text"), createdAt = to_timestamp(lit("2024-06-01 00:00:00")))
-    val rows = out.select("id", "embedding", "metadata", "created_at").collect()
-    assert(rows.map(_.getLong(0)).sorted.toSeq == Seq(500L, 501L))
-    assert(rows.forall(_.getSeq[Float](1).length == 16))
-    assert(rows.forall(r => r.getString(2).startsWith("{\"text\":")))
-    assert(rows.forall(_.getTimestamp(3).toString.startsWith("2024-06-01")))
   }
 
   test("bucketed tables join with NO exchange on either side") {

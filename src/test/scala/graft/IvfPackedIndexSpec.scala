@@ -1,5 +1,10 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -146,5 +151,57 @@ class IvfPackedIndexSpec extends SparkSpec {
           .cosine_sim(col("embedding"), typedlit(q.toSeq)).as("score"))
         .filter(col("id").isin(got.keySet.map(Long.box).toSeq: _*))).toMap
     assert(got == direct, "re-rank served a reconstructed score, not the float cosine")
+  }
+
+  /** (bucket, min cluster, max cluster) of every row group in the packed
+    * side's data files, read from the parquet footer statistics.
+    */
+  private def packedRowGroups(root: String): Seq[(Int, Int, Int)] = {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(root, "packed"))
+    val files = try walk.toArray.map(_.toString).filter(_.endsWith(".parquet")).toSeq
+      finally walk.close()
+    files.flatMap { f =>
+      val bucket = f.split("/").find(_.startsWith("bucket=")).get.stripPrefix("bucket=").toInt
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new Path(f), spark.sparkContext.hadoopConfiguration))
+      try reader.getFooter.getBlocks.asScala.toSeq.map { b =>
+        val st = b.getColumns.asScala.find(_.getPath.toDotString == "cluster").get.getStatistics
+        (bucket, st.genericGetMin.asInstanceOf[Int], st.genericGetMax.asInstanceOf[Int])
+      } finally reader.close()
+    }
+  }
+
+  test("a few-cluster probe admits fewer packed row groups than its buckets hold (small parquet blocks)") {
+    // IvfIndex.bucketized sorts each bucket by (cluster, id), so once a
+    // bucket spans several row groups each group's cluster range is tight
+    // and the probe's `cluster IN (...)` pushdown skips groups by their
+    // footer stats. sf0.001 amplified 48x with per-copy noise, two
+    // clusters per bucket and a small parquet.block.size force that
+    // geometry at test scale.
+    val base = spark.read.parquet(s"$Sf0001/embeddings.parquet").select("vec_id", "embedding")
+    val nBase = base.count()
+    val corpus = base.select(col("vec_id"), col("embedding"),
+        explode(sequence(lit(0), lit(47))).as("copy"))
+      .select((col("vec_id") + col("copy") * nBase).as("vec_id"),
+        transform(col("embedding"), (x, i) =>
+          (x + (pmod(xxhash64(col("vec_id"), col("copy"), i), lit(1000L)).cast("float")
+            - 500f) / 50000f).cast("float")).as("embedding"))
+    val twoPerBucket = IvfIndex.fit(base, "embedding", k = 2 * IvfIndex.ClusterBuckets)
+    val root = tmp("graft-ivfp-rowgroups") + "/idx"
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val saved = Seq("parquet.block.size", "parquet.page.size").map(k => k -> Option(hconf.get(k)))
+    try {
+      hconf.setInt("parquet.block.size", 4096)
+      hconf.setInt("parquet.page.size", 1024)
+      IvfPackedIndex.build(corpus, "vec_id", "embedding", twoPerBucket, root)
+    } finally saved.foreach { case (k, v) => v.fold(hconf.unset(k))(hconf.set(k, _)) }
+
+    val probes = twoPerBucket.nearestClusters(base.head.getSeq[Float](1).toArray, 4)
+    val buckets = probes.map(p => math.floorMod(p, IvfIndex.ClusterBuckets)).toSet
+    val touched = packedRowGroups(root).filter { case (b, _, _) => buckets(b) }
+    val admitted = touched.filter { case (_, lo, hi) => probes.exists(p => p >= lo && p <= hi) }
+    assert(touched.size > buckets.size, s"${touched.size} row groups in ${buckets.size} buckets")
+    assert(admitted.size < touched.size,
+      s"probe $probes admits all ${touched.size} row groups of its buckets: $touched")
   }
 }
